@@ -5,12 +5,19 @@ I1-I5).
 
 Commit/restart model (divergence from the reference, documented):
 the reference commits per record and drains the work queue per id; we
-batch — one shred + one MERGE per table per phase — and keep the
-reference's crash safety at form granularity: the outline queue entry is
-removed and the form watermark advanced only after every table merge for
-that form's documents succeeded.  Any crash in between re-runs the form;
-deterministic surrogate keys + full-snapshot-per-document MERGE make the
-re-run idempotent.
+batch — one shred + one MERGE per table per phase, under ONE commit
+bracket per phase (``basic``, ``form_detail``) — and keep the
+reference's crash safety at phase/form granularity.  Inside a bracket
+the phase's table merges run concurrently, up to the store's write pool
+width (``SPARK_GRAFT_WRITE_POOL``): the tables are disjoint and every
+write drains before the bracket ends, so their order is unobservable.
+Basic APIs are marked done, and the outline queue entry removed and the
+form watermark advanced, only after the phase's merges have landed; a
+write that raises is a per-API (basic) or per-batch (detail) save
+failure record, replayed next run.  A hard crash in between leaves the
+bracket's manifest and re-runs the whole phase — every basic API, or
+every form — and deterministic surrogate keys + full-snapshot-per-
+document MERGE make the re-run idempotent.
 
 Scale notes: the fetch loop is serial by API contract (~1.4 req/s —
 SURVEY.md §6); everything from ``parse_request_documents`` on is
@@ -22,6 +29,7 @@ shred + merge path).
 from __future__ import annotations
 
 import json
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Any, Callable
@@ -39,7 +47,7 @@ from jobcan_data_integrator_spark.sources.client import (
     JobcanApiClient,
 )
 from jobcan_data_integrator_spark.state import AppState, Checkpoint, Phase
-from jobcan_data_integrator_spark.storage import TableStore
+from jobcan_data_integrator_spark.storage import TableStore, _write_pool_width
 
 #: write strategy per basic-entity table (SURVEY.md §2.3 idioms):
 #: ("upsert", keys) / ("insert_missing", keys) / ("sync", scope_keys).
@@ -229,6 +237,36 @@ class JobcanPipeline:
         else:
             self.store.sync_children(table, df, keys)
 
+    def _write_tables(
+        self, tables: dict[str, Any], strategy: dict[str, tuple[str, list[str]]]
+    ) -> dict[str, Exception]:
+        """Merge one phase's tables concurrently (up to the store's write
+        pool width) and wait for every write to finish.
+
+        The tables are disjoint and the phase's replay key is the
+        checkpoint, which advances only after this returns, so write
+        order is unobservable; overlapping the writes hides each small
+        merge's fixed driver/scheduler cost behind the others.  Returns
+        ``{table: exception}`` for the writes that raised an
+        ``Exception`` (handled save failures).  Any other
+        ``BaseException`` is a hard crash: queued writes are cancelled,
+        running ones finish, and it propagates."""
+        errors: dict[str, Exception] = {}
+        with ThreadPoolExecutor(max_workers=_write_pool_width()) as pool:
+            futures = {
+                name: pool.submit(self._write, name, df, strategy)
+                for name, df in tables.items()
+            }
+            for name, fut in futures.items():
+                try:
+                    fut.result()
+                except Exception as exc:
+                    errors[name] = exc
+                except BaseException:
+                    pool.shutdown(cancel_futures=True)
+                    raise
+        return errors
+
     # -- phase 1: basic data (O1, gateway.py:277-340) ---------------------------
 
     def _run_basic_data(self, state: AppState, summary: RunSummary) -> None:
@@ -236,6 +274,7 @@ class JobcanPipeline:
             return
         if state.phase < Phase.BASIC_DATA:
             state.enter_phase(Phase.BASIC_DATA)
+        fetched: dict[str, tuple[int, dict]] = {}
         for api_idx, api in enumerate(BASIC_APIS):
             if not state.is_future(Phase.BASIC_DATA, api):
                 continue
@@ -255,21 +294,25 @@ class JobcanPipeline:
             tables = shred(parse_entities(self._raw_df(res.rows), ddl))
             if not isinstance(tables, dict):
                 tables = {api: tables}
-            self.store.begin_commit(f"basic:{api}", list(tables))
-            try:
-                for name, df in tables.items():
-                    self._write(name, df, ENTITY_WRITES)
-            except Exception as exc:  # db-save failure record (I5)
+            fetched[api] = (len(res.rows), tables)
+        if not fetched:
+            return
+        # every fetched api's tables merge concurrently in one bracket; a
+        # handled save failure is a per-api record (I5), and only a HARD
+        # crash leaves the manifest (and re-runs the phase's apis)
+        frames = {n: df for _, tables in fetched.values() for n, df in tables.items()}
+        with self.store.commit_bracket("basic", list(frames)):
+            errors = self._write_tables(frames, ENTITY_WRITES)
+        for api, (n_rows, tables) in fetched.items():
+            failed = [errors[n] for n in tables if n in errors]
+            if failed:  # db-save failure record (I5)
                 state.record_failures([(api, "save")], save=True)
-                self._warn(summary, [f"save failed for {api}: {exc}"])
+                self._warn(summary, [f"save failed for {api}: {failed[0]}"])
             else:
-                summary.basic_rows[api] = len(res.rows)
+                summary.basic_rows[api] = n_rows
                 state.take_failures(api)
                 state.mark_done(api)
-            # handled-failure replay is owned by the failure records; the
-            # manifest outlives only a HARD crash (no handler ran)
-            self.store.end_commit()
-            self.checkpoint.save(state)
+        self.checkpoint.save(state)
 
     # -- phase 2: form outline (gateway.py:342-432) ------------------------------
 
@@ -466,22 +509,21 @@ class JobcanPipeline:
             tables = shred_request_documents(
                 parse_request_documents(self._raw_df(docs))
             )
-            self.store.begin_commit("form_detail", list(tables))
             try:
-                for name, df in tables.items():
-                    self._write(name, df, REQUEST_WRITES)
-            except Exception as exc:
+                with self.store.commit_bracket("form_detail", list(tables)):
+                    errors = self._write_tables(tables, REQUEST_WRITES)
+            finally:
+                tables.unpersist()  # drop shred caches (long-lived sessions)
+            if errors:
                 state.record_failures(
                     [("requests_detail", d["id"]) for d in docs], save=True
                 )
-                self._warn(summary, [f"detail save failed: {exc}"])
+                self._warn(
+                    summary, [f"detail save failed: {next(iter(errors.values()))}"]
+                )
                 # replay now owned by the save-failure records
-                self.store.end_commit()
                 self.checkpoint.save(state)
                 return
-            finally:
-                tables.unpersist()  # drop shred caches (long-lived sessions)
-            self.store.end_commit()
         summary.detail_fetched = len(docs)
 
         # drain + watermark advance only for fully-successful forms

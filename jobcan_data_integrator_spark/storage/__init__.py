@@ -78,7 +78,8 @@ _ASYNC_WORKER = threading.local()
 
 
 def _write_pool_width() -> int:
-    """Concurrent background store writes per commit.
+    """Concurrent store writes per commit: the background scheduler's
+    pool, and the Jobcan pipeline's overlapped phase merges.
 
     Scale-dependent (guide §2.6): on a real cluster 2-3 jobs in flight
     fill the stage-tail bubbles without fighting for executors — set
@@ -1366,7 +1367,13 @@ class TableStore:
         Plain mode (per-table swap order is part of the crash-replay
         contract) and the Delta backend (its own per-table commit
         protocol) run the ops sequentially, in list order — so place
-        any must-be-last op (a ledger row) last.
+        any must-be-last op (a ledger row) last.  That ordering stays
+        for every plain-mode caller that relies on it; the Jobcan
+        pipeline overlaps its own plain-mode phase merges instead
+        (``JobcanPipeline._write_tables``) because its tables are
+        disjoint and its replay key is the checkpoint, which advances
+        only after every merge has drained — so no write order of its
+        is ever observable.
 
         ``ops`` is a list of zero-arg callables that must touch
         DISJOINT table sets (the concurrency unit is the table).  On
@@ -2274,21 +2281,23 @@ class TableStore:
 
         Snapshot mode: the touched partitions become a new LAYER instead
         of an in-place dynamic overwrite — published atomically with the
-        rest of the batch at ``end_commit``."""
+        rest of the batch at ``end_commit``.
+
+        The dynamic mode is a per-write option, never the session-wide
+        ``spark.sql.sources.partitionOverwriteMode``: concurrent writers
+        (a phase's overlapping table merges, a streaming merge sharing
+        the root) would race on the session conf, and a write that saw
+        it restored to ``static`` mid-flight drops every partition it
+        does not carry."""
         if self.snapshot_isolation:
             self._write_layer(table, df, reset=False)
             return
         pcols = self._managed_pcols(table)
         if self.write_partitions is not None:
             df = df.coalesce(self.write_partitions)
-        prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            self._sorted(table, df).write.mode("overwrite").partitionBy(
-                *pcols
-            ).parquet(str(self.path(table)))
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        self._sorted(table, df).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(*pcols).parquet(str(self.path(table)))
 
     def _current_in_partitions(self, table: str, updates: DataFrame) -> DataFrame:
         """Current rows of the partitions the update batch touches — a

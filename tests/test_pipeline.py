@@ -336,6 +336,123 @@ def test_commit_manifest_survives_hard_crash_and_replays(spark, tmp_path):
         assert a == b, f"{table} diverged after manifest replay"
 
 
+def _assert_converged(spark, tmp_path, store, tables=("requests", "expense_specifics", "users")):
+    """``store`` holds exactly what an uninterrupted pipeline produces."""
+    _, clean, _, pipe, _ = _fresh(spark, tmp_path / "clean")
+    pipe.run()
+    for table in tables:
+        a = sorted(map(tuple, store.read(table).collect()))
+        b = sorted(map(tuple, clean.read(table).collect()))
+        assert a == b, f"{table} diverged from the clean run"
+
+
+def test_detail_save_failure_recorded_and_converges(spark, tmp_path):
+    """A handled save failure in the detail phase (an ``Exception`` from
+    one request-child merge) records every fetched doc for retry, warns,
+    keeps the outline queue, and the next run converges."""
+    api, store, ckpt, pipe, clock = _fresh(spark, tmp_path)
+
+    from jobcan_data_integrator_spark.pipeline import REQUEST_WRITES
+
+    real_write = pipe._write
+
+    def _failing_write(table, df, strategy):
+        if strategy is REQUEST_WRITES and table == "customized_items":
+            raise OSError("disk full")
+        return real_write(table, df, strategy)
+
+    pipe._write = _failing_write
+    summary = pipe.run()
+    st = ckpt.load()
+    fetched = sorted(d["id"] for d in api.documents)
+    assert sorted(k for a, k in st.save_failures if a == "requests_detail") == fetched
+    assert any("detail save failed" in w and "disk full" in w for w in summary.warnings)
+    assert st.outline_queue  # nothing drained, no watermark advanced
+    assert store.pending_commit() is None  # handled: the bracket ended
+
+    pipe._write = real_write
+    clock["now"] = "2024/04/09 00:00:00"
+    summary2 = pipe.run()
+    assert summary2.phase == Phase.COMPLETED
+    st2 = ckpt.load()
+    assert st2.save_failures == [] and st2.outline_queue == {}
+    _assert_converged(spark, tmp_path, store)
+
+
+def test_detail_writes_overlap(spark, tmp_path):
+    """The detail phase's table merges run concurrently: the first two
+    writes meet at a two-party barrier, which a serial write loop could
+    never pass (the first write would time out waiting for the second)."""
+    import threading
+
+    api, store, ckpt, pipe, clock = _fresh(spark, tmp_path)
+
+    from jobcan_data_integrator_spark.pipeline import REQUEST_WRITES
+
+    real_write = pipe._write
+    barrier = threading.Barrier(2, timeout=30)
+    lock = threading.Lock()
+    seen = {"n": 0}
+
+    def _meeting_write(table, df, strategy):
+        if strategy is REQUEST_WRITES:
+            with lock:
+                seen["n"] += 1
+                first_two = seen["n"] <= 2
+            if first_two:
+                barrier.wait()
+        return real_write(table, df, strategy)
+
+    pipe._write = _meeting_write
+    summary = pipe.run()
+    assert not barrier.broken
+    assert summary.phase == Phase.COMPLETED
+    assert summary.detail_fetched == N_DOCS
+    assert ckpt.load().save_failures == []
+    assert store.read("requests").count() == N_DOCS
+
+
+def test_basic_save_failure_stays_per_api(spark, tmp_path):
+    """One basic API's failing merge is that API's save failure only:
+    the other six APIs are marked done with their tables written, and
+    the resumed run re-fetches only the failed API."""
+    from jobcan_data_integrator_spark.pipeline import ENTITY_WRITES, RunSummary
+    from jobcan_data_integrator_spark.sources.client import API_PATHS, BASIC_APIS
+
+    api, store, ckpt, pipe, clock = _fresh(spark, tmp_path)
+    real_write = pipe._write
+
+    def _failing_write(table, df, strategy):
+        if table == "groups":
+            raise OSError("groups volume gone")
+        return real_write(table, df, strategy)
+
+    pipe._write = _failing_write
+    summary = RunSummary()
+    pipe._run_basic_data(ckpt.load(), summary)
+    st = ckpt.load()
+    assert st.save_failures == [["groups", "save"]]
+    assert st.fetch_failures == []
+    others = [a for a in BASIC_APIS if a != "groups"]
+    assert sorted(st.done) == sorted(others)
+    assert set(summary.basic_rows) == set(others)
+    assert any("save failed for groups" in w for w in summary.warnings)
+    assert not store.exists("groups")
+    for table in ENTITY_WRITES:
+        if table != "groups":
+            assert store.exists(table), table
+
+    pipe._write = real_write
+    api.calls.clear()
+    summary2 = pipe.run()
+    assert summary2.phase == Phase.COMPLETED
+    basic_paths = {API_PATHS[a] for a in BASIC_APIS}
+    assert {p for p, _ in api.calls if p in basic_paths} == {API_PATHS["groups"]}
+    assert store.exists("groups")
+    assert ckpt.load().save_failures == []
+    _assert_converged(spark, tmp_path, store, ("groups", "users", "requests"))
+
+
 def test_progress_and_issue_callbacks(spark, tmp_path):
     """O3 hooks (reference gateway.py:366-393): per-unit progress with
     (api_type, current, total, sub_count, sub_total), per-form

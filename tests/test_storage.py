@@ -402,6 +402,72 @@ def test_partitioned_and_bucketed_combined(spark, tmp_path):
     assert untouched_before == untouched_after
 
 
+def test_dynamic_overwrite_never_touches_session_conf(spark, tmp_path, monkeypatch):
+    """Partition-scoped merges pass the dynamic overwrite mode on the
+    writer: the session conf is shared by every thread, so setting and
+    restoring it around a write races any concurrent writer."""
+    conf_cls = type(spark.conf)
+    real_set = conf_cls.set
+    calls: list[tuple] = []
+
+    def spy(self, key, value):
+        calls.append((key, value))
+        return real_set(self, key, value)
+
+    store = TableStore(
+        spark,
+        tmp_path / "t5",
+        write_partitions=1,
+        partitioned={"resp": ["api"]},
+        bucketed={"kids": ("k", 4)},
+    )
+    rows = spark.createDataFrame(
+        [("a", "k1", "v1"), ("b", "k2", "v2")], "api string, k string, raw string"
+    )
+    monkeypatch.setattr(conf_cls, "set", spy)
+    store.merge_upsert("resp", rows, ["api", "k"])
+    store.merge_upsert("resp", rows.limit(1), ["api", "k"])
+    store.sync_children("kids", rows, ["k"])
+    store.sync_children("kids", rows.limit(1), ["k"])
+    store.merge_insert_missing("kids", rows, ["k"])
+    assert calls == []
+    assert store.read("resp").count() == 2
+    assert store.read("kids").count() == 2
+
+
+def test_concurrent_bucketed_merges_keep_untouched_buckets(spark, tmp_path):
+    """Two plain-mode bucketed tables merged from two threads at once:
+    each one-scope sync rewrites only its own bucket, and every other
+    bucket of both tables survives every round."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    store = TableStore(
+        spark,
+        tmp_path / "t6",
+        write_partitions=1,
+        bucketed={"left": ("k", 8), "right": ("k", 8)},
+    )
+    schema = "k string, v string"
+    base = [(f"k{i}", "base") for i in range(32)]
+    for table in ("left", "right"):
+        store.sync_children(table, spark.createDataFrame(base, schema), ["k"])
+
+    def sync(table, i):
+        upd = spark.createDataFrame([(f"k{i}", f"{table}-{i}")], schema)
+        store.sync_children(table, upd, ["k"])
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for i in range(4):
+            futs = [pool.submit(sync, t, i) for t in ("left", "right")]
+            for f in futs:
+                f.result()
+    for table in ("left", "right"):
+        got = dict(map(tuple, store.read(table).collect()))
+        want = dict(base)
+        want.update({f"k{i}": f"{table}-{i}" for i in range(4)})
+        assert got == want, table
+
+
 def test_commit_manifest_roundtrip(spark, pstore):
     """begin_commit writes an atomic manifest, pending_commit reads it
     back, end_commit clears it (idempotently)."""
