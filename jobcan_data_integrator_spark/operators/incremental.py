@@ -2394,13 +2394,13 @@ def extend_lm_index(
     totals row adds the increment's tokens and its genuinely-new vocab.
 
     An additive merge is NOT an idempotent write, so this family cannot
-    ride the plain-mode manifest contract (begin_commit's "re-running
-    the batch converges" assumes replays overwrite, not re-add).  Two
-    guards make it exactly-once anyway:
+    ride the plain-mode manifest contract (the commit manifest's
+    "re-running the batch converges" assumes replays overwrite, not
+    re-add).  Two guards make it exactly-once anyway:
 
     - the store MUST be in snapshot-isolation mode (raises otherwise):
-      a crash before ``end_commit`` publishes nothing, so the replay
-      recomputes from the untouched pre-batch tables;
+      a crash before the commit publishes leaves nothing visible, so
+      the replay recomputes from the untouched pre-batch tables;
     - ``lm_batches`` records every absorbed ``batch_id`` inside the same
       commit, so a batch REDELIVERED after a successful publish (e.g. a
       streaming retry whose checkpoint lagged) is detected and skipped.
@@ -2765,7 +2765,7 @@ def refresh_embedding_codebooks(
         list(IVF_TABLES) + [IVF_CELL_STATS] if has_ivf else []
     ) + (list(PQ_TABLES) if has_pq else [])
     summary: dict[str, int] = {"n_vectors": live.count()}
-    with store.batch_commit("codebook-refresh", tables):
+    with store.commit_bracket("codebook-refresh", tables):
         if has_ivf:
             n_cells = ivf_cells or store.read("ivf_codebook").count()
             cent, _ = train_ivf_centroids(

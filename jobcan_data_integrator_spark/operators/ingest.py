@@ -53,7 +53,7 @@ shard boundaries never span batches; ``repack_corpus`` is the one-call
 global reshard (chunk + pack ``read_curated`` in deterministic shuffled
 order, swapped in under one snapshot commit).
 
-Atomicity: every family write lands inside ONE ``store.batch_commit``
+Atomicity: every family write lands inside ONE ``store.commit_bracket``
 — on a snapshot-isolation store the whole batch (all ten families, the
 curated table, the ledger) publishes with one pointer swap, and a crash
 anywhere publishes NOTHING; the replay (same batch_id) reruns against
@@ -864,7 +864,7 @@ def repack_corpus(
         id_col="chunk_id",
         shuffle_salt=shuffle_salt,
     ).withColumn("batch_id", F.lit(batch_tag)).localCheckpoint(eager=True)
-    with store.batch_commit(batch_tag, [CHUNKS, SHARDS]):
+    with store.commit_bracket(batch_tag, [CHUNKS, SHARDS]):
         store.submit_op(
             lambda: store.overwrite(
                 CHUNKS, chunks.withColumn("batch_id", F.lit(batch_tag))
@@ -895,7 +895,7 @@ def ingest_tables(
     bm25: bool = False,
 ) -> list[str]:
     """The manifest table list a given configuration touches (the outer
-    ``batch_commit``'s scope)."""
+    ``commit_bracket``'s scope)."""
     from jobcan_data_integrator_spark.operators import incremental as inc
     from jobcan_data_integrator_spark.operators import retrieval as rt
 
@@ -1551,7 +1551,7 @@ def ingest_increment(
     # exists-driven after first sight, like every other family
     bm25_requested = bm25
     bm25 = bm25 or store.exists(rt.BM25_DOC_LEN)
-    if bm25 and not store.snapshot_isolation and store.backend != "delta":
+    if bm25 and not store.snapshot_isolation:
         # the family's repair path captures the docs' OLD text from
         # cur_docs and prunes those (term, doc_id) rows after the
         # curated upsert lands; on a plain store a crash between the two
@@ -1687,7 +1687,7 @@ def ingest_increment(
     pairs: DataFrame | None = None
     demoted: DataFrame | None = None
 
-    with store.batch_commit(batch_id, tables):
+    with store.commit_bracket(batch_id, tables):
         # -1. normalization FIRST (CCNet ordering: byte-different
         # renderings must collide in every downstream hash)
         if normalize:
@@ -2291,7 +2291,7 @@ def retract_documents(
     )
 
     spark = ids.sparkSession
-    if not store.snapshot_isolation and store.backend != "delta":
+    if not store.snapshot_isolation:
         raise ValueError(
             "retract_documents needs a snapshot-isolation store: the "
             "multi-family retraction must publish atomically (a plain "
@@ -2358,7 +2358,7 @@ def retract_documents(
     promoted: DataFrame | None = None
     repaired: DataFrame | None = None
 
-    with store.batch_commit(retract_id, sorted(set(tables))):
+    with store.commit_bracket(retract_id, sorted(set(tables))):
         if n_ids == 0:
             store.merge_insert_missing(RETRACTIONS, ledger_row, ["retract_id"])
             return RetractResult(retract_id, False, r_ids)
@@ -2863,7 +2863,7 @@ def retract_vectors(
     from jobcan_data_integrator_spark.operators import incremental as inc
 
     spark = vec_ids.sparkSession
-    if not store.snapshot_isolation and store.backend != "delta":
+    if not store.snapshot_isolation:
         raise ValueError(
             "retract_vectors needs a snapshot-isolation store: the "
             "multi-family retraction must publish atomically"
@@ -2896,7 +2896,7 @@ def retract_vectors(
     tables += [t for t in _EMB_ROW_TABLES if store.exists(t)]
     tables += [t for t, _, _ in _EMB_PAIR_TABLES if store.exists(t)]
 
-    with store.batch_commit(retract_id, sorted(set(tables))):
+    with store.commit_bracket(retract_id, sorted(set(tables))):
         if n_ids == 0:
             store.merge_insert_missing(RETRACTIONS, ledger_row, ["retract_id"])
             return RetractResult(retract_id, False, r_ids)
@@ -3129,9 +3129,9 @@ def compact_store(store: TableStore) -> None:
     # (the residual corpus-linear term is the column-pruned
     # affected-partition scans).  Folds of different tables run as
     # concurrent chains (merge_batch); same-table prunes stay ordered
-    # inside their chain.  The bracket is ``batch_commit`` (not bare
-    # begin/end) so the independent sections below additionally overlap
-    # through the background scheduler (``submit_op``).
+    # inside their chain.  Inside the bracket the independent sections
+    # below additionally overlap through the background scheduler
+    # (``submit_op``).
     def _unfolded(table: str, key: str) -> DataFrame | None:
         """The mask rows added since the last fold (``folded=False``; a
         pre-watermark store's unflagged rows count as unfolded once).
@@ -3148,13 +3148,13 @@ def compact_store(store: TableStore) -> None:
         m = m.select(key).localCheckpoint(eager=True)
         return m if m.head(1) else None
 
-    with store.batch_commit("store-compact", tables):
+    with store.commit_bracket("store-compact", tables):
         _compact_folds(store, tables, _unfolded)
     _record_compact_stat(store)
 
 
 def _compact_folds(store: TableStore, tables: list[str], _unfolded) -> None:
-    """The fold body of ``compact_store`` (one ``batch_commit``): the
+    """The fold body of ``compact_store`` (one ``commit_bracket``): the
     main prune group, the mask watermark flips, the permanent-tombstone
     resolution and the transient-mask reset are mutually independent
     where their declared table sets are disjoint, so each section rides

@@ -418,26 +418,23 @@ def drop_bm25_family(store: "TableStore") -> None:
     snapshot-isolation store with ``ingest_increment(bm25=True)`` when
     BM25 serving is still wanted.
 
-    Snapshot/delta stores maintain the family natively and have no
+    Snapshot stores maintain the family natively and have no
     migration to run — dropping there is refused."""
     import shutil
 
-    if store.snapshot_isolation or store.backend == "delta":
+    if store.snapshot_isolation:
         raise ValueError(
             "drop_bm25_family is the legacy plain-store migration path; "
-            "snapshot/delta stores maintain the BM25 family natively "
+            "snapshot stores maintain the BM25 family natively "
             "(retire docs with retract_documents instead)"
         )
-    store.begin_commit("drop-bm25-family", list(BM25_TABLES))
-    try:
+    with store.commit_bracket("drop-bm25-family", list(BM25_TABLES)):
         for t in BM25_TABLES:
             shutil.rmtree(store.path(t), ignore_errors=True)
             for leftover in list(store.root.glob(f"{t}.old-*")) + list(
                 store.root.glob(f"{t}.tmp-*")
             ):
                 shutil.rmtree(leftover, ignore_errors=True)
-    finally:
-        store.end_commit()
 
 
 def bm25_query_indexed(

@@ -577,8 +577,8 @@ class JobcanPipeline:
         pending = self.store.pending_commit()
         if pending:
             # a previous process died inside a multi-table batch: the
-            # checkpoint never advanced past it (mark_done follows
-            # end_commit), so this run re-executes the batch's idempotent
+            # checkpoint never advanced past it (mark_done follows the
+            # bracket's exit), so this run re-executes the batch's idempotent
             # merges from re-fetched data — surface the replay instead of
             # converging silently
             self._warn(
@@ -589,7 +589,10 @@ class JobcanPipeline:
                     "tables); replaying via checkpoint resume"
                 ],
             )
-            self.store.end_commit()
+            # clear the stale manifest under the writer lease: a live
+            # foreign writer's manifest is refused here, before any fetch
+            with self.store.commit_bracket(pending["batch_id"], pending["tables"]):
+                pass
         self._run_basic_data(state, summary)
         self._run_form_outline(state, summary)
         self._run_form_detail(state, summary)

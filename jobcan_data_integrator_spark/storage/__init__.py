@@ -213,8 +213,6 @@ class TableStore:
         snapshot_isolation: bool = False,
         max_snapshot_layers: int = 8,
         retain_snapshots: int = 1,
-        backend: str = "parquet",
-        delta_impl: str = "auto",
         driver_bounded: dict[str, int] | None = None,
     ) -> None:
         """``write_partitions`` caps output files per table — set to a small
@@ -310,52 +308,6 @@ class TableStore:
         BASELINE.md); the driver-side path cuts the write half of that
         to ~1 ms while keeping the published file Spark-readable with
         the identical schema."""
-        if backend not in ("parquet", "delta"):
-            raise ValueError(f"backend must be parquet|delta: {backend}")
-        if delta_impl not in ("auto", "fake"):
-            raise ValueError(f"delta_impl must be auto|fake: {delta_impl}")
-        self._delta_fake = backend == "delta" and delta_impl == "fake"
-        if backend == "delta":
-            # ``backend="delta"`` binds the three merge idioms to REAL
-            # ``MERGE INTO`` (delta-spark's DeltaTable builder) and
-            # per-table writes to Delta commits — the lakehouse
-            # integration the parquet mode's call sites document
-            # (README "binds 1:1 to Delta/Iceberg MERGE INTO").  Delta
-            # provides its own snapshot isolation and concurrent-writer
-            # conflict detection per table, so the home-grown layered
-            # snapshot mode must not be stacked on top.
-            #
-            # ``delta_impl="fake"`` swaps in the in-repo builder stand-in
-            # (storage/_delta_fake.py) so the binding logic executes in
-            # environments without delta-spark — a TEST/CI harness, not
-            # a Delta: no transaction log or writer-conflict detection.
-            if not self._delta_fake:
-                try:
-                    from delta.tables import DeltaTable  # noqa: F401
-                except ImportError as e:  # pragma: no cover - dep optional
-                    raise ImportError(
-                        "backend='delta' needs the delta-spark package "
-                        "(and a SparkSession built with the Delta "
-                        "extension + catalog configs); install "
-                        "delta-spark, use delta_impl='fake' (binding-"
-                        "logic tests only), or use the default parquet "
-                        "backend"
-                    ) from e
-            if snapshot_isolation:
-                raise ValueError(
-                    "backend='delta' is already snapshot-isolated per "
-                    "table (Delta's commit protocol); snapshot_isolation="
-                    "True is the parquet-mode emulation — pick one"
-                )
-            if partitioned or bucketed or range_partitioned:
-                raise ValueError(
-                    "backend='delta' does not take the parquet-mode "
-                    "partition layouts: Delta's own data skipping + "
-                    "OPTIMIZE ZORDER replace the managed hive/bucket "
-                    "machinery (declare layout on the Delta table "
-                    "itself)"
-                )
-        self.backend = backend
         self.spark = spark
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
@@ -393,12 +345,13 @@ class TableStore:
         #: (failed-write) dir is reclaimed by the next publish after
         #: that.
         self._inflight_vdirs: set[str] = set()
-        #: True while a ``batch_commit`` context is open: inner
-        #: begin_commit/end_commit calls become no-ops so composed
+        #: open commit brackets on this instance (0 = none).  Only the
+        #: outermost bracket takes the lease, writes the manifest and
+        #: publishes or aborts; nested brackets just count, so composed
         #: operators (each of which brackets its own writes) fold into
         #: ONE outer commit — the orchestration contract of
         #: operators/ingest.ingest_increment
-        self._suspended = False
+        self._depth = 0
         #: instance-scoped swap-name token: _recover may always reclaim
         #: THIS instance's leftover tmp dirs, but foreign ones only when
         #: stale (they may be another live writer's in-flight swap)
@@ -406,8 +359,8 @@ class TableStore:
         #: the lease epoch this instance's current commit runs under
         #: (set at begin_commit; the fencing token _verify_lease checks)
         self._commit_epoch: int | None = None
-        #: background write scheduler for the current ``batch_commit``
-        #: (created on first ``submit_op``, drained at context exit)
+        #: background write scheduler for the current commit bracket
+        #: (created on first ``submit_op``, drained at publish or abort)
         self._async: _AsyncWrites | None = None
         #: versioned-dir schema memo (dir path -> inferred StructType):
         #: snapshot dirs are immutable once written, so the first read's
@@ -417,37 +370,24 @@ class TableStore:
         #: reads per run).  Plain-mode paths mutate in place and are
         #: never memoized.
         self._schema_memo: dict[str, object] = {}
-        #: True while a top-level ``begin_commit``/``end_commit`` bracket
-        #: is open (``batch_commit`` sets it too, via its begin_commit).
-        #: Snapshot-mode writes inside ANY commit bracket land in
-        #: unpublished versioned dirs and ``end_commit`` drains the
-        #: scheduler before the pointer swap, so background submission is
-        #: as safe here as inside ``batch_commit`` — without this flag a
-        #: standalone build/extend/fold bracket (r11 measurement:
-        #: compact_minhash_drops' four fold chains, 3.9 s strictly
-        #: serial inside a 5.7 s compact) ran every submit inline.
-        self._in_commit = False
 
     # -- background writes (guide §2.6) ---------------------------------------
 
     def submit_op(self, op, *, reads: tuple = (), writes: tuple = ()) -> None:
         """Run ``op`` (a zero-arg callable doing store writes) in the
-        background when that is safe — inside a commit bracket
-        (``batch_commit`` OR a top-level ``begin_commit``/``end_commit``
-        pair) on a snapshot-isolated parquet store, where completion
-        order is unobservable until the single atomic publish
-        (``end_commit`` drains the scheduler first).  Elsewhere (plain
-        mode's ordered swaps, the Delta backend's own commit protocol,
-        or outside any bracket) it runs inline.
+        background when that is safe — inside a commit bracket on a
+        snapshot-isolated store, where completion order is unobservable
+        until the single atomic publish (``end_commit`` drains the
+        scheduler first).  Elsewhere (plain mode's ordered swaps, or
+        outside any bracket) it runs inline.
 
         ``reads``/``writes`` name the tables the op touches; the
         scheduler orders ops sharing tables (see ``_AsyncWrites``) and
         any synchronous store access barriers automatically, so call
         sites that never declare anything keep today's semantics."""
         if (
-            self.backend != "parquet"
-            or not self.snapshot_isolation
-            or not (self._suspended or self._in_commit)
+            not self.snapshot_isolation
+            or not self._depth
             # a worker thread is already asynchronous; nesting a submit
             # would race the drain's pool shutdown — run inline (covered
             # by the outer op's declared table sets)
@@ -664,8 +604,7 @@ class TableStore:
         merge-on-read alternative (masks) can choose it when this is
         False."""
         return (
-            self.backend == "parquet"
-            and self.snapshot_isolation
+            self.snapshot_isolation
             and self._is_managed(table)
             and self._prunable_pcol(table) is not None
         )
@@ -746,8 +685,7 @@ class TableStore:
         the Iceberg delete-file economics for the one operation
         (mask folding) that would otherwise rewrite a 100 TB table to
         drop a few thousand rows.  Unmanaged (or plain-mode / hive-
-        partitioned) tables keep the full anti-join rewrite; the Delta
-        backend delegates to its own targeted DELETE.
+        partitioned) tables keep the full anti-join rewrite.
 
         ``segment_keys``/``segment_col``: when the key columns are NOT
         the bucket source (the semi-join-scan case), a caller that
@@ -760,18 +698,7 @@ class TableStore:
         unhinted buckets silently survive (pinned complete at the one
         call site by tests/test_retract.py's fold-equivalence checks)."""
         self._tbar(table)
-        if self.backend == "delta":
-            if self.exists(table):
-                self.delete_scope(
-                    table, keys.dropDuplicates(key_cols), key_cols
-                )
-            return
-        if (
-            self.backend == "parquet"
-            and self.snapshot_isolation
-            and self._is_managed(table)
-            and self._prunable_pcol(table) is not None
-        ):
+        if self.prunes_scoped(table):
             if not self.exists(table):
                 return
             pcol = self._prunable_pcol(table)
@@ -838,15 +765,7 @@ class TableStore:
         if not self.exists(table):
             return
         keep = ~cond | cond.isNull()
-        if self.backend == "delta":
-            self._delta_table(table).delete(cond)
-            return
-        if (
-            self.backend == "parquet"
-            and self.snapshot_isolation
-            and self._is_managed(table)
-            and self._prunable_pcol(table) is not None
-        ):
+        if self.prunes_scoped(table):
             pcol = self._prunable_pcol(table)
             segs = sorted(
                 r[0]
@@ -967,51 +886,6 @@ class TableStore:
                 df = df.drop(col)
         return df
 
-    # -- delta backend (optional; see __init__) -------------------------------
-
-    def _delta_cls(self):
-        """The DeltaTable class: delta-spark's, or the in-repo fake
-        builder stand-in when ``delta_impl="fake"`` (same call surface;
-        see storage/_delta_fake.py for what the fake does and doesn't
-        execute)."""
-        if self._delta_fake:
-            from jobcan_data_integrator_spark.storage._delta_fake import (
-                FakeDeltaTable,
-            )
-
-            return FakeDeltaTable
-        from delta.tables import DeltaTable
-
-        return DeltaTable
-
-    def _delta_table(self, table: str):
-        return self._delta_cls().forPath(self.spark, str(self.path(table)))
-
-    def _delta_write(self, table: str, df: DataFrame, mode: str) -> None:
-        if self._delta_fake:
-            if mode == "append" and self.path(table).exists():
-                df.write.mode("append").parquet(str(self.path(table)))
-            else:
-                df.write.mode("overwrite").parquet(str(self.path(table)))
-            return
-        df.write.format("delta").mode(mode).option(
-            "overwriteSchema", "true"
-        ).save(str(self.path(table)))
-
-    def _delta_scope_cond(self, updates: DataFrame, scope_keys: list[str]):
-        """OR-of-AND predicate matching the updates' distinct scopes —
-        collected to the driver, bounded by the batch's scope count
-        (the same assumption _current_in_partitions makes)."""
-        scopes = updates.select(*scope_keys).dropDuplicates(scope_keys).collect()
-        conds = [
-            reduce(
-                lambda x, y: x & y,
-                (F.col(k).eqNullSafe(F.lit(r[k])) for k in scope_keys),
-            )
-            for r in scopes
-        ]
-        return reduce(lambda x, y: x | y, conds) if conds else F.lit(False)
-
     #: entry cap on the versioned-dir schema memo: dirs GC'd by
     #: _publish_snapshot would otherwise leak their memoized StructType
     #: for the store's lifetime, growing the driver's footprint with
@@ -1039,10 +913,6 @@ class TableStore:
 
     def exists(self, table: str) -> bool:
         self._rbar(table)
-        if self.backend == "delta":
-            return self._delta_cls().isDeltaTable(
-                self.spark, str(self.path(table))
-            )
         if self.snapshot_isolation:
             if self._is_managed(table):
                 return self._effective_layers(table) is not None
@@ -1052,10 +922,6 @@ class TableStore:
 
     def read(self, table: str) -> DataFrame:
         self._rbar(table)
-        if self.backend == "delta":
-            if self._delta_fake:
-                return self.spark.read.parquet(str(self.path(table)))
-            return self.spark.read.format("delta").load(str(self.path(table)))
         if self.snapshot_isolation:
             if self._is_managed(table):
                 layers = self._effective_layers(table)
@@ -1309,13 +1175,8 @@ class TableStore:
         Snapshot mode: the write lands in a fresh versioned directory and
         is NOT reader-visible until ``end_commit`` publishes the manifest
         pointer — no swap, no in-flight bookkeeping needed.
-
-        Delta backend: one Delta commit (atomic by its protocol).
         """
         self._tbar(table)
-        if self.backend == "delta":
-            self._delta_write(table, df, "overwrite")
-            return
         if self.snapshot_isolation:
             if self._is_managed(table):
                 self._write_layer(table, self._prep(table, df), reset=True)
@@ -1365,8 +1226,7 @@ class TableStore:
         in independent versioned dirs and publish atomically at
         ``end_commit``, so their completion ORDER is unobservable.
         Plain mode (per-table swap order is part of the crash-replay
-        contract) and the Delta backend (its own per-table commit
-        protocol) run the ops sequentially, in list order — so place
+        contract) runs the ops sequentially, in list order — so place
         any must-be-last op (a ledger row) last.  That ordering stays
         for every plain-mode caller that relies on it; the Jobcan
         pipeline overlaps its own plain-mode phase merges instead
@@ -1398,11 +1258,7 @@ class TableStore:
                 writes=tuple(tables),
             )
             return
-        if (
-            len(ops) < 2
-            or self.backend != "parquet"
-            or not self.snapshot_isolation
-        ):
+        if len(ops) < 2 or not self.snapshot_isolation:
             for op in ops:
                 op()
             return
@@ -1431,9 +1287,9 @@ class TableStore:
     #: manifest file marking a multi-table write batch in progress
     MANIFEST = "_commit.json"
 
-    #: advisory single-writer lease, held from ``begin_commit`` to
-    #: ``end_commit`` (one lease per ``batch_commit`` — inner brackets
-    #: are suspended).  Readers never take it.
+    #: advisory single-writer lease, held from the outermost
+    #: ``begin_commit`` to its ``end_commit`` (nested brackets only
+    #: count).  Readers never take it.
     LEASE = "_writer.lease"
 
     #: a lease older than this is stale even when its pid looks alive —
@@ -1490,8 +1346,8 @@ class TableStore:
         lease was TTL-taken-over while it stalled (a zombie) can never
         publish over — or GC — the new holder's commit.  This is the
         enforcement for the single-writer stance end_commit documents —
-        the reference gets it from SQLite's file lock; the
-        parquet/snapshot backends get it here."""
+        the reference gets it from SQLite's file lock; plain and
+        snapshot stores get it here."""
         import json as _json
 
         path = self.root / self.LEASE
@@ -1578,10 +1434,8 @@ class TableStore:
         import json as _json
 
         if self._commit_epoch is None:
-            # no begin_commit on this instance: an out-of-band
-            # end_commit (e.g. clearing a crashed process's stale
-            # manifest before replay, pipeline.py) — nothing leased to
-            # verify
+            # no begin_commit on this instance: an end_commit outside
+            # any bracket — nothing leased to verify
             return
         path = self.root / self.LEASE
         try:
@@ -1645,11 +1499,15 @@ class TableStore:
         state DETECTED and the replay explicit instead of implicit
         (reference parity: gateway.py:513-539 converges per record the
         same way, also without cross-table atomicity).
+
+        Re-entrant: inside an open bracket this only deepens it — the
+        outer manifest owns the batch.
         """
         import json as _json
 
-        if self._suspended:
-            return  # inside batch_commit: the outer manifest owns the batch
+        if self._depth:
+            self._depth += 1
+            return
         self._commit_epoch = self._acquire_lease()
         self._lease_holders().add(self)
         payload = {
@@ -1660,7 +1518,7 @@ class TableStore:
         tmp = self.root / f"{self.MANIFEST}.tmp"
         tmp.write_text(_json.dumps(payload))
         os.replace(tmp, self.root / self.MANIFEST)
-        self._in_commit = True
+        self._depth = 1
 
     #: versioned manifest pointer (snapshot mode): the ONE file whose
     #: atomic replace publishes a whole batch to readers
@@ -1712,12 +1570,16 @@ class TableStore:
         before the pointer swap — a stalled writer whose lease was
         TTL-taken-over aborts with ConcurrentWriterError instead of
         publishing over (or GC-ing) the new holder's commit.
+
+        Inside a nested bracket this only closes that level: the batch
+        publishes once, when the outermost bracket ends.
         """
         import json as _json
 
-        if self._suspended:
-            return  # inside batch_commit: published once, at context exit
-        self._in_commit = False
+        if self._depth > 1:
+            self._depth -= 1
+            return
+        self._depth = 0
         # the fencing check: abort BEFORE the pointer swap and the GC if
         # this commit's lease was taken over while the batch stalled
         self._verify_lease()
@@ -1745,38 +1607,41 @@ class TableStore:
         self._release_lease()
 
     def abort_commit(self) -> None:
-        """Abandon an open standalone ``begin_commit``/``end_commit``
-        bracket: drain in-flight background writes (swallowing their
-        errors — the bracket is already failing), discard the bracket's
-        unpublished versioned dirs, clear the commit flags, and release
-        the lease — exactly ``batch_commit``'s except path (ADVICE r11:
-        without this, an exception inside a standalone bracket left
-        ``_in_commit`` set with queued background ops, and a later
-        unrelated ``end_commit`` on the same instance could publish the
-        failed bracket's pending writes).  No-op inside ``batch_commit``
-        (the context manager owns the abort) and safe to call when no
-        bracket is open."""
-        if self._suspended:
+        """Abandon the open bracket: drain in-flight background writes
+        (swallowing their errors — the bracket is already failing),
+        discard its unpublished versioned dirs and release the lease.
+        The manifest is LEFT IN PLACE, so ``pending_commit`` reports the
+        interrupted batch and its replay converges exactly as after a
+        hard crash.  Inside a nested bracket this only closes that
+        level — the exception propagating to the outermost bracket
+        aborts the batch there.  Safe to call when no bracket is open."""
+        if self._depth > 1:
+            self._depth -= 1
             return
+        self._depth = 0
         self.flush_writes(swallow=True)
-        self._in_commit = False
         self._pending_versions = {}
         self._inflight_vdirs = set()
         self._release_lease()
 
     @contextmanager
     def commit_bracket(self, batch_id: str, tables: list[str]):
-        """``begin_commit``/``end_commit`` with the abort path wired:
-        the body's exception triggers ``abort_commit`` instead of
-        leaving a poisoned half-open bracket.  Standalone operator
-        commits should prefer this over raw begin/end pairs; inside a
-        ``batch_commit`` all three calls are no-ops exactly like the
-        raw pair."""
+        """ONE commit around the ``with`` block: ``begin_commit``, then
+        ``end_commit`` on success or ``abort_commit`` on any exception
+        (including a failed publish or a background-write failure
+        re-raised at the drain).  On a snapshot store everything written
+        inside publishes atomically at the outermost exit, under a
+        single manifest.
+
+        Brackets nest: an inner bracket joins the outer one (the
+        manifest keeps the outer ``batch_id``), so composed operators
+        that each bracket their own writes — ``extend_index``,
+        ``extend_lm_index``, ... inside ``ingest_increment`` — publish
+        exactly once, and an exception leaving an inner bracket aborts
+        the whole batch."""
         self.begin_commit(batch_id, tables)
         try:
             yield self
-            # end_commit inside the try: a background-write failure
-            # re-raised at its drain must abort like a body exception
             self.end_commit()
         except BaseException:
             self.abort_commit()
@@ -1986,9 +1851,9 @@ class TableStore:
             )
         if retain < 0:
             raise ValueError(f"retain must be >= 0: {retain}")
-        if self._suspended or self._pending_versions:
+        if self._depth or self._pending_versions:
             raise RuntimeError(
-                "vacuum inside an open batch_commit (or with unpublished "
+                "vacuum inside an open commit bracket (or with unpublished "
                 "pending writes) is not supported — publish first"
             )
         self._commit_epoch = self._acquire_lease()
@@ -2038,12 +1903,11 @@ class TableStore:
         if not self.snapshot_isolation:
             raise ValueError(
                 "rollback needs snapshot_isolation=True: plain mode has "
-                "no versioned manifests to restore (backend='delta' has "
-                "its own RESTORE)"
+                "no versioned manifests to restore"
             )
-        if self._suspended or self._pending_versions:
+        if self._depth or self._pending_versions:
             raise RuntimeError(
-                "rollback inside an open batch_commit (or with "
+                "rollback inside an open commit bracket (or with "
                 "unpublished pending writes) is not supported — publish "
                 "or abandon the batch first"
             )
@@ -2079,62 +1943,16 @@ class TableStore:
                 new_version = self._publish_snapshot(
                     dict(target["tables"]), snap, rollback_of=version
                 )
-        except BaseException:
-            # nothing of this rollback is published on these paths (a
+        finally:
+            # rollback writes no table data, and a failure here (a
             # validation error, a takeover fence, or a pre-swap crash in
-            # _publish_snapshot) and rollback writes no table data — so
-            # clear the manifest rather than report a phantom
-            # interrupted batch, then drop the lease
+            # _publish_snapshot) published nothing — so the manifest is
+            # cleared on every path rather than report a phantom
+            # interrupted batch, then the lease is dropped
+            self._depth = 0
             (self.root / self.MANIFEST).unlink(missing_ok=True)
             self._release_lease()
-            raise
-        (self.root / self.MANIFEST).unlink(missing_ok=True)
-        self._release_lease()
         return new_version
-
-    @contextmanager
-    def batch_commit(self, batch_id: str, tables: list[str]):
-        """ONE commit spanning several composed operators: everything
-        written inside the ``with`` block publishes atomically at exit
-        (snapshot mode) under a single manifest.
-
-        Composed index operators (``extend_index``, ``extend_lm_index``,
-        ...) each bracket their own writes with begin/end_commit;
-        inside this context those inner brackets are no-ops, so an
-        orchestrated multi-family batch (operators/ingest.py) gets
-        exactly one manifest and — on a snapshot-isolation store — one
-        atomic snapshot publish covering every family.  On an
-        exception the manifest is LEFT IN PLACE (and in snapshot mode
-        nothing was published): ``pending_commit`` reports the
-        interrupted batch and the replay converges exactly as for a
-        hard crash.  Nesting is rejected — one batch, one owner."""
-        if self._suspended:
-            raise RuntimeError("batch_commit does not nest")
-        self.begin_commit(batch_id, tables)
-        self._suspended = True
-        try:
-            yield self
-            # surface any background-write failure BEFORE leaving the
-            # suspended scope, so it aborts the batch like an inline one
-            self.flush_writes()
-        except BaseException:
-            # drain in-flight background writes first (their dirs must
-            # not re-register into _pending_versions after the discard)
-            self.flush_writes(swallow=True)
-            self._suspended = False
-            self._in_commit = False
-            # snapshot mode: discard the unpublished versioned dirs so a
-            # same-instance replay starts from the pre-batch snapshot
-            # (the next successful end_commit GCs the orphans); the
-            # lease is released — this writer is no longer mid-swap,
-            # and a hard crash (no release) is covered by the dead-pid
-            # takeover
-            self._pending_versions = {}
-            self._inflight_vdirs = set()
-            self._release_lease()
-            raise
-        self._suspended = False
-        self.end_commit()
 
     def _pending_dirs(self) -> set[str]:
         """Versioned dirnames this instance has written — or has a Spark
@@ -2172,8 +1990,8 @@ class TableStore:
     def pending_commit(self) -> dict | None:
         """The interrupted batch's manifest, if a previous process died
         mid-batch — callers replay (re-run the idempotent merges from
-        their checkpoint, which never advanced past the batch) and then
-        ``end_commit``."""
+        their checkpoint, which never advanced past the batch) inside a
+        ``commit_bracket``, whose exit clears it."""
         import json as _json
 
         p = self.root / self.MANIFEST
@@ -2323,27 +2141,9 @@ class TableStore:
 
     def merge_upsert(self, table: str, updates: DataFrame, keys: list[str]) -> None:
         """Full-row upsert: rows matching on ``keys`` are replaced, new rows
-        inserted.  ``updates`` must be key-unique (callers dedup upstream).
-
-        Delta backend: one real ``MERGE INTO`` (matched → update all,
-        not-matched → insert all) — the statement this parquet-mode
-        merge documents itself as binding to."""
+        inserted.  ``updates`` must be key-unique (callers dedup upstream)."""
         self._tbar(table)
         u = updates.dropDuplicates(keys)
-        if self.backend == "delta":
-            if not self.exists(table):
-                self._delta_write(table, u, "overwrite")
-                return
-            cond = " AND ".join(f"t.{k} <=> u.{k}" for k in keys)
-            (
-                self._delta_table(table)
-                .alias("t")
-                .merge(u.alias("u"), cond)
-                .whenMatchedUpdateAll()
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-            return
         if not self.exists(table):
             if self._managed_pcols(table):
                 self._write_partitions_dynamic(table, self._prep(table, u))
@@ -2362,25 +2162,9 @@ class TableStore:
         self.overwrite(table, kept.unionByName(u))
 
     def merge_insert_missing(self, table: str, updates: DataFrame, keys: list[str]) -> None:
-        """Insert-if-absent, never update (reference N15, group.py:52-64).
-
-        Delta backend: ``MERGE INTO`` with only the not-matched-insert
-        branch."""
+        """Insert-if-absent, never update (reference N15, group.py:52-64)."""
         self._tbar(table)
         u = updates.dropDuplicates(keys)
-        if self.backend == "delta":
-            if not self.exists(table):
-                self._delta_write(table, u, "overwrite")
-                return
-            cond = " AND ".join(f"t.{k} <=> u.{k}" for k in keys)
-            (
-                self._delta_table(table)
-                .alias("t")
-                .merge(u.alias("u"), cond)
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-            return
         if not self.exists(table):
             if self._managed_pcols(table):
                 self._write_partitions_dynamic(table, self._prep(table, u))
@@ -2405,23 +2189,8 @@ class TableStore:
         appears in ``updates`` (or in ``scopes`` when provided), then insert
         the new rows.  This is the reference's delete-of-removed nested sync
         (N14) generalized — a re-ingest with fewer children leaves no stale
-        tails (N18).
-
-        Delta backend: scope-delete + append (child rows have no unique
-        key to MERGE on — full-scope replace is the delete+insert pair,
-        each an atomic Delta commit; a crash between them is converged
-        by the idempotent replay, the same cross-commit contract as
-        parquet mode's multi-table batches)."""
+        tails (N18)."""
         self._tbar(table)
-        if self.backend == "delta":
-            if not self.exists(table):
-                self._delta_write(table, updates, "overwrite")
-                return
-            self._delta_table(table).delete(
-                self._delta_scope_cond(updates, scope_keys)
-            )
-            self._delta_write(table, updates, "append")
-            return
         if not self.exists(table):
             if self._managed_pcols(table):
                 self._write_partitions_dynamic(table, self._prep(table, updates))
@@ -2460,12 +2229,6 @@ class TableStore:
         its kept ∪ updates frame always re-covers every touched partition.
         """
         self._tbar(table)
-        if self.backend == "delta":
-            if self.exists(table):
-                self._delta_table(table).delete(
-                    self._delta_scope_cond(scopes, scope_keys)
-                )
-            return
         if self._managed_pcols(table):
             raise ValueError(
                 f"delete_scope on partitioned/bucketed table {table!r} is "

@@ -129,10 +129,13 @@ def test_crash_mid_build_is_detected(spark, sf_dir, tmp_path):
     pending = TableStore(spark, tmp_path, write_partitions=2).pending_commit()
     assert pending is not None and "mh_pairs" in pending["tables"]
 
-    # the idempotent replay converges and clears the manifest
-    build_minhash_index(store, hashed)
-    assert store.pending_commit() is None
-    assert store.read("mh_bands").count() > 0
+    # the idempotent replay (through a fresh handle, as after a process
+    # crash — the crashed handle's bracket is still open) converges and
+    # clears the manifest
+    replay = TableStore(spark, tmp_path, write_partitions=2)
+    build_minhash_index(replay, hashed)
+    assert replay.pending_commit() is None
+    assert replay.read("mh_bands").count() > 0
 
 
 # ---------------------------------------------------------------------------

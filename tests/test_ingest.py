@@ -248,12 +248,36 @@ def test_crash_mid_batch_publishes_nothing_then_replays(
     )
 
 
-def test_batch_commit_does_not_nest(spark, tmp_path):
+def test_nested_commit_bracket_joins_outer(spark, tmp_path):
+    """A composed operator's bracket inside an orchestrated batch joins
+    it: the manifest keeps the outer batch_id, the batch publishes as
+    ONE snapshot version, and an exception leaving the inner bracket
+    aborts the outer one."""
     store = TableStore(spark, tmp_path, snapshot_isolation=True)
-    with store.batch_commit("outer", ["t"]):
-        with pytest.raises(RuntimeError, match="nest"):
-            with store.batch_commit("inner", ["t"]):
-                pass
+    df = spark.range(3).withColumnRenamed("id", "k")
+    with store.commit_bracket("outer", ["t", "u"]):
+        with store.commit_bracket("inner", ["t"]):
+            store.overwrite("t", df)
+            assert store.pending_commit()["batch_id"] == "outer"
+        assert store.pending_commit()["batch_id"] == "outer"
+        assert store.current_snapshot()["version"] == 0
+        store.overwrite("u", df)
+    assert store.current_snapshot()["version"] == 1
+    assert set(store.current_snapshot()["tables"]) == {"t", "u"}
+    assert store.pending_commit() is None
+
+    with pytest.raises(RuntimeError, match="inner failed"):
+        with store.commit_bracket("outer-2", ["t", "u"]):
+            store.overwrite("u", df.limit(1))
+            with store.commit_bracket("inner-2", ["t"]):
+                store.overwrite("t", df.limit(1))
+                raise RuntimeError("inner failed")
+    assert store._depth == 0
+    assert not store._pending_versions
+    assert store.current_snapshot()["version"] == 1
+    assert store.read("t").count() == 3 and store.read("u").count() == 3
+    assert store.pending_commit()["batch_id"] == "outer-2"
+    assert not (store.root / TableStore.LEASE).exists()
 
 
 def test_remove_flagged_spans_matches_batch_operator(spark):

@@ -336,6 +336,28 @@ def test_commit_manifest_survives_hard_crash_and_replays(spark, tmp_path):
         assert a == b, f"{table} diverged after manifest replay"
 
 
+def test_stale_manifest_of_live_foreign_writer_is_left_alone(spark, tmp_path):
+    """A manifest left by ANOTHER live writer (its lease is fresh, pid 1
+    is always alive) is not cleared: the run is refused at the lease
+    before any fetch, and the foreign batch stays reported."""
+    import time
+
+    from jobcan_data_integrator_spark.storage import ConcurrentWriterError
+
+    api, store, ckpt, pipe, _ = _fresh(spark, tmp_path)
+    root = store.root
+    (root / TableStore.LEASE).write_text(
+        json.dumps({"pid": 1, "ts": time.time(), "epoch": 7})
+    )
+    (root / TableStore.MANIFEST).write_text(
+        json.dumps({"batch_id": "foreign", "tables": ["requests"], "epoch": 7})
+    )
+    with pytest.raises(ConcurrentWriterError, match="pid 1"):
+        pipe.run()
+    assert api.calls == []
+    assert store.pending_commit()["batch_id"] == "foreign"
+
+
 def _assert_converged(spark, tmp_path, store, tables=("requests", "expense_specifics", "users")):
     """``store`` holds exactly what an uninterrupted pipeline produces."""
     _, clean, _, pipe, _ = _fresh(spark, tmp_path / "clean")

@@ -10,52 +10,8 @@ import pytest
 from jobcan_data_integrator_spark.storage import TableStore
 
 
-def _has_delta() -> bool:
-    try:
-        import delta.tables  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-#: the merge-idiom matrix runs against every available backend — the
-#: delta param is a CONDITIONAL skip (runs wherever delta-spark is
-#: installed; this container ships without it), pinning that the
-#: MERGE INTO binding stays call-compatible with the parquet mode.
-#: delta-fake ALWAYS runs: the in-repo builder stand-in
-#: (storage/_delta_fake.py) executes the binding's generated merge
-#: conditions and clause sequences over parquet, so the backend="delta"
-#: code path is exercised in this sandbox instead of skipping to zero
-#: executions.
-BACKENDS = [
-    "parquet",
-    pytest.param(
-        "delta",
-        marks=pytest.mark.skipif(
-            not _has_delta(), reason="delta-spark not installed"
-        ),
-    ),
-    "delta-fake",
-]
-
-
-def _mk_store(spark, root, backend):
-    if backend == "delta-fake":
-        return TableStore(spark, root, backend="delta", delta_impl="fake")
-    return TableStore(spark, root, backend=backend)
-
-
-@pytest.fixture(params=BACKENDS)
-def store(spark, tmp_path, request):
-    """Backend-parameterized store for the merge-idiom matrix."""
-    return _mk_store(spark, tmp_path / "tables", request.param)
-
-
 @pytest.fixture()
-def pstore(spark, tmp_path):
-    """Plain parquet store for the swap/recover/manifest machinery
-    that IS the parquet backend (delta has its own commit protocol)."""
+def store(spark, tmp_path):
     return TableStore(spark, tmp_path / "tables")
 
 
@@ -182,88 +138,98 @@ def test_partitioned_scan_prunes(spark, tmp_path):
 
 
 def test_delete_scope(spark, store):
+    """delete_scope removes exactly the named scopes, NULL-safely — a
+    NULL scope key matches stored NULLs — and is a no-op on a missing
+    table."""
+    store.delete_scope(
+        "t", spark.createDataFrame([("x",)], "request_id string"), ["request_id"]
+    )
+    assert not store.exists("t")
     schema = "request_id string, v int"
     store.overwrite(
-        "t", spark.createDataFrame([("sa-1", 1), ("sa-2", 2)], schema)
+        "t",
+        spark.createDataFrame([("sa-1", 1), ("sa-2", 2), (None, 3)], schema),
     )
     store.delete_scope(
-        "t", spark.createDataFrame([("sa-1",)], "request_id string"), ["request_id"]
+        "t",
+        spark.createDataFrame([("sa-1",), (None,)], "request_id string"),
+        ["request_id"],
     )
     assert _rows(store, "t") == [("sa-2", 2)]
 
 
-def test_recover_from_crashed_swap(spark, pstore):
+def test_recover_from_crashed_swap(spark, store):
     """A crash between overwrite()'s two renames leaves the live dir
     missing and the data in .old-* — every read path must restore it
     instead of letting the next merge rebuild from the batch alone.
     A dead process's torn tmp (foreign token, old mtime) is reclaimed."""
     import os
 
-    pstore.merge_upsert(
+    store.merge_upsert(
         "t", spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"), ["id"]
     )
-    root = pstore.root
-    os.replace(pstore.path("t"), root / "t.old-deadbeef")
+    root = store.root
+    os.replace(store.path("t"), root / "t.old-deadbeef")
     torn = root / "t.tmp-deadpid-cafe0123"  # torn unswapped write, dead writer
     torn.mkdir()
     past = 1_000_000_000
     os.utime(torn, (past, past))
-    assert pstore.exists("t")  # recovery ran
+    assert store.exists("t")  # recovery ran
     assert not (root / "t.old-deadbeef").exists()
     assert not torn.exists()
     # a merge after the crash still sees the prior rows
-    pstore.merge_upsert(
+    store.merge_upsert(
         "t", spark.createDataFrame([(3, "c")], "id int, v string"), ["id"]
     )
-    assert _rows(pstore, "t") == [(1, "a"), (2, "b"), (3, "c")]
+    assert _rows(store, "t") == [(1, "a"), (2, "b"), (3, "c")]
 
 
-def test_recover_preserves_other_writers_fresh_tmp(spark, pstore):
+def test_recover_preserves_other_writers_fresh_tmp(spark, store):
     """A FRESH tmp dir with a foreign token may be another live writer's
     in-flight swap (streaming merge + batch pipeline sharing a root) —
-    _recover must not delete it; the pstore's OWN leftover tmp is
+    _recover must not delete it; the store's OWN leftover tmp is
     reclaimed immediately regardless of age."""
-    pstore.merge_upsert("t", spark.createDataFrame([(1, "a")], "id int, v string"), ["id"])
-    foreign = pstore.root / "t.tmp-feedbeef-01234567"
+    store.merge_upsert("t", spark.createDataFrame([(1, "a")], "id int, v string"), ["id"])
+    foreign = store.root / "t.tmp-feedbeef-01234567"
     foreign.mkdir()  # fresh mtime = possibly in flight
-    own = pstore.root / f"t.tmp-{pstore._token}-76543210"
-    own.mkdir()  # own token = leftover from a failed write of THIS pstore
-    assert pstore.exists("t")
+    own = store.root / f"t.tmp-{store._token}-76543210"
+    own.mkdir()  # own token = leftover from a failed write of THIS store
+    assert store.exists("t")
     assert foreign.exists(), "fresh foreign tmp must survive recovery"
     assert not own.exists(), "own leftover tmp must be reclaimed"
     foreign.rmdir()
 
 
-def test_recover_skips_inflight_table(spark, pstore):
+def test_recover_skips_inflight_table(spark, store):
     """While an overwrite swap is registered in flight (same process,
     another thread), _recover must leave the table's swap dirs alone."""
     from jobcan_data_integrator_spark import storage as S
 
-    pstore.merge_upsert("t", spark.createDataFrame([(1, "a")], "id int, v string"), ["id"])
-    torn = pstore.root / f"t.tmp-{pstore._token}-aaaaaaaa"
+    store.merge_upsert("t", spark.createDataFrame([(1, "a")], "id int, v string"), ["id"])
+    torn = store.root / f"t.tmp-{store._token}-aaaaaaaa"
     torn.mkdir()
     with S._INFLIGHT_LOCK:
-        S._INFLIGHT.add(str(pstore.path("t")))
+        S._INFLIGHT.add(str(store.path("t")))
     try:
-        assert pstore.exists("t")
+        assert store.exists("t")
         assert torn.exists(), "in-flight table's tmp must not be touched"
     finally:
         with S._INFLIGHT_LOCK:
-            S._INFLIGHT.discard(str(pstore.path("t")))
-    assert pstore.exists("t")
+            S._INFLIGHT.discard(str(store.path("t")))
+    assert store.exists("t")
     assert not torn.exists()  # reclaimed once the swap is no longer in flight
 
 
-def test_recover_drops_superseded_old_dirs(spark, pstore):
+def test_recover_drops_superseded_old_dirs(spark, store):
     """A crash after the second rename but before cleanup leaves a
     .old-* next to a live table — it is stale and must be dropped."""
     import shutil
 
-    pstore.merge_upsert("t", spark.createDataFrame([(1, "a")], "id int, v string"), ["id"])
-    shutil.copytree(pstore.path("t"), pstore.root / "t.old-12345678")
-    pstore.merge_upsert("t", spark.createDataFrame([(2, "b")], "id int, v string"), ["id"])
-    assert not list(pstore.root.glob("t.old-*"))
-    assert _rows(pstore, "t") == [(1, "a"), (2, "b")]
+    store.merge_upsert("t", spark.createDataFrame([(1, "a")], "id int, v string"), ["id"])
+    shutil.copytree(store.path("t"), store.root / "t.old-12345678")
+    store.merge_upsert("t", spark.createDataFrame([(2, "b")], "id int, v string"), ["id"])
+    assert not list(store.root.glob("t.old-*"))
+    assert _rows(store, "t") == [(1, "a"), (2, "b")]
 
 
 def test_bucketed_sync_rewrites_only_touched_buckets(spark, tmp_path):
@@ -468,148 +434,18 @@ def test_concurrent_bucketed_merges_keep_untouched_buckets(spark, tmp_path):
         assert got == want, table
 
 
-def test_commit_manifest_roundtrip(spark, pstore):
+def test_commit_manifest_roundtrip(spark, store):
     """begin_commit writes an atomic manifest, pending_commit reads it
     back, end_commit clears it (idempotently)."""
-    assert pstore.pending_commit() is None
-    pstore.begin_commit("batch-7", ["requests", "expense_items"])
-    pending = pstore.pending_commit()
+    assert store.pending_commit() is None
+    store.begin_commit("batch-7", ["requests", "expense_items"])
+    pending = store.pending_commit()
     assert pending["batch_id"] == "batch-7"
     assert pending["tables"] == ["expense_items", "requests"]
     assert isinstance(pending["epoch"], int)  # the r8 fencing token
-    pstore.end_commit()
-    assert pstore.pending_commit() is None
-    pstore.end_commit()  # idempotent
-
-
-# -- delta binding: generated statements (fake-backed, always runs) --------
-
-
-@pytest.fixture()
-def dstore(spark, tmp_path):
-    """Fake-backed delta store + a cleared builder-call journal."""
-    from jobcan_data_integrator_spark.storage._delta_fake import FakeDeltaTable
-
-    FakeDeltaTable.journal.clear()
-    return TableStore(
-        spark, tmp_path / "tables", backend="delta", delta_impl="fake"
-    )
-
-
-def _journal():
-    from jobcan_data_integrator_spark.storage._delta_fake import FakeDeltaTable
-
-    return FakeDeltaTable.journal
-
-
-def test_delta_merge_upsert_generates_both_clauses(spark, dstore):
-    """merge_upsert emits MERGE ON t.key <=> u.key with BOTH when-clauses
-    — the exact statement its parquet-mode docstring claims to bind to."""
-    schema = "id int, v string"
-    dstore.merge_upsert("t", spark.createDataFrame([(1, "a")], schema), ["id"])
-    assert _journal() == []  # first write is a plain table create
-    dstore.merge_upsert(
-        "t", spark.createDataFrame([(1, "A"), (2, "b")], schema), ["id"]
-    )
-    op, _path, cond, clauses = _journal()[-1]
-    assert op == "merge"
-    assert cond == "t.id <=> u.id"
-    assert clauses == ("whenMatchedUpdateAll", "whenNotMatchedInsertAll")
-    assert _rows(dstore, "t") == [(1, "A"), (2, "b")]
-
-
-def test_delta_insert_missing_generates_insert_only(spark, dstore):
-    """merge_insert_missing emits a composite NULL-SAFE key condition and
-    ONLY the not-matched-insert clause (N15: never update)."""
-    schema = "group_name string, group_code string"
-    dstore.merge_insert_missing(
-        "g", spark.createDataFrame([("営業", None)], schema),
-        ["group_name", "group_code"],
-    )
-    dstore.merge_insert_missing(
-        "g", spark.createDataFrame([("営業", None), ("営業", "E1")], schema),
-        ["group_name", "group_code"],
-    )
-    op, _path, cond, clauses = _journal()[-1]
-    assert op == "merge"
-    assert cond == "t.group_name <=> u.group_name AND t.group_code <=> u.group_code"
-    assert clauses == ("whenNotMatchedInsertAll",)
-    assert _rows(dstore, "g") == [("営業", "E1"), ("営業", None)]
-
-
-def test_delta_sync_children_deletes_scope_then_appends(spark, dstore):
-    """sync_children emits delete(scope clamp) + append; the clamp names
-    ONLY the update batch's scopes, so untouched scopes never appear in
-    the generated predicate (the _delta_scope_cond contract)."""
-    schema = "request_id string, item_index int, v string"
-    dstore.sync_children(
-        "ci",
-        spark.createDataFrame(
-            [("sa-1", 0, "a"), ("sa-1", 1, "b"), ("sa-2", 0, "x")], schema
-        ),
-        ["request_id"],
-    )
-    dstore.sync_children(
-        "ci", spark.createDataFrame([("sa-1", 0, "A")], schema), ["request_id"]
-    )
-    deletes = [e for e in _journal() if e[0] == "delete"]
-    assert len(deletes) == 1
-    cond = deletes[0][2]
-    assert "sa-1" in cond and "sa-2" not in cond
-    assert _rows(dstore, "ci") == [("sa-1", 0, "A"), ("sa-2", 0, "x")]
-
-
-def test_delta_delete_scope_null_safe(spark, dstore):
-    """delete_scope removes exactly the named scopes, NULL-safely — a
-    NULL scope key matches stored NULLs (eqNullSafe in the clamp), and
-    a delete on a missing table is a no-op."""
-    dstore.delete_scope(
-        "ev", spark.createDataFrame([("x",)], "k string"), ["k"]
-    )  # table absent: no-op, no journal entry
-    assert _journal() == []
-    schema = "k string, v int"
-    dstore.overwrite(
-        "ev", spark.createDataFrame([("a", 1), ("b", 2), (None, 3)], schema)
-    )
-    dstore.delete_scope(
-        "ev",
-        spark.createDataFrame([("a",), (None,)], "k string"),
-        ["k"],
-    )
-    assert _rows(dstore, "ev") == [("b", 2)]
-    assert _journal()[-1][0] == "delete"
-
-
-def test_delta_batch_commit_one_manifest(spark, dstore):
-    """batch_commit over delta-backed merges: one outer manifest brackets
-    the batch (inner begin/end are no-ops) and clears at exit."""
-    schema = "id int, v string"
-    with dstore.batch_commit("b1", ["t", "u"]):
-        dstore.merge_upsert("t", spark.createDataFrame([(1, "a")], schema), ["id"])
-        pending = dstore.pending_commit()
-        assert pending["batch_id"] == "b1" and pending["tables"] == ["t", "u"]
-        dstore.merge_insert_missing(
-            "u", spark.createDataFrame([(2, "b")], schema), ["id"]
-        )
-    assert dstore.pending_commit() is None
-    assert _rows(dstore, "t") == [(1, "a")]
-    assert _rows(dstore, "u") == [(2, "b")]
-
-
-def test_delta_rejects_snapshot_and_layouts_in_fake_mode(spark, tmp_path):
-    """The fake impl keeps the real binding's constructor validations."""
-    with pytest.raises(ValueError, match="snapshot"):
-        TableStore(
-            spark, tmp_path / "a", backend="delta", delta_impl="fake",
-            snapshot_isolation=True,
-        )
-    with pytest.raises(ValueError, match="layout"):
-        TableStore(
-            spark, tmp_path / "b", backend="delta", delta_impl="fake",
-            bucketed={"t": ("id", 4)},
-        )
-    with pytest.raises(ValueError, match="delta_impl"):
-        TableStore(spark, tmp_path / "c", backend="delta", delta_impl="nope")
+    store.end_commit()
+    assert store.pending_commit() is None
+    store.end_commit()  # idempotent
 
 
 # Long-haul integration tier (r12): excluded from the DEFAULT pytest run

@@ -1,11 +1,11 @@
 """Focused tests for the r11 fixed-cost storage optimizations:
 
-1. Background submission inside a top-level ``begin_commit``/
-   ``end_commit`` bracket (``_in_commit``): submits overlap on the
-   scheduler but the bracket's semantics are unchanged — same-instance
-   reads observe the pending writes, nothing publishes before
-   ``end_commit``, a failing op aborts the bracket, and cross-table
-   hazards stay ordered.
+1. Background submission inside any open commit bracket (``_depth``
+   > 0): submits overlap on the scheduler but the bracket's semantics
+   are unchanged — same-instance reads observe the pending writes,
+   nothing publishes before ``end_commit``, a failing op aborts the
+   bracket, a failed publish leaks nothing into the next commit, and
+   cross-table hazards stay ordered.
 2. The versioned-dir schema memo (``_read_pq``): repeated reads of one
    immutable snapshot dir reuse the inferred schema; a new version with
    a DIFFERENT schema is read with its own schema (no stale memo).
@@ -32,7 +32,7 @@ def test_begin_commit_backgrounds_submits(spark, tmp_path):
     a = spark.range(5).select(F.col("id").alias("k"))
     b = spark.range(7).select(F.col("id").alias("k"))
     store.begin_commit("bg-bracket", ["ta", "tb"])
-    assert store._in_commit
+    assert store._depth == 1
     store.submit_op(lambda: store.overwrite("ta", a), reads=("ta",), writes=("ta",))
     store.submit_op(lambda: store.overwrite("tb", b), reads=("tb",), writes=("tb",))
     # the scheduler was engaged (not inline): at least one async future
@@ -43,7 +43,7 @@ def test_begin_commit_backgrounds_submits(spark, tmp_path):
     other = TableStore(spark, tmp_path / "store", snapshot_isolation=True)
     assert not other.exists("ta")
     store.end_commit()
-    assert not store._in_commit
+    assert store._depth == 0
     other2 = TableStore(spark, tmp_path / "store", snapshot_isolation=True)
     assert other2.read("ta").count() == 5
     assert other2.read("tb").count() == 7
@@ -180,7 +180,7 @@ def test_abort_commit_clears_failed_bracket(spark, tmp_path):
                 reads=("ta",), writes=("ta",),
             )
             raise RuntimeError("boom")
-    assert not store._in_commit
+    assert store._depth == 0
     assert not store._pending_versions
     # the failed bracket's write never became visible, and a fresh
     # bracket works normally
@@ -189,6 +189,38 @@ def test_abort_commit_clears_failed_bracket(spark, tmp_path):
         store.overwrite("tb", good)
     assert store.read("tb").count() == 3
     assert not store.exists("ta")
+
+
+def test_failed_outer_publish_leaks_nothing_into_next_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A publish failing at the OUTER bracket's exit (after a composed
+    operator's inner bracket joined it) aborts the whole batch: nothing
+    was published, the pending versions and the lease are gone, and the
+    next commit publishes only its own table."""
+    store = _store(spark, tmp_path)
+    a = spark.range(5).select(F.col("id").alias("k"))
+    b = spark.range(7).select(F.col("id").alias("k"))
+    real_publish = store._publish_snapshot
+
+    def fail_once(*args, **kwargs):
+        monkeypatch.setattr(store, "_publish_snapshot", real_publish)
+        raise OSError("publish failed")
+
+    with pytest.raises(OSError, match="publish failed"):
+        with store.commit_bracket("batch", ["ta", "tb"]):
+            with store.commit_bracket("extend", ["ta"]):
+                store.overwrite("ta", a)
+            store.overwrite("tb", b)
+            monkeypatch.setattr(store, "_publish_snapshot", fail_once)
+    assert store.current_snapshot()["version"] == 0
+    assert not store._pending_versions
+    assert not (store.root / TableStore.LEASE).exists()
+    assert store._depth == 0
+    with store.commit_bracket("ok", ["tb"]):
+        store.overwrite("tb", b)
+    assert set(store.current_snapshot()["tables"]) == {"tb"}
+    assert store.pending_commit() is None
 
 
 def test_commit_bracket_background_failure_aborts(spark, tmp_path):
@@ -202,5 +234,5 @@ def test_commit_bracket_background_failure_aborts(spark, tmp_path):
     with pytest.raises(ValueError, match="bg fail"):
         with store.commit_bracket("bg-bad", ["ta"]):
             store.submit_op(boom, reads=("ta",), writes=("ta",))
-    assert not store._in_commit
+    assert store._depth == 0
     assert not store._pending_versions

@@ -37,7 +37,7 @@ def _store(spark, root, retain: int = 3) -> TableStore:
 
 
 def _publish(store: TableStore, batch: str, tables: dict[str, int]) -> int:
-    with store.batch_commit(batch, sorted(tables)):
+    with store.commit_bracket(batch, sorted(tables)):
         for t, v in tables.items():
             store.overwrite(t, _df(store.spark, v))
     return store.current_snapshot()["version"]
@@ -152,9 +152,9 @@ def test_managed_table_time_travel_and_rollback(spark, tmp_path):
         retain_snapshots=4,
         bucketed={"t": ("k", 4)},
     )
-    with st.batch_commit("b0", ["t"]):
+    with st.commit_bracket("b0", ["t"]):
         st.overwrite("t", _df(spark, 0, n=8))
-    with st.batch_commit("b1", ["t"]):
+    with st.commit_bracket("b1", ["t"]):
         st.merge_upsert("t", _df(spark, 1, n=2), ["k"])
     assert sorted(r.v for r in st.read_version("t", 1).collect()) == [0] * 8
     assert sorted(r.v for r in st.read_version("t", 2).collect()) == [0] * 6 + [1] * 2

@@ -48,7 +48,7 @@ def test_live_foreign_writer_is_refused_then_takeover_on_death(
         with pytest.raises(ConcurrentWriterError, match=str(child.pid)):
             b.begin_commit("batch-b", ["t"])
         with pytest.raises(ConcurrentWriterError):
-            with b.batch_commit("batch-b", ["t"]):
+            with b.commit_bracket("batch-b", ["t"]):
                 pass  # pragma: no cover - refused at entry
     finally:
         child.kill()
@@ -105,10 +105,10 @@ def test_fresh_foreign_lease_with_live_pid_blocks(spark, tmp_path):
         b.begin_commit("blocked", ["t"])
 
 
-def test_batch_commit_failure_releases_lease(spark, tmp_path):
+def test_commit_bracket_failure_releases_lease(spark, tmp_path):
     a = TableStore(spark, tmp_path, snapshot_isolation=True)
     with pytest.raises(RuntimeError, match="boom"):
-        with a.batch_commit("batch-a", ["t"]):
+        with a.commit_bracket("batch-a", ["t"]):
             raise RuntimeError("boom")
     # manifest stays (the interrupted batch is detectable) but the
     # lease is gone — this writer is no longer mid-swap
