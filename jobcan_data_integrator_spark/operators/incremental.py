@@ -1108,13 +1108,10 @@ SIMHASH_TABLES = ("sh_signatures", "sh_blocks", "sh_pairs", "sh_geometry")
 def simhash_store_geometry(store: TableStore) -> dict | None:
     """The persisted family's geometry — {limbs, bits_per_limb,
     n_blocks, block_bits} from the one-row ``sh_geometry`` sidecar, or
-    None on a store without one (legacy single-long layouts; their
-    geometry is whatever the caller passes, and the first increment /
-    extend backfills the sidecar so the width stops living in caller
-    arguments).  Geometry is an INDEX property: every signer, prober
-    and extender must read it from here rather than assume a width —
-    mixing widths silently drops pairs (the failure class
-    ``near_dup_pairs``'s in-row guard exists for)."""
+    None on a store without the family.  Geometry is an INDEX property:
+    every signer, prober and extender must read it from here rather
+    than assume a width — mixing widths silently drops pairs (the
+    failure class ``near_dup_pairs``'s in-row guard exists for)."""
     if not store.exists("sh_geometry"):
         return None
     r = store.read("sh_geometry").head()
@@ -1283,49 +1280,20 @@ def build_simhash_index(
         )
 
 
-def _sh_resolve_geometry(
-    store: TableStore, n_blocks: int, block_bits: int
-) -> dict:
-    """The geometry every probe/extend runs at: the persisted sidecar
-    when present (caller arguments are then legacy noise and ignored —
-    the store knows its own width), else the caller's single-long
-    legacy parameters, which the next write backfills into the sidecar
-    via ``_ensure_sh_geometry``."""
+def _sh_geometry(store: TableStore) -> dict:
+    """``simhash_store_geometry``, raising on a store without the
+    ``sh_geometry`` sidecar (``build_simhash_index`` and
+    ``resign_simhash_index`` always write it)."""
     g = simhash_store_geometry(store)
-    if g is not None:
-        return g
-    return {
-        "limbs": 1,
-        "bits_per_limb": 60,
-        "n_blocks": n_blocks,
-        "block_bits": block_bits,
-    }
-
-
-def _ensure_sh_backfills(store: TableStore, g: dict) -> None:
-    """Backfill the block table and the geometry sidecar for an index
-    persisted before they existed (the signature table alone was the
-    index then; blocks were derived at probe time and the width lived
-    in caller arguments).  Without the block backfill, probing a legacy
-    store would fail loudly, and extending one would seed a PARTIAL
-    block table covering only the increment — silent missed pairs ever
-    after.  Without the geometry backfill, a later caller passing a
-    different width would silently drop pairs — after the first touch
-    the store's own record wins."""
-    if store.exists("sh_signatures") and not store.exists("sh_blocks"):
-        store.overwrite(
-            "sh_blocks", _sh_block_rows(store.read("sh_signatures"), g)
+    if g is None:
+        raise ValueError(
+            f"store {store.root} has no sh_geometry sidecar — build the "
+            "SimHash family with build_simhash_index first"
         )
-    if store.exists("sh_signatures") and not store.exists("sh_geometry"):
-        store.overwrite("sh_geometry", _sh_geometry_df(store, g))
+    return g
 
 
-def simhash_increment(
-    store: TableStore,
-    new_signatures: DataFrame,
-    n_blocks: int = 4,
-    block_bits: int = 15,
-) -> DataFrame:
+def simhash_increment(store: TableStore, new_signatures: DataFrame) -> DataFrame:
     """Near-dup pairs INVOLVING the increment (new-vs-corpus ∪
     new-vs-new) — union with stored ``sh_pairs`` to reproduce the full
     corpus's pair set.  The corpus side is one block-key equi-join
@@ -1337,13 +1305,11 @@ def simhash_increment(
     duplicate pairs collapse in the final ``distinct`` (Hamming is a
     pure per-pair function, not a count over unioned rows).
 
-    Runs at the store's persisted geometry when the ``sh_geometry``
-    sidecar exists (``n_blocks``/``block_bits`` are then legacy
-    arguments and ignored); ``new_signatures`` must be signed at that
-    geometry (``simhash_signatures_at``) — the column type is checked."""
-    g = _sh_resolve_geometry(store, n_blocks, block_bits)
+    Runs at the store's persisted ``sh_geometry`` (raises without it);
+    ``new_signatures`` must be signed at that geometry
+    (``simhash_signatures_at``) — the column type is checked."""
+    g = _sh_geometry(store)
     _sh_check_signatures(new_signatures, g)
-    _ensure_sh_backfills(store, g)
     new_blocks = _sh_block_rows(new_signatures, g).localCheckpoint(eager=True)
     corpus_blocks = store.read_for_keys(
         "sh_blocks", new_blocks.select("block_val")
@@ -1357,8 +1323,6 @@ def extend_simhash_index(
     store: TableStore,
     new_signatures: DataFrame,
     new_pairs: DataFrame,
-    n_blocks: int = 4,
-    block_bits: int = 15,
 ) -> None:
     """Absorb a processed increment: append signatures + their block
     rows, upsert pairs — at the store's persisted geometry (see
@@ -1367,9 +1331,8 @@ def extend_simhash_index(
     rewrites (new_pairs via the probe, new_signatures via any
     caller-side derivation), and the second merge would otherwise
     re-evaluate ``sig`` against files the first merge replaced."""
-    g = _sh_resolve_geometry(store, n_blocks, block_bits)
+    g = _sh_geometry(store)
     _sh_check_signatures(new_signatures, g)
-    _ensure_sh_backfills(store, g)
     new_pairs = new_pairs.localCheckpoint(eager=True)
     sig = new_signatures.localCheckpoint(eager=True)
     with store.commit_bracket("sh-index-extend", list(SIMHASH_TABLES)):
@@ -1423,7 +1386,7 @@ def resign_simhash_index(
         simhash_signatures_at,
     )
 
-    old = _sh_resolve_geometry(store, 4, 15)
+    old = _sh_geometry(store)
     new = {
         "limbs": limbs if limbs is not None else old["limbs"],
         "bits_per_limb": (
@@ -1510,7 +1473,7 @@ def maybe_widen_simhash_index(
         derived_geometry,
     )
 
-    g = _sh_resolve_geometry(store, 4, 15)
+    g = _sh_geometry(store)
     n = store.read("sh_signatures").count()
     want_limbs, want_bits = derived_geometry(
         n,
@@ -1675,20 +1638,12 @@ def ivf_drift_stats(store: TableStore) -> dict[str, float]:
     ``max_share`` (largest cell's fraction) and ``skew`` — the
     normalized Herfindahl index ``n_cells · Σ share²``: 1.0 for a
     perfectly balanced corpus, ``n_cells`` when one cell holds
-    everything.  Reads the O(n_cells) ``ivf_cell_stats`` sidecar when
-    present (one map-side-combined agg over the masked assignment table
-    otherwise — pre-round-10 stores).  Feed to
+    everything.  Reads the O(n_cells) ``ivf_cell_stats`` sidecar, which
+    every writer of ``ivf_assignments`` (build, extend, semantic extend,
+    refresh) writes in the same commit.  Feed to
     ``should_refresh_codebooks`` or threshold directly."""
     n_cells = store.read("ivf_codebook").count()
-    if store.exists(IVF_CELL_STATS):
-        counts = store.read(IVF_CELL_STATS)
-    else:
-        counts = (
-            _mask_emb_retracted(store, store.read("ivf_assignments"))
-            .groupBy("cell_id")
-            .agg(F.count("*").alias("n_vecs"))
-        )
-    row = counts.agg(
+    row = store.read(IVF_CELL_STATS).agg(
         F.coalesce(F.sum("n_vecs"), F.lit(0)).alias("n"),
         F.coalesce(F.max("n_vecs"), F.lit(0)).alias("mx"),
         F.coalesce(F.sum(F.col("n_vecs") * F.col("n_vecs")), F.lit(0)).alias(
@@ -2146,8 +2101,8 @@ SPAN_TABLES = ("sp_occs", "sp_hashes", "sp_flags")
 #: affected-bucket semi-join scan was the residual data-linear term
 #: (BASELINE.md r8).  Cleared (per folded doc) at fold time; the
 #: doc_id column makes completeness CHECKABLE — compact uses the hint
-#: only when every unfolded masked doc appears here (a store upgraded
-#: mid-history falls back to the scan, never to a wrong fold).
+#: only when every unfolded masked doc appears here (a retraction run
+#: with span=None falls back to the scan, never to a wrong fold).
 SPAN_MASK_HASHES = "sp_mask_hashes"
 
 

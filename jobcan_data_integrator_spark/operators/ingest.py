@@ -237,16 +237,12 @@ def doc_history(store: TableStore, ids: DataFrame) -> DataFrame:
       what ``read_curated`` serves.
     - ``retracted`` — permanently deleted; ``ref`` = the retract_id,
       with the receipt's snapshot version and timestamp joined from
-      ``retraction_log``.  Stores whose retractions predate the per-id
-      ``retraction_ids`` receipt still report the masked id, with a
-      null ``ref``.
+      ``retraction_log``.
 
     Scale shape: every read is either bucket-pruned to the requested
-    ids (curated) or an already-broadcast-small mask/receipt table;
+    ids (curated) or an already-broadcast-small tombstone/receipt table;
     cost is bounded by the id list and the stores' retraction history,
     never the corpus."""
-    from jobcan_data_integrator_spark.operators import incremental as inc
-
     spark = store.spark
     ids = ids.select("doc_id").distinct().localCheckpoint(eager=True)
     b = F.broadcast(ids)
@@ -288,14 +284,8 @@ def doc_history(store: TableStore, ids: DataFrame) -> DataFrame:
                 null_d.alias("ts"),
             )
         )
-    receipts = None
     if store.exists(RETRACTION_IDS):
-        receipts = (
-            store.read(RETRACTION_IDS)
-            .join(b, "doc_id", "leftsemi")
-            .localCheckpoint(eager=True)
-        )
-        r = receipts
+        r = store.read(RETRACTION_IDS).join(b, "doc_id", "leftsemi")
         if store.exists(RETRACTION_LOG):
             r = r.join(
                 F.broadcast(
@@ -316,26 +306,6 @@ def doc_history(store: TableStore, ids: DataFrame) -> DataFrame:
                 null_s.alias("cause"),
                 F.col("over_version").cast("bigint").alias("over_version"),
                 F.col("ts").cast("double").alias("ts"),
-            )
-        )
-    if store.exists(inc.DOC_RETRACTIONS):
-        legacy = (
-            store.read(inc.DOC_RETRACTIONS)
-            .join(b, "doc_id", "leftsemi")
-            .select("doc_id")
-        )
-        if receipts is not None:
-            legacy = legacy.join(
-                receipts.select("doc_id"), "doc_id", "left_anti"
-            )
-        out = out.unionByName(
-            legacy.select(
-                "doc_id",
-                F.lit("retracted").alias("event"),
-                null_s.alias("ref"),
-                null_s.alias("cause"),
-                null_l.alias("over_version"),
-                null_d.alias("ts"),
             )
         )
     return out
@@ -1531,7 +1501,8 @@ def ingest_increment(
     None disables.
 
     ``bm25``: maintain the BM25 inverted-index family
-    (operators/retrieval.py) over the batch's kept docs.  Opt-in on the
+    (operators/retrieval.py) over the batch's kept docs; needs a
+    snapshot-isolation store (raises on a plain one).  Opt-in on the
     FIRST batch only — once ``bm_doc_len`` exists every later ingest,
     repair, retraction, and compaction maintains it automatically
     (exists-driven, like the other families); serve with
@@ -1549,43 +1520,19 @@ def ingest_increment(
 
     spark = new_docs.sparkSession
     # exists-driven after first sight, like every other family
-    bm25_requested = bm25
     bm25 = bm25 or store.exists(rt.BM25_DOC_LEN)
     if bm25 and not store.snapshot_isolation:
         # the family's repair path captures the docs' OLD text from
         # cur_docs and prunes those (term, doc_id) rows after the
         # curated upsert lands; on a plain store a crash between the two
         # per-table swaps destroys the capture source, so the replay
-        # can no longer name the stale postings (the delta anti-join
-        # sees the text already current and skips) — stale rows would
-        # persist forever.  Snapshot mode publishes both (or neither)
-        # atomically, which is what makes the capture-then-prune
-        # sequence replay-safe.
-        if bm25_requested:
-            raise ValueError(
-                "the BM25 family needs a snapshot-isolation store: its "
-                "old-text capture-then-prune maintenance is only crash-"
-                "replay-safe under an atomic multi-table publish.  "
-                "Rebuild the store with snapshot_isolation=True, or "
-                "drop an existing family with "
-                "operators.retrieval.drop_bm25_family(store)"
-            )
-        # exists-driven auto-trigger on a LEGACY plain store (the family
-        # predates the snapshot requirement, or was built through the
-        # per-family API): do not brick its ingest path — freeze the
-        # family this batch, loudly, and name the migration paths
-        import warnings
-
-        warnings.warn(
-            f"store {store.root} carries the BM25 family but is not "
-            "snapshot-isolated; skipping BM25 maintenance this batch, "
-            "so the family is now STALE for serving.  Migrate by "
-            "rebuilding the store with snapshot_isolation=True, or run "
-            "operators.retrieval.drop_bm25_family(store) to retire the "
-            "family and silence this warning",
-            stacklevel=2,
+        # could no longer name the stale postings.  Snapshot mode
+        # publishes both (or neither) atomically.
+        raise ValueError(
+            "the BM25 family needs a snapshot-isolation store: its "
+            "old-text capture-then-prune maintenance is only crash-"
+            "replay-safe under an atomic multi-table publish"
         )
-        bm25 = False
 
     if allow_out_of_order:
         if simhash:
@@ -1973,7 +1920,7 @@ def ingest_increment(
         # 4b. SimHash family (index + pair maintenance only).  Width-
         # generic (r11): an existing store's persisted sh_geometry wins
         # — every batch signs at the stored width (mixing widths
-        # silently drops pairs); a FIRST build either takes the legacy
+        # silently drops pairs); a FIRST build either takes the
         # single-long default or, with simhash_auto_geometry, derives
         # (limbs, block_bits) from the batch's corpus count so a
         # past-saturation seed corpus starts wide instead of dying at
@@ -1984,8 +1931,7 @@ def ingest_increment(
                 simhash_signatures_at,
             )
 
-            g = inc.simhash_store_geometry(store)
-            if g is None and not store.exists("sh_signatures"):
+            if not store.exists("sh_signatures"):
                 if simhash_auto_geometry:
                     limbs, bb = derived_geometry(kept.count())
                 else:
@@ -1995,10 +1941,7 @@ def ingest_increment(
                     store, sigs, block_bits=bb, limbs=limbs
                 )
             else:
-                if g is None:
-                    # legacy store without the sidecar: the historical
-                    # single-long default, backfilled on this touch
-                    g = {"limbs": 1, "bits_per_limb": 60}
+                g = inc._sh_geometry(store)
                 sigs = simhash_signatures_at(
                     kept, g["limbs"], g["bits_per_limb"]
                 )
@@ -2570,8 +2513,7 @@ def retract_documents(
             # hashes with no surviving occurrence are PHYSICALLY
             # deleted: h is the bucket source, so prune_keys derives
             # the affected buckets straight from the vanished hash set
-            # (scoped, zero scan — r8; pre-r8 stores wrote n_occ=0
-            # sentinel rows here, which compact_store still prunes)
+            # (scoped, zero scan)
             vanished_hs = hs.join(
                 new_sp_groups.select("h"), "h", "left_anti"
             )
@@ -3020,19 +2962,14 @@ def _mask_insert(store: TableStore, table: str, ids: DataFrame, key: str) -> Non
     the compact_store fold WATERMARK: a fold prunes base tables with
     only the not-yet-folded ids, then flips them to ``folded=True``, so
     fold cost follows retraction volume SINCE THE LAST FOLD instead of
-    lifetime takedown history.  A pre-watermark store's mask (no
-    ``folded`` column) is migrated in place — masks are broadcast-small
-    by design."""
-    def _op() -> None:
-        if store.exists(table) and "folded" not in store.read(table).columns:
-            store.overwrite(
-                table, store.read(table).withColumn("folded", F.lit(False))
-            )
-        store.merge_insert_missing(
+    lifetime takedown history."""
+    store.submit_op(
+        lambda: store.merge_insert_missing(
             table, ids.select(key).withColumn("folded", F.lit(False)), [key]
-        )
-
-    store.submit_op(_op, reads=(table,), writes=(table,))
+        ),
+        reads=(table,),
+        writes=(table,),
+    )
 
 
 def compact_store(store: TableStore) -> None:
@@ -3043,8 +2980,7 @@ def compact_store(store: TableStore) -> None:
 
     - ``doc_retractions`` folded into ``ex_docs``/``sp_occs`` (the
       retracted docs' rows physically leave the hash map and the
-      occurrence table) and the ``n_occ=0`` sentinel rows pruned from
-      ``sp_hashes``;
+      occurrence table);
     - ``sp_flag_drops`` folded into ``sp_flags`` (retracted flags
       physically leave);
     - ``emb_retractions`` folded into ``eb_vectors``/``eb_buckets``/
@@ -3091,7 +3027,6 @@ def compact_store(store: TableStore) -> None:
         for t in (
             "ex_docs",
             "sp_occs",
-            "sp_hashes",
             "sp_flags",
             "eb_vectors",
             "eb_buckets",
@@ -3133,8 +3068,7 @@ def compact_store(store: TableStore) -> None:
     # below additionally overlap through the background scheduler
     # (``submit_op``).
     def _unfolded(table: str, key: str) -> DataFrame | None:
-        """The mask rows added since the last fold (``folded=False``; a
-        pre-watermark store's unflagged rows count as unfolded once).
+        """The mask rows added since the last fold (``folded=False``).
         None when nothing is new — the per-family prunes are skipped, so
         a fold's cost follows retraction volume SINCE THE LAST FOLD, not
         lifetime takedown history (every bucket any past retraction ever
@@ -3142,10 +3076,12 @@ def compact_store(store: TableStore) -> None:
         8 MB-growth trigger, forever)."""
         if not store.exists(table):
             return None
-        m = store.read(table)
-        if "folded" in m.columns:
-            m = m.filter(~F.coalesce(F.col("folded"), F.lit(False)))
-        m = m.select(key).localCheckpoint(eager=True)
+        m = (
+            store.read(table)
+            .filter(~F.col("folded"))
+            .select(key)
+            .localCheckpoint(eager=True)
+        )
         return m if m.head(1) else None
 
     with store.commit_bracket("store-compact", tables):
@@ -3185,9 +3121,10 @@ def _compact_folds(store: TableStore, tables: list[str], _unfolded) -> None:
         # the residual data-linear term.  The retraction-time sidecar
         # names the masked docs' hashes; when it COVERS every unfolded
         # masked doc, those hashes become prune_keys' segment hint and
-        # the fold is mask-bounded (zero scan).  Stores upgraded
-        # mid-history (older unfolded masks predate the sidecar) fail
-        # the coverage check and keep the scan — never a wrong fold.
+        # the fold is mask-bounded (zero scan).  A mask the sidecar
+        # does not cover (a retraction run with span=None records no
+        # hashes) fails the coverage check and keeps the scan — never
+        # a wrong fold.
         sp_hint = None
         if store.exists(inc.SPAN_MASK_HASHES):
             sm = store.read(inc.SPAN_MASK_HASHES).localCheckpoint(eager=True)
@@ -3244,13 +3181,10 @@ def _compact_folds(store: TableStore, tables: list[str], _unfolded) -> None:
                 .agg(F.count("*").alias("n_vecs")),
             )
         )
-    ops.append(
-        lambda: store.prune_predicate("sp_hashes", F.col("n_occ") <= 0)
-    )
     fold_writes = (
         "sp_flags", "eb_vectors", "eb_buckets", "ivf_assignments",
         "pq_codes", "ex_docs", DOC_VECS, "sp_occs", inc.SPAN_MASK_HASHES,
-        inc.IVF_CELL_STATS, "sp_hashes",
+        inc.IVF_CELL_STATS,
     )
     store.submit_op(
         lambda: store.merge_batch(ops),

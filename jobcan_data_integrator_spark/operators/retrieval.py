@@ -334,6 +334,14 @@ def _family_rows(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def _insert_docs(store: "TableStore", docs: DataFrame) -> None:
+    """Insert the docs' postings and lengths — the family's one writer.
+    Refuses a plain store: the repair path's capture-then-prune is
+    crash-replay-safe only under an atomic multi-table publish."""
+    if not store.snapshot_isolation:
+        raise ValueError(
+            "the BM25 family needs a snapshot-isolation store "
+            f"(store {store.root} is plain)"
+        )
     postings, dl = _family_rows(docs)
     # independent tables: each insert rides the background scheduler
     # (same-table ordering via the declared sets; inline outside a batch)
@@ -407,34 +415,6 @@ def replace_bm25_docs(
         return
     remove_bm25_docs(store, old_docs)
     _insert_docs(store, new_docs.select("doc_id", "text"))
-
-
-def drop_bm25_family(store: "TableStore") -> None:
-    """Retire the BM25 family from a PLAIN (non-snapshot) store — the
-    migration path for a legacy store that acquired the family before
-    the snapshot-isolation requirement (or through the per-family API):
-    once dropped, ``ingest_increment`` stops auto-maintaining the family
-    and its stale-index warning goes away.  Rebuild on a
-    snapshot-isolation store with ``ingest_increment(bm25=True)`` when
-    BM25 serving is still wanted.
-
-    Snapshot stores maintain the family natively and have no
-    migration to run — dropping there is refused."""
-    import shutil
-
-    if store.snapshot_isolation:
-        raise ValueError(
-            "drop_bm25_family is the legacy plain-store migration path; "
-            "snapshot stores maintain the BM25 family natively "
-            "(retire docs with retract_documents instead)"
-        )
-    with store.commit_bracket("drop-bm25-family", list(BM25_TABLES)):
-        for t in BM25_TABLES:
-            shutil.rmtree(store.path(t), ignore_errors=True)
-            for leftover in list(store.root.glob(f"{t}.old-*")) + list(
-                store.root.glob(f"{t}.tmp-*")
-            ):
-                shutil.rmtree(leftover, ignore_errors=True)
 
 
 def bm25_query_indexed(

@@ -11,15 +11,27 @@ The reference's four write idioms map to three primitives here:
   of the scoped parents (users.py:109-180 delete-of-removed, N14/N18 —
   and the fix for the reference's broken tail-trim DELETE)
 
-Implementation is read-modify-write parquet with an atomic directory
-swap: new data lands in ``<table>.tmp-<pid>`` and is renamed over the
-live directory.  On a production deployment the same three call sites
-bind 1:1 to Delta/Iceberg ``MERGE INTO`` (``WHEN MATCHED UPDATE / WHEN
-NOT MATCHED INSERT / WHEN NOT MATCHED BY SOURCE DELETE``) and become
-metadata-only row-group rewrites; the rewrite-everything fallback is the
-cost of zero table-format dependencies, not of the design.  Keys are
-compared null-safely (``eqNullSafe``) to mirror SQLite's ``IS`` used in
-the reference's existence checks.
+Implementation is read-modify-write parquet, in one of two on-disk
+layouts fixed when the store is constructed:
+
+- plain mode (the default): each table is one live directory
+  ``<table>/``, hive-partitioned for managed tables.  A full replace
+  lands in ``<table>.tmp-<token>-<id>`` and is renamed over the live
+  directory; managed merges rewrite only their partitions in place.
+- snapshot mode (``snapshot_isolation=True``): every write lands in a
+  fresh ``<table>.v-<token>-<id>`` directory (a layer stack for managed
+  tables) and becomes visible when ``end_commit`` swaps the
+  ``_snapshot.json`` pointer; ``_snaplog/`` keeps one manifest per
+  published version.
+
+The two layouts are not interchangeable: a root written in one mode is
+never read in the other.  On a production deployment the same three
+call sites bind 1:1 to Delta/Iceberg ``MERGE INTO`` (``WHEN MATCHED
+UPDATE / WHEN NOT MATCHED INSERT / WHEN NOT MATCHED BY SOURCE DELETE``)
+and become metadata-only row-group rewrites; the rewrite-everything
+fallback is the cost of zero table-format dependencies, not of the
+design.  Keys are compared null-safely (``eqNullSafe``) to mirror
+SQLite's ``IS`` used in the reference's existence checks.
 """
 
 from __future__ import annotations
@@ -408,15 +420,6 @@ class TableStore:
         ):
             self._async.wait_table(table)
 
-    def _wbar(self) -> None:
-        """Write barrier: a synchronous write op (which does not declare
-        its read set) waits for ALL pending background writes first."""
-        if self._async is not None and not getattr(
-            _ASYNC_WORKER, "active", False
-        ):
-            self._async.wait_all()
-            self._async = None
-
     def _tbar(self, table: str) -> None:
         """Table-scoped write barrier: a synchronous single-table write
         (all the merge/prune primitives — they read and write only their
@@ -493,24 +496,20 @@ class TableStore:
     def _resolve(self, table: str) -> Path | None:
         """Snapshot mode: the directory a read of ``table`` should scan —
         this batch's own pending write first, then the published
-        snapshot, then a legacy live dir (a table written before the
-        store switched modes).  None = table does not exist."""
+        snapshot.  None = table does not exist."""
         if table in self._pending_versions:
             return self.root / self._pending_versions[table]
-        snap_tables = self.current_snapshot()["tables"]
-        if table in snap_tables:
-            entry = snap_tables[table]
-            if not isinstance(entry, str):
-                raise ValueError(
-                    f"table {table!r} has a layered snapshot entry but is "
-                    "not declared partitioned/bucketed in this store — "
-                    "changing a table's layout under one snapshot root is "
-                    "unsupported"
-                )
-            return self.root / entry
-        if self.path(table).exists():
-            return self.path(table)
-        return None
+        entry = self.current_snapshot()["tables"].get(table)
+        if entry is None:
+            return None
+        if not isinstance(entry, str):
+            raise ValueError(
+                f"table {table!r} has a layered snapshot entry but is "
+                "not declared partitioned/bucketed in this store — "
+                "changing a table's layout under one snapshot root is "
+                "unsupported"
+            )
+        return self.root / entry
 
     # -- snapshot layers (managed tables) -------------------------------------
 
@@ -793,28 +792,15 @@ class TableStore:
 
     def _published_layers(self, table: str) -> list[dict] | None:
         """The published manifest's layer list for a managed table, or
-        None when the manifest has no (layered) entry.  A legacy live
-        hive dir (written by a plain-mode managed store) is adopted as an
-        implicit base layer so mode switches need no rewrite."""
+        None when the manifest has no entry for it."""
         entry = self.current_snapshot()["tables"].get(table)
-        if isinstance(entry, dict):
-            return entry["layers"]
         if isinstance(entry, str):
             raise ValueError(
                 f"table {table!r} has an unmanaged snapshot entry but is "
                 "declared partitioned/bucketed — changing a table's "
                 "layout under one snapshot root is unsupported"
             )
-        if self.path(table).exists():
-            parts = self._layer_parts(table, len(self._managed_pcols(table)))
-            if not parts:
-                raise ValueError(
-                    f"table {table!r} exists as a legacy FLAT dir; migrate "
-                    "it with a plain-mode store (one read_raw touch) before "
-                    "switching to snapshot_isolation"
-                )
-            return [{"dir": table, "parts": parts}]
-        return None
+        return entry["layers"] if entry is not None else None
 
     def _effective_layers(self, table: str) -> list[dict] | None:
         """Published + this batch's pending layers (read-your-own-writes);
@@ -826,6 +812,14 @@ class TableStore:
             base = self._published_layers(table) or []
             return base + pend["layers"]
         return self._published_layers(table)
+
+    def _layers(self, table: str) -> list[dict]:
+        """``_effective_layers``, raising for a table the snapshot (and
+        this batch) does not hold."""
+        layers = self._effective_layers(table)
+        if layers is None:
+            raise FileNotFoundError(f"no snapshot layers for table {table!r}")
+        return layers
 
     def _read_layers(
         self,
@@ -924,15 +918,12 @@ class TableStore:
         self._rbar(table)
         if self.snapshot_isolation:
             if self._is_managed(table):
-                layers = self._effective_layers(table)
-                if layers is None:
-                    raise FileNotFoundError(
-                        f"no snapshot layers or live dir for table {table!r}"
-                    )
-                return self._drop_derived(table, self._read_layers(layers))
+                return self._drop_derived(
+                    table, self._read_layers(self._layers(table))
+                )
             p = self._resolve(table)
             if p is None:
-                raise FileNotFoundError(f"no snapshot or live dir for table {table!r}")
+                raise FileNotFoundError(f"no snapshot entry for table {table!r}")
             return self._read_pq(p)
         self._recover(table)
         df = self.spark.read.parquet(str(self.path(table)))
@@ -1070,13 +1061,8 @@ class TableStore:
             )
             key_vals = None
         if self.snapshot_isolation and self._is_managed(table):
-            layers = self._effective_layers(table)
-            if layers is None:
-                raise FileNotFoundError(
-                    f"no snapshot layers or live dir for table {table!r}"
-                )
             seg = {f"{RANGE_COL}={b}" for b in bands}
-            df = self._read_layers(layers, last_segment_filter=seg)
+            df = self._read_layers(self._layers(table), last_segment_filter=seg)
         else:
             df = self._read_raw(table).filter(F.col(RANGE_COL).isin(bands))
         if key_vals is not None:
@@ -1090,15 +1076,10 @@ class TableStore:
         segments of each live layer are ever listed.  Plain mode pushes
         an ``isin`` on the partition column (hive partition pruning)."""
         if self.snapshot_isolation and self._is_managed(table):
-            layers = self._effective_layers(table)
-            if layers is None:
-                raise FileNotFoundError(
-                    f"no snapshot layers or live dir for table {table!r}"
-                )
             seg = (
                 {f"{BUCKET_COL}={b}" for b in buckets} if len(buckets) < n else None
             )
-            return self._read_layers(layers, last_segment_filter=seg)
+            return self._read_layers(self._layers(table), last_segment_filter=seg)
         df = self._read_raw(table)
         if len(buckets) < n:
             df = df.filter(F.col(BUCKET_COL).isin(list(buckets)))
@@ -1168,9 +1149,11 @@ class TableStore:
         between the two swap renames.
 
         Partitioned/bucketed tables land in their managed hive layout
-        directly (partitionBy into the tmp dir, same swap) — an initial
-        build is then bucket-prunable immediately instead of paying the
-        migrate-on-first-merge rewrite.
+        directly (partitionBy into the tmp dir, same swap), so every
+        managed table carries its partition columns from its first
+        write.  A zero-row partitioned write lands no data file (nothing
+        to infer a schema from); a driver-side listing catches that and
+        the table is left absent instead of unreadable.
 
         Snapshot mode: the write lands in a fresh versioned directory and
         is NOT reader-visible until ``end_commit`` publishes the manifest
@@ -1210,9 +1193,12 @@ class TableStore:
                 if pcols:
                     w = w.partitionBy(*pcols)
                 w.parquet(str(tmp))
+            if pcols and not self._layer_parts(tmp.name, len(pcols)):
+                shutil.rmtree(tmp, ignore_errors=True)
             if target.exists():
                 os.replace(target, old)
-            os.replace(tmp, target)
+            if tmp.exists():
+                os.replace(tmp, target)
             if old.exists():
                 shutil.rmtree(old, ignore_errors=True)
         finally:
@@ -1267,7 +1253,7 @@ class TableStore:
         # propagate the async-worker flag into this batch's pool threads:
         # when merge_batch runs INSIDE a submit_op body, its ops' own
         # store calls must skip the storage barriers exactly like the
-        # submitting worker (a _wbar there would wait on the currently-
+        # submitting worker (a _tbar there would wait on the currently-
         # running op's future — self-deadlock)
         inside = getattr(_ASYNC_WORKER, "active", False)
 
@@ -1540,13 +1526,19 @@ class TableStore:
         return {"version": 0, "tables": {}}
 
     def read_at(self, table: str, snapshot: dict) -> DataFrame:
-        """Read ``table`` as of a pinned ``current_snapshot()`` result."""
+        """Read ``table`` as of a pinned ``current_snapshot()`` result.
+        Raises ``FileNotFoundError`` when the pinned snapshot does not
+        hold the table — even if a later publish (or this batch's
+        pending writes) created it since."""
         entry = snapshot["tables"].get(table)
+        if entry is None:
+            raise FileNotFoundError(
+                f"table {table!r} is not in snapshot version "
+                f"{snapshot['version']} of store {self.root}"
+            )
         if isinstance(entry, dict):
             return self._drop_derived(table, self._read_layers(entry["layers"]))
-        if entry is not None:
-            return self._read_pq(self.root / entry)
-        return self.read(table)
+        return self._read_pq(self.root / entry)
 
     def end_commit(self) -> None:
         """Clear the manifest: the batch's tables are all written (or its
@@ -1671,9 +1663,8 @@ class TableStore:
 
         GC keeps the data dirs of the new snapshot plus the most recent
         ``retain_snapshots`` superseded ones (resolved through the
-        history log; the immediately-previous manifest is always
-        available in-memory as ``prev`` for legacy stores whose early
-        versions predate the log)."""
+        history log; the immediately-previous manifest is ``prev``,
+        already in memory)."""
         import json as _json
 
         version = prev["version"] + 1
@@ -1707,9 +1698,8 @@ class TableStore:
     def _retained_manifests(self, current: int, prev: dict) -> list[dict]:
         """The manifests of the ``retain_snapshots`` versions superseded
         most recently (newest first).  ``prev`` serves version
-        ``current - 1`` directly (covers legacy stores with no log);
-        older versions resolve through the log and are skipped when
-        their record predates it."""
+        ``current - 1`` directly; older versions resolve through the
+        log, skipping a torn record."""
         import json as _json
 
         out: list[dict] = []
@@ -1721,7 +1711,7 @@ class TableStore:
             try:
                 out.append(_json.loads(p.read_text()))
             except (OSError, ValueError):
-                continue  # predates the log (or torn): nothing to retain
+                continue  # torn record: nothing to retain
         return out
 
     def snapshot_history(self) -> list[dict]:
@@ -1734,36 +1724,25 @@ class TableStore:
         directory listing, no Spark job."""
         import json as _json
 
-        logdir = self.root / self.SNAPLOG
         out: list[dict] = []
-        seen: set[int] = set()
-        if logdir.is_dir():
-            for p in sorted(logdir.glob("v*.json")):
-                try:
-                    rec = _json.loads(p.read_text())
-                except (OSError, ValueError):
-                    continue
-                rec["available"] = all(
-                    (self.root / d).exists()
-                    for d in self._entry_dirs(rec["tables"])
-                )
-                seen.add(rec["version"])
-                out.append(rec)
-        cur = self.current_snapshot()
-        if cur["version"] and cur["version"] not in seen:
-            # legacy store: the current pointer predates the log
-            cur = dict(cur)
-            cur["available"] = True
-            out.append(cur)
+        for p in sorted((self.root / self.SNAPLOG).glob("v*.json")):
+            try:
+                rec = _json.loads(p.read_text())
+            except (OSError, ValueError):
+                continue
+            rec["available"] = all(
+                (self.root / d).exists() for d in self._entry_dirs(rec["tables"])
+            )
+            out.append(rec)
         # an orphan log record of a crashed pre-swap publish sits one
         # past the pointer and was never readable: hide it
-        return [r for r in out if r["version"] <= cur["version"]]
+        cur = self.current_snapshot()["version"]
+        return [r for r in out if r["version"] <= cur]
 
     def snapshot_at(self, version: int) -> dict:
         """The manifest of a specific published version (current, or any
-        logged predecessor).  Raises ``KeyError`` for unknown versions —
-        including pre-log history on stores that upgraded into the
-        snapshot log."""
+        logged predecessor).  Raises ``KeyError`` for unknown versions
+        (never published, or a torn log record)."""
         import json as _json
 
         cur = self.current_snapshot()
@@ -1776,8 +1755,7 @@ class TableStore:
                 pass
         raise KeyError(
             f"store {self.root}: no snapshot log record for version "
-            f"{version} (current is {cur['version']}; versions written "
-            "before the log was introduced are not resolvable)"
+            f"{version} (current is {cur['version']})"
         )
 
     def _version_dirs(self, snapshot: dict, table: str) -> list[str]:
@@ -1867,7 +1845,7 @@ class TableStore:
                 try:
                     rec = _json.loads(self._snaplog_path(v).read_text())
                 except (OSError, ValueError):
-                    continue  # predates the log: nothing retained
+                    continue  # torn record: nothing retained
                 keep |= self._entry_dirs(rec["tables"])
             for inst in list(self._lease_holders()):
                 keep |= inst._pending_dirs()
@@ -2050,49 +2028,13 @@ class TableStore:
         return df.sortWithinPartitions(*pcols, *cols)
 
     def _read_raw(self, table: str) -> DataFrame:
-        """Like read(), but keeps the bucket column on bucketed tables.
-
-        A table written BEFORE it was declared bucketed (legacy flat
-        layout, no ``_pbucket`` dirs) is migrated in place on first
-        touch: one full rewrite with the bucket column, after which
-        every merge is partition-scoped.  Without this, the managed
-        merge paths would join on a column the legacy files don't have.
-        """
+        """Like read(), but keeps the derived partition columns on
+        managed tables (every managed table is written partitioned from
+        its first write, so they are always there)."""
         if self.snapshot_isolation and self._is_managed(table):
-            layers = self._effective_layers(table)
-            if layers is None:
-                raise FileNotFoundError(
-                    f"no snapshot layers or live dir for table {table!r}"
-                )
-            return self._read_layers(layers)
+            return self._read_layers(self._layers(table))
         self._recover(table)
-        df = self.spark.read.parquet(str(self.path(table)))
-        if table in self.bucketed and BUCKET_COL not in df.columns:
-            self._migrate_to_bucketed(table, df)
-            df = self.spark.read.parquet(str(self.path(table)))
-        return df
-
-    def _migrate_to_bucketed(self, table: str, df: DataFrame) -> None:
-        """One-time rewrite of a legacy flat table into the bucketed
-        layout, via the same tmp-dir + swap as overwrite() (a direct
-        in-place write would read and overwrite the same path)."""
-        prepped = self._prep(table, df)
-        if self.write_partitions is not None:
-            prepped = prepped.coalesce(self.write_partitions)
-        tmp = self.root / f"{table}.tmp-{self._token}-{uuid.uuid4().hex[:8]}"
-        old = self.root / f"{table}.old-{uuid.uuid4().hex[:8]}"
-        with _INFLIGHT_LOCK:
-            _INFLIGHT.add(str(self.path(table)))
-        try:
-            self._sorted(table, prepped).write.mode("overwrite").partitionBy(
-                *self._managed_pcols(table)
-            ).parquet(str(tmp))
-            os.replace(self.path(table), old)
-            os.replace(tmp, self.path(table))
-            shutil.rmtree(old, ignore_errors=True)
-        finally:
-            with _INFLIGHT_LOCK:
-                _INFLIGHT.discard(str(self.path(table)))
+        return self.spark.read.parquet(str(self.path(table)))
 
     def _write_partitions_dynamic(self, table: str, df: DataFrame) -> None:
         """Overwrite only the hive partitions present in ``df``.
@@ -2106,16 +2048,25 @@ class TableStore:
         (a phase's overlapping table merges, a streaming merge sharing
         the root) would race on the session conf, and a write that saw
         it restored to ``static`` mid-flight drops every partition it
-        does not carry."""
+        does not carry.
+
+        A zero-row FIRST write (the table did not exist) leaves a dir
+        with no data file, which every later read would fail to infer a
+        schema from; a driver-side listing finds no partition dir and
+        removes it again, so the table stays absent until a write
+        carries rows."""
         if self.snapshot_isolation:
             self._write_layer(table, df, reset=False)
             return
         pcols = self._managed_pcols(table)
+        existed = self.path(table).exists()
         if self.write_partitions is not None:
             df = df.coalesce(self.write_partitions)
         self._sorted(table, df).write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(*pcols).parquet(str(self.path(table)))
+        if not existed and not self._layer_parts(table, len(pcols)):
+            shutil.rmtree(self.path(table), ignore_errors=True)
 
     def _current_in_partitions(self, table: str, updates: DataFrame) -> DataFrame:
         """Current rows of the partitions the update batch touches — a

@@ -449,45 +449,6 @@ def test_embedding_replay_of_absorbed_batch_converges(spark, sf_dir, tmp_path):
     }
 
 
-def test_simhash_legacy_store_backfills_block_table(spark, sf_dir, tmp_path):
-    """An index persisted before sh_blocks existed (signatures + pairs
-    only) must be backfilled on first touch — a partial block table
-    seeded from an increment alone would silently miss every pair
-    against the pre-upgrade corpus."""
-    from jobcan_data_integrator_spark.gate.llm import (
-        _simhash_signatures,
-        dd_simhash_pairs,
-    )
-    from jobcan_data_integrator_spark.operators.incremental import (
-        simhash_increment,
-    )
-    from jobcan_data_integrator_spark.operators.simhash import (
-        block_rows,
-        near_dup_pairs,
-    )
-
-    sig = _simhash_signatures(spark, sf_dir).cache()
-    corpus_sig = sig.filter(F.col("doc_id") % 3 != 0)
-    # legacy layout: signatures + pairs, NO sh_blocks
-    store = TableStore(spark, tmp_path, write_partitions=2)
-    store.overwrite("sh_signatures", corpus_sig)
-    store.overwrite(
-        "sh_pairs", near_dup_pairs(block_rows(corpus_sig, 4, 15), n_blocks=4)
-    )
-
-    inc = simhash_increment(store, sig.filter(F.col("doc_id") % 3 == 0))
-    got = {(r.doc_a, r.doc_b, r.hamming) for r in inc.collect()} | {
-        (r.doc_a, r.doc_b, r.hamming) for r in store.read("sh_pairs").collect()
-    }
-    full = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in dd_simhash_pairs(spark, sf_dir).collect()
-    }
-    assert got == full
-    assert store.exists("sh_blocks")  # backfilled, not partial
-    assert store.read("sh_blocks").count() == corpus_sig.count() * 4
-
-
 # ---------------------------------------------------------------------------
 # Semantic-dedup pair index (SemDeDup over IVF cells, incrementally)
 # ---------------------------------------------------------------------------
@@ -819,8 +780,7 @@ def test_wide_simhash_store_lifecycle(spark, sf_dir, tmp_path):
     }
 
     inc_sig = sig.filter(F.col("doc_id") % 3 == 0)
-    # geometry args are ignored in favor of the sidecar — pass garbage
-    inc = simhash_increment(store, inc_sig, n_blocks=4, block_bits=15)
+    inc = simhash_increment(store, inc_sig)  # runs at the sidecar's geometry
     assert _sh_pairs_set(inc) | _sh_pairs_set(store.read("sh_pairs")) == full
 
     extend_simhash_index(store, inc_sig, inc)
@@ -830,6 +790,40 @@ def test_wide_simhash_store_lifecycle(spark, sf_dir, tmp_path):
     # single-long signatures against a 2-limb store: loud schema error
     with pytest.raises(ValueError, match="geometry"):
         simhash_increment(store, simhash_signatures(docs))
+
+
+def test_simhash_store_without_geometry_sidecar_raises(spark, sf_dir, tmp_path):
+    """The family's width lives only in the ``sh_geometry`` sidecar that
+    build and resign write: a store holding signatures without it is
+    refused by every probe/extend/resign/widen entry point, and nothing
+    is written."""
+    import pytest
+
+    from jobcan_data_integrator_spark.operators.incremental import (
+        extend_simhash_index,
+        maybe_widen_simhash_index,
+        resign_simhash_index,
+        simhash_increment,
+    )
+    from jobcan_data_integrator_spark.operators.simhash import (
+        simhash_signatures,
+    )
+    from jobcan_data_integrator_spark.session import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    sig = simhash_signatures(docs)
+    store = TableStore(spark, tmp_path, write_partitions=2)
+    store.overwrite("sh_signatures", sig.filter(F.col("doc_id") % 3 != 0))
+    inc_sig = sig.filter(F.col("doc_id") % 3 == 0)
+    for call in (
+        lambda: simhash_increment(store, inc_sig),
+        lambda: extend_simhash_index(store, inc_sig, inc_sig.limit(0)),
+        lambda: resign_simhash_index(store, block_bits=10),
+        lambda: maybe_widen_simhash_index(store),
+    ):
+        with pytest.raises(ValueError, match="sh_geometry"):
+            call()
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["sh_signatures"]
 
 
 def test_simhash_resign_paths(spark, sf_dir, tmp_path):

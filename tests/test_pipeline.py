@@ -475,6 +475,28 @@ def test_basic_save_failure_stays_per_api(spark, tmp_path):
     _assert_converged(spark, tmp_path, store, ("groups", "users", "requests"))
 
 
+def test_sync_after_empty_first_child_write_saves(spark, tmp_path):
+    """A first sync whose one doc has no expense content writes the
+    bucketed ``ec*`` child tables with zero rows; that must leave them
+    absent, not as unreadable empty dirs, so the next sync saves."""
+    docs = [json.loads(d) for d in make_request_docs(N_DOCS)]
+    api, store, ckpt, pipe, clock = _fresh(spark, tmp_path, docs=docs[:1])
+    pipe.run()
+    assert not store.exists("ec_specifics")
+
+    for d in docs[1:]:
+        d["applied_date"] = "2024-04-02 09:00:00"
+        api.upsert_document(d)
+    clock["now"] = "2024/04/03 00:00:00"
+    summary = pipe.run()
+    assert summary.phase == Phase.COMPLETED
+    assert not [w for w in summary.warnings if "save failed" in w]
+    assert summary.detail_fetched == N_DOCS
+    assert ckpt.load().save_failures == []
+    assert store.read("requests").count() == N_DOCS
+    assert store.read("ec_specifics").count() > 0
+
+
 def test_progress_and_issue_callbacks(spark, tmp_path):
     """O3 hooks (reference gateway.py:366-393): per-unit progress with
     (api_type, current, total, sub_count, sub_total), per-form

@@ -236,7 +236,12 @@ def test_bm25_family_requires_snapshot_store(spark, tmp_path):
     """The family's old-text capture-then-prune repair is only
     crash-replay-safe under an atomic multi-table publish; a plain
     store is refused loudly up front instead of diverging on the first
-    crashed repair."""
+    crashed repair — by ``ingest_increment`` before any write, and by
+    the family's one writer when called directly."""
+    from jobcan_data_integrator_spark.operators.retrieval import (
+        extend_bm25_index,
+    )
+
     store = TableStore(spark, tmp_path, write_partitions=2)
     with pytest.raises(ValueError, match="snapshot-isolation"):
         ingest_increment(
@@ -247,6 +252,9 @@ def test_bm25_family_requires_snapshot_store(spark, tmp_path):
             min_tokens=MIN_TOKENS,
             bm25=True,
         )
+    with pytest.raises(ValueError, match="snapshot-isolation"):
+        extend_bm25_index(store, _mk(spark, BATCH1).select("doc_id", "text"))
+    assert not list(store.root.iterdir())
 
 
 def test_hybrid_search_curated_matches_composed_one_shot(
@@ -412,82 +420,6 @@ def test_hybrid_degrades_to_lexical_without_embeddings(spark, tmp_path):
     )
     rows = hybrid_search_curated(store, q, k=5).collect()
     assert rows and all(r.n_lists == 1 for r in rows)
-
-
-def test_bm25_legacy_plain_store_warns_freezes_and_migrates(
-    spark, tmp_path
-):
-    """Round-8 advice: the exists-driven auto-trigger must not brick a
-    legacy plain store that already carries the family — ingest warns,
-    freezes the family for the batch, and ``drop_bm25_family`` clears
-    the debt so later batches run warning-free."""
-    import warnings
-
-    from jobcan_data_integrator_spark.operators.retrieval import (
-        drop_bm25_family,
-        extend_bm25_index,
-    )
-
-    store = TableStore(spark, tmp_path, write_partitions=2)
-    # legacy family: built through the per-family API before the
-    # snapshot requirement existed
-    extend_bm25_index(store, _mk(spark, BATCH1).select("doc_id", "text"))
-    before = sorted(map(tuple, store.read("bm_doc_len").collect()))
-
-    with pytest.warns(UserWarning, match="STALE"):
-        ingest_increment(
-            store,
-            _mk(spark, BATCH1),
-            "q1",
-            span=SPAN,
-            min_tokens=MIN_TOKENS,
-            n_hashes=NH,
-            band_size=BS,
-            cluster_threshold=THRESH,
-        )
-    # the family was frozen, not maintained and not destroyed
-    assert sorted(map(tuple, store.read("bm_doc_len").collect())) == before
-
-    # an EXPLICIT request is still refused loudly, naming the paths out
-    with pytest.raises(ValueError, match="drop_bm25_family"):
-        ingest_increment(
-            store,
-            _mk(spark, BATCH2),
-            "q2",
-            span=SPAN,
-            min_tokens=MIN_TOKENS,
-            bm25=True,
-        )
-
-    # migration: retire the family; the next ingest is warning-free
-    drop_bm25_family(store)
-    assert not store.exists("bm_doc_len")
-    assert not store.exists("bm_postings")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        ingest_increment(
-            store,
-            _mk(spark, BATCH2),
-            "q2",
-            span=SPAN,
-            min_tokens=MIN_TOKENS,
-            n_hashes=NH,
-            band_size=BS,
-            cluster_threshold=THRESH,
-        )
-    assert not [w for w in caught if "BM25" in str(w.message)]
-
-
-def test_drop_bm25_family_refused_on_snapshot_store(spark, tmp_path):
-    from jobcan_data_integrator_spark.operators.retrieval import (
-        drop_bm25_family,
-    )
-
-    store = TableStore(
-        spark, tmp_path, write_partitions=2, snapshot_isolation=True
-    )
-    with pytest.raises(ValueError, match="natively"):
-        drop_bm25_family(store)
 
 
 # Long-haul integration tier (r12): excluded from the DEFAULT pytest run

@@ -238,21 +238,6 @@ def test_snapshot_layer_prunes_probe_listing(spark, tmp_path):
     assert files and all(f"_pbucket={bucket}" in f for f in files)
 
 
-def test_legacy_live_hive_dir_adopted_as_base_layer(spark, tmp_path):
-    """A plain-mode bucketed table becomes the implicit base layer when
-    the store switches to snapshot mode — no rewrite, merges stack on."""
-    plain = _bucketed_store(spark, tmp_path, snapshot=False)
-    plain.merge_upsert("t", _kv(spark, [(1, "a"), (2, "b")]), ["k"])
-
-    snap = _bucketed_store(spark, tmp_path, snapshot=True)
-    assert _rows(snap) == [(1, "a"), (2, "b")]  # adopted, pre-manifest
-    snap.merge_upsert("t", _kv(spark, [(2, "B"), (3, "c")]), ["k"])
-    snap.end_commit()
-    assert _rows(snap) == [(1, "a"), (2, "B"), (3, "c")]
-    layers = snap.current_snapshot()["tables"]["t"]["layers"]
-    assert layers[0]["dir"] == "t"  # the live dir IS layer zero
-
-
 def test_layout_change_under_snapshot_root_raises(spark, tmp_path):
     un = TableStore(spark, tmp_path, write_partitions=1, snapshot_isolation=True)
     un.overwrite("t", _kv(spark, [(1, "a")]))

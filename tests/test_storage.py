@@ -296,25 +296,6 @@ def test_bucketed_upsert_and_insert_missing(spark, tmp_path):
     assert _rows(store, "kids") == [("a", 1), ("b", 20), ("c", 3), ("d", 4)]
 
 
-def test_bucketed_migration_of_legacy_flat_table(spark, tmp_path):
-    """A table written before it was declared bucketed (no _pbucket
-    layout) must be migrated on first managed merge, not crash it."""
-    legacy = TableStore(spark, tmp_path / "t3", write_partitions=1)
-    df = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
-    legacy.merge_upsert("kids", df, ["k"])  # flat layout
-
-    upgraded = TableStore(
-        spark, tmp_path / "t3", write_partitions=1, bucketed={"kids": ("k", 4)}
-    )
-    upgraded.sync_children(
-        "kids", spark.createDataFrame([("b", 20)], "k string, v int"), ["k"]
-    )
-    assert _rows(upgraded, "kids") == [("a", 1), ("b", 20)]
-    # layout is now bucketed (hive dirs present, column hidden on read)
-    assert list((tmp_path / "t3" / "kids").glob("_pbucket=*"))
-    assert "_pbucket" not in upgraded.read("kids").columns
-
-
 def test_partitioned_and_bucketed_combined(spark, tmp_path):
     """A table can hive-partition AND key-bucket (the bronze archive
     shape): merges rewrite only the touched (partition, bucket) dirs."""

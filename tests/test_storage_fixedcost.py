@@ -9,6 +9,10 @@
 2. The versioned-dir schema memo (``_read_pq``): repeated reads of one
    immutable snapshot dir reuse the inferred schema; a new version with
    a DIFFERENT schema is read with its own schema (no stale memo).
+3. Layout edge cases: a zero-row first write to a managed plain-mode
+   table leaves no unreadable dir, ``read_at`` never serves a table
+   the pinned snapshot does not hold, and the benchmark's store tracing
+   still resolves every method it wraps.
 """
 
 from __future__ import annotations
@@ -236,3 +240,57 @@ def test_commit_bracket_background_failure_aborts(spark, tmp_path):
             store.submit_op(boom, reads=("ta",), writes=("ta",))
     assert store._depth == 0
     assert not store._pending_versions
+
+
+def test_empty_first_write_to_managed_plain_table_stays_absent(spark, tmp_path):
+    """A zero-row partitioned write lands no data file; the table must
+    stay absent (not an unreadable empty dir) so the next merge that
+    carries rows creates it."""
+    store = TableStore(
+        spark,
+        tmp_path / "plain",
+        write_partitions=1,
+        partitioned={"p": ["g"]},
+        bucketed={"b": ("k", 4)},
+    )
+    schema = "k int, g string, v int"
+    rows = [(1, "a", 10), (2, "b", 20)]
+    for table in ("p", "b"):
+        store.sync_children(table, spark.createDataFrame([], schema), ["k"])
+        assert not store.exists(table)
+        store.sync_children(table, spark.createDataFrame(rows, schema), ["k"])
+        got = sorted(
+            (r.k, r.g, r.v) for r in store.read(table).collect()
+        )
+        assert got == rows
+
+
+def test_read_at_never_serves_unpinned_tables(spark, tmp_path):
+    """``read_at`` resolves ONLY through the pinned manifest: a table a
+    later publish created, or one pending in the open bracket, is not
+    in the pin and raises like ``read_version`` does."""
+    store = _store(spark, tmp_path)
+    snap = store.current_snapshot()
+    with store.commit_bracket("b1", ["ta"]):
+        store.overwrite("ta", spark.range(3).select(F.col("id").alias("k")))
+    with pytest.raises(FileNotFoundError):
+        store.read_at("ta", snap)
+    with store.commit_bracket("b2", ["tb"]):
+        store.overwrite("tb", spark.range(5).select(F.col("id").alias("k")))
+        with pytest.raises(FileNotFoundError):
+            store.read_at("tb", snap)
+    assert store.read_at("ta", store.current_snapshot()).count() == 3
+
+
+def test_benchmark_tracing_resolves_every_wrapped_store_method():
+    """perfbench/tracing.py wraps TableStore methods by name at import;
+    importing it here makes a deleted or renamed traced method fail the
+    default tier instead of the benchmark."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "perfbench" / "tracing.py"
+    spec = importlib.util.spec_from_file_location("_perfbench_tracing", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)  # AttributeError on a missing method
+    assert issubclass(mod.TracedStore, TableStore)
