@@ -276,7 +276,7 @@ def build_minhash_index(
     pairs = verify_candidate_pairs(cands, sh, sizes).localCheckpoint(
         eager=True
     )
-    with store.commit_bracket("mh-index-build", list(INDEX_TABLES)):
+    with store.commit_bracket("mh-index-build"):
 
         def _write() -> None:
             try:
@@ -404,7 +404,7 @@ def extend_index(
     # mode-independent contract.
     new_pairs = new_pairs.localCheckpoint(eager=True)
     new_sh = new_hashed_shingles.select("doc_id", "shingle").distinct().cache()
-    with store.commit_bracket("mh-index-extend", list(INDEX_TABLES)):
+    with store.commit_bracket("mh-index-extend"):
         store.submit_op(
             lambda: store.merge_batch([
                 lambda: store.merge_insert_missing(
@@ -468,9 +468,7 @@ def compact_minhash_drops(store: TableStore) -> None:
     drops = [t for t in OOO_DROP_TABLES if store.exists(t)]
     if not drops:
         return
-    with store.commit_bracket(
-        "mh-drops-compact", list(INDEX_TABLES) + list(OOO_DROP_TABLES)
-    ):
+    with store.commit_bracket("mh-drops-compact"):
         # partition-SCOPED folds (TableStore.prune_keys): each mask rewrites
         # only the bucket/band segments containing its rows — mask-bounded
         # cost, not corpus-bounded.  Folds of DIFFERENT tables run as
@@ -670,7 +668,7 @@ def resign_minhash(
     new_pairs = dedup_increment(store, hashed, n_hashes, band_size)
     new_pairs = new_pairs.localCheckpoint(eager=True)
 
-    with store.commit_bracket("mh-resign", list(INDEX_TABLES) + ["mh_pair_drops"]):
+    with store.commit_bracket("mh-resign"):
         # five independent per-table update groups: each rides the scheduler
         store.submit_op(
             lambda: store.sync_children("mh_shingles", new_sh, ["doc_id"]),
@@ -728,7 +726,7 @@ def build_cluster_index(store: TableStore, pairs: DataFrame) -> None:
     )
 
     pairs = pairs.localCheckpoint(eager=True)
-    with store.commit_bracket("cc-index-build", ["cc_labels"]):
+    with store.commit_bracket("cc-index-build"):
         # the iterative CC compute AND its write ride the scheduler: inside
         # an orchestrated batch they overlap the other families' writes, and
         # any later cc_labels read barriers automatically
@@ -786,7 +784,7 @@ def extend_clusters(store: TableStore, new_pairs: DataFrame) -> DataFrame:
         # upsert there would read+rewrite the whole table anyway, twice.
         changed, remap = _cluster_label_delta(store, new_pairs)
         if changed.head(1):
-            with store.commit_bracket("cc-index-extend", ["cc_labels"]):
+            with store.commit_bracket("cc-index-extend"):
                 store.submit_op(
                     lambda: store.merge_upsert("cc_labels", changed, ["doc_id"]),
                     reads=("cc_labels",),
@@ -794,7 +792,7 @@ def extend_clusters(store: TableStore, new_pairs: DataFrame) -> DataFrame:
                 )
         return remap
     out, remap = merged_cluster_labels(store.read("cc_labels"), new_pairs)
-    with store.commit_bracket("cc-index-extend", ["cc_labels"]):
+    with store.commit_bracket("cc-index-extend"):
         store.submit_op(
             lambda: store.overwrite("cc_labels", out),
             reads=("cc_labels",),
@@ -1038,7 +1036,7 @@ def build_exact_index(store: TableStore, docs: DataFrame) -> DataFrame:
     (``submit_op``) inside an orchestrated batch."""
     hashes = _doc_hashes(docs).localCheckpoint(eager=True)
     groups = _hash_groups(hashes).localCheckpoint(eager=True)
-    with store.commit_bracket("ex-index-build", list(EXACT_TABLES)):
+    with store.commit_bracket("ex-index-build"):
         store.submit_op(
             lambda: store.merge_batch([
                 lambda: store.overwrite("ex_docs", hashes),
@@ -1078,7 +1076,7 @@ def extend_exact_index(
     replay inserts nothing) and upsert the recomputed affected groups
     (materialized first — it scans the tables being rewritten)."""
     merged_groups = merged_groups.localCheckpoint(eager=True)
-    with store.commit_bracket("ex-index-extend", list(EXACT_TABLES)):
+    with store.commit_bracket("ex-index-extend"):
         store.submit_op(
             lambda: store.merge_batch([
                 lambda: store.merge_insert_missing(
@@ -1259,7 +1257,7 @@ def build_simhash_index(
     _sh_validate_geometry(g)
     blocks = _sh_block_rows(sig, g).cache()
     pairs = _sh_near_dup_pairs(blocks, None, g)
-    with store.commit_bracket("sh-index-build", list(SIMHASH_TABLES)):
+    with store.commit_bracket("sh-index-build"):
 
         def _write() -> None:
             try:
@@ -1335,7 +1333,7 @@ def extend_simhash_index(
     _sh_check_signatures(new_signatures, g)
     new_pairs = new_pairs.localCheckpoint(eager=True)
     sig = new_signatures.localCheckpoint(eager=True)
-    with store.commit_bracket("sh-index-extend", list(SIMHASH_TABLES)):
+    with store.commit_bracket("sh-index-extend"):
         store.merge_batch([
             lambda: store.merge_insert_missing("sh_signatures", sig, ["doc_id"]),
             lambda: store.merge_insert_missing(
@@ -1447,7 +1445,7 @@ def resign_simhash_index(
     if new["n_blocks"] != old["n_blocks"]:
         pairs = _sh_near_dup_pairs(blocks, None, new)
         ops.append(lambda: store.overwrite("sh_pairs", pairs))
-    with store.commit_bracket("sh-index-resign", list(SIMHASH_TABLES)):
+    with store.commit_bracket("sh-index-resign"):
         store.merge_batch(ops, tables=tuple(SIMHASH_TABLES))
     return new
 
@@ -1538,7 +1536,7 @@ def build_ivf_index(
         keep=("embedding",),
     )
     assign = assign.localCheckpoint(eager=True)
-    with store.commit_bracket("ivf-index-build", list(IVF_TABLES) + [IVF_CELL_STATS]):
+    with store.commit_bracket("ivf-index-build"):
         store.merge_batch([
             lambda: store.overwrite("ivf_codebook", cent),
             lambda: store.overwrite("ivf_assignments", assign),
@@ -1571,7 +1569,7 @@ def extend_ivf_index(store: TableStore, new_assignments: DataFrame) -> None:
     commit."""
     new_assignments = new_assignments.localCheckpoint(eager=True)
     stats = _cell_stat_rows(store, new_assignments)
-    with store.commit_bracket("ivf-index-extend", ["ivf_assignments", IVF_CELL_STATS]):
+    with store.commit_bracket("ivf-index-extend"):
         store.merge_batch([
             lambda: store.merge_insert_missing(
                 "ivf_assignments", new_assignments, ["vec_id"]
@@ -1816,7 +1814,7 @@ def build_embedding_index(
 
     emb = emb.cache()
     pairs = embedding_near_dup_pairs(emb, threshold, n_planes, dim, n_bands)
-    with store.commit_bracket("eb-index-build", list(EMBEDDING_TABLES)):
+    with store.commit_bracket("eb-index-build"):
 
         def _write() -> None:
             try:
@@ -1937,7 +1935,7 @@ def extend_embedding_index(
     from jobcan_data_integrator_spark.operators.similarity import bucket_rows
 
     new_pairs = new_pairs.localCheckpoint(eager=True)
-    with store.commit_bracket("eb-index-extend", list(EMBEDDING_TABLES)):
+    with store.commit_bracket("eb-index-extend"):
         store.merge_batch([
             lambda: store.merge_insert_missing("eb_vectors", new_emb, ["vec_id"]),
             lambda: store.merge_insert_missing(
@@ -2021,7 +2019,7 @@ def build_semantic_index(
     instead of re-running `semantic_dedup` corpus-wide."""
     build_ivf_index(store, emb, n_cells=n_cells, iters=iters)
     assign = store.read("ivf_assignments")
-    with store.commit_bracket("sd-index-build", ["sd_pairs"]):
+    with store.commit_bracket("sd-index-build"):
         store.submit_op(
             lambda: store.overwrite(
                 "sd_pairs", _cell_pairs(assign, None, threshold)
@@ -2068,9 +2066,7 @@ def extend_semantic_index(
     new_pairs = new_pairs.localCheckpoint(eager=True)
     inc = assign_increment(store, new_emb).localCheckpoint(eager=True)
     stats = _cell_stat_rows(store, inc)
-    with store.commit_bracket(
-        "sd-index-extend", list(SEMANTIC_TABLES) + [IVF_CELL_STATS]
-    ):
+    with store.commit_bracket("sd-index-extend"):
         store.merge_batch([
             lambda: store.merge_insert_missing("ivf_assignments", inc, ["vec_id"]),
             lambda: store.merge_upsert("sd_pairs", new_pairs, ["vec_a", "vec_b"]),
@@ -2157,7 +2153,7 @@ def build_span_index(
     groups = _span_hash_groups(occ).cache()
     # materializing the flags populates both scratch caches on the way
     flags = _span_flags(occ, groups).localCheckpoint(eager=True)
-    with store.commit_bracket("sp-index-build", list(SPAN_TABLES)):
+    with store.commit_bracket("sp-index-build"):
 
         def _write() -> None:
             try:
@@ -2219,7 +2215,7 @@ def extend_span_index(
     merged_hashes = merged_hashes.localCheckpoint(eager=True)
     flags = flags.localCheckpoint(eager=True)
     has_drops = store.exists(FLAG_DROPS)
-    with store.commit_bracket("sp-index-extend", list(SPAN_TABLES)):
+    with store.commit_bracket("sp-index-extend"):
         store.submit_op(
             lambda: store.merge_batch([
                 lambda: store.merge_insert_missing(
@@ -2270,7 +2266,7 @@ def build_lm_index(store: TableStore, docs: DataFrame) -> None:
     from jobcan_data_integrator_spark.operators.lm import train_ngram_lm
 
     lm = train_ngram_lm(docs)
-    with store.commit_bracket("lm-index-build", list(LM_TABLES)):
+    with store.commit_bracket("lm-index-build"):
         store.merge_batch([
             lambda: store.overwrite("lm_uni", lm.uni),
             lambda: store.overwrite("lm_bi", lm.bi),
@@ -2396,7 +2392,7 @@ def extend_lm_index(
     )
     inc_tokens = inc.totals.first()["n_tokens"]
     old = store.read("lm_tot").first()
-    with store.commit_bracket(batch_id, list(LM_TABLES)):
+    with store.commit_bracket(batch_id):
 
         def _level(table: str, counts: DataFrame) -> None:
             counts = counts.localCheckpoint(eager=True)
@@ -2482,7 +2478,7 @@ def build_line_index(
     from jobcan_data_integrator_spark.operators import lines as L
 
     mc = L.DEFAULT_MIN_LINE_CHARS if min_line_chars is None else min_line_chars
-    with store.commit_bracket(batch_id, list(LINE_TABLES)):
+    with store.commit_bracket(batch_id):
         store.merge_batch([
             lambda: store.overwrite(
                 "bl_stats", L.boilerplate_line_stats(docs, min_line_chars=mc)
@@ -2578,7 +2574,7 @@ def extend_line_index(
         .agg(F.sum("df").cast("bigint").alias("df"))
         .localCheckpoint(eager=True)
     )
-    with store.commit_bracket(batch_id, list(LINE_TABLES)):
+    with store.commit_bracket(batch_id):
         store.merge_batch([
             lambda: store.merge_upsert("bl_stats", merged, ["line_hash"]),
             lambda: store.merge_insert_missing(
@@ -2617,7 +2613,7 @@ def build_pq_index(
     from jobcan_data_integrator_spark.operators.pq import pq_encode, train_pq
 
     cb = train_pq(emb, m=m, k=k, iters=iters).localCheckpoint(eager=True)
-    with store.commit_bracket("pq-index-build", list(PQ_TABLES)):
+    with store.commit_bracket("pq-index-build"):
         store.merge_batch([
             lambda: store.overwrite("pq_codebooks", cb),
             lambda: store.overwrite("pq_codes", pq_encode(emb, cb, m=m)),
@@ -2639,7 +2635,7 @@ def extend_pq_index(store: TableStore, new_codes: DataFrame) -> None:
     """Absorb an increment's codes — keyed by vec_id, so replays insert
     nothing (plain idempotent-merge contract, no batch ledger needed)."""
     new_codes = new_codes.localCheckpoint(eager=True)
-    with store.commit_bracket("pq-index-extend", list(PQ_TABLES)):
+    with store.commit_bracket("pq-index-extend"):
         store.submit_op(
             lambda: store.merge_insert_missing("pq_codes", new_codes, ["vec_id"]),
             reads=("pq_codes",),
@@ -2716,11 +2712,8 @@ def refresh_embedding_codebooks(
         .localCheckpoint(eager=True)
     )
 
-    tables = (
-        list(IVF_TABLES) + [IVF_CELL_STATS] if has_ivf else []
-    ) + (list(PQ_TABLES) if has_pq else [])
     summary: dict[str, int] = {"n_vectors": live.count()}
-    with store.commit_bracket("codebook-refresh", tables):
+    with store.commit_bracket("codebook-refresh"):
         if has_ivf:
             n_cells = ivf_cells or store.read("ivf_codebook").count()
             cent, _ = train_ivf_centroids(

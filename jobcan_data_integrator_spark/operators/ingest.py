@@ -834,7 +834,7 @@ def repack_corpus(
         id_col="chunk_id",
         shuffle_salt=shuffle_salt,
     ).withColumn("batch_id", F.lit(batch_tag)).localCheckpoint(eager=True)
-    with store.commit_bracket(batch_tag, [CHUNKS, SHARDS]):
+    with store.commit_bracket(batch_tag):
         store.submit_op(
             lambda: store.overwrite(
                 CHUNKS, chunks.withColumn("batch_id", F.lit(batch_tag))
@@ -848,61 +848,6 @@ def repack_corpus(
             writes=(SHARDS,),
         )
     return packed
-
-
-def ingest_tables(
-    *,
-    line_clean: bool = False,
-    line_max_doc_freq: int | None = None,
-    span: int | None = 8,
-    minhash: bool = True,
-    simhash: bool = False,
-    lm_extend: bool = False,
-    pack_budget: int | None = None,
-    new_emb: bool = False,
-    emb_families: tuple[str, ...] = ("lsh", "ivf", "pq"),
-    allow_out_of_order: bool = False,
-    bm25: bool = False,
-) -> list[str]:
-    """The manifest table list a given configuration touches (the outer
-    ``commit_bracket``'s scope)."""
-    from jobcan_data_integrator_spark.operators import incremental as inc
-    from jobcan_data_integrator_spark.operators import retrieval as rt
-
-    tables = [LEDGER, CURATED, TOMBSTONES, "ex_docs", "ex_groups"]
-    if allow_out_of_order:
-        tables += [CURATED_PRE]
-        if minhash:
-            tables += list(inc.OOO_DROP_TABLES)
-        if span is not None:
-            # a store with retraction history can unmask re-asserted
-            # flags inside extend_span_index
-            tables += [inc.FLAG_DROPS]
-    if line_clean and line_max_doc_freq is not None:
-        tables += list(inc.LINE_TABLES)
-    if span is not None:
-        tables += list(inc.SPAN_TABLES)
-    if minhash:
-        tables += list(inc.INDEX_TABLES) + ["cc_labels"]
-    if simhash:
-        tables += list(inc.SIMHASH_TABLES)
-    if lm_extend:
-        tables += list(inc.LM_TABLES)
-    if pack_budget is not None:
-        tables += [CHUNKS, SHARDS]
-    if new_emb:
-        tables += [DOC_VECS]
-        if "lsh" in emb_families:
-            tables += list(inc.EMBEDDING_TABLES)
-        if "ivf" in emb_families:
-            tables += list(inc.IVF_TABLES) + [inc.IVF_CELL_STATS]
-        if "semantic" in emb_families:
-            tables += ["sd_pairs", inc.IVF_CELL_STATS]
-        if "pq" in emb_families:
-            tables += list(inc.PQ_TABLES)
-    if bm25:
-        tables += list(rt.BM25_TABLES)
-    return sorted(set(tables))
 
 
 def _pair_endpoints(pairs: DataFrame, threshold: float) -> DataFrame:
@@ -1594,19 +1539,6 @@ def ingest_increment(
             "first batch) for the repairing ingest path"
         )
 
-    tables = ingest_tables(
-        line_clean=line_clean,
-        line_max_doc_freq=line_max_doc_freq,
-        span=span,
-        minhash=minhash,
-        simhash=simhash,
-        lm_extend=lm_extend,
-        pack_budget=pack_budget,
-        new_emb=new_emb is not None,
-        emb_families=emb_families,
-        allow_out_of_order=allow_out_of_order,
-        bm25=bm25,
-    )
     # JVM-native literal row (spark.range + lit), NOT createDataFrame: a
     # Python local relation costs ~3x more per downstream job (measured
     # ~430ms vs ~130ms on local[32] — the per-batch ledger merge is a
@@ -1619,22 +1551,17 @@ def ingest_increment(
     )
 
     docs = new_docs.select("doc_id", "text")
-    if store.exists(inc.DOC_RETRACTIONS):
-        # a doc deleted by retract_documents stays deleted: a late copy
-        # of a retracted id (redelivery, replayed source) must not
-        # re-enter the corpus, win a keeper election, or re-seed span
-        # occurrences — the ≡ contract becomes one-shot curation over
-        # (union of batches) ∖ retracted
-        docs = docs.join(
-            F.broadcast(store.read(inc.DOC_RETRACTIONS)),
-            "doc_id",
-            "left_anti",
-        )
+    # a doc deleted by retract_documents stays deleted: a late copy
+    # of a retracted id (redelivery, replayed source) must not
+    # re-enter the corpus, win a keeper election, or re-seed span
+    # occurrences — the ≡ contract becomes one-shot curation over
+    # (union of batches) ∖ retracted
+    docs = inc._mask_retracted(store, docs)
     stages: list[tuple[str, DataFrame]] = [("input", docs)]
     pairs: DataFrame | None = None
     demoted: DataFrame | None = None
 
-    with store.commit_bracket(batch_id, tables):
+    with store.commit_bracket(batch_id):
         # -1. normalization FIRST (CCNet ordering: byte-different
         # renderings must collide in every downstream hash)
         if normalize:
@@ -2045,14 +1972,9 @@ def ingest_increment(
         # vec_id retracted by ``retract_vectors`` stays retracted (same
         # permanence stance as the doc-side guard above).
         if new_emb is not None:
-            emb = new_emb
-            if store.exists(inc.EMB_RETRACTIONS):
-                emb = emb.join(
-                    F.broadcast(store.read(inc.EMB_RETRACTIONS)),
-                    "vec_id",
-                    "left_anti",
-                )
-            emb = emb.localCheckpoint(eager=True)
+            emb = inc._mask_emb_retracted(store, new_emb).localCheckpoint(
+                eager=True
+            )
             if "doc_id" in emb.columns:
                 dv = emb.select("doc_id", "vec_id")
                 store.submit_op(
@@ -2261,47 +2183,43 @@ def retract_documents(
                 spark.createDataFrame([], "doc_id bigint"),
             )
 
-    r_ids = ids.select("doc_id").distinct()
-    if store.exists(inc.DOC_RETRACTIONS):
-        r_ids = r_ids.join(
-            F.broadcast(store.read(inc.DOC_RETRACTIONS)),
-            "doc_id",
-            "left_anti",
-        )
-    r_ids = r_ids.localCheckpoint(eager=True)
+    r_ids = inc._mask_retracted(
+        store, ids.select("doc_id").distinct()
+    ).localCheckpoint(eager=True)
     n_ids = r_ids.count()
     ledger_row = spark.range(1).select(
         F.lit(retract_id).alias("retract_id"),
         F.lit(n_ids).cast("bigint").alias("n_ids"),
     )
 
-    tables = [RETRACTIONS, RETRACTION_LOG, RETRACTION_IDS, TOMBSTONES]
-    tables += [CURATED, CURATED_PRE]
-    tables += [inc.DOC_RETRACTIONS, "ex_docs", "ex_groups"]
+    # the compliance receipt's ``families``: every table this
+    # retraction may touch
+    families = [RETRACTION_IDS, TOMBSTONES, CURATED, CURATED_PRE]
+    families += [inc.DOC_RETRACTIONS, "ex_docs", "ex_groups"]
     bm25 = store.exists(rt.BM25_DOC_LEN)
     if bm25:
-        tables += list(rt.BM25_TABLES)
+        families += list(rt.BM25_TABLES)
     if span is not None:
-        tables += list(inc.SPAN_TABLES)
-        tables += [inc.FLAG_DROPS, inc.SPAN_MASK_HASHES]
+        families += list(inc.SPAN_TABLES)
+        families += [inc.FLAG_DROPS, inc.SPAN_MASK_HASHES]
     if minhash:
-        tables += list(inc.INDEX_TABLES) + list(inc.OOO_DROP_TABLES)
-        tables += ["cc_labels"]
+        families += list(inc.INDEX_TABLES) + list(inc.OOO_DROP_TABLES)
+        families += ["cc_labels"]
     if store.exists(CHUNKS):
-        tables += [CHUNKS, SHARDS]
+        families += [CHUNKS, SHARDS]
     # doc→vec cascade: a store whose ingest recorded the (doc_id,
     # vec_id) mapping scrubs the embedding families in the SAME commit
     cascade = store.exists(DOC_VECS)
     if cascade:
-        tables += [DOC_VECS, inc.EMB_RETRACTIONS]
-        tables += [t for t in _EMB_ROW_TABLES if store.exists(t)]
-        tables += [t for t, _, _ in _EMB_PAIR_TABLES if store.exists(t)]
+        families += [DOC_VECS, inc.EMB_RETRACTIONS]
+        families += [t for t in _EMB_ROW_TABLES if store.exists(t)]
+        families += [t for t, _, _ in _EMB_PAIR_TABLES if store.exists(t)]
 
     stages: list[tuple[str, DataFrame]] = []
     promoted: DataFrame | None = None
     repaired: DataFrame | None = None
 
-    with store.commit_bracket(retract_id, sorted(set(tables))):
+    with store.commit_bracket(retract_id):
         if n_ids == 0:
             store.merge_insert_missing(RETRACTIONS, ledger_row, ["retract_id"])
             return RetractResult(retract_id, False, r_ids)
@@ -2365,12 +2283,7 @@ def retract_documents(
                 .join(F.broadcast(md5s), "text_md5", "leftsemi")
                 .join(F.broadcast(r_ids), "doc_id", "left_anti")
             )
-            if store.exists(inc.DOC_RETRACTIONS):
-                remaining = remaining.join(
-                    F.broadcast(store.read(inc.DOC_RETRACTIONS)),
-                    "doc_id",
-                    "left_anti",
-                )
+            remaining = inc._mask_retracted(store, remaining)
             new_groups = _hash_groups(
                 remaining.dropDuplicates(["doc_id"])
             ).localCheckpoint(eager=True)
@@ -2469,12 +2382,7 @@ def retract_documents(
                 .join(F.broadcast(hs), "h", "leftsemi")
                 .join(F.broadcast(r_ids), "doc_id", "left_anti")
             )
-            if store.exists(inc.DOC_RETRACTIONS):
-                stored_aff = stored_aff.join(
-                    F.broadcast(store.read(inc.DOC_RETRACTIONS)),
-                    "doc_id",
-                    "left_anti",
-                )
+            stored_aff = inc._mask_retracted(store, stored_aff)
             stored_aff = stored_aff.localCheckpoint(eager=True)
             mate_occ = (
                 _span_occ_rows(mate_docs, span)
@@ -2720,7 +2628,6 @@ def retract_documents(
         # mapping rows themselves are removed (takedown) where the
         # table is unmanaged; a managed doc_vecs stays masked by
         # doc_retractions until compact_store folds it.
-        families = [t for t in tables if t not in (RETRACTIONS, RETRACTION_LOG)]
         if cascade:
             vec_r = (
                 store.read(DOC_VECS)
@@ -2728,12 +2635,7 @@ def retract_documents(
                 .select("vec_id")
                 .distinct()
             )
-            if store.exists(inc.EMB_RETRACTIONS):
-                vec_r = vec_r.join(
-                    F.broadcast(store.read(inc.EMB_RETRACTIONS)),
-                    "vec_id",
-                    "left_anti",
-                )
+            vec_r = inc._mask_emb_retracted(store, vec_r)
             vec_r = vec_r.localCheckpoint(eager=True)
             if vec_r.head(1):
                 _retract_vec_rows(store, vec_r)
@@ -2820,25 +2722,16 @@ def retract_vectors(
                 retract_id, True, spark.createDataFrame([], "vec_id bigint")
             )
 
-    r_ids = vec_ids.select("vec_id").distinct()
-    if store.exists(inc.EMB_RETRACTIONS):
-        r_ids = r_ids.join(
-            F.broadcast(store.read(inc.EMB_RETRACTIONS)),
-            "vec_id",
-            "left_anti",
-        )
-    r_ids = r_ids.localCheckpoint(eager=True)
+    r_ids = inc._mask_emb_retracted(
+        store, vec_ids.select("vec_id").distinct()
+    ).localCheckpoint(eager=True)
     n_ids = r_ids.count()
     ledger_row = spark.range(1).select(
         F.lit(retract_id).alias("retract_id"),
         F.lit(n_ids).cast("bigint").alias("n_ids"),
     )
 
-    tables = [RETRACTIONS, RETRACTION_LOG, inc.EMB_RETRACTIONS]
-    tables += [t for t in _EMB_ROW_TABLES if store.exists(t)]
-    tables += [t for t, _, _ in _EMB_PAIR_TABLES if store.exists(t)]
-
-    with store.commit_bracket(retract_id, sorted(set(tables))):
+    with store.commit_bracket(retract_id):
         if n_ids == 0:
             store.merge_insert_missing(RETRACTIONS, ledger_row, ["retract_id"])
             return RetractResult(retract_id, False, r_ids)
@@ -3012,40 +2905,16 @@ def compact_store(store: TableStore) -> None:
     added since the last fold and then flips them, so per-fold cost
     follows recent retraction volume, never lifetime history.
 
+    All folds run in one ``commit_bracket`` and publish once.
     Reads before/after are identical by construction (each fold applies
     exactly the anti-join its probes were applying — pinned in
     tests/test_ingest.py).  Amortize like the layered fold: run when
     mask bytes near the broadcast threshold (``maybe_compact_store``
     does this check cheaply, driver-side)."""
     from jobcan_data_integrator_spark.operators import incremental as inc
-    from jobcan_data_integrator_spark.operators import retrieval as rt
 
     inc.compact_minhash_drops(store)
 
-    tables = [
-        t
-        for t in (
-            "ex_docs",
-            "sp_occs",
-            "sp_flags",
-            "eb_vectors",
-            "eb_buckets",
-            "ivf_assignments",
-            "pq_codes",
-            inc.IVF_CELL_STATS,
-            inc.SPAN_MASK_HASHES,
-            DOC_VECS,
-            inc.DOC_RETRACTIONS,
-            inc.FLAG_DROPS,
-            inc.EMB_RETRACTIONS,
-            TOMBSTONES,
-            CURATED,
-            CURATED_PRE,
-            rt.BM25_POSTINGS,
-            rt.BM25_DOC_LEN,
-        )
-        if store.exists(t)
-    ]
     if not any(
         store.exists(t)
         for t in (
@@ -3084,12 +2953,12 @@ def compact_store(store: TableStore) -> None:
         )
         return m if m.head(1) else None
 
-    with store.commit_bracket("store-compact", tables):
-        _compact_folds(store, tables, _unfolded)
+    with store.commit_bracket("store-compact"):
+        _compact_folds(store, _unfolded)
     _record_compact_stat(store)
 
 
-def _compact_folds(store: TableStore, tables: list[str], _unfolded) -> None:
+def _compact_folds(store: TableStore, _unfolded) -> None:
     """The fold body of ``compact_store`` (one ``commit_bracket``): the
     main prune group, the mask watermark flips, the permanent-tombstone
     resolution and the transient-mask reset are mutually independent

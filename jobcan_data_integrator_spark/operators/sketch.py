@@ -2,12 +2,12 @@
 HyperLogLog distinct counting (Flajolet et al. 2007) and Count-Min
 frequency estimation (Cormode & Muthukrishnan 2005).
 
-``corpus_report`` (operators/report.py) counts the vocabulary EXACTLY:
-a ``count_distinct`` over every token hash — one corpus-wide shuffle
-whose state grows with the true cardinality (billions of 8-byte keys at
-real scale).  The sketch versions bound the state by construction: an
-HLL register table is ``m`` rows and a Count-Min table is ``d*w`` rows
-no matter how large the corpus, both produced by a single map-side-
+An exact vocabulary count is a ``count_distinct`` over every token
+hash — one corpus-wide shuffle whose state grows with the true
+cardinality (billions of 8-byte keys at real scale).  The sketch
+versions bound the state by construction: an HLL register table is
+``m`` rows and a Count-Min table is ``d*w`` rows no matter how large
+the corpus, both produced by a single map-side-
 combined ``groupBy`` whose key space is the fixed sketch geometry.
 Both sketches are also MERGEABLE (register-wise max / cell-wise sum),
 so per-partition or per-day sketch tables combine by a groupBy over a

@@ -301,7 +301,7 @@ class JobcanPipeline:
         # handled save failure is a per-api record (I5), and only a HARD
         # crash leaves the manifest (and re-runs the phase's apis)
         frames = {n: df for _, tables in fetched.values() for n, df in tables.items()}
-        with self.store.commit_bracket("basic", list(frames)):
+        with self.store.commit_bracket("basic"):
             errors = self._write_tables(frames, ENTITY_WRITES)
         for api, (n_rows, tables) in fetched.items():
             failed = [errors[n] for n in tables if n in errors]
@@ -510,7 +510,7 @@ class JobcanPipeline:
                 parse_request_documents(self._raw_df(docs))
             )
             try:
-                with self.store.commit_bracket("form_detail", list(tables)):
+                with self.store.commit_bracket("form_detail"):
                     errors = self._write_tables(tables, REQUEST_WRITES)
             finally:
                 tables.unpersist()  # drop shred caches (long-lived sessions)
@@ -585,13 +585,13 @@ class JobcanPipeline:
                 summary,
                 [
                     "interrupted commit batch detected "
-                    f"(batch {pending['batch_id']}, {len(pending['tables'])} "
-                    "tables); replaying via checkpoint resume"
+                    f"(batch {pending['batch_id']}); replaying via "
+                    "checkpoint resume"
                 ],
             )
             # clear the stale manifest under the writer lease: a live
             # foreign writer's manifest is refused here, before any fetch
-            with self.store.commit_bracket(pending["batch_id"], pending["tables"]):
+            with self.store.commit_bracket(pending["batch_id"]):
                 pass
         self._run_basic_data(state, summary)
         self._run_form_outline(state, summary)

@@ -1474,8 +1474,9 @@ class TableStore:
         except (OSError, ValueError):
             pass
 
-    def begin_commit(self, batch_id: str, tables: list[str]) -> None:
-        """Mark a multi-table batch in progress (atomic manifest write).
+    def begin_commit(self, batch_id: str) -> None:
+        """Mark a multi-table batch in progress (atomic manifest write of
+        ``{"batch_id", "epoch"}``).
 
         Per-table swaps are individually atomic but the batch is not: a
         hard crash between tables leaves some written and some not.  The
@@ -1484,7 +1485,10 @@ class TableStore:
         to the exact same result — the manifest makes that interrupted
         state DETECTED and the replay explicit instead of implicit
         (reference parity: gateway.py:513-539 converges per record the
-        same way, also without cross-table atomicity).
+        same way, also without cross-table atomicity).  The manifest
+        names no tables: replay re-runs the whole batch from the
+        caller's checkpoint, and snapshot mode's unpublished dirs are
+        tracked in memory (``_pending_versions``), never through it.
 
         Re-entrant: inside an open bracket this only deepens it — the
         outer manifest owns the batch.
@@ -1496,11 +1500,7 @@ class TableStore:
             return
         self._commit_epoch = self._acquire_lease()
         self._lease_holders().add(self)
-        payload = {
-            "batch_id": batch_id,
-            "tables": sorted(tables),
-            "epoch": self._commit_epoch,
-        }
+        payload = {"batch_id": batch_id, "epoch": self._commit_epoch}
         tmp = self.root / f"{self.MANIFEST}.tmp"
         tmp.write_text(_json.dumps(payload))
         os.replace(tmp, self.root / self.MANIFEST)
@@ -1617,13 +1617,14 @@ class TableStore:
         self._release_lease()
 
     @contextmanager
-    def commit_bracket(self, batch_id: str, tables: list[str]):
+    def commit_bracket(self, batch_id: str):
         """ONE commit around the ``with`` block: ``begin_commit``, then
         ``end_commit`` on success or ``abort_commit`` on any exception
         (including a failed publish or a background-write failure
         re-raised at the drain).  On a snapshot store everything written
         inside publishes atomically at the outermost exit, under a
-        single manifest.
+        single manifest.  The bracket's scope is whatever its block
+        writes; callers name no tables.
 
         Brackets nest: an inner bracket joins the outer one (the
         manifest keeps the outer ``batch_id``), so composed operators
@@ -1631,7 +1632,7 @@ class TableStore:
         ``extend_lm_index``, ... inside ``ingest_increment`` — publish
         exactly once, and an exception leaving an inner bracket aborts
         the whole batch."""
-        self.begin_commit(batch_id, tables)
+        self.begin_commit(batch_id)
         try:
             yield self
             self.end_commit()
@@ -1897,7 +1898,7 @@ class TableStore:
         # off the stale prev manifest) would delete that publish's data
         # dirs.  end_commit reads the pointer only after _verify_lease
         # for the same reason.
-        self.begin_commit(batch_id or f"rollback-to-v{version}", [])
+        self.begin_commit(batch_id or f"rollback-to-v{version}")
         try:
             self._verify_lease()
             snap = self.current_snapshot()
@@ -1966,10 +1967,11 @@ class TableStore:
         return self._materialize_layer(table, self._read_layers(layers))
 
     def pending_commit(self) -> dict | None:
-        """The interrupted batch's manifest, if a previous process died
-        mid-batch — callers replay (re-run the idempotent merges from
-        their checkpoint, which never advanced past the batch) inside a
-        ``commit_bracket``, whose exit clears it."""
+        """The interrupted batch's manifest ``{"batch_id", "epoch"}``, if
+        a previous process died mid-batch — callers replay (re-run the
+        idempotent merges from their checkpoint, which never advanced
+        past the batch) inside a ``commit_bracket``, whose exit clears
+        it."""
         import json as _json
 
         p = self.root / self.MANIFEST

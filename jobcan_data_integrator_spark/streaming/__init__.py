@@ -23,7 +23,7 @@ silver tables incrementally maintainable from a stream:
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +43,25 @@ from jobcan_data_integrator_spark.operators.shred import (
     shred_request_documents,
 )
 from jobcan_data_integrator_spark.storage import TableStore
+
+
+def _sink(
+    stream: DataFrame, fn: Callable[[DataFrame, int], None], checkpoint_dir: str
+):
+    """The one ``foreachBatch`` sink every entry point below returns:
+    ``fn(batch_df, batch_id)`` runs per non-empty micro-batch, and the
+    query drains what is available from ``checkpoint_dir``'s offsets
+    (``availableNow``), then stops."""
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            fn(batch_df, batch_id)
+
+    return (
+        stream.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
 
 
 def stream_bronze_documents(spark: SparkSession, bronze_dir: str) -> DataFrame:
@@ -68,24 +87,19 @@ def merge_documents_stream(
     strategy = writes or REQUEST_WRITES
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            tables = shred_request_documents(batch_df)
-            try:
-                for name, df in tables.items():
-                    kind, keys = strategy.get(name) or strategy["*"]
-                    if kind == "upsert":
-                        store.merge_upsert(name, df, keys)
-                    else:
-                        store.sync_children(name, df, keys)
-            finally:
-                # one cache set per micro-batch would otherwise accumulate
-                tables.unpersist()
+        tables = shred_request_documents(batch_df)
+        try:
+            for name, df in tables.items():
+                kind, keys = strategy.get(name) or strategy["*"]
+                if kind == "upsert":
+                    store.merge_upsert(name, df, keys)
+                else:
+                    store.sync_children(name, df, keys)
+        finally:
+            # one cache set per micro-batch would otherwise accumulate
+            tables.unpersist()
 
-    return (
-        docs.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _sink(docs, _merge, checkpoint_dir)
 
 
 def dedup_documents_stream(
@@ -119,8 +133,6 @@ def dedup_documents_stream(
     )
 
     def _dedup(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sh = hashed_shingle_rows(batch_df.select("doc_id", "text")).cache()
         try:
             if not store.exists("mh_bands"):
@@ -131,11 +143,7 @@ def dedup_documents_stream(
         finally:
             sh.unpersist()
 
-    return (
-        docs.writeStream.foreachBatch(_dedup)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _sink(docs, _dedup, checkpoint_dir)
 
 
 def windowed_request_counts(
@@ -389,8 +397,6 @@ def index_embeddings_stream(
     )
 
     def _index(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         b = batch_df.select("vec_id", "embedding").localCheckpoint(eager=True)
         if not store.exists("ivf_codebook"):
             build_semantic_index(
@@ -418,11 +424,7 @@ def index_embeddings_stream(
                     ),
                 )
 
-    return (
-        emb.writeStream.foreachBatch(_index)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _sink(emb, _index, checkpoint_dir)
 
 
 def index_spans_stream(
@@ -453,8 +455,6 @@ def index_spans_stream(
     )
 
     def _index(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch = batch_df.select("doc_id", "text")
         if not store.exists("sp_occs"):
             build_span_index(store, batch, span)
@@ -462,11 +462,7 @@ def index_spans_stream(
             groups, flags = span_increment(store, batch, span)
             extend_span_index(store, batch, groups, flags, span)
 
-    return (
-        docs.writeStream.foreachBatch(_index)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _sink(docs, _index, checkpoint_dir)
 
 
 def clean_documents_stream(
@@ -502,8 +498,6 @@ def clean_documents_stream(
     )
 
     def _clean(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         b = batch_df.select("doc_id", "text")
         bid = f"line-stream-{batch_id}"
         absorbed = (
@@ -539,11 +533,7 @@ def clean_documents_stream(
         if need_extend:
             extend_line_index(store, b, bid, min_line_chars)
 
-    return (
-        docs.writeStream.foreachBatch(_clean)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _sink(docs, _clean, checkpoint_dir)
 
 
 def index_pq_stream(
@@ -571,19 +561,13 @@ def index_pq_stream(
     )
 
     def _index(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         b = batch_df.select("vec_id", "embedding").localCheckpoint(eager=True)
         if not store.exists("pq_codebooks"):
             build_pq_index(store, b, m=m, k=k, iters=iters)
         else:
             extend_pq_index(store, encode_pq_increment(store, b))
 
-    return (
-        emb.writeStream.foreachBatch(_index)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _sink(emb, _index, checkpoint_dir)
 
 
 def ingest_documents_stream(
@@ -615,8 +599,6 @@ def ingest_documents_stream(
     )
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ingest_increment(
             store,
             batch_df.select("doc_id", "text"),
@@ -624,11 +606,7 @@ def ingest_documents_stream(
             **ingest_kwargs,
         )
 
-    return (
-        docs.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _sink(docs, _ingest, checkpoint_dir)
 
 
 def retract_documents_stream(
@@ -657,8 +635,6 @@ def retract_documents_stream(
     )
 
     def _retract(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         retract_documents(
             store,
             batch_df.select("doc_id"),
@@ -666,8 +642,4 @@ def retract_documents_stream(
             **retract_kwargs,
         )
 
-    return (
-        requests.writeStream.foreachBatch(_retract)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _sink(requests, _retract, checkpoint_dir)

@@ -593,7 +593,7 @@ def bm25_experiment(
         **index_layout(bm25_index_buckets(n_buckets)),
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    with store.commit_bracket("bm25-build", ["bm_postings", "bm_doc_len"]):
+    with store.commit_bracket("bm25-build"):
         extend_bm25_index(store, docs)
     queries = (
         docs.filter(F.pmod(F.col("doc_id"), F.lit(250)) == 11)
@@ -618,7 +618,7 @@ def bm25_experiment(
     late = docs.limit(20).select(
         (F.col("doc_id") + F.lit(hi) + 1).alias("doc_id"), "text"
     ).localCheckpoint(eager=True)
-    with store.commit_bracket("bm25-extend", ["bm_postings", "bm_doc_len"]):
+    with store.commit_bracket("bm25-extend"):
         t0 = time.perf_counter()
         extend_bm25_index(store, late)
         ext_sec = round(time.perf_counter() - t0, 3)

@@ -124,10 +124,10 @@ def test_crash_mid_build_is_detected(spark, sf_dir, tmp_path):
 
     # simulate a crash between tables: begin the manifest, write one
     # table, die before end_commit
-    store.begin_commit("mh-index-build", list(INDEX_TABLES))
+    store.begin_commit("mh-index-build")
     store.overwrite("mh_bands", _hashed(spark, sf_dir).limit(0))
     pending = TableStore(spark, tmp_path, write_partitions=2).pending_commit()
-    assert pending is not None and "mh_pairs" in pending["tables"]
+    assert pending is not None and pending["batch_id"] == "mh-index-build"
 
     # the idempotent replay (through a fresh handle, as after a process
     # crash — the crashed handle's bracket is still open) converges and

@@ -255,8 +255,8 @@ def test_nested_commit_bracket_joins_outer(spark, tmp_path):
     aborts the outer one."""
     store = TableStore(spark, tmp_path, snapshot_isolation=True)
     df = spark.range(3).withColumnRenamed("id", "k")
-    with store.commit_bracket("outer", ["t", "u"]):
-        with store.commit_bracket("inner", ["t"]):
+    with store.commit_bracket("outer"):
+        with store.commit_bracket("inner"):
             store.overwrite("t", df)
             assert store.pending_commit()["batch_id"] == "outer"
         assert store.pending_commit()["batch_id"] == "outer"
@@ -267,9 +267,9 @@ def test_nested_commit_bracket_joins_outer(spark, tmp_path):
     assert store.pending_commit() is None
 
     with pytest.raises(RuntimeError, match="inner failed"):
-        with store.commit_bracket("outer-2", ["t", "u"]):
+        with store.commit_bracket("outer-2"):
             store.overwrite("u", df.limit(1))
-            with store.commit_bracket("inner-2", ["t"]):
+            with store.commit_bracket("inner-2"):
                 store.overwrite("t", df.limit(1))
                 raise RuntimeError("inner failed")
     assert store._depth == 0

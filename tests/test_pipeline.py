@@ -317,7 +317,6 @@ def test_commit_manifest_survives_hard_crash_and_replays(spark, tmp_path):
     # the manifest survived the crash and names the interrupted batch
     pending = store.pending_commit()
     assert pending is not None and pending["batch_id"] == "form_detail"
-    assert "requests" in pending["tables"]
     # the checkpoint never advanced past the batch
     assert ckpt.load().outline_queue
 
@@ -350,7 +349,7 @@ def test_stale_manifest_of_live_foreign_writer_is_left_alone(spark, tmp_path):
         json.dumps({"pid": 1, "ts": time.time(), "epoch": 7})
     )
     (root / TableStore.MANIFEST).write_text(
-        json.dumps({"batch_id": "foreign", "tables": ["requests"], "epoch": 7})
+        json.dumps({"batch_id": "foreign", "epoch": 7})
     )
     with pytest.raises(ConcurrentWriterError, match="pid 1"):
         pipe.run()

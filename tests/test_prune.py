@@ -44,7 +44,7 @@ def _rows(store):
 
 def _seed(spark, store, n=64):
     rows = [(i, i % 3, f"v{i}") for i in range(n)]
-    store.begin_commit("seed", ["t"])
+    store.begin_commit("seed")
     store.merge_upsert("t", _df(spark, rows), ["k"])
     store.end_commit()
     return rows
@@ -68,7 +68,7 @@ def test_prune_keys_rewrites_only_affected_buckets(spark, tmp_path):
     bucket, ks = next((b, v) for b, v in by_bucket.items() if len(v) >= 3)
     drop = ks[:3]
 
-    store.begin_commit("prune", ["t"])
+    store.begin_commit("prune")
     store.prune_keys("t", _keys(spark, drop), ["k"])
     store.end_commit()
 
@@ -92,7 +92,7 @@ def test_prune_empties_bucket_with_dead_marker(spark, tmp_path):
         by_bucket.setdefault(_bucket_of(spark, k), []).append(k)
     bucket, ks = min(by_bucket.items(), key=lambda kv: len(kv[1]))
 
-    store.begin_commit("prune-all", ["t"])
+    store.begin_commit("prune-all")
     store.prune_keys("t", _keys(spark, ks), ["k"])
     store.end_commit()
     assert _rows(store) == sorted(
@@ -103,7 +103,7 @@ def test_prune_empties_bucket_with_dead_marker(spark, tmp_path):
     assert layers[-1]["parts"] == []
 
     # the emptied bucket accepts new rows again (a fresh layer wins)
-    store.begin_commit("refill", ["t"])
+    store.begin_commit("refill")
     store.merge_upsert("t", _df(spark, [(ks[0], 9, "back")]), ["k"])
     store.end_commit()
     got = dict(((r.k), (r.g, r.v)) for r in store.read("t").collect())
@@ -118,13 +118,13 @@ def test_dead_markers_survive_layer_compaction(spark, tmp_path):
     for k, _, _ in rows:
         by_bucket.setdefault(_bucket_of(spark, k), []).append(k)
     bucket, ks = min(by_bucket.items(), key=lambda kv: len(kv[1]))
-    store.begin_commit("prune-all", ["t"])
+    store.begin_commit("prune-all")
     store.prune_keys("t", _keys(spark, ks), ["k"])
     store.end_commit()
     # pile on merges until the stack folds (max 3 layers)
     for i in range(4):
         other = next(k for k in by_bucket if k != bucket)
-        store.begin_commit(f"m{i}", ["t"])
+        store.begin_commit(f"m{i}")
         store.merge_upsert(
             "t", _df(spark, [(by_bucket[other][0], 7, f"m{i}")]), ["k"]
         )
@@ -141,7 +141,7 @@ def test_prune_keys_scan_path_non_source_key(spark, tmp_path):
     the full anti-join."""
     store = _store(spark, tmp_path)
     rows = _seed(spark, store)
-    store.begin_commit("prune-g", ["t"])
+    store.begin_commit("prune-g")
     store.prune_keys("t", _keys(spark, [1], col="g"), ["g"])
     store.end_commit()
     assert _rows(store) == sorted(
@@ -152,7 +152,7 @@ def test_prune_keys_scan_path_non_source_key(spark, tmp_path):
 def test_prune_predicate_scoped(spark, tmp_path):
     store = _store(spark, tmp_path)
     rows = _seed(spark, store)
-    store.begin_commit("prune-pred", ["t"])
+    store.begin_commit("prune-pred")
     store.prune_predicate("t", F.col("g") == 2)
     store.end_commit()
     assert _rows(store) == sorted(
@@ -168,7 +168,7 @@ def test_prune_matches_plain_mode_fallback(spark, tmp_path):
     plain = _store(spark, tmp_path / "plain", snapshot=False)
     for st in (snap, plain):
         _seed(spark, st)
-        st.begin_commit("prune", ["t"])
+        st.begin_commit("prune")
         st.prune_keys("t", _keys(spark, [3, 8, 21]), ["k"])
         st.end_commit()
     assert _rows(snap) == _rows(plain)
@@ -177,10 +177,10 @@ def test_prune_matches_plain_mode_fallback(spark, tmp_path):
     u = TableStore(
         spark, tmp_path / "u", write_partitions=1, snapshot_isolation=True
     )
-    u.begin_commit("seed", ["t"])
+    u.begin_commit("seed")
     u.overwrite("t", _df(spark, [(i, i % 3, f"v{i}") for i in range(10)]))
     u.end_commit()
-    u.begin_commit("prune", ["t"])
+    u.begin_commit("prune")
     u.prune_keys("t", _keys(spark, [4, 5]), ["k"])
     u.end_commit()
     assert sorted(r.k for r in u.read("t").collect()) == [
@@ -197,10 +197,10 @@ def test_prune_range_banded_table(spark, tmp_path):
         snapshot_isolation=True,
     )
     rows = [(i, i % 3, f"v{i}") for i in range(40)]
-    store.begin_commit("seed", ["t"])
+    store.begin_commit("seed")
     store.merge_upsert("t", _df(spark, rows), ["k"])
     store.end_commit()
-    store.begin_commit("prune", ["t"])
+    store.begin_commit("prune")
     store.prune_keys("t", _keys(spark, [12, 13, 14]), ["k"])
     store.end_commit()
     assert _rows(store) == sorted(
@@ -220,10 +220,10 @@ def test_prune_predicate_keeps_null_predicate_rows(spark, tmp_path):
     df = spark.createDataFrame(rows, "k long, g long, v string")
 
     scoped = _store(spark, tmp_path / "scoped")
-    scoped.begin_commit("seed", ["t"])
+    scoped.begin_commit("seed")
     scoped.overwrite("t", df)
     scoped.end_commit()
-    scoped.begin_commit("prune", ["t"])
+    scoped.begin_commit("prune")
     scoped.prune_predicate("t", F.col("g") == 2)
     scoped.end_commit()
     assert _rows(scoped) == [(2, None, "keep-me"), (3, 5, "keep-too")]
@@ -245,7 +245,7 @@ def test_prune_keys_segment_hint_zero_scan_path(spark, tmp_path):
     rows = _seed(spark, store)
     # drop rows with g == 1, hinting their k values (the bucket source)
     gk = [k for k, g, _ in rows if g == 1]
-    store.begin_commit("prune-hint", ["t"])
+    store.begin_commit("prune-hint")
     store.prune_keys(
         "t",
         _keys(spark, [1], col="g"),
@@ -269,7 +269,7 @@ def test_prune_keys_segment_hint_zero_scan_path(spark, tmp_path):
     g2 = [k for k, g, _ in rows2 if g == 2]
     b0 = _bucket_of(spark, g2[0])
     in_b0 = {k for k in g2 if _bucket_of(spark, k) == b0}
-    store2.begin_commit("prune-partial", ["t"])
+    store2.begin_commit("prune-partial")
     store2.prune_keys(
         "t",
         _keys(spark, [2], col="g"),

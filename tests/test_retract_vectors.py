@@ -63,7 +63,7 @@ def _reference(spark, root, emb, keep_ids):
     inc.build_semantic_index(store, emb, threshold=0.3)
     inc.build_pq_index(store, emb)
     dropped = emb.join(keep_ids, "vec_id", "left_anti").select("vec_id")
-    store.begin_commit("ref-prune", ["ivf_assignments", "pq_codes", "sd_pairs"])
+    store.begin_commit("ref-prune")
     store.delete_scope("ivf_assignments", dropped, ["vec_id"])
     store.delete_scope("pq_codes", dropped, ["vec_id"])
     b = F.broadcast(dropped.select(F.col("vec_id").alias("_rid")))

@@ -324,7 +324,7 @@ def test_hybrid_search_curated_matches_composed_one_shot(
     # cluster-style demotion: doc 4 tombstoned, vectors NOT retracted —
     # the dense side must exclude it BEFORE the top-k cut
     demoted = store.read(TOMBSTONES).limit(1).withColumn("doc_id", F.lit(4))
-    store.begin_commit("demote-4", [TOMBSTONES])
+    store.begin_commit("demote-4")
     store.merge_insert_missing(TOMBSTONES, demoted, ["doc_id"])
     store.end_commit()
 
@@ -359,7 +359,7 @@ def test_hybrid_search_curated_matches_composed_one_shot(
         .select("vec_id")
         .localCheckpoint(eager=True)
     )
-    ref.begin_commit("prune-dead", ["ivf_assignments"])
+    ref.begin_commit("prune-dead")
     ref.delete_scope("ivf_assignments", dead_vecs, ["vec_id"])
     ref.end_commit()
     ann_ref = inc.ann_search_indexed(

@@ -26,14 +26,14 @@ def _snap_store(spark, root) -> TableStore:
 
 def test_mid_batch_reader_sees_pre_batch_pair(spark, tmp_path):
     w = _snap_store(spark, tmp_path)
-    w.begin_commit("b0", ["ta", "tb"])
+    w.begin_commit("b0")
     w.overwrite("ta", _df(spark, 0))
     w.overwrite("tb", _df(spark, 0))
     w.end_commit()
 
     r = _snap_store(spark, tmp_path)
     # batch 1 in flight: A written, B not yet — the dangerous window
-    w.begin_commit("b1", ["ta", "tb"])
+    w.begin_commit("b1")
     w.overwrite("ta", _df(spark, 1))
     snap = r.current_snapshot()
     pair = (
@@ -76,7 +76,7 @@ def test_concurrent_reader_never_sees_torn_batch(spark, tmp_path):
     t.start()
     try:
         for v in range(1, 5):
-            w.begin_commit(f"b{v}", ["ta", "tb"])
+            w.begin_commit(f"b{v}")
             w.overwrite("ta", _df(spark, v))
             w.overwrite("tb", _df(spark, v))
             w.end_commit()
@@ -88,12 +88,12 @@ def test_concurrent_reader_never_sees_torn_batch(spark, tmp_path):
 
 def test_crash_before_publish_leaves_old_snapshot(spark, tmp_path):
     w = _snap_store(spark, tmp_path)
-    w.begin_commit("b0", ["ta"])
+    w.begin_commit("b0")
     w.overwrite("ta", _df(spark, 0))
     w.end_commit()
 
     # simulate a crash mid-batch: versioned dir written, pointer never moved
-    w.begin_commit("b1", ["ta"])
+    w.begin_commit("b1")
     w.overwrite("ta", _df(spark, 99))
     del w
 
@@ -102,7 +102,7 @@ def test_crash_before_publish_leaves_old_snapshot(spark, tmp_path):
     assert r.pending_commit()["batch_id"] == "b1"  # interrupted batch detected
     pre_replay_dir = r.current_snapshot()["tables"]["ta"]
     # the replay re-runs the batch and publishes; the abandoned dir is GC'd
-    r.begin_commit("b1", ["ta"])
+    r.begin_commit("b1")
     r.overwrite("ta", _df(spark, 1))
     r.end_commit()
     assert r.read("ta").collect()[0].v == 1
@@ -179,7 +179,7 @@ def test_mid_batch_reader_sees_pre_batch_bucketed_index(spark, tmp_path):
     w.end_commit()
 
     r = _bucketed_store(spark, tmp_path, snapshot=True)
-    w.begin_commit("b1", ["t"])
+    w.begin_commit("b1")
     w.merge_upsert("t", _kv(spark, [(2, "B"), (3, "c")]), ["k"])
     snap = r.current_snapshot()
     pinned = sorted((x.k, x.v) for x in r.read_at("t", snap).collect())
@@ -337,25 +337,25 @@ def test_publish_gc_spares_concurrent_composers_inflight_write(spark, tmp_path):
     abandoned dir is reclaimable again."""
     a = _snap_store(spark, tmp_path)
     b = _snap_store(spark, tmp_path)
-    a.begin_commit("b0", ["ta"])
+    a.begin_commit("b0")
     a.overwrite("ta", _df(spark, 0))
     a.end_commit()
 
     # b is mid-write: dir exists on disk, no _pending_versions entry yet
-    b.begin_commit("b1", ["tb"])
+    b.begin_commit("b1")
     vdir = f"tb.v-{b._token}-deadbeef"
     (tmp_path / vdir).mkdir()
     (tmp_path / vdir / "part-00000.parquet").write_bytes(b"x")
     with b._pv_lock:
         b._inflight_vdirs.add(vdir)
 
-    a.begin_commit("b2", ["ta"])
+    a.begin_commit("b2")
     a.overwrite("ta", _df(spark, 1))
     a.end_commit()
     assert (tmp_path / vdir).exists()  # spared mid-write
 
     b.end_commit()  # b abandons (publishes nothing) and releases
-    a.begin_commit("b3", ["ta"])
+    a.begin_commit("b3")
     a.overwrite("ta", _df(spark, 2))
     a.end_commit()
     assert not (tmp_path / vdir).exists()  # reclaimed once b released

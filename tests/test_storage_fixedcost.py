@@ -35,7 +35,7 @@ def test_begin_commit_backgrounds_submits(spark, tmp_path):
     store = _store(spark, tmp_path)
     a = spark.range(5).select(F.col("id").alias("k"))
     b = spark.range(7).select(F.col("id").alias("k"))
-    store.begin_commit("bg-bracket", ["ta", "tb"])
+    store.begin_commit("bg-bracket")
     assert store._depth == 1
     store.submit_op(lambda: store.overwrite("ta", a), reads=("ta",), writes=("ta",))
     store.submit_op(lambda: store.overwrite("tb", b), reads=("tb",), writes=("tb",))
@@ -59,7 +59,7 @@ def test_begin_commit_background_failure_aborts(spark, tmp_path):
     def boom():
         raise RuntimeError("background write failed")
 
-    store.begin_commit("bg-fail", ["ta"])
+    store.begin_commit("bg-fail")
     store.submit_op(boom, reads=("ta",), writes=("ta",))
     with pytest.raises(RuntimeError, match="background write failed"):
         store.end_commit()
@@ -70,7 +70,7 @@ def test_begin_commit_same_table_order_preserved(spark, tmp_path):
     store = _store(spark, tmp_path)
     first = spark.range(3).select(F.col("id").alias("k"))
     second = spark.range(10).select(F.col("id").alias("k"))
-    store.begin_commit("bg-waw", ["ta"])
+    store.begin_commit("bg-waw")
     store.submit_op(lambda: store.overwrite("ta", first), reads=("ta",), writes=("ta",))
     store.submit_op(lambda: store.overwrite("ta", second), reads=("ta",), writes=("ta",))
     store.end_commit()
@@ -80,7 +80,7 @@ def test_begin_commit_same_table_order_preserved(spark, tmp_path):
 def test_schema_memo_hits_and_versions(spark, tmp_path):
     store = _store(spark, tmp_path)
     v1 = spark.range(4).select(F.col("id").alias("k"), F.lit("x").alias("s"))
-    store.begin_commit("memo-1", ["tm"])
+    store.begin_commit("memo-1")
     store.overwrite("tm", v1)
     store.end_commit()
     r1 = store.read("tm")
@@ -94,7 +94,7 @@ def test_schema_memo_hits_and_versions(spark, tmp_path):
     v2 = spark.range(2).select(
         F.col("id").alias("k"), F.lit(1).alias("n"), F.lit(True).alias("b")
     )
-    store.begin_commit("memo-2", ["tm"])
+    store.begin_commit("memo-2")
     store.overwrite("tm", v2)
     store.end_commit()
     r3 = store.read("tm")
@@ -119,12 +119,12 @@ def test_driver_bounded_write_roundtrip(spark, tmp_path):
     ctl = TableStore(
         spark, tmp_path / "ctl", snapshot_isolation=True, write_partitions=1
     )
-    store.begin_commit("dw", ["tiny", "overcap", "empty"])
+    store.begin_commit("dw")
     store.overwrite("tiny", rows)
     store.overwrite("overcap", rows)  # 50 > 10: Spark-write fallback
     store.overwrite("empty", rows.filter("doc_id < 0"))
     store.end_commit()
-    ctl.begin_commit("dw", ["tiny"])
+    ctl.begin_commit("dw")
     ctl.overwrite("tiny", rows)
     ctl.end_commit()
     a, b = store.read("tiny"), ctl.read("tiny")
@@ -149,7 +149,7 @@ def test_driver_bounded_merge_rides_overwrite(spark, tmp_path):
     ups = spark.range(5, 15).select(
         F.col("id").alias("k"), F.lit("new").alias("v")
     )
-    store.begin_commit("m1", ["m"])
+    store.begin_commit("m1")
     store.overwrite("m", base)
     store.merge_upsert("m", ups, ["k"])
     store.end_commit()
@@ -157,7 +157,7 @@ def test_driver_bounded_merge_rides_overwrite(spark, tmp_path):
     assert got == {(k, "old") for k in range(5)} | {
         (k, "new") for k in range(5, 15)
     }
-    store.begin_commit("m2", ["m"])
+    store.begin_commit("m2")
     store.merge_insert_missing(
         "m",
         spark.range(0, 20).select(
@@ -178,7 +178,7 @@ def test_abort_commit_clears_failed_bracket(spark, tmp_path):
     store = _store(spark, tmp_path)
     good = spark.range(3).select(F.col("id").alias("k"))
     with pytest.raises(RuntimeError, match="boom"):
-        with store.commit_bracket("bad", ["ta"]):
+        with store.commit_bracket("bad"):
             store.submit_op(
                 lambda: store.overwrite("ta", good),
                 reads=("ta",), writes=("ta",),
@@ -189,7 +189,7 @@ def test_abort_commit_clears_failed_bracket(spark, tmp_path):
     # the failed bracket's write never became visible, and a fresh
     # bracket works normally
     assert not store.exists("ta")
-    with store.commit_bracket("ok", ["tb"]):
+    with store.commit_bracket("ok"):
         store.overwrite("tb", good)
     assert store.read("tb").count() == 3
     assert not store.exists("ta")
@@ -212,8 +212,8 @@ def test_failed_outer_publish_leaks_nothing_into_next_commit(
         raise OSError("publish failed")
 
     with pytest.raises(OSError, match="publish failed"):
-        with store.commit_bracket("batch", ["ta", "tb"]):
-            with store.commit_bracket("extend", ["ta"]):
+        with store.commit_bracket("batch"):
+            with store.commit_bracket("extend"):
                 store.overwrite("ta", a)
             store.overwrite("tb", b)
             monkeypatch.setattr(store, "_publish_snapshot", fail_once)
@@ -221,7 +221,7 @@ def test_failed_outer_publish_leaks_nothing_into_next_commit(
     assert not store._pending_versions
     assert not (store.root / TableStore.LEASE).exists()
     assert store._depth == 0
-    with store.commit_bracket("ok", ["tb"]):
+    with store.commit_bracket("ok"):
         store.overwrite("tb", b)
     assert set(store.current_snapshot()["tables"]) == {"tb"}
     assert store.pending_commit() is None
@@ -236,7 +236,7 @@ def test_commit_bracket_background_failure_aborts(spark, tmp_path):
         raise ValueError("bg fail")
 
     with pytest.raises(ValueError, match="bg fail"):
-        with store.commit_bracket("bg-bad", ["ta"]):
+        with store.commit_bracket("bg-bad"):
             store.submit_op(boom, reads=("ta",), writes=("ta",))
     assert store._depth == 0
     assert not store._pending_versions
@@ -271,11 +271,11 @@ def test_read_at_never_serves_unpinned_tables(spark, tmp_path):
     in the pin and raises like ``read_version`` does."""
     store = _store(spark, tmp_path)
     snap = store.current_snapshot()
-    with store.commit_bracket("b1", ["ta"]):
+    with store.commit_bracket("b1"):
         store.overwrite("ta", spark.range(3).select(F.col("id").alias("k")))
     with pytest.raises(FileNotFoundError):
         store.read_at("ta", snap)
-    with store.commit_bracket("b2", ["tb"]):
+    with store.commit_bracket("b2"):
         store.overwrite("tb", spark.range(5).select(F.col("id").alias("k")))
         with pytest.raises(FileNotFoundError):
             store.read_at("tb", snap)

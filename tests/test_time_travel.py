@@ -37,7 +37,7 @@ def _store(spark, root, retain: int = 3) -> TableStore:
 
 
 def _publish(store: TableStore, batch: str, tables: dict[str, int]) -> int:
-    with store.commit_bracket(batch, sorted(tables)):
+    with store.commit_bracket(batch):
         for t, v in tables.items():
             store.overwrite(t, _df(store.spark, v))
     return store.current_snapshot()["version"]
@@ -116,7 +116,7 @@ def test_rollback_refusals(spark, tmp_path):
     # no-op rollback to the current version
     assert st.rollback(3) == 3
     # mid-batch rollback is rejected
-    st.begin_commit("open", ["t"])
+    st.begin_commit("open")
     st.overwrite("t", _df(spark, 99))
     with pytest.raises(RuntimeError, match="pending"):
         st.rollback(2)
@@ -152,9 +152,9 @@ def test_managed_table_time_travel_and_rollback(spark, tmp_path):
         retain_snapshots=4,
         bucketed={"t": ("k", 4)},
     )
-    with st.commit_bracket("b0", ["t"]):
+    with st.commit_bracket("b0"):
         st.overwrite("t", _df(spark, 0, n=8))
-    with st.commit_bracket("b1", ["t"]):
+    with st.commit_bracket("b1"):
         st.merge_upsert("t", _df(spark, 1, n=2), ["k"])
     assert sorted(r.v for r in st.read_version("t", 1).collect()) == [0] * 8
     assert sorted(r.v for r in st.read_version("t", 2).collect()) == [0] * 6 + [1] * 2
@@ -278,7 +278,7 @@ def test_vacuum_snapshots_reclaims_beyond_retain(spark, tmp_path):
 def test_vacuum_refuses_mid_batch_and_plain_mode(spark, tmp_path):
     st = _store(spark, tmp_path)
     _publish(st, "b0", {"t": 0})
-    st.begin_commit("open", ["t"])
+    st.begin_commit("open")
     st.overwrite("t", _df(spark, 1))
     with pytest.raises(RuntimeError, match="pending"):
         st.vacuum_snapshots()
@@ -372,12 +372,12 @@ def test_rollback_resolves_target_under_the_lease(spark, tmp_path):
     real_begin = st.begin_commit
     fired = {}
 
-    def begin_with_concurrent_publish(batch_id, tables):
+    def begin_with_concurrent_publish(batch_id):
         # simulate the race deterministically: another writer publishes
         # at the exact moment rollback reaches for the lease
         if not fired:
             fired["v"] = _publish(other, "concurrent", {"t": 99})
-        return real_begin(batch_id, tables)
+        return real_begin(batch_id)
 
     st.begin_commit = begin_with_concurrent_publish
     try:

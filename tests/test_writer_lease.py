@@ -46,15 +46,15 @@ def test_live_foreign_writer_is_refused_then_takeover_on_death(
         )
         b = TableStore(spark, tmp_path, snapshot_isolation=True)
         with pytest.raises(ConcurrentWriterError, match=str(child.pid)):
-            b.begin_commit("batch-b", ["t"])
+            b.begin_commit("batch-b")
         with pytest.raises(ConcurrentWriterError):
-            with b.commit_bracket("batch-b", ["t"]):
+            with b.commit_bracket("batch-b"):
                 pass  # pragma: no cover - refused at entry
     finally:
         child.kill()
         child.wait()
     # the holder is dead: stale-lease takeover, no deadlock
-    b.begin_commit("batch-b", ["t"])
+    b.begin_commit("batch-b")
     holder = json.loads((tmp_path / TableStore.LEASE).read_text())
     assert holder["pid"] == os.getpid()
     b.end_commit()
@@ -67,12 +67,12 @@ def test_same_process_reenters_after_crash_and_composes(spark, tmp_path):
     same process — and two handles sharing one root in one process (the
     supported streaming+batch composition) never fence each other."""
     a = TableStore(spark, tmp_path, snapshot_isolation=True)
-    a.begin_commit("batch-a", ["t"])
+    a.begin_commit("batch-a")
     assert a.pending_commit()["batch_id"] == "batch-a"
     del a  # simulated same-process instance crash
 
     b = TableStore(spark, tmp_path, snapshot_isolation=True)
-    b.begin_commit("batch-a", ["t"])  # replay: process-scoped, no error
+    b.begin_commit("batch-a")  # replay: process-scoped, no error
     b.overwrite("t", _mk(spark, [(1, "x")]))
     b.end_commit()
     assert b.pending_commit() is None
@@ -90,7 +90,7 @@ def test_expired_lease_is_taken_over_even_if_pid_alive(spark, tmp_path):
         )
     )
     b = TableStore(spark, tmp_path, snapshot_isolation=True)
-    b.begin_commit("recover", ["t"])
+    b.begin_commit("recover")
     b.end_commit()
 
 
@@ -102,13 +102,13 @@ def test_fresh_foreign_lease_with_live_pid_blocks(spark, tmp_path):
     )
     b = TableStore(spark, tmp_path, snapshot_isolation=True)
     with pytest.raises(ConcurrentWriterError, match="pid 1"):
-        b.begin_commit("blocked", ["t"])
+        b.begin_commit("blocked")
 
 
 def test_commit_bracket_failure_releases_lease(spark, tmp_path):
     a = TableStore(spark, tmp_path, snapshot_isolation=True)
     with pytest.raises(RuntimeError, match="boom"):
-        with a.commit_bracket("batch-a", ["t"]):
+        with a.commit_bracket("batch-a"):
             raise RuntimeError("boom")
     # manifest stays (the interrupted batch is detectable) but the
     # lease is gone — this writer is no longer mid-swap
@@ -119,7 +119,7 @@ def test_commit_bracket_failure_releases_lease(spark, tmp_path):
 def test_torn_lease_file_is_reclaimed(spark, tmp_path):
     (tmp_path / TableStore.LEASE).write_text("{half a jso")
     b = TableStore(spark, tmp_path, snapshot_isolation=True)
-    b.begin_commit("recover", ["t"])
+    b.begin_commit("recover")
     b.end_commit()
 
 
@@ -132,11 +132,11 @@ def test_zombie_writer_cannot_publish_after_takeover(spark, tmp_path):
     must read as the NEW writer's snapshot."""
     a = TableStore(spark, tmp_path, snapshot_isolation=True)
     # seed a published snapshot so both writers contend over real state
-    a.begin_commit("seed", ["t"])
+    a.begin_commit("seed")
     a.overwrite("t", _mk(spark, [(1, "old")]))
     a.end_commit()
 
-    a.begin_commit("zombie", ["t"])
+    a.begin_commit("zombie")
     a.overwrite("t", _mk(spark, [(2, "zombie")]))  # pending, unpublished
     # the stall: a foreign writer finds the lease past TTL and takes
     # over — epoch+1 lease, then ITS commit publishes a new snapshot
@@ -173,10 +173,10 @@ def test_in_process_composition_refcounts_the_lease(spark, tmp_path):
     must NOT unlink the lease while the first is still mid-commit."""
     a = TableStore(spark, tmp_path, snapshot_isolation=True)
     b = TableStore(spark, tmp_path, snapshot_isolation=True)
-    a.begin_commit("batch-a", ["ta"])
+    a.begin_commit("batch-a")
     a.overwrite("ta", _mk(spark, [(1, "a")]))
 
-    b.begin_commit("batch-b", ["tb"])  # re-entrant (same process)
+    b.begin_commit("batch-b")  # re-entrant (same process)
     b.overwrite("tb", _mk(spark, [(2, "b")]))
     b.end_commit()
     # a is still mid-commit: the lease must survive b's release
@@ -196,7 +196,7 @@ def test_pid_reuse_with_unknown_epoch_still_adopts(spark, tmp_path):
         json.dumps({"pid": os.getpid(), "ts": time.time(), "epoch": 7})
     )
     b = TableStore(spark, tmp_path, snapshot_isolation=True)
-    b.begin_commit("adopt", ["t"])
+    b.begin_commit("adopt")
     b.overwrite("t", _mk(spark, [(1, "x")]))
     b.end_commit()
     assert not (tmp_path / TableStore.LEASE).exists()
@@ -205,7 +205,7 @@ def test_pid_reuse_with_unknown_epoch_still_adopts(spark, tmp_path):
 
 def test_readers_never_take_the_lease(spark, tmp_path):
     a = TableStore(spark, tmp_path, snapshot_isolation=True)
-    a.begin_commit("w", ["t"])
+    a.begin_commit("w")
     a.overwrite("t", _mk(spark, [(1, "x")]))
     a.end_commit()
     # a foreign writer's fresh lease is in place; reads stay unfenced
@@ -223,7 +223,7 @@ def test_epochs_are_monotonic_across_clean_releases(spark, tmp_path):
     st = TableStore(spark, tmp_path, snapshot_isolation=True)
     epochs = []
     for i in range(3):
-        st.begin_commit(f"b{i}", ["t"])
+        st.begin_commit(f"b{i}")
         epochs.append(st._commit_epoch)
         st.overwrite("t", _mk(spark, [(i, "x")]))
         st.end_commit()
@@ -240,7 +240,7 @@ def test_zombie_fenced_even_after_taker_released_and_epoch_cycled(
     must get an epoch > e+1, not restart at 1, so stalled A's
     end_commit still fails the verify."""
     a = TableStore(spark, tmp_path, snapshot_isolation=True)
-    a.begin_commit("stall", ["t"])
+    a.begin_commit("stall")
     e = a._commit_epoch
     a.overwrite("t", _mk(spark, [(1, "stale")]))
     # simulate the foreign TTL takeover + clean release: the taker
@@ -250,7 +250,7 @@ def test_zombie_fenced_even_after_taker_released_and_epoch_cycled(
 
     # a NEW batch in this process acquires fresh (no lease file on disk)
     b = TableStore(spark, tmp_path, snapshot_isolation=True)
-    b.begin_commit("new", ["t"])
+    b.begin_commit("new")
     assert b._commit_epoch == e + 2  # monotonic, never back to e
     b.overwrite("t", _mk(spark, [(2, "live")]))
 
