@@ -277,25 +277,18 @@ def build_minhash_index(
         eager=True
     )
     with store.commit_bracket("mh-index-build"):
-
-        def _write() -> None:
-            try:
-                # independent tables, inputs cached above: overlap the
-                # per-job fixed cost (snapshot mode publishes atomically)
-                store.merge_batch([
-                    lambda: store.overwrite("mh_bands", bands),
-                    lambda: store.overwrite("mh_shingles", sh),
-                    lambda: store.overwrite("mh_sizes", sizes),
-                    lambda: store.overwrite("mh_pairs", pairs),
-                ])
-            finally:
-                # all four tables written: drop the scratch caches (runs on
-                # the scheduler thread AFTER the writes, never before)
-                bands.unpersist()
-                sh.unpersist()
-                hashed.unpersist()
-
-        store.submit_op(_write, reads=INDEX_TABLES, writes=INDEX_TABLES)
+        try:
+            store.overwrite("mh_bands", bands)
+            store.overwrite("mh_shingles", sh)
+            store.overwrite("mh_sizes", sizes)
+            store.overwrite("mh_pairs", pairs)
+        finally:
+            # drop the scratch caches once all four writes are done
+            # (failed ones too)
+            store.submit_op(
+                lambda: [df.unpersist() for df in (bands, sh, hashed)],
+                reads=INDEX_TABLES,
+            )
     return pairs
 
 
@@ -405,26 +398,14 @@ def extend_index(
     new_pairs = new_pairs.localCheckpoint(eager=True)
     new_sh = new_hashed_shingles.select("doc_id", "shingle").distinct().cache()
     with store.commit_bracket("mh-index-extend"):
-        store.submit_op(
-            lambda: store.merge_batch([
-                lambda: store.merge_insert_missing(
-                    "mh_bands",
-                    band_rows(new_hashed_shingles, n_hashes, band_size),
-                    ["doc_id", "band_idx"],
-                ),
-                lambda: store.merge_insert_missing(
-                    "mh_shingles", new_sh, ["doc_id", "shingle"]
-                ),
-                lambda: store.merge_insert_missing(
-                    "mh_sizes", shingle_sizes(new_sh), ["doc_id"]
-                ),
-                lambda: store.merge_upsert(
-                    "mh_pairs", new_pairs, ["doc_a", "doc_b"]
-                ),
-            ]),
-            reads=INDEX_TABLES,
-            writes=INDEX_TABLES,
+        store.merge_insert_missing(
+            "mh_bands",
+            band_rows(new_hashed_shingles, n_hashes, band_size),
+            ["doc_id", "band_idx"],
         )
+        store.merge_insert_missing("mh_shingles", new_sh, ["doc_id", "shingle"])
+        store.merge_insert_missing("mh_sizes", shingle_sizes(new_sh), ["doc_id"])
+        store.merge_upsert("mh_pairs", new_pairs, ["doc_a", "doc_b"])
 
 
 def read_pairs(store: TableStore) -> DataFrame:
@@ -471,9 +452,8 @@ def compact_minhash_drops(store: TableStore) -> None:
     with store.commit_bracket("mh-drops-compact"):
         # partition-SCOPED folds (TableStore.prune_keys): each mask rewrites
         # only the bucket/band segments containing its rows — mask-bounded
-        # cost, not corpus-bounded.  Folds of DIFFERENT tables run as
-        # concurrent chains (merge_batch); prunes of the SAME table stay
-        # sequential inside their chain.
+        # cost, not corpus-bounded.  Folds of DIFFERENT tables overlap;
+        # prunes of the SAME table stay in call order.
         doc_drops = (
             store.read("mh_doc_drops") if store.exists("mh_doc_drops") else None
         )
@@ -516,24 +496,14 @@ def compact_minhash_drops(store: TableStore) -> None:
             writes=("mh_pairs",),
         )
         if doc_drops is not None:
-            store.submit_op(
-                lambda: store.prune_keys("mh_shingles", doc_drops, ["doc_id"]),
-                reads=("mh_shingles", "mh_doc_drops"),
-                writes=("mh_shingles",),
-            )
-            store.submit_op(
-                lambda: store.prune_keys("mh_sizes", doc_drops, ["doc_id"]),
-                reads=("mh_sizes", "mh_doc_drops"),
-                writes=("mh_sizes",),
-            )
-        # the clears declare a WRITE of each drop table, so the scheduler's
-        # WAR edges order them after every fold above that READS it
+            store.prune_keys("mh_shingles", doc_drops, ["doc_id"])
+            store.prune_keys("mh_sizes", doc_drops, ["doc_id"])
+        # each clear writes its drop table, so the scheduler's WAR edges
+        # order it after the two folds above that read it when they run
+        # (the other prunes' key frames already point at the published
+        # version, which stays on disk until this commit publishes)
         for t in drops:
-            store.submit_op(
-                lambda t=t: store.overwrite(t, store.read(t).limit(0)),
-                reads=(t,),
-                writes=(t,),
-            )
+            store.overwrite(t, store.read(t).limit(0))
 
 
 def retire_from_minhash(store: TableStore, doc_ids: DataFrame) -> DataFrame:
@@ -550,11 +520,7 @@ def retire_from_minhash(store: TableStore, doc_ids: DataFrame) -> DataFrame:
     (operators/ingest._relabel_after_retraction)."""
     spark = doc_ids.sparkSession
     ids = doc_ids.select("doc_id").distinct().localCheckpoint(eager=True)
-    store.submit_op(
-        lambda: store.merge_insert_missing("mh_doc_drops", ids, ["doc_id"]),
-        reads=("mh_doc_drops",),
-        writes=("mh_doc_drops",),
-    )
+    store.merge_insert_missing("mh_doc_drops", ids, ["doc_id"])
     touched = spark.range(0).select(
         F.col("id").alias("doc_a"),
         F.col("id").alias("doc_b"),
@@ -573,13 +539,8 @@ def retire_from_minhash(store: TableStore, doc_ids: DataFrame) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        store.submit_op(
-            lambda: store.merge_insert_missing(
-                "mh_pair_drops", touched.select("doc_a", "doc_b"),
-                ["doc_a", "doc_b"],
-            ),
-            reads=("mh_pair_drops",),
-            writes=("mh_pair_drops",),
+        store.merge_insert_missing(
+            "mh_pair_drops", touched.select("doc_a", "doc_b"), ["doc_a", "doc_b"]
         )
     return touched
 
@@ -638,18 +599,13 @@ def resign_minhash(
         new_bands, ["doc_id", "band_idx", "band_key"], "left_anti"
     )
 
-    def _band_drops() -> None:
-        store.merge_insert_missing(
-            "mh_band_drops", superseded, ["doc_id", "band_idx", "band_key"]
-        )
-        store.delete_scope(
-            "mh_band_drops", new_bands, ["doc_id", "band_idx", "band_key"]
-        )
-
     # dedup_increment's probe below reads mh_band_drops and barriers on
-    # this op; the old-pairs materialization overlaps it meanwhile
-    store.submit_op(
-        _band_drops, reads=("mh_band_drops",), writes=("mh_band_drops",)
+    # these writes; the old-pairs materialization overlaps them meanwhile
+    store.merge_insert_missing(
+        "mh_band_drops", superseded, ["doc_id", "band_idx", "band_key"]
+    )
+    store.delete_scope(
+        "mh_band_drops", new_bands, ["doc_id", "band_idx", "band_key"]
     )
 
     b_rid = F.broadcast(ids.select(F.col("doc_id").alias("_rid")))
@@ -669,46 +625,23 @@ def resign_minhash(
     new_pairs = new_pairs.localCheckpoint(eager=True)
 
     with store.commit_bracket("mh-resign"):
-        # five independent per-table update groups: each rides the scheduler
-        store.submit_op(
-            lambda: store.sync_children("mh_shingles", new_sh, ["doc_id"]),
-            reads=("mh_shingles",),
-            writes=("mh_shingles",),
-        )
-        store.submit_op(
-            lambda: store.merge_upsert("mh_sizes", shingle_sizes(new_sh), ["doc_id"]),
-            reads=("mh_sizes",),
-            writes=("mh_sizes",),
-        )
-        store.submit_op(
-            lambda: store.merge_insert_missing(
-                "mh_bands", new_bands, ["doc_id", "band_idx", "band_key"]
-            ),
-            reads=("mh_bands",),
-            writes=("mh_bands",),
+        store.sync_children("mh_shingles", new_sh, ["doc_id"])
+        store.merge_upsert("mh_sizes", shingle_sizes(new_sh), ["doc_id"])
+        store.merge_insert_missing(
+            "mh_bands", new_bands, ["doc_id", "band_idx", "band_key"]
         )
         stale_pairs = old_pairs.join(
             new_pairs.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti"
         ).localCheckpoint(eager=True)
-
-        def _pair_drops() -> None:
-            store.merge_insert_missing(
-                "mh_pair_drops", stale_pairs.select("doc_a", "doc_b"),
-                ["doc_a", "doc_b"],
-            )
-            store.delete_scope(
-                "mh_pair_drops", new_pairs.select("doc_a", "doc_b"),
-                ["doc_a", "doc_b"],
-            )
-
-        store.submit_op(
-            _pair_drops, reads=("mh_pair_drops",), writes=("mh_pair_drops",)
+        store.merge_insert_missing(
+            "mh_pair_drops", stale_pairs.select("doc_a", "doc_b"),
+            ["doc_a", "doc_b"],
         )
-        store.submit_op(
-            lambda: store.merge_upsert("mh_pairs", new_pairs, ["doc_a", "doc_b"]),
-            reads=("mh_pairs",),
-            writes=("mh_pairs",),
+        store.delete_scope(
+            "mh_pair_drops", new_pairs.select("doc_a", "doc_b"),
+            ["doc_a", "doc_b"],
         )
+        store.merge_upsert("mh_pairs", new_pairs, ["doc_a", "doc_b"])
     return new_pairs, stale_pairs
 
 
@@ -785,19 +718,11 @@ def extend_clusters(store: TableStore, new_pairs: DataFrame) -> DataFrame:
         changed, remap = _cluster_label_delta(store, new_pairs)
         if changed.head(1):
             with store.commit_bracket("cc-index-extend"):
-                store.submit_op(
-                    lambda: store.merge_upsert("cc_labels", changed, ["doc_id"]),
-                    reads=("cc_labels",),
-                    writes=("cc_labels",),
-                )
+                store.merge_upsert("cc_labels", changed, ["doc_id"])
         return remap
     out, remap = merged_cluster_labels(store.read("cc_labels"), new_pairs)
     with store.commit_bracket("cc-index-extend"):
-        store.submit_op(
-            lambda: store.overwrite("cc_labels", out),
-            reads=("cc_labels",),
-            writes=("cc_labels",),
-        )
+        store.overwrite("cc_labels", out)
     return remap
 
 
@@ -1032,19 +957,13 @@ def build_exact_index(store: TableStore, docs: DataFrame) -> DataFrame:
     initial corpus of (doc_id, text).  Returns the groups frame
     (materialized), so a caller that needs it — ingest's keeper
     election — reuses the computation instead of reading the table
-    back, and the table writes themselves ride the background scheduler
-    (``submit_op``) inside an orchestrated batch."""
+    back, and inside an orchestrated batch the table writes overlap the
+    caller's compute."""
     hashes = _doc_hashes(docs).localCheckpoint(eager=True)
     groups = _hash_groups(hashes).localCheckpoint(eager=True)
     with store.commit_bracket("ex-index-build"):
-        store.submit_op(
-            lambda: store.merge_batch([
-                lambda: store.overwrite("ex_docs", hashes),
-                lambda: store.overwrite("ex_groups", groups),
-            ]),
-            reads=EXACT_TABLES,
-            writes=EXACT_TABLES,
-        )
+        store.overwrite("ex_docs", hashes)
+        store.overwrite("ex_groups", groups)
     return groups
 
 
@@ -1077,18 +996,8 @@ def extend_exact_index(
     (materialized first — it scans the tables being rewritten)."""
     merged_groups = merged_groups.localCheckpoint(eager=True)
     with store.commit_bracket("ex-index-extend"):
-        store.submit_op(
-            lambda: store.merge_batch([
-                lambda: store.merge_insert_missing(
-                    "ex_docs", _doc_hashes(new_docs), ["doc_id"]
-                ),
-                lambda: store.merge_upsert(
-                    "ex_groups", merged_groups, ["text_md5"]
-                ),
-            ]),
-            reads=EXACT_TABLES,
-            writes=EXACT_TABLES,
-        )
+        store.merge_insert_missing("ex_docs", _doc_hashes(new_docs), ["doc_id"])
+        store.merge_upsert("ex_groups", merged_groups, ["text_md5"])
 
 
 # ---------------------------------------------------------------------------
@@ -1258,24 +1167,17 @@ def build_simhash_index(
     blocks = _sh_block_rows(sig, g).cache()
     pairs = _sh_near_dup_pairs(blocks, None, g)
     with store.commit_bracket("sh-index-build"):
-
-        def _write() -> None:
-            try:
-                store.merge_batch([
-                    lambda: store.overwrite("sh_signatures", sig),
-                    lambda: store.overwrite("sh_blocks", blocks),
-                    lambda: store.overwrite("sh_pairs", pairs),
-                    lambda: store.overwrite(
-                        "sh_geometry", _sh_geometry_df(store, g)
-                    ),
-                ])
-            finally:
-                blocks.unpersist()
-                sig.unpersist()
-
-        store.submit_op(
-            _write, reads=tuple(SIMHASH_TABLES), writes=tuple(SIMHASH_TABLES)
-        )
+        try:
+            store.overwrite("sh_signatures", sig)
+            store.overwrite("sh_blocks", blocks)
+            store.overwrite("sh_pairs", pairs)
+            store.overwrite("sh_geometry", _sh_geometry_df(store, g))
+        finally:
+            # drop the scratch caches once the writes are done
+            store.submit_op(
+                lambda: [df.unpersist() for df in (blocks, sig)],
+                reads=tuple(SIMHASH_TABLES),
+            )
 
 
 def _sh_geometry(store: TableStore) -> dict:
@@ -1334,13 +1236,11 @@ def extend_simhash_index(
     new_pairs = new_pairs.localCheckpoint(eager=True)
     sig = new_signatures.localCheckpoint(eager=True)
     with store.commit_bracket("sh-index-extend"):
-        store.merge_batch([
-            lambda: store.merge_insert_missing("sh_signatures", sig, ["doc_id"]),
-            lambda: store.merge_insert_missing(
-                "sh_blocks", _sh_block_rows(sig, g), ["doc_id", "b"]
-            ),
-            lambda: store.merge_upsert("sh_pairs", new_pairs, ["doc_a", "doc_b"]),
-        ], tables=tuple(SIMHASH_TABLES))
+        store.merge_insert_missing("sh_signatures", sig, ["doc_id"])
+        store.merge_insert_missing(
+            "sh_blocks", _sh_block_rows(sig, g), ["doc_id", "b"]
+        )
+        store.merge_upsert("sh_pairs", new_pairs, ["doc_a", "doc_b"])
 
 
 def resign_simhash_index(
@@ -1438,15 +1338,11 @@ def resign_simhash_index(
         return new
 
     blocks = _sh_block_rows(stored_sig, new).localCheckpoint(eager=True)
-    ops = [
-        lambda: store.overwrite("sh_blocks", blocks),
-        lambda: store.overwrite("sh_geometry", _sh_geometry_df(store, new)),
-    ]
-    if new["n_blocks"] != old["n_blocks"]:
-        pairs = _sh_near_dup_pairs(blocks, None, new)
-        ops.append(lambda: store.overwrite("sh_pairs", pairs))
     with store.commit_bracket("sh-index-resign"):
-        store.merge_batch(ops, tables=tuple(SIMHASH_TABLES))
+        store.overwrite("sh_blocks", blocks)
+        store.overwrite("sh_geometry", _sh_geometry_df(store, new))
+        if new["n_blocks"] != old["n_blocks"]:
+            store.overwrite("sh_pairs", _sh_near_dup_pairs(blocks, None, new))
     return new
 
 
@@ -1537,14 +1433,12 @@ def build_ivf_index(
     )
     assign = assign.localCheckpoint(eager=True)
     with store.commit_bracket("ivf-index-build"):
-        store.merge_batch([
-            lambda: store.overwrite("ivf_codebook", cent),
-            lambda: store.overwrite("ivf_assignments", assign),
-            lambda: store.overwrite(
-                IVF_CELL_STATS,
-                assign.groupBy("cell_id").agg(F.count("*").alias("n_vecs")),
-            ),
-        ], tables=tuple(IVF_TABLES) + (IVF_CELL_STATS,))
+        store.overwrite("ivf_codebook", cent)
+        store.overwrite("ivf_assignments", assign)
+        store.overwrite(
+            IVF_CELL_STATS,
+            assign.groupBy("cell_id").agg(F.count("*").alias("n_vecs")),
+        )
 
 
 def assign_increment(store: TableStore, new_emb: DataFrame) -> DataFrame:
@@ -1570,12 +1464,8 @@ def extend_ivf_index(store: TableStore, new_assignments: DataFrame) -> None:
     new_assignments = new_assignments.localCheckpoint(eager=True)
     stats = _cell_stat_rows(store, new_assignments)
     with store.commit_bracket("ivf-index-extend"):
-        store.merge_batch([
-            lambda: store.merge_insert_missing(
-                "ivf_assignments", new_assignments, ["vec_id"]
-            ),
-            lambda: store.merge_upsert(IVF_CELL_STATS, stats, ["cell_id"]),
-        ], tables=("ivf_assignments", IVF_CELL_STATS))
+        store.merge_insert_missing("ivf_assignments", new_assignments, ["vec_id"])
+        store.merge_upsert(IVF_CELL_STATS, stats, ["cell_id"])
 
 
 #: advisory sidecar (deliberately NOT in IVF_TABLES — retraction /
@@ -1815,27 +1705,18 @@ def build_embedding_index(
     emb = emb.cache()
     pairs = embedding_near_dup_pairs(emb, threshold, n_planes, dim, n_bands)
     with store.commit_bracket("eb-index-build"):
-
-        def _write() -> None:
-            try:
-                store.merge_batch([
-                    lambda: store.overwrite("eb_vectors", emb),
-                    lambda: store.overwrite(
-                        "eb_buckets",
-                        bucket_rows(emb, n_planes, dim, n_bands).select(
-                            "vec_id", "band", "bucket"
-                        ),
-                    ),
-                    lambda: store.overwrite("eb_pairs", pairs),
-                ])
-            finally:
-                emb.unpersist()
-
-        store.submit_op(
-            _write,
-            reads=tuple(EMBEDDING_TABLES),
-            writes=tuple(EMBEDDING_TABLES),
-        )
+        try:
+            store.overwrite("eb_vectors", emb)
+            store.overwrite(
+                "eb_buckets",
+                bucket_rows(emb, n_planes, dim, n_bands).select(
+                    "vec_id", "band", "bucket"
+                ),
+            )
+            store.overwrite("eb_pairs", pairs)
+        finally:
+            # drop the scratch cache once the writes are done
+            store.submit_op(emb.unpersist, reads=tuple(EMBEDDING_TABLES))
 
 
 def embedding_increment(
@@ -1936,17 +1817,15 @@ def extend_embedding_index(
 
     new_pairs = new_pairs.localCheckpoint(eager=True)
     with store.commit_bracket("eb-index-extend"):
-        store.merge_batch([
-            lambda: store.merge_insert_missing("eb_vectors", new_emb, ["vec_id"]),
-            lambda: store.merge_insert_missing(
-                "eb_buckets",
-                bucket_rows(new_emb, n_planes, dim, n_bands).select(
-                    "vec_id", "band", "bucket"
-                ),
-                ["vec_id", "band"],
+        store.merge_insert_missing("eb_vectors", new_emb, ["vec_id"])
+        store.merge_insert_missing(
+            "eb_buckets",
+            bucket_rows(new_emb, n_planes, dim, n_bands).select(
+                "vec_id", "band", "bucket"
             ),
-            lambda: store.merge_upsert("eb_pairs", new_pairs, ["vec_a", "vec_b"]),
-        ], tables=tuple(EMBEDDING_TABLES))
+            ["vec_id", "band"],
+        )
+        store.merge_upsert("eb_pairs", new_pairs, ["vec_a", "vec_b"])
 
 
 # ---------------------------------------------------------------------------
@@ -2020,13 +1899,7 @@ def build_semantic_index(
     build_ivf_index(store, emb, n_cells=n_cells, iters=iters)
     assign = store.read("ivf_assignments")
     with store.commit_bracket("sd-index-build"):
-        store.submit_op(
-            lambda: store.overwrite(
-                "sd_pairs", _cell_pairs(assign, None, threshold)
-            ),
-            reads=("sd_pairs",),
-            writes=("sd_pairs",),
-        )
+        store.overwrite("sd_pairs", _cell_pairs(assign, None, threshold))
 
 
 def semantic_increment(
@@ -2067,11 +1940,9 @@ def extend_semantic_index(
     inc = assign_increment(store, new_emb).localCheckpoint(eager=True)
     stats = _cell_stat_rows(store, inc)
     with store.commit_bracket("sd-index-extend"):
-        store.merge_batch([
-            lambda: store.merge_insert_missing("ivf_assignments", inc, ["vec_id"]),
-            lambda: store.merge_upsert("sd_pairs", new_pairs, ["vec_a", "vec_b"]),
-            lambda: store.merge_upsert(IVF_CELL_STATS, stats, ["cell_id"]),
-        ], tables=tuple(SEMANTIC_TABLES) + (IVF_CELL_STATS,))
+        store.merge_insert_missing("ivf_assignments", inc, ["vec_id"])
+        store.merge_upsert("sd_pairs", new_pairs, ["vec_a", "vec_b"])
+        store.merge_upsert(IVF_CELL_STATS, stats, ["cell_id"])
 
 
 # ---------------------------------------------------------------------------
@@ -2154,19 +2025,16 @@ def build_span_index(
     # materializing the flags populates both scratch caches on the way
     flags = _span_flags(occ, groups).localCheckpoint(eager=True)
     with store.commit_bracket("sp-index-build"):
-
-        def _write() -> None:
-            try:
-                store.merge_batch([
-                    lambda: store.overwrite("sp_occs", occ),
-                    lambda: store.overwrite("sp_hashes", groups),
-                    lambda: store.overwrite("sp_flags", flags),
-                ])
-            finally:
-                groups.unpersist()
-                occ.unpersist()
-
-        store.submit_op(_write, reads=SPAN_TABLES, writes=SPAN_TABLES)
+        try:
+            store.overwrite("sp_occs", occ)
+            store.overwrite("sp_hashes", groups)
+            store.overwrite("sp_flags", flags)
+        finally:
+            # drop the scratch caches once the writes are done
+            store.submit_op(
+                lambda: [df.unpersist() for df in (groups, occ)],
+                reads=SPAN_TABLES,
+            )
     return flags
 
 
@@ -2216,31 +2084,16 @@ def extend_span_index(
     flags = flags.localCheckpoint(eager=True)
     has_drops = store.exists(FLAG_DROPS)
     with store.commit_bracket("sp-index-extend"):
-        store.submit_op(
-            lambda: store.merge_batch([
-                lambda: store.merge_insert_missing(
-                    "sp_occs", _span_occ_rows(new_docs, span), ["doc_id", "pos"]
-                ),
-                lambda: store.merge_upsert("sp_hashes", merged_hashes, ["h"]),
-                lambda: store.merge_insert_missing(
-                    "sp_flags", flags, ["doc_id", "pos"]
-                ),
-                # a flag retracted by a past retraction and now re-asserted
-                # (the span re-duplicated) is present-but-masked in sp_flags —
-                # the insert is a keyed no-op there, so unmask it too
-                (
-                    (
-                        lambda: store.delete_scope(
-                            FLAG_DROPS, flags, ["doc_id", "pos"]
-                        )
-                    )
-                    if has_drops
-                    else None
-                ),
-            ]),
-            reads=tuple(SPAN_TABLES) + (FLAG_DROPS,),
-            writes=tuple(SPAN_TABLES) + (FLAG_DROPS,),
+        store.merge_insert_missing(
+            "sp_occs", _span_occ_rows(new_docs, span), ["doc_id", "pos"]
         )
+        store.merge_upsert("sp_hashes", merged_hashes, ["h"])
+        store.merge_insert_missing("sp_flags", flags, ["doc_id", "pos"])
+        if has_drops:
+            # a flag retracted by a past retraction and now re-asserted
+            # (the span re-duplicated) is present-but-masked in sp_flags —
+            # the insert is a keyed no-op there, so unmask it too
+            store.delete_scope(FLAG_DROPS, flags, ["doc_id", "pos"])
 
 
 # ---------------------------------------------------------------------------
@@ -2267,18 +2120,16 @@ def build_lm_index(store: TableStore, docs: DataFrame) -> None:
 
     lm = train_ngram_lm(docs)
     with store.commit_bracket("lm-index-build"):
-        store.merge_batch([
-            lambda: store.overwrite("lm_uni", lm.uni),
-            lambda: store.overwrite("lm_bi", lm.bi),
-            lambda: store.overwrite("lm_tri", lm.tri),
-            lambda: store.overwrite("lm_tot", lm.totals),
-            lambda: store.overwrite(
-                "lm_batches",
-                docs.sparkSession.range(1).select(
-                    F.lit("lm-index-build").alias("batch_id")
-                ),
+        store.overwrite("lm_uni", lm.uni)
+        store.overwrite("lm_bi", lm.bi)
+        store.overwrite("lm_tri", lm.tri)
+        store.overwrite("lm_tot", lm.totals)
+        store.overwrite(
+            "lm_batches",
+            docs.sparkSession.range(1).select(
+                F.lit("lm-index-build").alias("batch_id")
             ),
-        ], tables=tuple(LM_TABLES))
+        )
 
 
 def lm_from_store(store: TableStore):
@@ -2419,31 +2270,17 @@ def extend_lm_index(
                 reads=(table,),
                 writes=(table,),
             )
-        store.submit_op(
-            lambda: store.overwrite(
-                "lm_tot",
-                new_docs.sparkSession.range(1).select(
-                    F.lit(old["n_tokens"] + inc_tokens)
-                    .cast("bigint")
-                    .alias("n_tokens"),
-                    F.lit(old["n_vocab"] + new_vocab)
-                    .cast("bigint")
-                    .alias("n_vocab"),
-                ),
+        store.overwrite(
+            "lm_tot",
+            new_docs.sparkSession.range(1).select(
+                F.lit(old["n_tokens"] + inc_tokens).cast("bigint").alias("n_tokens"),
+                F.lit(old["n_vocab"] + new_vocab).cast("bigint").alias("n_vocab"),
             ),
-            reads=("lm_tot",),
-            writes=("lm_tot",),
         )
-        store.submit_op(
-            lambda: store.merge_insert_missing(
-                "lm_batches",
-                new_docs.sparkSession.range(1).select(
-                    F.lit(batch_id).alias("batch_id")
-                ),
-                ["batch_id"],
-            ),
-            reads=("lm_batches",),
-            writes=("lm_batches",),
+        store.merge_insert_missing(
+            "lm_batches",
+            new_docs.sparkSession.range(1).select(F.lit(batch_id).alias("batch_id")),
+            ["batch_id"],
         )
 
 
@@ -2479,17 +2316,13 @@ def build_line_index(
 
     mc = L.DEFAULT_MIN_LINE_CHARS if min_line_chars is None else min_line_chars
     with store.commit_bracket(batch_id):
-        store.merge_batch([
-            lambda: store.overwrite(
-                "bl_stats", L.boilerplate_line_stats(docs, min_line_chars=mc)
-            ),
-            lambda: store.overwrite(
-                "bl_batches",
-                docs.sparkSession.range(1).select(
-                    F.lit(batch_id).alias("batch_id")
-                ),
-            ),
-        ], tables=tuple(LINE_TABLES))
+        store.overwrite(
+            "bl_stats", L.boilerplate_line_stats(docs, min_line_chars=mc)
+        )
+        store.overwrite(
+            "bl_batches",
+            docs.sparkSession.range(1).select(F.lit(batch_id).alias("batch_id")),
+        )
 
 
 def clean_increment(
@@ -2575,16 +2408,12 @@ def extend_line_index(
         .localCheckpoint(eager=True)
     )
     with store.commit_bracket(batch_id):
-        store.merge_batch([
-            lambda: store.merge_upsert("bl_stats", merged, ["line_hash"]),
-            lambda: store.merge_insert_missing(
-                "bl_batches",
-                new_docs.sparkSession.range(1).select(
-                    F.lit(batch_id).alias("batch_id")
-                ),
-                ["batch_id"],
-            ),
-        ], tables=tuple(LINE_TABLES))
+        store.merge_upsert("bl_stats", merged, ["line_hash"])
+        store.merge_insert_missing(
+            "bl_batches",
+            new_docs.sparkSession.range(1).select(F.lit(batch_id).alias("batch_id")),
+            ["batch_id"],
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -2614,10 +2443,8 @@ def build_pq_index(
 
     cb = train_pq(emb, m=m, k=k, iters=iters).localCheckpoint(eager=True)
     with store.commit_bracket("pq-index-build"):
-        store.merge_batch([
-            lambda: store.overwrite("pq_codebooks", cb),
-            lambda: store.overwrite("pq_codes", pq_encode(emb, cb, m=m)),
-        ], tables=tuple(PQ_TABLES))
+        store.overwrite("pq_codebooks", cb)
+        store.overwrite("pq_codes", pq_encode(emb, cb, m=m))
 
 
 def encode_pq_increment(store: TableStore, new_emb: DataFrame) -> DataFrame:
@@ -2636,11 +2463,7 @@ def extend_pq_index(store: TableStore, new_codes: DataFrame) -> None:
     nothing (plain idempotent-merge contract, no batch ledger needed)."""
     new_codes = new_codes.localCheckpoint(eager=True)
     with store.commit_bracket("pq-index-extend"):
-        store.submit_op(
-            lambda: store.merge_insert_missing("pq_codes", new_codes, ["vec_id"]),
-            reads=("pq_codes",),
-            writes=("pq_codes",),
-        )
+        store.merge_insert_missing("pq_codes", new_codes, ["vec_id"])
 
 
 def refresh_embedding_codebooks(
@@ -2729,18 +2552,14 @@ def refresh_embedding_codebooks(
                 cent,
                 keep=("embedding",),
             ).localCheckpoint(eager=True)
-            store.merge_batch([
-                lambda: store.overwrite("ivf_codebook", cent),
-                lambda: store.overwrite("ivf_assignments", assign),
-                # exact occupancy rebuild: the refresh is what RESETS
-                # the drift signal (ivf_drift_stats)
-                lambda: store.overwrite(
-                    IVF_CELL_STATS,
-                    assign.groupBy("cell_id").agg(
-                        F.count("*").alias("n_vecs")
-                    ),
-                ),
-            ], tables=tuple(IVF_TABLES) + (IVF_CELL_STATS,))
+            store.overwrite("ivf_codebook", cent)
+            store.overwrite("ivf_assignments", assign)
+            # exact occupancy rebuild: the refresh is what RESETS the
+            # drift signal (ivf_drift_stats)
+            store.overwrite(
+                IVF_CELL_STATS,
+                assign.groupBy("cell_id").agg(F.count("*").alias("n_vecs")),
+            )
             summary["ivf_cells"] = cent.count()
         if has_pq:
             cur = store.read("pq_codebooks")
@@ -2752,11 +2571,8 @@ def refresh_embedding_codebooks(
             cb = train_pq(live, m=m, k=k, iters=pq_iters).localCheckpoint(
                 eager=True
             )
-            codes = pq_encode(live, cb, m=m)
-            store.merge_batch([
-                lambda: store.overwrite("pq_codebooks", cb),
-                lambda: store.overwrite("pq_codes", codes),
-            ], tables=tuple(PQ_TABLES))
+            store.overwrite("pq_codebooks", cb)
+            store.overwrite("pq_codes", pq_encode(live, cb, m=m))
             summary["pq_m"], summary["pq_k"] = m, k
     return summary
 

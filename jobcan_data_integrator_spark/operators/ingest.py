@@ -835,18 +835,8 @@ def repack_corpus(
         shuffle_salt=shuffle_salt,
     ).withColumn("batch_id", F.lit(batch_tag)).localCheckpoint(eager=True)
     with store.commit_bracket(batch_tag):
-        store.submit_op(
-            lambda: store.overwrite(
-                CHUNKS, chunks.withColumn("batch_id", F.lit(batch_tag))
-            ),
-            reads=(CHUNKS,),
-            writes=(CHUNKS,),
-        )
-        store.submit_op(
-            lambda: store.overwrite(SHARDS, packed),
-            reads=(SHARDS,),
-            writes=(SHARDS,),
-        )
+        store.overwrite(CHUNKS, chunks.withColumn("batch_id", F.lit(batch_tag)))
+        store.overwrite(SHARDS, packed)
     return packed
 
 
@@ -880,17 +870,9 @@ def _tombstone(
     if ooo:
         rows = rows.withColumn("cause", F.lit(cause))
         if permanent:
-            store.submit_op(
-                lambda: store.merge_upsert(TOMBSTONES, rows, ["doc_id"]),
-                reads=(TOMBSTONES,),
-                writes=(TOMBSTONES,),
-            )
+            store.merge_upsert(TOMBSTONES, rows, ["doc_id"])
             return
-    store.submit_op(
-        lambda: store.merge_insert_missing(TOMBSTONES, rows, ["doc_id"]),
-        reads=(TOMBSTONES,),
-        writes=(TOMBSTONES,),
-    )
+    store.merge_insert_missing(TOMBSTONES, rows, ["doc_id"])
 
 
 def _relabel_after_retraction(
@@ -964,18 +946,10 @@ def _relabel_after_retraction(
             .join(fresh.select("doc_id"), "doc_id", "left_anti")
             .localCheckpoint(eager=True)
         )
-        has_vanished = bool(vanished.head(1))
-        has_fresh = bool(fresh.head(1))
-
-        def _cc_update() -> None:
-            if has_vanished:
-                store.prune_keys("cc_labels", vanished, ["doc_id"])
-            if has_fresh:
-                store.merge_upsert("cc_labels", fresh, ["doc_id"])
-
-        store.submit_op(
-            _cc_update, reads=("cc_labels",), writes=("cc_labels",)
-        )
+        if vanished.head(1):
+            store.prune_keys("cc_labels", vanished, ["doc_id"])
+        if fresh.head(1):
+            store.merge_upsert("cc_labels", fresh, ["doc_id"])
     else:
         # unbucketed overwrite path: the full read is inherent (the
         # whole table is rewritten) — materialize it first so the
@@ -984,11 +958,7 @@ def _relabel_after_retraction(
         updated = labels.join(
             F.broadcast(nodes.select("doc_id")), "doc_id", "left_anti"
         ).unionByName(fresh)
-        store.submit_op(
-            lambda: store.overwrite("cc_labels", updated),
-            reads=("cc_labels",),
-            writes=("cc_labels",),
-        )
+        store.overwrite("cc_labels", updated)
     # resurrection: demoted-before, keeper-or-singleton now
     old_demoted = nodes.filter(F.col("doc_id") != F.col("cluster_id")).select(
         "doc_id"
@@ -1012,11 +982,7 @@ def _relabel_after_retraction(
             tomb.select("doc_id"), "doc_id", "leftsemi"
         ).localCheckpoint(eager=True)
         if tomb_del.head(1):
-            store.submit_op(
-                lambda: store.delete_scope(TOMBSTONES, tomb_del, ["doc_id"]),
-                reads=(TOMBSTONES,),
-                writes=(TOMBSTONES,),
-            )
+            store.delete_scope(TOMBSTONES, tomb_del, ["doc_id"])
     else:
         revived = revived.localCheckpoint(eager=True)
     if rebuild_cb is not None and revived.head(1):
@@ -1233,21 +1199,9 @@ def _rebuild_docs(
                 # MinHash retirement (its recomputed pairs re-enter via
                 # the resign below; still-valid dropped pairs are
                 # undropped there, the rest stay retracted)
-                store.submit_op(
-                    lambda: store.delete_scope(
-                        TOMBSTONES, revived_floor, ["doc_id"]
-                    ),
-                    reads=(TOMBSTONES,),
-                    writes=(TOMBSTONES,),
-                )
+                store.delete_scope(TOMBSTONES, revived_floor, ["doc_id"])
                 if store.exists("mh_doc_drops"):
-                    store.submit_op(
-                        lambda: store.delete_scope(
-                            "mh_doc_drops", revived_floor, ["doc_id"]
-                        ),
-                        reads=("mh_doc_drops",),
-                        writes=("mh_doc_drops",),
-                    )
+                    store.delete_scope("mh_doc_drops", revived_floor, ["doc_id"])
             else:
                 revived_floor = None
     # Delta the rebuild set before the expensive half: a retro flag that
@@ -1294,11 +1248,7 @@ def _rebuild_docs(
             .select("doc_id", "text")
             .localCheckpoint(eager=True)
         )
-    store.submit_op(
-        lambda: store.merge_upsert(CURATED, ok_rows, ["doc_id"]),
-        reads=(CURATED,),
-        writes=(CURATED,),
-    )
+    store.merge_upsert(CURATED, ok_rows, ["doc_id"])
     if old_bm is not None:
         rt.replace_bm25_docs(store, old_bm, ok)
     stages.append(("span_repaired", ok))
@@ -1683,14 +1633,10 @@ def ingest_increment(
         # out-of-order mode persists every survivor's pre-span text —
         # the input a later batch's retroactive span flags re-dedup
         if allow_out_of_order:
-            store.submit_op(
-                lambda: store.merge_insert_missing(
-                    CURATED_PRE,
-                    survivors.withColumn("batch_id", F.lit(batch_id)),
-                    ["doc_id"],
-                ),
-                reads=(CURATED_PRE,),
-                writes=(CURATED_PRE,),
+            store.merge_insert_missing(
+                CURATED_PRE,
+                survivors.withColumn("batch_id", F.lit(batch_id)),
+                ["doc_id"],
             )
 
         # 3. ExactSubstr span removal vs the sp_occs family + length
@@ -1834,14 +1780,10 @@ def ingest_increment(
                     .join(new_docs.select("doc_id"), "doc_id", "left_anti")
                     .localCheckpoint(eager=True)
                 )
-                store.submit_op(
-                    lambda: store.merge_insert_missing(
-                        TOMBSTONES,
-                        demoted.withColumn("batch_id", F.lit(batch_id)),
-                        ["doc_id"],
-                    ),
-                    reads=(TOMBSTONES,),
-                    writes=(TOMBSTONES,),
+                store.merge_insert_missing(
+                    TOMBSTONES,
+                    demoted.withColumn("batch_id", F.lit(batch_id)),
+                    ["doc_id"],
                 )
 
         # 4b. SimHash family (index + pair maintenance only).  Width-
@@ -1905,22 +1847,17 @@ def ingest_increment(
             inc.extend_lm_index(store, kept, batch_id)
 
         # 6. curated-corpus merge + optional batch-scoped chunk/pack —
-        # independent single-table merges submitted to the background
-        # scheduler HERE, so they overlap the embedding-family section
-        # below (inline, hence still ledger-last, on plain stores)
-        store.submit_op(
-            lambda: store.merge_insert_missing(
-                CURATED,
-                kept.withColumn("batch_id", F.lit(batch_id)),
-                ["doc_id"],
-            ),
-            reads=(CURATED,),
-            writes=(CURATED,),
+        # independent single-table merges issued HERE, so on a snapshot
+        # store they overlap the embedding-family section below (inline,
+        # hence still ledger-last, on plain stores)
+        store.merge_insert_missing(
+            CURATED, kept.withColumn("batch_id", F.lit(batch_id)), ["doc_id"]
         )
         if bm25:
             # mirrors the curated insert-missing exactly (the extend's
             # own anti-join skips ids already in the family, so repairs
-            # that landed earlier in this batch are not double-inserted)
+            # that landed earlier in this batch are not double-inserted);
+            # its probe and checkpoint run in the background with its writes
             store.submit_op(
                 lambda: rt.extend_bm25_index(store, kept),
                 reads=tuple(rt.BM25_TABLES),
@@ -1950,20 +1887,12 @@ def ingest_increment(
                 id_col="chunk_id",
                 shuffle_salt=batch_id,
             ).withColumn("batch_id", F.lit(batch_id))
-            store.submit_op(
-                lambda: store.merge_insert_missing(
-                    CHUNKS,
-                    chunks.withColumn("batch_id", F.lit(batch_id)),
-                    ["chunk_id"],
-                ),
-                reads=(CHUNKS,),
-                writes=(CHUNKS,),
+            store.merge_insert_missing(
+                CHUNKS,
+                chunks.withColumn("batch_id", F.lit(batch_id)),
+                ["chunk_id"],
             )
-            store.submit_op(
-                lambda: store.merge_insert_missing(SHARDS, packed, ["chunk_id"]),
-                reads=(SHARDS,),
-                writes=(SHARDS,),
-            )
+            store.merge_insert_missing(SHARDS, packed, ["chunk_id"])
             stages.append(("chunks", chunks))
 
         # 7. embedding families for this batch's vectors.  A ``doc_id``
@@ -1976,13 +1905,8 @@ def ingest_increment(
                 eager=True
             )
             if "doc_id" in emb.columns:
-                dv = emb.select("doc_id", "vec_id")
-                store.submit_op(
-                    lambda: store.merge_insert_missing(
-                        DOC_VECS, dv, ["vec_id"]
-                    ),
-                    reads=(DOC_VECS,),
-                    writes=(DOC_VECS,),
+                store.merge_insert_missing(
+                    DOC_VECS, emb.select("doc_id", "vec_id"), ["vec_id"]
                 )
                 emb = emb.drop("doc_id")
             if "lsh" in emb_families:
@@ -2014,20 +1938,13 @@ def ingest_increment(
                         store, inc.encode_pq_increment(store, emb)
                     )
 
-        # 8. the ledger, submitted LAST.  On a plain store every
-        # submit_op above ran inline in program order, so the ledger
-        # still lands after every family write — a crash before it
-        # leaves the batch replayable (idempotent family merges), after
-        # it redelivery short-circuits above.  On a snapshot store all
-        # of it publishes atomically, so the concurrent schedule is
-        # unobservable.
-        store.submit_op(
-            lambda: store.merge_insert_missing(
-                LEDGER, ledger_row, ["batch_id"]
-            ),
-            reads=(LEDGER,),
-            writes=(LEDGER,),
-        )
+        # 8. the ledger, written LAST.  On a plain store every write
+        # above ran inline in program order, so the ledger still lands
+        # after every family write — a crash before it leaves the batch
+        # replayable (idempotent family merges), after it redelivery
+        # short-circuits above.  On a snapshot store all of it publishes
+        # atomically, so the concurrent schedule is unobservable.
+        store.merge_insert_missing(LEDGER, ledger_row, ["batch_id"])
 
     result = IngestResult(
         batch_id, False, kept.select("doc_id", "text"), stages, pairs, demoted
@@ -2235,36 +2152,21 @@ def retract_documents(
 
         # 1. permanence FIRST: the tombstone + mask make every step
         # below see the retracted ids as gone (and a crash replay
-        # recomputes against the untouched pre-retraction snapshot)
-        # three independent single-table writes: background-submitted so
+        # recomputes against the untouched pre-retraction snapshot).
+        # Three independent single-table writes: on a snapshot store
         # they overlap the exact-family recompute below (any later read
         # of cur_drops / doc_retractions barriers automatically)
-        store.submit_op(
-            lambda: _tombstone(
-                store, r_ids, retract_id, "retracted", ooo=True,
-                permanent=True,
-            ),
-            reads=(TOMBSTONES,),
-            writes=(TOMBSTONES,),
+        _tombstone(
+            store, r_ids, retract_id, "retracted", ooo=True, permanent=True
         )
-        store.submit_op(
-            lambda: _mask_insert(store, inc.DOC_RETRACTIONS, r_ids, "doc_id"),
-            reads=(inc.DOC_RETRACTIONS,),
-            writes=(inc.DOC_RETRACTIONS,),
-        )
+        _mask_insert(store, inc.DOC_RETRACTIONS, r_ids, "doc_id")
         # per-id compliance receipt (the log row below records counts;
         # audits and doc_history want the ids) — keyed insert, so a
         # crash replay converges to one row per (retraction, id)
-        store.submit_op(
-            lambda: store.merge_insert_missing(
-                RETRACTION_IDS,
-                r_ids.select(
-                    F.lit(retract_id).alias("retract_id"), "doc_id"
-                ),
-                ["retract_id", "doc_id"],
-            ),
-            reads=(RETRACTION_IDS,),
-            writes=(RETRACTION_IDS,),
+        store.merge_insert_missing(
+            RETRACTION_IDS,
+            r_ids.select(F.lit(retract_id).alias("retract_id"), "doc_id"),
+            ["retract_id", "doc_id"],
         )
 
         # 2. exact family: re-elect keepers for every hash group a
@@ -2317,20 +2219,8 @@ def retract_documents(
             if not mate_docs.head(1):
                 mate_docs = None
             if store.exists("ex_groups"):
-
-                def _ex_groups_update() -> None:
-                    store.merge_upsert(
-                        "ex_groups", new_groups, ["text_md5"]
-                    )
-                    store.delete_scope(
-                        "ex_groups", vanished, ["text_md5"]
-                    )
-
-                store.submit_op(
-                    _ex_groups_update,
-                    reads=("ex_groups",),
-                    writes=("ex_groups",),
-                )
+                store.merge_upsert("ex_groups", new_groups, ["text_md5"])
+                store.delete_scope("ex_groups", vanished, ["text_md5"])
 
         # 3. span family: remove the retracted docs' occurrences (mask)
         # and recompute the affected hashes' stats + flags over the
@@ -2367,12 +2257,8 @@ def retract_documents(
             )
             if occ_sm is not None:
                 sm_rows = occ_sm.unionByName(sm_rows)
-            store.submit_op(
-                lambda: store.merge_insert_missing(
-                    inc.SPAN_MASK_HASHES, sm_rows, ["doc_id", "h"]
-                ),
-                reads=(inc.SPAN_MASK_HASHES,),
-                writes=(inc.SPAN_MASK_HASHES,),
+            store.merge_insert_missing(
+                inc.SPAN_MASK_HASHES, sm_rows, ["doc_id", "h"]
             )
         if span is not None and store.exists("sp_occs") and pre_r.head(1):
             occ_r = _span_occ_rows(pre_r, span)
@@ -2425,49 +2311,24 @@ def retract_documents(
             vanished_hs = hs.join(
                 new_sp_groups.select("h"), "h", "left_anti"
             )
-            # evaluate the tiny decision probes on the (checkpointed)
-            # frames up front, then submit each table's update group —
-            # sp_hashes / sp_occs / (sp_flags + its drop mask) are
-            # independent tables, so the three ops overlap
-            fold_vanished = bool(vanished_hs.head(1))
-            has_removed = bool(removed.head(1))
-            has_added = bool(added.head(1))
-
-            def _sp_hashes_update() -> None:
-                store.merge_upsert("sp_hashes", new_sp_groups, ["h"])
-                if fold_vanished:
-                    store.prune_keys("sp_hashes", vanished_hs, ["h"])
-
-            store.submit_op(
-                _sp_hashes_update, reads=("sp_hashes",), writes=("sp_hashes",)
-            )
+            # sp_hashes / sp_occs / sp_flags / its drop mask are
+            # independent tables, so their writes overlap
+            store.merge_upsert("sp_hashes", new_sp_groups, ["h"])
+            if vanished_hs.head(1):
+                store.prune_keys("sp_hashes", vanished_hs, ["h"])
             if mate_occ is not None:
-                store.submit_op(
-                    lambda: store.merge_insert_missing(
-                        "sp_occs", mate_occ, ["doc_id", "pos"]
-                    ),
-                    reads=("sp_occs",),
-                    writes=("sp_occs",),
-                )
-
-            def _sp_flags_update() -> None:
                 store.merge_insert_missing(
-                    "sp_flags", added, ["doc_id", "pos"]
+                    "sp_occs", mate_occ, ["doc_id", "pos"]
                 )
-                if has_removed:
-                    store.merge_insert_missing(
-                        inc.FLAG_DROPS, removed, ["doc_id", "pos"]
-                    )
-                if store.exists(inc.FLAG_DROPS) and has_added:
-                    store.delete_scope(
-                        inc.FLAG_DROPS, added, ["doc_id", "pos"]
-                    )
-
-            store.submit_op(
-                _sp_flags_update,
-                reads=("sp_flags", inc.FLAG_DROPS),
-                writes=("sp_flags", inc.FLAG_DROPS),
-            )
+            store.merge_insert_missing("sp_flags", added, ["doc_id", "pos"])
+            has_drops = store.exists(inc.FLAG_DROPS)
+            if removed.head(1):
+                has_drops = True
+                store.merge_insert_missing(
+                    inc.FLAG_DROPS, removed, ["doc_id", "pos"]
+                )
+            if has_drops and added.head(1):
+                store.delete_scope(inc.FLAG_DROPS, added, ["doc_id", "pos"])
             changed = removed.unionByName(added).select("doc_id").distinct()
             repaired = changed.join(
                 F.broadcast(r_ids), "doc_id", "left_anti"
@@ -2488,18 +2349,9 @@ def retract_documents(
                 .select("chunk_id")
                 .localCheckpoint(eager=True)
             )
-            has_shards = store.exists(SHARDS)
-
-            def _chunk_prunes() -> None:
-                store.prune_keys(CHUNKS, r_ids, ["doc_id"])
-                if has_shards:
-                    store.prune_keys(SHARDS, r_chunks, ["chunk_id"])
-
-            store.submit_op(
-                _chunk_prunes,
-                reads=(CHUNKS, SHARDS),
-                writes=(CHUNKS, SHARDS),
-            )
+            store.prune_keys(CHUNKS, r_ids, ["doc_id"])
+            if store.exists(SHARDS):
+                store.prune_keys(SHARDS, r_chunks, ["chunk_id"])
         if bm25:
             # takedown reaches the BM25 family too: the curated rows
             # about to be deleted carry the text whose tokens name the
@@ -2510,17 +2362,11 @@ def retract_documents(
                 .select("doc_id", "text")
                 .localCheckpoint(eager=True)
             )
-        store.submit_op(
-            lambda: store.prune_keys(CURATED, r_ids, ["doc_id"]),
-            reads=(CURATED,),
-            writes=(CURATED,),
-        )
-        store.submit_op(
-            lambda: store.prune_keys(CURATED_PRE, r_ids, ["doc_id"]),
-            reads=(CURATED_PRE,),
-            writes=(CURATED_PRE,),
-        )
+        store.prune_keys(CURATED, r_ids, ["doc_id"])
+        store.prune_keys(CURATED_PRE, r_ids, ["doc_id"])
         if bm25:
+            # the token capture's checkpoint runs in the background with
+            # the family's prunes
             store.submit_op(
                 lambda: rt.remove_bm25_docs(store, old_bm),
                 reads=tuple(rt.BM25_TABLES),
@@ -2560,14 +2406,10 @@ def retract_documents(
         # current-flag span removal, length floor, curated upsert,
         # MinHash (re-)signing, cluster maintenance, demotion sweep
         if mate_docs is not None:
-            store.submit_op(
-                lambda: store.merge_insert_missing(
-                    CURATED_PRE,
-                    mate_docs.withColumn("batch_id", F.lit(retract_id)),
-                    ["doc_id"],
-                ),
-                reads=(CURATED_PRE,),
-                writes=(CURATED_PRE,),
+            store.merge_insert_missing(
+                CURATED_PRE,
+                mate_docs.withColumn("batch_id", F.lit(retract_id)),
+                ["doc_id"],
             )
             promoted = mate_docs.select("doc_id")
             # a mate that was itself RETIRED by a past exact
@@ -2587,20 +2429,10 @@ def retract_documents(
                         .localCheckpoint(eager=True)
                     )
                     if retired_mates.head(1):
-                        store.submit_op(
-                            lambda: store.delete_scope(
-                                TOMBSTONES, retired_mates, ["doc_id"]
-                            ),
-                            reads=(TOMBSTONES,),
-                            writes=(TOMBSTONES,),
-                        )
+                        store.delete_scope(TOMBSTONES, retired_mates, ["doc_id"])
                         if store.exists("mh_doc_drops"):
-                            store.submit_op(
-                                lambda: store.delete_scope(
-                                    "mh_doc_drops", retired_mates, ["doc_id"]
-                                ),
-                                reads=("mh_doc_drops",),
-                                writes=("mh_doc_drops",),
+                            store.delete_scope(
+                                "mh_doc_drops", retired_mates, ["doc_id"]
                             )
         if rebuild is not None:
             rebuild = rebuild.distinct().localCheckpoint(eager=True)
@@ -2639,23 +2471,13 @@ def retract_documents(
             vec_r = vec_r.localCheckpoint(eager=True)
             if vec_r.head(1):
                 _retract_vec_rows(store, vec_r)
-            store.submit_op(
-                lambda: store.prune_keys(DOC_VECS, r_ids, ["doc_id"]),
-                reads=(DOC_VECS,),
-                writes=(DOC_VECS,),
-            )
+            store.prune_keys(DOC_VECS, r_ids, ["doc_id"])
 
         # 8. receipt + ledger LAST (same stance as ingest_increment)
         _log_retraction(
             store, retract_id, "documents", n_ids, sorted(set(families))
         )
-        store.submit_op(
-            lambda: store.merge_insert_missing(
-                RETRACTIONS, ledger_row, ["retract_id"]
-            ),
-            reads=(RETRACTIONS,),
-            writes=(RETRACTIONS,),
-        )
+        store.merge_insert_missing(RETRACTIONS, ledger_row, ["retract_id"])
 
     result = RetractResult(retract_id, False, r_ids, promoted, repaired)
     if auto_compact_bytes is not None:
@@ -2737,13 +2559,7 @@ def retract_vectors(
             return RetractResult(retract_id, False, r_ids)
         families = _retract_vec_rows(store, r_ids)
         _log_retraction(store, retract_id, "vectors", n_ids, families)
-        store.submit_op(
-            lambda: store.merge_insert_missing(
-                RETRACTIONS, ledger_row, ["retract_id"]
-            ),
-            reads=(RETRACTIONS,),
-            writes=(RETRACTIONS,),
-        )
+        store.merge_insert_missing(RETRACTIONS, ledger_row, ["retract_id"])
 
     result = RetractResult(retract_id, False, r_ids)
     if auto_compact_bytes is not None:
@@ -2790,13 +2606,7 @@ def _retract_vec_rows(store: TableStore, r_ids: DataFrame) -> list[str]:
             .localCheckpoint(eager=True)
         )
         if touching.head(1):
-            store.submit_op(
-                lambda t=t, touching=touching, ca=ca, cb=cb: store.prune_keys(
-                    t, touching, [ca, cb]
-                ),
-                reads=(t,),
-                writes=(t,),
-            )
+            store.prune_keys(t, touching, [ca, cb])
             touched.append(t)
     for t in _EMB_ROW_TABLES:
         if store.exists(t):
@@ -2806,11 +2616,7 @@ def _retract_vec_rows(store: TableStore, r_ids: DataFrame) -> list[str]:
             # FULL-rewrite (hive partition layouts) stays masked by
             # emb_retractions until compact_store folds it
             if not store.is_managed(t) or store.prunes_scoped(t):
-                store.submit_op(
-                    lambda t=t: store.prune_keys(t, r_ids, ["vec_id"]),
-                    reads=(t,),
-                    writes=(t,),
-                )
+                store.prune_keys(t, r_ids, ["vec_id"])
     return touched
 
 
@@ -2843,11 +2649,7 @@ def _log_retraction(
         F.lit(version).cast("bigint").alias("over_version"),
         F.lit(float(_time.time())).alias("ts"),
     )
-    store.submit_op(
-        lambda: store.merge_insert_missing(RETRACTION_LOG, row, ["retract_id"]),
-        reads=(RETRACTION_LOG,),
-        writes=(RETRACTION_LOG,),
-    )
+    store.merge_insert_missing(RETRACTION_LOG, row, ["retract_id"])
 
 
 def _mask_insert(store: TableStore, table: str, ids: DataFrame, key: str) -> None:
@@ -2856,12 +2658,8 @@ def _mask_insert(store: TableStore, table: str, ids: DataFrame, key: str) -> Non
     only the not-yet-folded ids, then flips them to ``folded=True``, so
     fold cost follows retraction volume SINCE THE LAST FOLD instead of
     lifetime takedown history."""
-    store.submit_op(
-        lambda: store.merge_insert_missing(
-            table, ids.select(key).withColumn("folded", F.lit(False)), [key]
-        ),
-        reads=(table,),
-        writes=(table,),
+    store.merge_insert_missing(
+        table, ids.select(key).withColumn("folded", F.lit(False)), [key]
     )
 
 
@@ -2931,11 +2729,8 @@ def compact_store(store: TableStore) -> None:
     # delete-markers), so the fold's REWRITE cost follows the MASK's
     # partition fan-out, not the corpus size — see TableStore.prune_keys
     # (the residual corpus-linear term is the column-pruned
-    # affected-partition scans).  Folds of different tables run as
-    # concurrent chains (merge_batch); same-table prunes stay ordered
-    # inside their chain.  Inside the bracket the independent sections
-    # below additionally overlap through the background scheduler
-    # (``submit_op``).
+    # affected-partition scans).  Inside the bracket folds of different
+    # tables overlap; same-table prunes stay in call order.
     def _unfolded(table: str, key: str) -> DataFrame | None:
         """The mask rows added since the last fold (``folded=False``).
         None when nothing is new — the per-family prunes are skipped, so
@@ -2960,10 +2755,11 @@ def compact_store(store: TableStore) -> None:
 
 def _compact_folds(store: TableStore, _unfolded) -> None:
     """The fold body of ``compact_store`` (one ``commit_bracket``): the
-    main prune group, the mask watermark flips, the permanent-tombstone
-    resolution and the transient-mask reset are mutually independent
-    where their declared table sets are disjoint, so each section rides
-    the background scheduler and the commit publishes once."""
+    base-table prunes, the mask watermark flips, the permanent-tombstone
+    resolution and the transient-mask reset.  Writes of different
+    tables overlap on a snapshot store; the two ops that read a mask
+    table when they run declare it, so the flip or reset of that mask
+    waits for them, and the commit publishes once."""
     from jobcan_data_integrator_spark.operators import incremental as inc
     from jobcan_data_integrator_spark.operators import retrieval as rt
 
@@ -2978,12 +2774,14 @@ def _compact_folds(store: TableStore, _unfolded) -> None:
                 "sp_flags", store.read(inc.FLAG_DROPS), ["doc_id", "pos"]
             )
 
-    ops = [_fold_sp_flags]
+    store.submit_op(
+        _fold_sp_flags,
+        reads=("sp_flags", inc.FLAG_DROPS),
+        writes=("sp_flags",),
+    )
     if emb_mask is not None:
-        ops += [
-            (lambda t=t: store.prune_keys(t, emb_mask, ["vec_id"]))
-            for t in ("eb_vectors", "eb_buckets", "ivf_assignments", "pq_codes")
-        ]
+        for t in ("eb_vectors", "eb_buckets", "ivf_assignments", "pq_codes"):
+            store.prune_keys(t, emb_mask, ["vec_id"])
     if mask is not None:
         # sp_occs is bucketed by span hash, so a doc-keyed fold would
         # pay a full-bucket semi-join scan to find affected buckets —
@@ -3007,31 +2805,17 @@ def _compact_folds(store: TableStore, _unfolded) -> None:
                     .select("h")
                     .distinct()
                 )
-        ops += [
-            (lambda t=t: store.prune_keys(t, mask, ["doc_id"]))
-            for t in ("ex_docs", DOC_VECS)
-        ]
+        for t in ("ex_docs", DOC_VECS):
+            store.prune_keys(t, mask, ["doc_id"])
         if sp_hint is not None:
-            ops.append(
-                lambda: store.prune_keys(
-                    "sp_occs",
-                    mask,
-                    ["doc_id"],
-                    segment_keys=sp_hint,
-                    segment_col="h",
-                )
+            store.prune_keys(
+                "sp_occs", mask, ["doc_id"], segment_keys=sp_hint, segment_col="h"
             )
             # folded docs' sidecar rows are spent (next fold's scope
             # starts empty, mirroring the masks' watermark flip)
-            ops.append(
-                lambda: store.delete_scope(
-                    inc.SPAN_MASK_HASHES, mask, ["doc_id"]
-                )
-            )
+            store.delete_scope(inc.SPAN_MASK_HASHES, mask, ["doc_id"])
         else:
-            ops.append(
-                lambda: store.prune_keys("sp_occs", mask, ["doc_id"])
-            )
+            store.prune_keys("sp_occs", mask, ["doc_id"])
     if (
         emb_mask is not None
         and store.exists("ivf_assignments")
@@ -3039,46 +2823,33 @@ def _compact_folds(store: TableStore, _unfolded) -> None:
     ):
         # retractions between extends leave the occupancy sidecar stale
         # for their cells (advisory by contract); the fold is the point
-        # where it becomes exact again — masked pre-state ≡ post-fold
-        ops.append(
+        # where it becomes exact again — masked pre-state ≡ post-fold.
+        # It reads the pruned assignments when it runs (after the
+        # prune above, by the declared read)
+        store.submit_op(
             lambda: store.overwrite(
                 inc.IVF_CELL_STATS,
-                inc._mask_emb_retracted(
-                    store, store.read("ivf_assignments")
-                )
+                inc._mask_emb_retracted(store, store.read("ivf_assignments"))
                 .groupBy("cell_id")
                 .agg(F.count("*").alias("n_vecs")),
-            )
+            ),
+            reads=("ivf_assignments", inc.EMB_RETRACTIONS),
+            writes=(inc.IVF_CELL_STATS,),
         )
-    fold_writes = (
-        "sp_flags", "eb_vectors", "eb_buckets", "ivf_assignments",
-        "pq_codes", "ex_docs", DOC_VECS, "sp_occs", inc.SPAN_MASK_HASHES,
-        inc.IVF_CELL_STATS,
-    )
-    store.submit_op(
-        lambda: store.merge_batch(ops),
-        reads=fold_writes + (inc.FLAG_DROPS, inc.EMB_RETRACTIONS),
-        writes=fold_writes,
-    )
     # flip the folded delta's watermark: the permanent ids STAY (the
     # takedown contract), but the next fold's prune scope starts empty.
-    # The doc-side flip is independent of the main group; the emb-side
-    # one waits for it (the IVF sidecar rebuild reads emb_retractions)
+    # The emb-side flip waits for the IVF sidecar rebuild, which reads
+    # emb_retractions
     for t, key, m in (
         (inc.DOC_RETRACTIONS, "doc_id", mask),
         (inc.EMB_RETRACTIONS, "vec_id", emb_mask),
     ):
         if m is not None:
-            store.submit_op(
-                lambda t=t, key=key: store.overwrite(
-                    t,
-                    store.read(t)
-                    .select(key)
-                    .distinct()
-                    .withColumn("folded", F.lit(True)),
+            store.overwrite(
+                t,
+                store.read(t).select(key).distinct().withColumn(
+                    "folded", F.lit(True)
                 ),
-                reads=(t,),
-                writes=(t,),
             )
     if store.exists(TOMBSTONES):
         tomb = store.read(TOMBSTONES)
@@ -3107,45 +2878,26 @@ def _compact_folds(store: TableStore, _unfolded) -> None:
                         .select("doc_id", "text")
                         .localCheckpoint(eager=True)
                     )
-                fold_ops = [
-                    lambda: store.prune_keys(CURATED, perm, ["doc_id"]),
-                    lambda: store.prune_keys(CURATED_PRE, perm, ["doc_id"]),
-                    lambda: store.overwrite(
-                        TOMBSTONES,
-                        tomb.filter(
-                            ~F.col("cause").isin("exact", "retracted")
-                        ),
-                    ),
-                ]
-                if old_bm is not None:
-                    fold_ops.append(
-                        lambda: rt.remove_bm25_docs(store, old_bm)
-                    )
-                store.submit_op(
-                    lambda: store.merge_batch(fold_ops),
-                    reads=(
-                        CURATED, CURATED_PRE, TOMBSTONES,
-                        rt.BM25_POSTINGS, rt.BM25_DOC_LEN,
-                    ),
-                    writes=(
-                        CURATED, CURATED_PRE, TOMBSTONES,
-                        rt.BM25_POSTINGS, rt.BM25_DOC_LEN,
-                    ),
+                store.prune_keys(CURATED, perm, ["doc_id"])
+                store.prune_keys(CURATED_PRE, perm, ["doc_id"])
+                store.overwrite(
+                    TOMBSTONES,
+                    tomb.filter(~F.col("cause").isin("exact", "retracted")),
                 )
+                if old_bm is not None:
+                    store.submit_op(
+                        lambda: rt.remove_bm25_docs(store, old_bm),
+                        reads=tuple(rt.BM25_TABLES),
+                        writes=tuple(rt.BM25_TABLES),
+                    )
     # sp_flag_drops is the ONE transient retraction mask (its effect —
     # flag rows deleted — is fully captured by the fold; a later batch
     # re-duplicating the span re-asserts the flag as a fresh insert).
     # doc_retractions / emb_retractions are PERMANENT by contract and
-    # are never emptied here — see the docstring.  (Waits for the main
-    # group — it reads sp_flag_drops — via the declared sets.)
+    # are never emptied here — see the docstring.  (Waits for the
+    # sp_flags fold, which reads sp_flag_drops when it runs.)
     if store.exists(inc.FLAG_DROPS):
-        store.submit_op(
-            lambda: store.overwrite(
-                inc.FLAG_DROPS, store.read(inc.FLAG_DROPS).limit(0)
-            ),
-            reads=(inc.FLAG_DROPS,),
-            writes=(inc.FLAG_DROPS,),
-        )
+        store.overwrite(inc.FLAG_DROPS, store.read(inc.FLAG_DROPS).limit(0))
 
 
 #: driver-side advisory watermark written by ``compact_store``: every

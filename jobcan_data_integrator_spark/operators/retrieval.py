@@ -343,20 +343,8 @@ def _insert_docs(store: "TableStore", docs: DataFrame) -> None:
             f"(store {store.root} is plain)"
         )
     postings, dl = _family_rows(docs)
-    # independent tables: each insert rides the background scheduler
-    # (same-table ordering via the declared sets; inline outside a batch)
-    store.submit_op(
-        lambda: store.merge_insert_missing(
-            BM25_POSTINGS, postings, ["term", "doc_id"]
-        ),
-        reads=(BM25_POSTINGS,),
-        writes=(BM25_POSTINGS,),
-    )
-    store.submit_op(
-        lambda: store.merge_insert_missing(BM25_DOC_LEN, dl, ["doc_id"]),
-        reads=(BM25_DOC_LEN,),
-        writes=(BM25_DOC_LEN,),
-    )
+    store.merge_insert_missing(BM25_POSTINGS, postings, ["term", "doc_id"])
+    store.merge_insert_missing(BM25_DOC_LEN, dl, ["doc_id"])
 
 
 def extend_bm25_index(store: "TableStore", docs: DataFrame) -> None:
@@ -389,19 +377,8 @@ def remove_bm25_docs(store: "TableStore", old_docs: DataFrame | None) -> None:
         .localCheckpoint(eager=True)
     )
     if old_keys.head(1):
-        store.submit_op(
-            lambda: store.prune_keys(
-                BM25_POSTINGS, old_keys, ["term", "doc_id"]
-            ),
-            reads=(BM25_POSTINGS,),
-            writes=(BM25_POSTINGS,),
-        )
-    old_ids = old_docs.select("doc_id")
-    store.submit_op(
-        lambda: store.prune_keys(BM25_DOC_LEN, old_ids, ["doc_id"]),
-        reads=(BM25_DOC_LEN,),
-        writes=(BM25_DOC_LEN,),
-    )
+        store.prune_keys(BM25_POSTINGS, old_keys, ["term", "doc_id"])
+    store.prune_keys(BM25_DOC_LEN, old_docs.select("doc_id"), ["doc_id"])
 
 
 def replace_bm25_docs(

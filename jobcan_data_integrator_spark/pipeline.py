@@ -8,9 +8,11 @@ the reference commits per record and drains the work queue per id; we
 batch — one shred + one MERGE per table per phase, under ONE commit
 bracket per phase (``basic``, ``form_detail``) — and keep the
 reference's crash safety at phase/form granularity.  Inside a bracket
-the phase's table merges run concurrently, up to the store's write pool
-width (``SPARK_GRAFT_WRITE_POOL``): the tables are disjoint and every
-write drains before the bracket ends, so their order is unobservable.
+the phase's table merges run concurrently on the pipeline's own pool,
+``WRITE_POOL_WIDTH`` (8) wide, the same width as a snapshot store's
+background writes: the tables are disjoint and every write drains
+before the bracket ends, so their order is unobservable.  The merges
+run inline on the pool threads, so each raises in its own future.
 Basic APIs are marked done, and the outline queue entry removed and the
 form watermark advanced, only after the phase's merges have landed; a
 write that raises is a per-API (basic) or per-batch (detail) save
@@ -47,7 +49,7 @@ from jobcan_data_integrator_spark.sources.client import (
     JobcanApiClient,
 )
 from jobcan_data_integrator_spark.state import AppState, Checkpoint, Phase
-from jobcan_data_integrator_spark.storage import TableStore, _write_pool_width
+from jobcan_data_integrator_spark.storage import WRITE_POOL_WIDTH, TableStore
 
 #: write strategy per basic-entity table (SURVEY.md §2.3 idioms):
 #: ("upsert", keys) / ("insert_missing", keys) / ("sync", scope_keys).
@@ -252,7 +254,7 @@ class JobcanPipeline:
         ``BaseException`` is a hard crash: queued writes are cancelled,
         running ones finish, and it propagates."""
         errors: dict[str, Exception] = {}
-        with ThreadPoolExecutor(max_workers=_write_pool_width()) as pool:
+        with ThreadPoolExecutor(max_workers=WRITE_POOL_WIDTH) as pool:
             futures = {
                 name: pool.submit(self._write, name, df, strategy)
                 for name, df in tables.items()

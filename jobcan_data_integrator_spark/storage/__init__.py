@@ -11,6 +11,18 @@ The reference's four write idioms map to three primitives here:
   of the scoped parents (users.py:109-180 delete-of-removed, N14/N18 —
   and the fix for the reference's broken tail-trim DELETE)
 
+Every write primitive (``overwrite``, the three merges, ``delete_scope``,
+``prune_keys``, ``prune_predicate``) touches exactly ONE table, so the
+store decides which of a commit's writes may overlap: on a snapshot
+store, a primitive called inside a commit bracket on the thread that
+opened it validates its arguments, then queues itself on the bracket's
+background scheduler with its own table as its read and write set
+(``_AsyncWrites``: same-table writes keep program order, a read of the
+table waits for its pending writer).  Callers write plain sequential
+calls; only an op that reads ANOTHER table when it runs declares its
+sets through ``submit_op``.  Everywhere else (plain mode, outside a
+bracket, on any other thread) a primitive runs inline.
+
 Implementation is read-modify-write parquet, in one of two on-disk
 layouts fixed when the store is constructed:
 
@@ -42,6 +54,7 @@ import threading
 import time
 import uuid
 import weakref
+from concurrent.futures import ThreadPoolExecutor, wait
 from contextlib import contextmanager
 from functools import reduce
 from pathlib import Path
@@ -88,23 +101,13 @@ _LEASE_HOLDERS: dict[str, "weakref.WeakSet"] = {}
 #: at submit time; re-barriering from inside a worker would self-wait)
 _ASYNC_WORKER = threading.local()
 
-
-def _write_pool_width() -> int:
-    """Concurrent store writes per commit: the background scheduler's
-    pool, and the Jobcan pipeline's overlapped phase merges.
-
-    Scale-dependent (guide §2.6): on a real cluster 2-3 jobs in flight
-    fill the stage-tail bubbles without fighting for executors — set
-    ``SPARK_GRAFT_WRITE_POOL=2`` (or 3) there.  The local default stays
-    8: on the bench box each tiny versioned write is >99% DRIVER fixed
-    cost (~0.2 s, BASELINE.md fixed-cost memo), so the pool bounds
-    driver-side concurrency, not executor contention, and 8 was the
-    measured sweet spot (r11 §1 micro-bench: 8 merges 2.66 s serial vs
-    0.58 s under 8 threads)."""
-    try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_WRITE_POOL", "8")))
-    except ValueError:
-        return 8
+#: concurrent store writes per commit: the background scheduler's pool,
+#: and the Jobcan pipeline's overlapped phase merges.  Each tiny
+#: versioned write is >99% DRIVER fixed cost (~0.2 s, BASELINE.md
+#: fixed-cost memo), so the pool bounds driver-side concurrency, not
+#: executor contention; 8 was the measured sweet spot (8 merges: 2.66 s
+#: serial vs 0.58 s under 8 threads, OPTIMIZATION_r11.md §1)
+WRITE_POOL_WIDTH = 8
 
 
 class _AsyncWrites:
@@ -121,12 +124,15 @@ class _AsyncWrites:
     dependency is an earlier-submitted future and the pool is FIFO, so a
     blocked op's dependencies are always already running or done — no
     cyclic wait is constructible.
+
+    An op that writes never runs after a failed dependency.  An op that
+    writes nothing (releasing the caches earlier writes read) runs once
+    its dependencies are done, failed or not; ``wait_all`` re-raises
+    the first failure either way.
     """
 
-    def __init__(self, max_workers: int = 8) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        self._pool = ThreadPoolExecutor(max_workers=max_workers)
+    def __init__(self) -> None:
+        self._pool = ThreadPoolExecutor(max_workers=WRITE_POOL_WIDTH)
         self._lock = threading.Lock()
         self._writers: dict[str, object] = {}
         self._readers: dict[str, list] = {}
@@ -145,9 +151,11 @@ class _AsyncWrites:
                     deps.append(w)
                 deps.extend(self._readers.get(t, []))
 
-            def run(deps=deps, op=op):
-                for d in deps:
-                    d.result()
+            def run(deps=deps, op=op, writes=writes):
+                wait(deps)
+                if writes:
+                    for d in deps:
+                        d.result()
                 _ASYNC_WORKER.active = True
                 try:
                     op()
@@ -169,18 +177,6 @@ class _AsyncWrites:
             fut = self._writers.get(table)
         if fut is not None:
             fut.result()
-
-    def wait_table_rw(self, table: str) -> None:
-        """Block until the last writer AND every pending reader of
-        ``table`` have finished — the write-side barrier (WAW + WAR
-        for a synchronous write of one table)."""
-        with self._lock:
-            futs = list(self._readers.get(table, ()))
-            w = self._writers.get(table)
-            if w is not None:
-                futs.append(w)
-        for f in futs:
-            f.result()
 
     def wait_all(self, *, swallow: bool = False) -> None:
         with self._lock:
@@ -344,8 +340,8 @@ class TableStore:
         #: managed ones; read() prefers these so a batch reads its own
         #: writes
         self._pending_versions: dict[str, str | dict] = {}
-        #: guards _pending_versions and _inflight_vdirs: merge_batch
-        #: worker threads register layers concurrently, and a
+        #: guards _pending_versions and _inflight_vdirs: background
+        #: writer threads register layers concurrently, and a
         #: concurrently-publishing in-process instance reads BOTH via
         #: _pending_dirs to spare this instance's dirs from its GC
         self._pv_lock = threading.RLock()
@@ -364,6 +360,10 @@ class TableStore:
         #: ONE outer commit — the orchestration contract of
         #: operators/ingest.ingest_increment
         self._depth = 0
+        #: ``threading.get_ident()`` of the thread that opened the
+        #: outermost bracket: only its primitive calls queue themselves
+        #: (``_deferred``); any other thread's calls run inline
+        self._opener: int | None = None
         #: instance-scoped swap-name token: _recover may always reclaim
         #: THIS instance's leftover tmp dirs, but foreign ones only when
         #: stale (they may be another live writer's in-flight swap)
@@ -386,17 +386,21 @@ class TableStore:
     # -- background writes (guide §2.6) ---------------------------------------
 
     def submit_op(self, op, *, reads: tuple = (), writes: tuple = ()) -> None:
-        """Run ``op`` (a zero-arg callable doing store writes) in the
-        background when that is safe — inside a commit bracket on a
-        snapshot-isolated store, where completion order is unobservable
-        until the single atomic publish (``end_commit`` drains the
-        scheduler first).  Elsewhere (plain mode's ordered swaps, or
-        outside any bracket) it runs inline.
+        """Run ``op`` (a zero-arg callable) in the background when that
+        is safe — inside a commit bracket on a snapshot-isolated store,
+        where completion order is unobservable until the single atomic
+        publish (``end_commit`` drains the scheduler first).  Elsewhere
+        (plain mode's ordered swaps, or outside any bracket) it runs
+        inline.
 
-        ``reads``/``writes`` name the tables the op touches; the
-        scheduler orders ops sharing tables (see ``_AsyncWrites``) and
-        any synchronous store access barriers automatically, so call
-        sites that never declare anything keep today's semantics."""
+        Only for COMPOSITE ops: a single primitive call schedules itself
+        (see the module docstring).  Use this for an op that reads
+        another table when it runs (a fold that reads its mask table),
+        computes eagerly before it writes (an iterative label build), or
+        must follow a set of writes (releasing the caches they read).
+        ``reads``/``writes`` name every table the op touches; the
+        scheduler orders ops sharing tables (see ``_AsyncWrites``), and
+        a synchronous read of a table waits for its pending writer."""
         if (
             not self.snapshot_isolation
             or not self._depth
@@ -408,8 +412,30 @@ class TableStore:
             op()
             return
         if self._async is None:
-            self._async = _AsyncWrites(max_workers=_write_pool_width())
+            self._async = _AsyncWrites()
         self._async.submit(op, tuple(reads), tuple(writes))
+
+    def _deferred(self, table: str, primitive, *args, **kwargs) -> bool:
+        """Queue ``primitive(table, *args, **kwargs)`` on the bracket's
+        scheduler with ``table`` as its read and write set, and return
+        True — when the store is snapshot-isolated, a bracket is open
+        and this is the thread that opened it.  Otherwise return False
+        and the caller runs inline (scheduler workers, a caller's own
+        pool threads, plain mode, outside any bracket).  ``primitive``
+        is the BOUND method, so the queued call re-enters it on a worker
+        thread, where it runs inline."""
+        if not (
+            self.snapshot_isolation
+            and self._depth
+            and threading.get_ident() == self._opener
+        ):
+            return False
+        if self._async is None:
+            self._async = _AsyncWrites()
+        self._async.submit(
+            lambda: primitive(table, *args, **kwargs), (table,), (table,)
+        )
+        return True
 
     def _rbar(self, table: str) -> None:
         """Read barrier: wait for the pending background writer of
@@ -419,18 +445,6 @@ class TableStore:
             _ASYNC_WORKER, "active", False
         ):
             self._async.wait_table(table)
-
-    def _tbar(self, table: str) -> None:
-        """Table-scoped write barrier: a synchronous single-table write
-        (all the merge/prune primitives — they read and write only their
-        own table; any OTHER table their update frame consumes was
-        resolved through ``read``'s barrier at plan-construction time)
-        waits only for the pending writer and readers of THAT table, so
-        background writes of unrelated tables keep overlapping."""
-        if self._async is not None and not getattr(
-            _ASYNC_WORKER, "active", False
-        ):
-            self._async.wait_table_rw(table)
 
     def flush_writes(self, *, swallow: bool = False) -> None:
         """Drain every pending background write (re-raising the first
@@ -696,7 +710,11 @@ class TableStore:
         hint must cover every bucket containing a matching row; rows in
         unhinted buckets silently survive (pinned complete at the one
         call site by tests/test_retract.py's fold-equivalence checks)."""
-        self._tbar(table)
+        if self._deferred(
+            table, self.prune_keys, keys, key_cols,
+            segment_keys=segment_keys, segment_col=segment_col,
+        ):
+            return
         if self.prunes_scoped(table):
             if not self.exists(table):
                 return
@@ -760,7 +778,8 @@ class TableStore:
         side filters on ``~cond OR cond IS NULL``, since a bare
         ``~cond`` would silently drop the NULLs a three-valued ``~``
         keeps un-matched)."""
-        self._tbar(table)
+        if self._deferred(table, self.prune_predicate, cond):
+            return
         if not self.exists(table):
             return
         keep = ~cond | cond.isNull()
@@ -1159,7 +1178,8 @@ class TableStore:
         is NOT reader-visible until ``end_commit`` publishes the manifest
         pointer — no swap, no in-flight bookkeeping needed.
         """
-        self._tbar(table)
+        if self._deferred(table, self.overwrite, df):
+            return
         if self.snapshot_isolation:
             if self._is_managed(table):
                 self._write_layer(table, self._prep(table, df), reset=True)
@@ -1205,68 +1225,17 @@ class TableStore:
             with _INFLIGHT_LOCK:
                 _INFLIGHT.discard(str(target))
 
-    def merge_batch(self, ops: list, *, tables: tuple = ()) -> None:
-        """Execute several independent single-table write ops,
-        overlapping their per-job fixed cost via driver threads when
-        that is safe: a snapshot-isolated parquet store's writes land
-        in independent versioned dirs and publish atomically at
-        ``end_commit``, so their completion ORDER is unobservable.
-        Plain mode (per-table swap order is part of the crash-replay
-        contract) runs the ops sequentially, in list order — so place
-        any must-be-last op (a ledger row) last.  That ordering stays
-        for every plain-mode caller that relies on it; the Jobcan
-        pipeline overlaps its own plain-mode phase merges instead
-        (``JobcanPipeline._write_tables``) because its tables are
-        disjoint and its replay key is the checkpoint, which advances
-        only after every merge has drained — so no write order of its
-        is ever observable.
-
-        ``ops`` is a list of zero-arg callables that must touch
-        DISJOINT table sets (the concurrency unit is the table).  On
-        the bench box each small versioned write costs ~0.5-0.8 s of
-        driver/scheduler fixed cost regardless of data volume
-        (BASELINE.md fixed-cost memo); a family extend's 3-4 writes
-        collapse to ~the slowest one.  No blanket barrier here: each
-        op's own store write barriers on ITS table (``_tbar``), so a
-        batch can start while background writes of unrelated tables are
-        still in flight.
-
-        ``tables``: the union of the ops' table sets.  When given, the
-        WHOLE batch rides the background scheduler (``submit_op`` with
-        ``tables`` as both read and write set) so the caller returns
-        immediately; without it the call blocks until the batch is
-        done, exactly as before."""
-        ops = [op for op in ops if op is not None]
-        if tables and len(ops) >= 1:
-            self.submit_op(
-                lambda: self.merge_batch(ops),
-                reads=tuple(tables),
-                writes=tuple(tables),
-            )
-            return
-        if len(ops) < 2 or not self.snapshot_isolation:
-            for op in ops:
+    def merge_batch(self, ops: list) -> None:
+        """Run zero-arg write ops (``None`` entries skipped) in list
+        order.  Each op's primitives schedule themselves (see the module
+        docstring), so inside a snapshot commit writes of different
+        tables still overlap; plain mode runs them in order, so a
+        must-be-last op (a ledger row) goes last.  The package writes
+        sequential calls instead; this stays because
+        ``perfbench/tracing.py`` wraps it by name."""
+        for op in ops:
+            if op is not None:
                 op()
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        # propagate the async-worker flag into this batch's pool threads:
-        # when merge_batch runs INSIDE a submit_op body, its ops' own
-        # store calls must skip the storage barriers exactly like the
-        # submitting worker (a _tbar there would wait on the currently-
-        # running op's future — self-deadlock)
-        inside = getattr(_ASYNC_WORKER, "active", False)
-
-        def run(op):
-            _ASYNC_WORKER.active = inside
-            try:
-                op()
-            finally:
-                _ASYNC_WORKER.active = False
-
-        with ThreadPoolExecutor(max_workers=min(4, len(ops))) as ex:
-            for f in [ex.submit(run, op) for op in ops]:
-                f.result()
 
     # -- multi-table commit manifest ------------------------------------------
 
@@ -1504,6 +1473,7 @@ class TableStore:
         tmp = self.root / f"{self.MANIFEST}.tmp"
         tmp.write_text(_json.dumps(payload))
         os.replace(tmp, self.root / self.MANIFEST)
+        self._opener = threading.get_ident()
         self._depth = 1
 
     #: versioned manifest pointer (snapshot mode): the ONE file whose
@@ -1572,10 +1542,11 @@ class TableStore:
             self._depth -= 1
             return
         self._depth = 0
-        # the fencing check: abort BEFORE the pointer swap and the GC if
-        # this commit's lease was taken over while the batch stalled
-        self._verify_lease()
         self.flush_writes()
+        # the fencing check: abort BEFORE the pointer swap and the GC if
+        # this commit's lease was taken over while the batch stalled —
+        # AFTER the drain, where a snapshot commit's writes run
+        self._verify_lease()
         if self.snapshot_isolation and self._pending_versions:
             snap = self.current_snapshot()
             new_tables = dict(snap["tables"])
@@ -1938,7 +1909,7 @@ class TableStore:
         job CURRENTLY WRITING (``_inflight_vdirs``) — but not yet
         published (spared by a concurrent composer's GC).  Locked: a
         publishing instance calls this on OTHER live instances while
-        their merge_batch worker threads register layers."""
+        their background writer threads register layers."""
         with self._pv_lock:
             dirs: set[str] = set(self._inflight_vdirs)
             for pend in self._pending_versions.values():
@@ -2095,7 +2066,8 @@ class TableStore:
     def merge_upsert(self, table: str, updates: DataFrame, keys: list[str]) -> None:
         """Full-row upsert: rows matching on ``keys`` are replaced, new rows
         inserted.  ``updates`` must be key-unique (callers dedup upstream)."""
-        self._tbar(table)
+        if self._deferred(table, self.merge_upsert, updates, keys):
+            return
         u = updates.dropDuplicates(keys)
         if not self.exists(table):
             if self._managed_pcols(table):
@@ -2116,7 +2088,8 @@ class TableStore:
 
     def merge_insert_missing(self, table: str, updates: DataFrame, keys: list[str]) -> None:
         """Insert-if-absent, never update (reference N15, group.py:52-64)."""
-        self._tbar(table)
+        if self._deferred(table, self.merge_insert_missing, updates, keys):
+            return
         u = updates.dropDuplicates(keys)
         if not self.exists(table):
             if self._managed_pcols(table):
@@ -2143,7 +2116,8 @@ class TableStore:
         the new rows.  This is the reference's delete-of-removed nested sync
         (N14) generalized — a re-ingest with fewer children leaves no stale
         tails (N18)."""
-        self._tbar(table)
+        if self._deferred(table, self.sync_children, updates, scope_keys):
+            return
         if not self.exists(table):
             if self._managed_pcols(table):
                 self._write_partitions_dynamic(table, self._prep(table, updates))
@@ -2181,13 +2155,14 @@ class TableStore:
         rows behind.  Use ``sync_children`` for managed tables instead —
         its kept ∪ updates frame always re-covers every touched partition.
         """
-        self._tbar(table)
         if self._managed_pcols(table):
             raise ValueError(
                 f"delete_scope on partitioned/bucketed table {table!r} is "
                 "unsupported (empty partitions cannot be expressed by a "
                 "dynamic overwrite); use sync_children"
             )
+        if self._deferred(table, self.delete_scope, scopes, scope_keys):
+            return
         if not self.exists(table):
             return
         current = self.read(table)

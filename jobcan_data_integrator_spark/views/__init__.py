@@ -29,7 +29,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 @dataclass(frozen=True)
@@ -476,17 +477,20 @@ def export_views(
     The reference's consumers read the SQLite file over ODBC
     (README.md:43-47); the Spark-native equivalent is gold parquet (or
     CSV for the 書式 exports, which ARE CSV layouts).  Views must already
-    be registered (register_views).  Returns rows written per view.
+    be registered (register_views).  Returns rows written per view,
+    counted by the write itself (an ``Observation``), so each view is
+    computed once.
     """
     counts: dict[str, int] = {}
     for name in names or [n for n, _ in VIEWS]:
-        df = spark.table(f"`{name}`")
+        written = Observation()
+        df = spark.table(f"`{name}`").observe(written, F.count(F.lit(1)).alias("n"))
         writer = df.coalesce(1).write.mode("overwrite")
         if fmt == "csv":
             writer.option("header", True).csv(f"{out_dir}/{name}")
         else:
             writer.parquet(f"{out_dir}/{name}")
-        counts[name] = df.count()
+        counts[name] = written.get["n"]
     return counts
 
 

@@ -129,10 +129,13 @@ def test_export_views(spark, tmp_path):
     assert counts["view_user_details"] > 0
     back = spark.read.parquet(str(tmp_path / "gold" / "view_user_details"))
     assert back.count() == counts["view_user_details"]
+    for name, n in counts.items():
+        assert n == spark.table(f"`{name}`").count()
 
     csv_counts = V.export_views(
         spark, str(tmp_path / "csv"), names=["view_立替精算(書式3)"], fmt="csv"
     )
     got = spark.read.option("header", True).csv(str(tmp_path / "csv" / "view_立替精算(書式3)"))
     assert got.count() == csv_counts["view_立替精算(書式3)"]
+    assert csv_counts["view_立替精算(書式3)"] == spark.table("`view_立替精算(書式3)`").count()
     assert "申請ID" in got.columns

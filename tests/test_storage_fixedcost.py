@@ -5,7 +5,13 @@
    are unchanged — same-instance reads observe the pending writes,
    nothing publishes before ``end_commit``, a failing op aborts the
    bracket, a failed publish leaks nothing into the next commit, and
-   cross-table hazards stay ordered.
+   cross-table hazards stay ordered.  Bare write primitives called on
+   the bracket's own thread queue themselves the same way (writes of
+   different tables overlap, same-table writes keep call order, a
+   failure surfaces at the bracket exit, and a cache release queued
+   after them still runs); argument errors still raise at the call,
+   another thread's primitive calls run inline, and the lease is
+   verified after the queued writes drain.
 2. The versioned-dir schema memo (``_read_pq``): repeated reads of one
    immutable snapshot dir reuse the inferred schema; a new version with
    a DIFFERENT schema is read with its own schema (no stale memo).
@@ -17,11 +23,15 @@
 
 from __future__ import annotations
 
+import json
+import threading
+import time
+
 import pytest
 
 from pyspark.sql import functions as F
 
-from jobcan_data_integrator_spark.storage import TableStore
+from jobcan_data_integrator_spark.storage import ConcurrentWriterError, TableStore
 
 
 def _store(spark, tmp_path, **kw):
@@ -75,6 +85,37 @@ def test_begin_commit_same_table_order_preserved(spark, tmp_path):
     store.submit_op(lambda: store.overwrite("ta", second), reads=("ta",), writes=("ta",))
     store.end_commit()
     assert store.read("ta").count() == 10
+    # bare primitives on the bracket's thread queue in call order too
+    third = spark.range(10, 12).select(F.col("id").alias("k"))
+    with store.commit_bracket("bare-waw"):
+        store.overwrite("tb", second)
+        store.overwrite("tb", first)
+        store.merge_insert_missing("tb", third, ["k"])
+        assert store._async is not None
+        store.prune_predicate("tb", F.col("k") == 0)
+    assert sorted(r.k for r in store.read("tb").collect()) == [1, 2, 10, 11]
+
+
+def test_bare_writes_of_different_tables_overlap(spark, tmp_path, monkeypatch):
+    """Two bare ``overwrite`` calls inside a bracket run concurrently:
+    each blocks in its write until the other has reached it too, which
+    an inline (sequential) write could never satisfy."""
+    store = _store(spark, tmp_path, driver_bounded={"ta": 100, "tb": 100})
+    meet = threading.Barrier(2, timeout=10)
+    real = store._driver_write
+
+    def meeting_write(table, df, out):
+        meet.wait()
+        return real(table, df, out)
+
+    monkeypatch.setattr(store, "_driver_write", meeting_write)
+    a = spark.range(5).select(F.col("id").alias("k"))
+    b = spark.range(7).select(F.col("id").alias("k"))
+    with store.commit_bracket("overlap"):
+        store.overwrite("ta", a)
+        store.overwrite("tb", b)
+    assert store.read("ta").count() == 5
+    assert store.read("tb").count() == 7
 
 
 def test_schema_memo_hits_and_versions(spark, tmp_path):
@@ -240,6 +281,95 @@ def test_commit_bracket_background_failure_aborts(spark, tmp_path):
             store.submit_op(boom, reads=("ta",), writes=("ta",))
     assert store._depth == 0
     assert not store._pending_versions
+    # a bare primitive whose frame fails when it runs: the call returns
+    # (the write is queued), the bracket aborts at its exit, and not even
+    # the bracket's successful write is published
+    good = spark.range(3).select(F.col("id").alias("k"))
+    bad = spark.range(3).select(F.raise_error(F.lit("bare write failed")).alias("k"))
+    returned = False
+    with pytest.raises(Exception, match="bare write failed"):
+        with store.commit_bracket("bare-bad"):
+            store.overwrite("ta", good)
+            store.overwrite("tb", bad)
+            returned = True
+    assert returned
+    assert store._depth == 0
+    assert not store._pending_versions
+    assert store.current_snapshot()["version"] == 0
+    assert not store.exists("ta")
+    assert not (store.root / TableStore.LEASE).exists()
+
+
+def test_release_op_runs_after_a_failed_write(spark, tmp_path):
+    """An op that writes nothing (a build's cache release) still runs
+    once the writes it follows are done, even when one failed; the
+    failure is still what the bracket raises."""
+    store = _store(spark, tmp_path)
+    bad = spark.range(3).select(F.raise_error(F.lit("bare write failed")).alias("k"))
+    ran = []
+    with pytest.raises(Exception, match="bare write failed"):
+        with store.commit_bracket("release"):
+            store.overwrite("ta", bad)
+            store.submit_op(lambda: ran.append("released"), reads=("ta",))
+    assert ran == ["released"]
+
+
+def test_lease_takeover_during_the_drain_publishes_nothing(spark, tmp_path):
+    """The fencing check runs after the bracket's queued writes drain:
+    a takeover that lands while they run still stops the publish."""
+    store = _store(spark, tmp_path)
+
+    def take_over():
+        lease = store.root / TableStore.LEASE
+        held = json.loads(lease.read_text())
+        lease.write_text(
+            json.dumps({"pid": 1, "ts": time.time(), "epoch": held["epoch"] + 1})
+        )
+
+    with pytest.raises(ConcurrentWriterError, match="lease lost"):
+        with store.commit_bracket("zombie"):
+            store.overwrite("ta", spark.range(3).select(F.col("id").alias("k")))
+            store.submit_op(take_over, reads=("ta",), writes=("ta",))
+    assert store.current_snapshot()["version"] == 0
+    assert json.loads((store.root / TableStore.LEASE).read_text())["pid"] == 1
+
+
+def test_delete_scope_on_managed_table_raises_at_the_call(spark, tmp_path):
+    store = _store(spark, tmp_path, bucketed={"m": ("k", 4)})
+    keys = spark.range(3).select(F.col("id").alias("k"))
+    with store.commit_bracket("ds"):
+        store.overwrite("m", keys)
+        with pytest.raises(ValueError, match="delete_scope"):
+            store.delete_scope("m", keys, ["k"])
+    assert store.read("m").count() == 3
+
+
+def test_primitive_on_another_thread_runs_inline(spark, tmp_path):
+    """Only the thread that opened the bracket queues its writes; a
+    primitive called from any other thread runs inline there, so its
+    failure raises in that thread (per-write failure attribution, as
+    the pipeline's phase pool relies on)."""
+    store = _store(spark, tmp_path)
+    bad = spark.range(3).select(F.raise_error(F.lit("inline write failed")).alias("k"))
+    good = spark.range(4).select(F.col("id").alias("k"))
+    errors = []
+
+    def write():
+        try:
+            store.overwrite("tc", bad)
+        except Exception as exc:  # noqa: BLE001 - asserted below
+            errors.append(exc)
+        store.overwrite("td", good)
+
+    with store.commit_bracket("other-thread"):
+        t = threading.Thread(target=write)
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive()
+        assert store._async is None  # nothing was queued
+        assert len(errors) == 1 and "inline write failed" in str(errors[0])
+    assert not store.exists("tc")
+    assert store.read("td").count() == 4
 
 
 def test_empty_first_write_to_managed_plain_table_stays_absent(spark, tmp_path):
