@@ -396,7 +396,13 @@ def extend_index(
     # publish, but plain mode swaps in place, so the checkpoint is the
     # mode-independent contract.
     new_pairs = new_pairs.localCheckpoint(eager=True)
-    new_sh = new_hashed_shingles.select("doc_id", "shingle").distinct().cache()
+    # lazy checkpoint, not cache: GC releases it with the frame, where a
+    # cache entry nothing unpersists would pin it for the session
+    new_sh = (
+        new_hashed_shingles.select("doc_id", "shingle")
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
     with store.commit_bracket("mh-index-extend"):
         store.merge_insert_missing(
             "mh_bands",
@@ -978,7 +984,8 @@ def exact_increment(store: TableStore, new_docs: DataFrame) -> DataFrame:
     bucketed with ``exact_index_buckets`` the stored-hash scan is
     bucket-pruned to the increment's hash buckets before the
     semi-join."""
-    inc = _doc_hashes(new_docs).cache()
+    # GC-released lazy checkpoint (see extend_index), not a cache entry
+    inc = _doc_hashes(new_docs).localCheckpoint(eager=False)
     stored = _mask_retracted(
         store, store.read_for_keys("ex_docs", inc.select("text_md5"))
     )
@@ -2055,7 +2062,8 @@ def span_increment(
     of ``sp_occs`` for the increment's hash set (``span_index_buckets``
     buckets it by ``h``), then an equi-semi-join; cost is linear in the
     increment times its hash fan-out, never in the corpus."""
-    inc = _span_occ_rows(new_docs, span).cache()
+    # GC-released lazy checkpoint (see extend_index), not a cache entry
+    inc = _span_occ_rows(new_docs, span).localCheckpoint(eager=False)
     stored = _mask_retracted(
         store, store.read_for_keys("sp_occs", inc.select("h"))
     )

@@ -10,13 +10,15 @@ lifetime.  ``ingest_increment`` is the batch-arrival analog: each stage
 consults the matching incremental index family (operators/
 incremental.py) instead of the corpus, so per-batch cost is linear in
 the INCREMENT, and then extends that family so the NEXT batch sees this
-one.  The stage order is curate_corpus's exactly:
+one.  The stages are curate_corpus's PII scrub and dedup stages, in its
+order:
 
-    normalize -> line clean (vs bl_stats) -> PII scrub ->
-    exact dedup (vs ex_docs) -> ExactSubstr span removal (vs sp_occs)
-    -> MinHash near-dup + cluster labels (vs mh_* / cc_labels) ->
-    optional quality/perplexity gate -> curated-corpus merge ->
-    optional chunk + pack
+    PII scrub -> exact dedup (vs ex_docs) -> ExactSubstr span removal
+    (vs sp_occs) -> MinHash near-dup + cluster labels (vs mh_* /
+    cc_labels) -> curated-corpus merge -> optional chunk + pack
+
+curate_corpus's one-shot-only stages (normalization, line cleaning,
+PII-hit cap, classifier and perplexity gates) live there alone.
 
 EQUIVALENCE CONTRACT (pinned in tests/test_ingest.py): for batches with
 MONOTONE doc ids (each batch's ids all exceed every earlier batch's —
@@ -44,14 +46,10 @@ merge-on-read deletes, the lakehouse pattern — so ``read_curated``
 (curated docs anti-join tombstones) stays equivalent to the one-shot
 result without rewriting historical partitions.
 
-Boilerplate line stats are inherently as-of-ingest (a line that becomes
-corpus-boilerplate in batch 9 was not removed from batch 1's docs —
-true of ANY streaming pipeline); the per-batch contract is
-``clean_increment``'s (tests/test_incremental_lines.py), and the strict
-≡ gate runs with line cleaning off.  Per-batch packing is batch-scoped:
-shard boundaries never span batches; ``repack_corpus`` is the one-call
-global reshard (chunk + pack ``read_curated`` in deterministic shuffled
-order, swapped in under one snapshot commit).
+Per-batch packing is batch-scoped: shard boundaries never span batches;
+``repack_corpus`` is the one-call global reshard (chunk + pack
+``read_curated`` in deterministic shuffled order, swapped in under one
+snapshot commit).
 
 Atomicity: every family write lands inside ONE ``store.commit_bracket``
 — on a snapshot-isolation store the whole batch (all ten families, the
@@ -71,8 +69,6 @@ the LLM-curation-tier analog.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -441,21 +437,12 @@ def probe_duplicates(
     store: TableStore,
     candidate_docs: DataFrame,
     *,
-    normalize: bool = False,
-    nfkc: bool = False,
-    line_clean: bool = False,
-    line_max_doc_freq: int | None = None,
-    max_pii_hits: int | None = None,
     span: int | None = 8,
     min_tokens: int = 10,
     minhash: bool = True,
     n_hashes: int = 8,
     band_size: int = 2,
     cluster_threshold: float = 0.5,
-    quality_scorer: Callable[[DataFrame], DataFrame] | None = None,
-    classifier_floor: float | None = None,
-    lm_filter: tuple[str, ...] | None = None,
-    perplexity_cuts: tuple[float, float] = (-1.0, -1.5),
 ) -> DataFrame:
     """READ-ONLY dedup-as-a-service: the exact keep/drop verdict
     ``ingest_increment`` would reach for each candidate doc against the
@@ -467,15 +454,16 @@ def probe_duplicates(
     Returns one row per input doc:
     ``(doc_id, verdict, dup_of, text)`` where ``verdict`` is the FIRST
     pipeline stage that drops the doc — ``retracted`` (permanently
-    masked id), ``line_filtered`` (emptied by line cleaning),
-    ``pii_filtered``, ``exact_dup`` (``dup_of`` = the content hash's
-    keeper, corpus or batch), ``too_short`` (post span-removal under
+    masked id), ``exact_dup`` (``dup_of`` = the content hash's keeper,
+    corpus or batch), ``too_short`` (post span-removal under
     ``min_tokens``), ``near_dup`` (``dup_of`` = the would-be cluster
-    label), ``low_quality``, ``ppl_filtered`` — or ``keep``, in which
-    case ``text`` carries the curated text the doc WOULD get (normalized,
-    scrubbed, span-deduped).  Knobs mirror ``ingest_increment``; pass
-    the same values you would ingest with, or the verdicts answer a
-    different pipeline's question.
+    label) — or ``keep``, in which case ``text`` carries the curated
+    text the doc WOULD get (scrubbed, span-deduped).  The knobs are
+    ``ingest_increment``'s dedup stages; pass the same values you would
+    ingest with, or the verdicts answer a different pipeline's
+    question.  The one-shot-only stages (normalization, line cleaning,
+    PII-hit cap, classifier and perplexity gates) live in
+    ``curate_corpus``.
 
     Equivalence contract (pinned in tests/test_probe.py): on a monotone
     store, ``probe.filter(verdict = 'keep')`` equals the (doc_id, text)
@@ -507,7 +495,6 @@ def probe_duplicates(
     from jobcan_data_integrator_spark.operators.pii import scrub_pii
 
     docs = candidate_docs.select("doc_id", "text")
-    all_ids = docs.select("doc_id").localCheckpoint(eager=True)
     _null_dup = F.lit(None).cast("bigint").alias("dup_of")
 
     def _verdict(ids: DataFrame, verdict: str) -> DataFrame:
@@ -521,36 +508,7 @@ def probe_duplicates(
         )
         docs = docs.join(mask, "doc_id", "left_anti")
 
-    if normalize:
-        from jobcan_data_integrator_spark.operators.normalize import (
-            normalize_text,
-        )
-
-        docs = normalize_text(docs, nfkc=nfkc)
-    if line_clean:
-        from jobcan_data_integrator_spark.operators import lines as L
-
-        docs = L.dedup_lines_within_doc(L.clean_lines(docs, min_words=1)).drop(
-            "n_lines_dropped"
-        )
-        if line_max_doc_freq is not None:
-            if store.exists("bl_stats"):
-                docs = inc.clean_increment(
-                    store, docs, max_doc_freq=line_max_doc_freq
-                ).drop("n_boilerplate_dropped")
-            else:
-                docs = L.remove_boilerplate_lines(
-                    docs, max_doc_freq=line_max_doc_freq
-                ).drop("n_boilerplate_dropped")
-
-    scrubbed_full = scrub_pii(docs)
-    if max_pii_hits is not None:
-        hits = F.col("n_email") + F.col("n_ip") + F.col("n_phone")
-        verdicts.append(
-            _verdict(scrubbed_full.filter(hits > max_pii_hits), "pii_filtered")
-        )
-        scrubbed_full = scrubbed_full.filter(hits <= max_pii_hits)
-    scrubbed = scrubbed_full.select(
+    scrubbed = scrub_pii(docs).select(
         "doc_id", F.col("redacted_text").alias("text")
     ).localCheckpoint(eager=True)
 
@@ -645,36 +603,6 @@ def probe_duplicates(
             near.select("doc_id"), "doc_id", "left_anti"
         ).localCheckpoint(eager=True)
 
-    # quality gates (read-only: perplexity scores against the persisted
-    # LM, classifier via the caller's scorer)
-    if classifier_floor is not None:
-        if quality_scorer is None:
-            raise ValueError("classifier_floor needs a quality_scorer callback")
-        scored = quality_scorer(kept)
-        verdicts.append(
-            _verdict(
-                scored.filter(F.col("classifier_score") < classifier_floor),
-                "low_quality",
-            )
-        )
-        kept = (
-            scored.filter(F.col("classifier_score") >= classifier_floor)
-            .select("doc_id", "text")
-            .localCheckpoint(eager=True)
-        )
-    if lm_filter is not None:
-        scored = inc.perplexity_increment(store, kept, cuts=perplexity_cuts)
-        ok = scored.filter(F.col("ppl_bucket").isin(*lm_filter)).select(
-            "doc_id"
-        )
-        verdicts.append(
-            _verdict(
-                kept.select("doc_id").join(ok, "doc_id", "left_anti"),
-                "ppl_filtered",
-            )
-        )
-        kept = kept.join(ok, "doc_id", "leftsemi").localCheckpoint(eager=True)
-
     out = kept.select(
         "doc_id", F.lit("keep").alias("verdict"), _null_dup, "text"
     )
@@ -682,17 +610,7 @@ def probe_duplicates(
         out = out.unionByName(
             v.withColumn("text", F.lit(None).cast("string"))
         )
-    # ids consumed before any verdict frame saw them (e.g. docs emptied
-    # away by line cleaning) — make the output total over the input
-    leftover = all_ids.join(out.select("doc_id"), "doc_id", "left_anti")
-    return out.unionByName(
-        leftover.select(
-            "doc_id",
-            F.lit("line_filtered").alias("verdict"),
-            _null_dup,
-            F.lit(None).cast("string").alias("text"),
-        )
-    )
+    return out
 
 
 def probe_contamination(
@@ -1273,11 +1191,6 @@ def ingest_increment(
     new_docs: DataFrame,
     batch_id: str,
     *,
-    normalize: bool = False,
-    nfkc: bool = False,
-    line_clean: bool = False,
-    line_max_doc_freq: int | None = None,
-    max_pii_hits: int | None = None,
     span: int | None = 8,
     min_tokens: int = 10,
     minhash: bool = True,
@@ -1286,11 +1199,6 @@ def ingest_increment(
     cluster_threshold: float = 0.5,
     simhash: bool = False,
     simhash_auto_geometry: bool = False,
-    quality_scorer: Callable[[DataFrame], DataFrame] | None = None,
-    classifier_floor: float | None = None,
-    lm_filter: tuple[str, ...] | None = None,
-    lm_extend: bool = False,
-    perplexity_cuts: tuple[float, float] = (-1.0, -1.5),
     pack_budget: int | None = None,
     chunk_tokens: int = 32,
     chunk_overlap: int = 8,
@@ -1302,14 +1210,12 @@ def ingest_increment(
     bm25: bool = False,
 ) -> IngestResult:
     """Curate one arriving (doc_id, text) batch against — and into —
-    the persisted index families.  Knobs mirror ``curate_corpus``:
+    the persisted index families.  The stages are ``curate_corpus``'s
+    PII scrub and dedup stages; its one-shot-only stages (normalization,
+    line cleaning, PII-hit cap, classifier and perplexity gates) live in
+    ``curate_corpus`` alone.  Knobs:
 
-    - ``normalize``/``nfkc``, ``line_clean``/``line_max_doc_freq``,
-      ``max_pii_hits``, ``span``/``min_tokens``,
-      ``quality_scorer``/``classifier_floor``: the same stages with the
-      same defaults; the boilerplate stage consults + extends the
-      ``bl_stats`` family (requires a snapshot-isolation store —
-      additive counts).
+    - ``span``/``min_tokens``: curate_corpus's stages with its defaults.
     - ``minhash``: near-dup canonicalization — curate_corpus's
       ``near_dup_pairs`` callback specialized to the MinHash-LSH family
       (the one with a maintained pair index), clustered at
@@ -1323,13 +1229,7 @@ def ingest_increment(
       ``sh_geometry`` regardless.  Widening a live store as it grows
       is ``incremental.maybe_widen_simhash_index`` (a maintenance op:
       growing the limb count re-signs from the full corpus text, which
-      ingest does not hold — quality/LM filters drop docs AFTER the
-      family signs the batch).
-    - ``lm_filter``: keep only docs whose CCNet ``ppl_bucket`` (scored
-      against the PERSISTED lm index — build_lm_index on a trusted
-      corpus first) is in the given set, e.g. ``("head", "middle")``;
-      ``lm_extend`` then absorbs the batch's kept docs into the LM
-      (snapshot store required).
+      ingest does not hold).
     - ``pack_budget``: chunk + pack the batch's kept docs into
       batch-scoped shards (``cur_chunks``/``cur_shards``).
     - ``new_emb``: this batch's (vec_id, embedding) rows; the
@@ -1512,49 +1412,11 @@ def ingest_increment(
     demoted: DataFrame | None = None
 
     with store.commit_bracket(batch_id):
-        # -1. normalization FIRST (CCNet ordering: byte-different
-        # renderings must collide in every downstream hash)
-        if normalize:
-            from jobcan_data_integrator_spark.operators.normalize import (
-                normalize_text,
-            )
-
-            docs = normalize_text(docs, nfkc=nfkc)
-            stages.append(("normalized", docs))
-
-        # 0. line cleaning: the in-row C4 stages, then boilerplate
-        # removal against stats-so-far (bl_stats family)
-        if line_clean:
-            from jobcan_data_integrator_spark.operators import lines as L
-
-            docs = L.dedup_lines_within_doc(
-                L.clean_lines(docs, min_words=1)
-            ).drop("n_lines_dropped")
-            if line_max_doc_freq is not None:
-                pre = docs.localCheckpoint(eager=True)
-                if store.exists("bl_stats"):
-                    docs = inc.clean_increment(
-                        store, pre, max_doc_freq=line_max_doc_freq
-                    ).drop("n_boilerplate_dropped").localCheckpoint(eager=True)
-                    inc.extend_line_index(store, pre, batch_id)
-                else:
-                    docs = L.remove_boilerplate_lines(
-                        pre, max_doc_freq=line_max_doc_freq
-                    ).drop("n_boilerplate_dropped").localCheckpoint(eager=True)
-                    inc.build_line_index(store, pre, batch_id=batch_id)
-            stages.append(("line_cleaned", docs))
-
-        # 1. PII scrub — downstream hashes see the redacted text
-        scrubbed = scrub_pii(docs)
-        if max_pii_hits is not None:
-            scrubbed = scrubbed.filter(
-                (F.col("n_email") + F.col("n_ip") + F.col("n_phone"))
-                <= max_pii_hits
-            )
-        # lazy checkpoint: materialized by the survivors checkpoint
-        # below (one job instead of two), still pinned before any
-        # family extend rewrites the tables this frame scans
-        scrubbed = scrubbed.select(
+        # 1. PII scrub — downstream hashes see the redacted text.  Lazy
+        # checkpoint: materialized by the survivors checkpoint below
+        # (one job instead of two), still pinned before any family
+        # extend rewrites the tables this frame scans
+        scrubbed = scrub_pii(docs).select(
             "doc_id", F.col("redacted_text").alias("text")
         ).localCheckpoint(eager=False)
         stages.append(("pii_scrubbed", scrubbed))
@@ -1817,36 +1679,7 @@ def ingest_increment(
                 sh_pairs = inc.simhash_increment(store, sigs)
                 inc.extend_simhash_index(store, sigs, sh_pairs)
 
-        # 5. quality gates: learned-classifier floor, then the CCNet
-        # perplexity bucket filter against the persisted LM
-        if classifier_floor is not None:
-            if quality_scorer is None:
-                raise ValueError(
-                    "classifier_floor needs a quality_scorer callback"
-                )
-            kept = (
-                quality_scorer(kept)
-                .filter(F.col("classifier_score") >= classifier_floor)
-                .select("doc_id", "text")
-                .localCheckpoint(eager=True)
-            )
-            stages.append(("quality_kept", kept))
-        if lm_filter is not None:
-            scored = inc.perplexity_increment(
-                store, kept, cuts=perplexity_cuts
-            )
-            kept = kept.join(
-                scored.filter(F.col("ppl_bucket").isin(*lm_filter)).select(
-                    "doc_id"
-                ),
-                "doc_id",
-                "leftsemi",
-            ).localCheckpoint(eager=True)
-            stages.append(("lm_kept", kept))
-        if lm_extend:
-            inc.extend_lm_index(store, kept, batch_id)
-
-        # 6. curated-corpus merge + optional batch-scoped chunk/pack —
+        # 5. curated-corpus merge + optional batch-scoped chunk/pack —
         # independent single-table merges issued HERE, so on a snapshot
         # store they overlap the embedding-family section below (inline,
         # hence still ledger-last, on plain stores)
@@ -1895,7 +1728,7 @@ def ingest_increment(
             store.merge_insert_missing(SHARDS, packed, ["chunk_id"])
             stages.append(("chunks", chunks))
 
-        # 7. embedding families for this batch's vectors.  A ``doc_id``
+        # 6. embedding families for this batch's vectors.  A ``doc_id``
         # column on new_emb records the (doc_id, vec_id) mapping so a
         # later ``retract_documents`` cascades into these families; a
         # vec_id retracted by ``retract_vectors`` stays retracted (same
@@ -1938,7 +1771,7 @@ def ingest_increment(
                         store, inc.encode_pq_increment(store, emb)
                     )
 
-        # 8. the ledger, written LAST.  On a plain store every write
+        # 7. the ledger, written LAST.  On a plain store every write
         # above ran inline in program order, so the ledger still lands
         # after every family write — a crash before it leaves the batch
         # replayable (idempotent family merges), after it redelivery
@@ -2711,8 +2544,6 @@ def compact_store(store: TableStore) -> None:
     does this check cheaply, driver-side)."""
     from jobcan_data_integrator_spark.operators import incremental as inc
 
-    inc.compact_minhash_drops(store)
-
     if not any(
         store.exists(t)
         for t in (
@@ -2722,6 +2553,8 @@ def compact_store(store: TableStore) -> None:
             TOMBSTONES,
         )
     ):
+        # MinHash masks only: their own bracket is the one publish
+        inc.compact_minhash_drops(store)
         return
     # every fold below goes through the partition-SCOPED prune
     # primitives: on a bucketed/banded snapshot table only the segments
@@ -2749,6 +2582,8 @@ def compact_store(store: TableStore) -> None:
         return m if m.head(1) else None
 
     with store.commit_bracket("store-compact"):
+        # nests: the MinHash folds join this commit
+        inc.compact_minhash_drops(store)
         _compact_folds(store, _unfolded)
     _record_compact_stat(store)
 

@@ -74,27 +74,21 @@ def merge_documents_stream(
     docs: DataFrame,
     store: TableStore,
     checkpoint_dir: str,
-    writes: dict[str, tuple[str, list[str]]] | None = None,
 ):
     """Incrementally maintain the silver tables from a document stream.
 
-    ``foreachBatch`` reuses the batch merge path — the streaming mode is
-    a scheduler over the same idempotent writes, so replays after a
-    failure converge (same contract as the batch pipeline's re-run).
+    ``foreachBatch`` reuses the batch merge path (``pipeline.write_table``
+    with ``REQUEST_WRITES``) — the streaming mode is a scheduler over the
+    same idempotent writes, so replays after a failure converge (same
+    contract as the batch pipeline's re-run).
     """
-    from jobcan_data_integrator_spark.pipeline import REQUEST_WRITES
-
-    strategy = writes or REQUEST_WRITES
+    from jobcan_data_integrator_spark.pipeline import REQUEST_WRITES, write_table
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         tables = shred_request_documents(batch_df)
         try:
             for name, df in tables.items():
-                kind, keys = strategy.get(name) or strategy["*"]
-                if kind == "upsert":
-                    store.merge_upsert(name, df, keys)
-                else:
-                    store.sync_children(name, df, keys)
+                write_table(store, name, df, REQUEST_WRITES)
         finally:
             # one cache set per micro-batch would otherwise accumulate
             tables.unpersist()
@@ -367,7 +361,6 @@ def index_embeddings_stream(
     n_cells: int = 16,
     iters: int = 2,
     threshold: float = 0.95,
-    maintain_clusters: bool = True,
 ):
     """Ingest-time semantic indexing: each micro-batch of embeddings
     (vec_id, embedding) is scored for near-dups against the persisted
@@ -380,9 +373,9 @@ def index_embeddings_stream(
     once, on a representative sample — here the first batch — and
     retrained offline when drift accumulates, never per batch).  Every
     later batch is assigned under the stored codebook, scored against
-    only its own cells, and upserted; with ``maintain_clusters`` the
-    batch's pairs also fold into the stored keep/drop labels via the
-    label-graph CC (``extend_clusters``) — so after the stream drains,
+    only its own cells, and upserted; the batch's pairs also fold into
+    the stored keep/drop labels via the label-graph CC
+    (``extend_clusters``) — so after the stream drains,
     ``sd_pairs``/``cc_labels`` equal a one-shot run over everything
     under that codebook (tests pin the equivalence).  Replays after a
     crash converge: the increment path is replay-safe and the merges
@@ -402,27 +395,23 @@ def index_embeddings_stream(
             build_semantic_index(
                 store, b, n_cells=n_cells, iters=iters, threshold=threshold
             )
-            if maintain_clusters:
-                build_cluster_index(
-                    store,
-                    store.read("sd_pairs").select(
-                        F.col("vec_a").alias("doc_a"),
-                        F.col("vec_b").alias("doc_b"),
-                    ),
-                )
+            build_cluster_index(
+                store,
+                store.read("sd_pairs").select(
+                    F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
+                ),
+            )
         else:
             pairs = semantic_increment(store, b, threshold).localCheckpoint(
                 eager=True
             )
             extend_semantic_index(store, b, pairs)
-            if maintain_clusters:
-                extend_clusters(
-                    store,
-                    pairs.select(
-                        F.col("vec_a").alias("doc_a"),
-                        F.col("vec_b").alias("doc_b"),
-                    ),
-                )
+            extend_clusters(
+                store,
+                pairs.select(
+                    F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
+                ),
+            )
 
     return _sink(emb, _index, checkpoint_dir)
 
@@ -592,7 +581,7 @@ def ingest_documents_stream(
     reference's request-id cursor; a source that can deliver late ids
     passes ``allow_out_of_order=True`` through for the repairing path.
     ``ingest_kwargs`` pass through to ``ingest_increment`` (span,
-    minhash, lm_filter, pack_budget, allow_out_of_order, ...).
+    minhash, pack_budget, allow_out_of_order, ...).
     """
     from jobcan_data_integrator_spark.operators.ingest import (
         ingest_increment,

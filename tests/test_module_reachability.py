@@ -7,6 +7,10 @@ Spark, no package import — including function-local imports, relative
 imports and the implicit parent-package imports.  A module nothing
 reaches is either deleted or named in ``DOCUMENTED_ENTRY_MODULES`` as a
 README-documented entry point callers import directly.
+
+The same rule holds for options: every keyword parameter of the three
+curation orchestrators must be set by some call site in the package,
+the root scripts, ``perfbench/`` or the tests.
 """
 
 from __future__ import annotations
@@ -93,4 +97,80 @@ def test_every_package_module_is_reached_or_documented():
         f"modules no gate, pipeline, benchmark workload or scale-smoke "
         f"budget reaches: {unreached} — delete them, or document one as "
         "an entry module"
+    )
+
+
+#: orchestrators whose every keyword parameter some caller must set — an
+#: option nothing sets gates a branch that never runs
+ORCHESTRATORS = ("ingest_increment", "probe_duplicates", "retract_documents")
+
+
+def _name(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return None
+
+
+def _literal_keys(node: ast.AST) -> set[str]:
+    """Keys of a ``dict(k=...)`` call or a ``{"k": ...}`` literal."""
+    if isinstance(node, ast.Call) and _name(node.func) == "dict":
+        return {k.arg for k in node.keywords if k.arg}
+    if isinstance(node, ast.Dict):
+        return {
+            k.value
+            for k in node.keys
+            if isinstance(k, ast.Constant) and isinstance(k.value, str)
+        }
+    return set()
+
+
+def _keywords_set(path: Path) -> dict[str, set[str]]:
+    """Per orchestrator, the keyword names one file's call sites set: a
+    call naming the function (or passing it on, as in ``timed("ingest",
+    ingest_increment, ...)``) contributes its keyword arguments and the
+    keys of every ``**`` dict literal it expands, inline or assigned to a
+    name in the same file."""
+    tree = ast.parse(path.read_text(), str(path))
+    assigned: dict[str, set[str]] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign):
+            for t in node.targets:
+                if isinstance(t, ast.Name):
+                    assigned.setdefault(t.id, set()).update(_literal_keys(node.value))
+    found: dict[str, set[str]] = {f: set() for f in ORCHESTRATORS}
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        named = {_name(node.func)} | {_name(a) for a in node.args}
+        for fn in named & set(ORCHESTRATORS):
+            for k in node.keywords:
+                if k.arg:
+                    found[fn].add(k.arg)
+                elif isinstance(k.value, ast.Name):
+                    found[fn] |= assigned.get(k.value.id, set())
+                else:
+                    found[fn] |= _literal_keys(k.value)
+    return found
+
+
+def test_every_orchestrator_option_is_set_by_a_caller():
+    files = [REPO / "bench.py", REPO / "scale_smoke.py"]
+    for d in (REPO / PKG, REPO / "perfbench", REPO / "tests"):
+        files += sorted(d.rglob("*.py"))
+    set_by: dict[str, set[str]] = {f: set() for f in ORCHESTRATORS}
+    for path in files:
+        for fn, keys in _keywords_set(path).items():
+            set_by[fn] |= keys
+    src = ast.parse((REPO / PKG / "operators" / "ingest.py").read_text())
+    unset = {}
+    for node in src.body:
+        if isinstance(node, ast.FunctionDef) and node.name in ORCHESTRATORS:
+            params = {a.arg for a in node.args.kwonlyargs}
+            if params - set_by[node.name]:
+                unset[node.name] = sorted(params - set_by[node.name])
+    assert not unset, (
+        f"keyword options no caller sets: {unset} — delete them with the "
+        "code they gate"
     )

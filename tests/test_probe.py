@@ -127,6 +127,10 @@ def test_probe_verdicts_and_dup_targets(spark, tmp_path):
         (44, _t("r", 0, 10)),  # unique: keep
     ]
     probe = probe_duplicates(store, _mk(spark, cand), **CFG)
+    # total over the input: exactly one verdict row per candidate id
+    assert sorted(r.doc_id for r in probe.collect()) == sorted(
+        d for d, _ in cand
+    )
     rows = {r.doc_id: (r.verdict, r.dup_of) for r in probe.collect()}
     assert rows[41] == ("exact_dup", 1)
     assert rows[42] == ("near_dup", 3)  # cluster {3, 7, 42} -> min id 3
