@@ -1905,7 +1905,8 @@ def _ig_oracle(src: str = "documents") -> str:
     # 3-batch + demotion matrix.)
     oracle=_ig_oracle(),
     doc="Orchestrated incremental ingest (operators/ingest.py, "
-    "ingest_increment): the corpus arrives in monotone doc_id batches; "
+    "ingest_increment): the corpus arrives in two doc_id batches, the "
+    "second a late comb interleaving the first's ids; "
     "each is PII-scrubbed, exact-deduped against the persisted ex_docs "
     "hash index, ExactSubstr-span-deduped against the persisted sp_occs "
     "index, length-floored, near-dup-canonicalized against the persisted "
@@ -1938,7 +1939,6 @@ def ig_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _index_root(sf_dir) + "-ing"
     shutil.rmtree(root, ignore_errors=True)
     docs = _docs(spark, sf_dir)
-    hi = docs.agg(F.max("doc_id")).first()[0]
     # bucketed label layout: extend_clusters and the retraction relabel
     # take the increment-bounded DELTA path instead of per-batch
     # corpus-sized overwrites (cluster_label_buckets docstring)
@@ -1946,22 +1946,21 @@ def ig_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, root, write_partitions=1, snapshot_isolation=True,
         **index_layout(cluster_label_buckets(8)),
     )
-    # two batches under allow_out_of_order=True: the 90% bulk first,
-    # then a 10% COMB through the whole id space (doc_id % 10 == 3) —
-    # a late batch whose ids interleave below the absorbed high-water
-    # mark everywhere.  The oracle is order-independent (the one-shot
-    # curation of the union), so a green hash drives the whole
-    # out-of-order repair machinery — exact keeper re-election demoting
-    # already-curated higher-id twins, retroactive span flags
-    # rebuilding stored texts from cur_pre, MinHash re-signing with
-    # merge-on-read retraction, component relabeling + resurrection,
-    # and the cluster demotion sweep — and proves it lands EXACTLY on
-    # the one-shot result.  The monotone path (a strict subset of this
-    # mode) stays pinned by the test matrix in tests/test_ingest.py;
-    # the comb split bounds repair volume at ~10% of the corpus's
-    # cross-batch interactions, keeping the gate's cost per-job
-    # scheduling overhead x stages x batches (flat from sf0.001 to
-    # sf0.1) rather than repair-volume-bound.
+    # two batches: the 90% bulk first, then a 10% COMB through the
+    # whole id space (doc_id % 10 == 3) — a late batch whose ids
+    # interleave below the absorbed high-water mark everywhere.  The
+    # oracle is order-independent (the one-shot curation of the union),
+    # so a green hash drives the whole late-batch repair machinery —
+    # exact keeper re-election demoting already-curated higher-id twins,
+    # retroactive span flags rebuilding stored texts from cur_pre,
+    # MinHash re-signing with merge-on-read retraction, component
+    # relabeling + resurrection, and the cluster demotion sweep — and
+    # proves it lands EXACTLY on the one-shot result.  In-order batches,
+    # where none of those repairs fire, stay pinned by the test matrix
+    # in tests/test_ingest.py; the comb split bounds repair volume at
+    # ~10% of the corpus's cross-batch interactions, keeping the gate's
+    # cost per-job scheduling overhead x stages x batches (flat from
+    # sf0.001 to sf0.1) rather than repair-volume-bound.
     comb = F.pmod(F.col("doc_id"), F.lit(10)) == 3
     # increment-sized maintenance joins: the orchestrator's per-batch
     # shuffles carry batch-scale data, so corpus-sized shuffle
@@ -1980,7 +1979,6 @@ def ig_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 span=8,
                 min_tokens=10,
                 minhash=True,
-                allow_out_of_order=True,
             )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -2060,7 +2058,6 @@ def ig_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             span=8,
             min_tokens=10,
             minhash=True,
-            allow_out_of_order=True,
         )
         retract_documents(
             store,
@@ -2084,11 +2081,11 @@ def ig_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
 @gate(
     "ig_probe",
     # the read-only verdict contract: probe keep set ≡ what ingest
-    # would curate for the batch ≡ (monotone ids) the one-shot curation
-    # of the UNION restricted to the probed ids — so the oracle is the
-    # same one-shot CTE chain as ig_incremental_curation with ONE extra
-    # predicate selecting the probed half (2*doc_id > max ⟺
-    # doc_id > max // 2 for integer ids)
+    # would curate for the batch ≡ (its ids all above the store's) the
+    # one-shot curation of the UNION restricted to the probed ids — so
+    # the oracle is the same one-shot CTE chain as ig_incremental_curation
+    # with ONE extra predicate selecting the probed half (2*doc_id > max
+    # ⟺ doc_id > max // 2 for integer ids)
     oracle=_ig_oracle()
     + "\n      AND d.doc_id * 2 > (SELECT max(doc_id) FROM documents)",
     doc="Read-only dedup probe (operators/ingest.py, probe_duplicates): "

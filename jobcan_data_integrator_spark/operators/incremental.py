@@ -56,8 +56,8 @@ from jobcan_data_integrator_spark.storage import TableStore
 #: the index's table names, in commit-manifest order
 INDEX_TABLES = ("mh_bands", "mh_shingles", "mh_sizes", "mh_pairs")
 
-#: merge-on-read retraction tables for out-of-order ingest
-#: (operators/ingest.py, allow_out_of_order=True) — the lakehouse
+#: merge-on-read retraction tables for ingest's late-batch repairs
+#: (operators/ingest.py) — the lakehouse
 #: tombstone pattern applied to the MinHash family itself:
 #:
 #: - ``mh_doc_drops``  (doc_id): docs RETIRED from the family (an exact
@@ -76,9 +76,9 @@ INDEX_TABLES = ("mh_bands", "mh_shingles", "mh_sizes", "mh_pairs")
 #:   repair recomputation no longer produces, or pairs touching retired
 #:   docs.  ``read_pairs`` is the corpus-pair read that applies them.
 #:
-#: All three are bounded by out-of-order REPAIR volume, not the corpus;
-#: a monotone-id store never creates them and every read path checks
-#: existence first (zero cost when absent).
+#: All three are bounded by late-batch REPAIR volume, not the corpus;
+#: a store whose batches arrived in id order never creates them and
+#: every read path checks existence first (zero cost when absent).
 OOO_DROP_TABLES = ("mh_doc_drops", "mh_band_drops", "mh_pair_drops")
 
 #: targeted-deletion masks (operators/ingest.retract_documents) — the

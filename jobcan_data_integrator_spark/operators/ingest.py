@@ -20,31 +20,27 @@ order:
 curate_corpus's one-shot-only stages (normalization, line cleaning,
 PII-hit cap, classifier and perplexity gates) live there alone.
 
-EQUIVALENCE CONTRACT (pinned in tests/test_ingest.py): for batches with
-MONOTONE doc ids (each batch's ids all exceed every earlier batch's —
-the natural ingest order, and the reference's own monotone request-id
-assumption), after N ``ingest_increment`` calls
+EQUIVALENCE CONTRACT (pinned in tests/test_ingest.py): for batches in
+ANY doc-id order — late ids interleaving with absorbed ones included,
+the analog of the reference's re-pulled open-status and canceled-
+after-completion requests — after N ``ingest_increment`` calls
 
     read_curated(store)  ≡  curate_corpus(union of batches).kept
     mh_pairs             ≡  the full-corpus verified pair set
     cc_labels            ≡  dup_clusters(full pairs) labels
 
-Monotonicity is ENFORCED by default (a ledger of absorbed id ranges;
-out-of-order batches raise) — OR relaxed with
-``allow_out_of_order=True``, which extends the SAME ≡ contract to ANY
-batch order via exact keeper re-election, retroactive span-flag
-repairs from a persisted pre-span text table, MinHash re-signing with
-merge-on-read retraction, component-local cluster relabeling, and
-tombstone resurrection (see ``ingest_increment``'s docstring;
-shuffled-order ≡ one-shot is pinned in tests/test_ingest.py).  One
-genuinely retroactive effect survives even monotone ingest: a new doc
-can pair
-with members of TWO existing clusters and merge them, demoting the
-larger cluster's old keeper.  ``extend_clusters`` returns exactly that
-remap, and the demoted ids become TOMBSTONES (``cur_drops``) —
-merge-on-read deletes, the lakehouse pattern — so ``read_curated``
-(curated docs anti-join tombstones) stays equivalent to the one-shot
-result without rewriting historical partitions.
+A batch's effects on already-absorbed docs are repaired in place:
+exact keeper re-election, span-flag repairs from the persisted pre-span
+text table (``cur_pre``), MinHash re-signing with merge-on-read
+retraction, component-local cluster relabeling, and tombstone
+resurrection (see ``ingest_increment``'s docstring).  Demoted docs
+become TOMBSTONES (``cur_drops``, with a cause) — merge-on-read
+deletes, the lakehouse pattern — so ``read_curated`` (curated docs
+anti-join tombstones) stays equivalent to the one-shot result without
+rewriting historical partitions.  The same tables make every store
+retractable (``retract_documents``) — except one holding the SimHash
+family, which has no repair or retraction path and so takes in-order
+batches only.
 
 Per-batch packing is batch-scoped: shard boundaries never span batches;
 ``repack_corpus`` is the one-call global reshard (chunk + pack
@@ -82,9 +78,8 @@ CURATED = "cur_docs"
 TOMBSTONES = "cur_drops"
 CHUNKS = "cur_chunks"
 SHARDS = "cur_shards"
-#: out-of-order mode only: each kept doc's PRE-span (post-PII) text —
-#: the input retroactive span flags apply to.  Monotone stores never
-#: need it (flags never reach back into absorbed docs there).
+#: each exact-dedup survivor's PRE-span (post-PII) text — the input
+#: retroactive span flags, retractions and mate promotions re-dedup.
 CURATED_PRE = "cur_pre"
 #: absorbed-retraction ledger (retract_documents): one row per
 #: retract_id, so a redelivered retraction is a no-op.
@@ -227,10 +222,9 @@ def doc_history(store: TableStore, ids: DataFrame) -> DataFrame:
       row; ``ref`` = the ingest batch that inserted it.  Retracted docs
       lose this row (the takedown deletes the text physically).
     - ``demoted`` — tombstoned by a dedup decision; ``ref`` = the batch,
-      ``cause`` = exact/cluster/floor on out-of-order stores (monotone
-      stores record no cause).  Revoked (resurrected) demotions leave no
-      row — the timeline reflects the CURRENT adjudication, matching
-      what ``read_curated`` serves.
+      ``cause`` = exact/cluster/floor.  Revoked (resurrected) demotions
+      leave no row — the timeline reflects the CURRENT adjudication,
+      matching what ``read_curated`` serves.
     - ``retracted`` — permanently deleted; ``ref`` = the retract_id,
       with the receipt's snapshot version and timestamp joined from
       ``retraction_log``.
@@ -264,18 +258,19 @@ def doc_history(store: TableStore, ids: DataFrame) -> DataFrame:
             )
         )
     if store.exists(TOMBSTONES):
-        t = store.read(TOMBSTONES).join(b, "doc_id", "leftsemi")
-        cause = F.col("cause") if "cause" in t.columns else null_s
-        if "cause" in t.columns:
-            # a 'retracted'-cause tombstone is surfaced as the richer
-            # ``retracted`` event below, not twice
-            t = t.filter(F.col("cause") != "retracted")
+        # a 'retracted'-cause tombstone is surfaced as the richer
+        # ``retracted`` event below, not twice
+        t = (
+            store.read(TOMBSTONES)
+            .join(b, "doc_id", "leftsemi")
+            .filter(F.col("cause") != "retracted")
+        )
         out = out.unionByName(
             t.select(
                 "doc_id",
                 F.lit("demoted").alias("event"),
                 F.col("batch_id").alias("ref"),
-                cause.alias("cause"),
+                "cause",
                 null_l.alias("over_version"),
                 null_d.alias("ts"),
             )
@@ -465,13 +460,13 @@ def probe_duplicates(
     PII-hit cap, classifier and perplexity gates) live in
     ``curate_corpus``.
 
-    Equivalence contract (pinned in tests/test_probe.py): on a monotone
-    store, ``probe.filter(verdict = 'keep')`` equals the (doc_id, text)
-    set ``ingest_increment`` then curates for the same batch.  Verdicts
-    assume monotone ids — a probe cannot see the retroactive repairs an
-    out-of-order ingest would perform on OTHER stored docs (it mutates
-    nothing), but the batch's own keep set matches ingest in both modes
-    whenever the batch introduces no retro demotions.
+    Equivalence contract (pinned in tests/test_probe.py): for a batch
+    whose ids all exceed the store's, ``probe.filter(verdict = 'keep')``
+    equals the (doc_id, text) set ``ingest_increment`` then curates for
+    the same batch.  A probe cannot see the retroactive repairs a late
+    batch would make to OTHER stored docs (it mutates nothing), but the
+    batch's own keep set still matches ingest whenever the batch
+    introduces no retro demotions.
 
     Scale shape: identical to the ingest probes it reuses — every
     corpus-side read is bucket-pruned to the increment's key fan-out
@@ -535,7 +530,7 @@ def probe_duplicates(
         exact_dups.select("doc_id"), "doc_id", "left_anti"
     ).localCheckpoint(eager=True)
 
-    # span removal + length floor (monotone view: the batch's own flags)
+    # span removal + length floor (the batch's own flags)
     if span is not None:
         if store.exists("sp_occs"):
             _, flags = inc.span_increment(store, survivors, span=span)
@@ -774,23 +769,30 @@ def _tombstone(
     ids: DataFrame,
     batch_id: str,
     cause: str,
-    ooo: bool,
     permanent: bool = False,
 ) -> None:
-    """Insert ``cur_drops`` tombstones.  Out-of-order stores carry a
-    ``cause`` column ('exact'/'floor' are PERMANENT — the doc can never
+    """Insert ``cur_drops`` tombstones (doc_id, batch_id, cause).
+    'exact'/'floor'/'retracted' are PERMANENT — the doc can never
     re-qualify; 'cluster' is revocable — a later pair retraction can
-    resurrect it).  Permanent causes UPSERT so they are never shadowed
+    resurrect it.  Permanent causes UPSERT so they are never shadowed
     by an earlier revocable row; revocable causes insert-if-missing so
-    they never downgrade a permanent one.  Monotone stores keep the
-    round-5 two-column schema (their demotions never retract)."""
-    rows = ids.select("doc_id").withColumn("batch_id", F.lit(batch_id))
-    if ooo:
-        rows = rows.withColumn("cause", F.lit(cause))
-        if permanent:
-            store.merge_upsert(TOMBSTONES, rows, ["doc_id"])
-            return
-    store.merge_insert_missing(TOMBSTONES, rows, ["doc_id"])
+    they never downgrade a permanent one."""
+    rows = ids.select("doc_id").withColumns(
+        {"batch_id": F.lit(batch_id), "cause": F.lit(cause)}
+    )
+    write = store.merge_upsert if permanent else store.merge_insert_missing
+    write(TOMBSTONES, rows, ["doc_id"])
+
+
+def _require_repair_tables(store: TableStore) -> None:
+    """Refuse the removed monotone-only mode's layout (``cur_docs``
+    without ``cur_pre``): no current code can repair or retract it."""
+    if store.exists(CURATED) and not store.exists(CURATED_PRE):
+        raise ValueError(
+            f"store holds {CURATED} but no {CURATED_PRE}: it was written "
+            "by the removed monotone-only ingest mode, which kept no "
+            "repair tables — re-ingest it from its source batches"
+        )
 
 
 def _relabel_after_retraction(
@@ -887,15 +889,11 @@ def _relabel_after_retraction(
     revived = old_demoted.join(new_demoted, "doc_id", "left_anti")
     if store.exists(TOMBSTONES):
         tomb = store.read(TOMBSTONES)
-        if "cause" in tomb.columns:
-            revived = revived.join(
-                tomb.filter(F.col("cause") != "cluster").select("doc_id"),
-                "doc_id",
-                "left_anti",
-            )
-        else:  # pre-ooo store: unreachable from ingest, best-effort
-            pass
-        revived = revived.localCheckpoint(eager=True)
+        revived = revived.join(
+            tomb.filter(F.col("cause") != "cluster").select("doc_id"),
+            "doc_id",
+            "left_anti",
+        ).localCheckpoint(eager=True)
         tomb_del = revived.join(
             tomb.select("doc_id"), "doc_id", "leftsemi"
         ).localCheckpoint(eager=True)
@@ -914,11 +912,10 @@ def _relabel_after_retraction(
 def _sweep_cluster_demotions(
     store: TableStore, batch_id: str, touched: DataFrame | None = None
 ) -> DataFrame | None:
-    """Out-of-order mode's general cluster-demotion pass: tombstone
-    every live curated doc that is no longer its cluster's minimum.
-    Subsumes the monotone path's remap-based demotion (which only sees
-    label CHANGES — a late smaller-id doc founding a cluster around a
-    stored keeper changes no existing label, yet demotes it).
+    """The general cluster-demotion pass: tombstone every live curated
+    doc that is no longer its cluster's minimum.  Label CHANGES alone
+    would miss demotions — a late smaller-id doc founding a cluster
+    around a stored keeper changes no existing label, yet demotes it.
 
     ``touched`` (a one-column ``cluster_id`` frame): restrict the sweep
     to those clusters' members.  SOUND for the per-batch caller because
@@ -970,7 +967,7 @@ def _sweep_cluster_demotions(
     nonkeep = nonkeep.localCheckpoint(eager=True)
     if not nonkeep.head(1):
         return None
-    _tombstone(store, nonkeep, batch_id, "cluster", ooo=True)
+    _tombstone(store, nonkeep, batch_id, "cluster")
     return nonkeep
 
 
@@ -988,7 +985,7 @@ def _rebuild_docs(
     batch_id: str,
     revive_floor: bool = False,
 ) -> None:
-    """Out-of-order ingest's doc reconstruction: recompute the curated
+    """Ingest's and retraction's doc reconstruction: recompute the curated
     row for every id from its persisted pre-span text (``cur_pre``)
     under the CURRENT accumulated ``sp_flags``, then upsert it (under
     its ORIGINAL batch id, so a redelivery of that batch returns the
@@ -1039,16 +1036,15 @@ def _rebuild_docs(
     )
     if store.exists(TOMBSTONES):
         tomb = store.read(TOMBSTONES)
-        if "cause" in tomb.columns:
-            targets = targets.join(
-                F.broadcast(
-                    tomb.filter(F.col("cause").isin(*excluded_causes)).select(
-                        "doc_id"
-                    )
-                ),
-                "doc_id",
-                "left_anti",
-            )
+        targets = targets.join(
+            F.broadcast(
+                tomb.filter(F.col("cause").isin(*excluded_causes)).select(
+                    "doc_id"
+                )
+            ),
+            "doc_id",
+            "left_anti",
+        )
     if store.exists("mh_doc_drops") and not revive_floor:
         # in revive mode the retirement set may contain floored docs
         # that are about to re-qualify; exact/retracted retirements are
@@ -1084,7 +1080,7 @@ def _rebuild_docs(
     ).localCheckpoint(eager=True)
 
     if floored.head(1):
-        _tombstone(store, floored, batch_id, "floor", ooo=True, permanent=True)
+        _tombstone(store, floored, batch_id, "floor", permanent=True)
         if minhash and store.exists("mh_bands"):
             touched = inc.retire_from_minhash(store, floored)
             _relabel_after_retraction(
@@ -1099,29 +1095,28 @@ def _rebuild_docs(
     revived_floor = None
     if revive_floor and store.exists(TOMBSTONES):
         tomb = store.read(TOMBSTONES)
-        if "cause" in tomb.columns:
-            revived_floor = (
-                ok.select("doc_id")
-                .join(
-                    F.broadcast(
-                        tomb.filter(F.col("cause") == "floor").select("doc_id")
-                    ),
-                    "doc_id",
-                    "leftsemi",
-                )
-                .localCheckpoint(eager=True)
+        revived_floor = (
+            ok.select("doc_id")
+            .join(
+                F.broadcast(
+                    tomb.filter(F.col("cause") == "floor").select("doc_id")
+                ),
+                "doc_id",
+                "leftsemi",
             )
-            if revived_floor.head(1):
-                # the doc re-qualifies: the flag retraction regrew its
-                # text past the floor — resolve the tombstone and the
-                # MinHash retirement (its recomputed pairs re-enter via
-                # the resign below; still-valid dropped pairs are
-                # undropped there, the rest stay retracted)
-                store.delete_scope(TOMBSTONES, revived_floor, ["doc_id"])
-                if store.exists("mh_doc_drops"):
-                    store.delete_scope("mh_doc_drops", revived_floor, ["doc_id"])
-            else:
-                revived_floor = None
+            .localCheckpoint(eager=True)
+        )
+        if revived_floor.head(1):
+            # the doc re-qualifies: the flag retraction regrew its
+            # text past the floor — resolve the tombstone and the
+            # MinHash retirement (its recomputed pairs re-enter via
+            # the resign below; still-valid dropped pairs are
+            # undropped there, the rest stay retracted)
+            store.delete_scope(TOMBSTONES, revived_floor, ["doc_id"])
+            if store.exists("mh_doc_drops"):
+                store.delete_scope("mh_doc_drops", revived_floor, ["doc_id"])
+        else:
+            revived_floor = None
     # Delta the rebuild set before the expensive half: a retro flag that
     # lands inside an already-removed interval leaves the doc's repaired
     # text IDENTICAL to its current curated text — its cur_docs row and
@@ -1204,7 +1199,7 @@ def ingest_increment(
     chunk_overlap: int = 8,
     new_emb: DataFrame | None = None,
     emb_families: tuple[str, ...] = ("lsh", "ivf", "pq"),
-    allow_out_of_order: bool = False,
+    allow_out_of_order: bool = True,
     auto_compact_bytes: int | None = 8 << 20,
     auto_refresh_codebooks: bool | dict = False,
     bm25: bool = False,
@@ -1238,16 +1233,16 @@ def ingest_increment(
       ``sd_pairs`` — seed with build_semantic_index).
 
     First batch against an empty store BUILDS each family; later
-    batches increment.  Raises on out-of-order doc ids (see module
-    docstring) unless ``allow_out_of_order`` is set.
+    batches increment.  Batches may arrive in any doc-id order, their
+    ids interleaving with already-absorbed ones — the analog of the
+    reference's own late-data reality (open-status re-pull + canceled-
+    after-completion second pass, api_client.py:585-595).  Every batch
+    repairs the retroactive effects it has on absorbed docs:
 
-    ``allow_out_of_order``: accept batches whose doc ids interleave
-    with already-absorbed ones — the analog of the reference's own
-    late-data reality (open-status re-pull + canceled-after-completion
-    second pass, api_client.py:585-595).  Three retroactive effects are
-    repaired, in addition to the cluster-merge demotion monotone mode
-    already handles:
-
+    - **Cluster demotion**: a cluster merge demotes the larger
+      cluster's old keeper, and a late smaller-id doc founding a
+      cluster around a stored keeper demotes it; the demotion sweep
+      tombstones both (revocable 'cluster' cause).
     - **Exact keeper re-election**: a late doc with a smaller id than
       its content-hash's stored keeper wins the group; the demoted
       stored keeper becomes a ``cur_drops`` tombstone and is RETIRED
@@ -1259,9 +1254,8 @@ def ingest_increment(
       those flags — they are monotone, so the accumulated ``sp_flags``
       converges to the one-shot flag set in any batch order).  Affected
       LIVE curated docs are REPAIRED: their pre-span text (persisted in
-      ``cur_pre``, which this mode maintains — hence required from the
-      store's FIRST batch) is re-deduped under the full flag set, the
-      curated row upserted (or tombstoned if it falls under the
+      ``cur_pre`` by every batch) is re-deduped under the full flag
+      set, the curated row upserted (or tombstoned if it falls under the
       ``min_tokens`` floor), and their MinHash rows re-signed
       (``resign_minhash``) so cross-batch pair discovery keeps matching
       the one-shot pair set.
@@ -1272,9 +1266,13 @@ def ingest_increment(
       conservative merged labels — the same as-of-ingest stance as the
       boilerplate line stats.
 
-    ``simhash=True`` is rejected in this mode (that family has no
-    retraction path yet).  Batch-order equivalence with the one-shot
-    curation (docs + pairs + labels) is pinned in tests/test_ingest.py.
+    The SimHash family has no repair path: with ``simhash=True``, or on
+    a store holding ``sh_signatures``, a batch whose lowest id is not
+    above every absorbed id raises.  So does a store whose ``cur_docs``
+    has no ``cur_pre`` (the removed monotone-only mode's layout), and
+    ``allow_out_of_order=False`` (kept for existing callers; ``True`` is
+    its one value).  Batch-order equivalence with the one-shot curation
+    (docs + pairs + labels) is pinned in tests/test_ingest.py.
 
     ``auto_refresh_codebooks``: after a successful publish, check the
     IVF codebook-drift signal (``incremental.should_refresh_codebooks``
@@ -1329,30 +1327,17 @@ def ingest_increment(
             "replay-safe under an atomic multi-table publish"
         )
 
-    if allow_out_of_order:
-        if simhash:
-            raise ValueError(
-                "allow_out_of_order does not support the simhash family "
-                "(no retraction path); run it separately via the "
-                "per-family APIs"
-            )
-        if store.exists(CURATED) and not store.exists(CURATED_PRE):
-            raise ValueError(
-                "allow_out_of_order needs the pre-span text table "
-                f"({CURATED_PRE}) from the store's FIRST batch — this "
-                "store was ingested in monotone mode; rebuild it with "
-                "allow_out_of_order=True throughout"
-            )
-    elif store.exists(CURATED_PRE):
+    if not allow_out_of_order:
         raise ValueError(
-            "store was ingested with allow_out_of_order=True — later "
-            "batches must keep the flag (a monotone batch is a valid "
-            "out-of-order batch, but it must maintain the repair tables)"
+            "the monotone-only ingest mode is gone: every batch takes the "
+            "repairing path (any batch order); drop allow_out_of_order"
         )
+    _require_repair_tables(store)
 
     # ONE ledger pass answers both questions: was this batch already
     # absorbed (redelivery), and what is the absorbed id high-water mark
-    # (monotone guard)
+    # (the SimHash family's in-order guard)
+    prev_hi = None
     if store.exists(LEDGER):
         led = store.read(LEDGER).agg(
             F.max("max_doc_id").alias("hi"),
@@ -1368,8 +1353,6 @@ def ingest_increment(
             )
             return IngestResult(batch_id, True, prior)
         prev_hi = led["hi"]
-    else:
-        prev_hi = None
 
     bounds = new_docs.agg(
         F.min("doc_id").alias("lo"),
@@ -1377,16 +1360,16 @@ def ingest_increment(
         F.count("*").alias("n"),
     ).first()
     if (
-        not allow_out_of_order
+        (simhash or store.exists("sh_signatures"))
         and prev_hi is not None
         and bounds["lo"] is not None
         and bounds["lo"] <= prev_hi
     ):
         raise ValueError(
             f"out-of-order batch: doc_id {bounds['lo']} <= absorbed "
-            f"max {prev_hi}; the ≡-one-shot contract needs monotone "
-            "ids — pass allow_out_of_order=True (from the store's "
-            "first batch) for the repairing ingest path"
+            f"max {prev_hi}; the SimHash family has no repair or "
+            "retraction path, so a store holding it takes only batches "
+            "whose ids all exceed every absorbed id"
         )
 
     # JVM-native literal row (spark.range + lit), NOT createDataFrame: a
@@ -1423,8 +1406,7 @@ def ingest_increment(
 
         # 2. exact dedup vs the ex_docs family: a batch doc survives iff
         # it is its content hash's keeper (min id over corpus ∪ batch —
-        # with monotone ids a corpus copy always wins; out-of-order, a
-        # smaller-id late twin WINS and the stored keeper is demoted)
+        # a smaller-id late twin WINS and the stored keeper is demoted)
         retired: DataFrame | None = None
         if not store.exists("ex_docs"):
             # the build returns the (materialized) groups frame: no
@@ -1435,20 +1417,19 @@ def ingest_increment(
                 eager=True
             )
             first_exact = False
-            if allow_out_of_order:
-                # keeper re-election: stored keepers outvoted by a
-                # smaller batch id — computed against the PRE-extend
-                # group table, bounded by the batch's hash fan-out
-                retired = (
-                    store.read("ex_groups")
-                    .withColumnRenamed("keep_doc_id", "old_keep")
-                    .join(F.broadcast(groups), "text_md5")
-                    .filter(F.col("old_keep") != F.col("keep_doc_id"))
-                    .select(F.col("old_keep").alias("doc_id"))
-                    .localCheckpoint(eager=True)
-                )
-                if not retired.head(1):
-                    retired = None
+            # keeper re-election: stored keepers outvoted by a smaller
+            # batch id — computed against the PRE-extend group table,
+            # bounded by the batch's hash fan-out
+            retired = (
+                store.read("ex_groups")
+                .withColumnRenamed("keep_doc_id", "old_keep")
+                .join(F.broadcast(groups), "text_md5")
+                .filter(F.col("old_keep") != F.col("keep_doc_id"))
+                .select(F.col("old_keep").alias("doc_id"))
+                .localCheckpoint(eager=True)
+            )
+            if not retired.head(1):
+                retired = None
         survivors = scrubbed.join(
             groups.select(F.col("keep_doc_id").alias("doc_id")),
             "doc_id",
@@ -1457,9 +1438,7 @@ def ingest_increment(
         if not first_exact:
             inc.extend_exact_index(store, scrubbed, groups)
         if retired is not None:
-            _tombstone(
-                store, retired, batch_id, "exact", ooo=True, permanent=True
-            )
+            _tombstone(store, retired, batch_id, "exact", permanent=True)
             if minhash and store.exists("mh_bands"):
                 touched = inc.retire_from_minhash(store, retired)
 
@@ -1492,22 +1471,20 @@ def ingest_increment(
                 )
         stages.append(("exact_deduped", survivors))
 
-        # out-of-order mode persists every survivor's pre-span text —
-        # the input a later batch's retroactive span flags re-dedup
-        if allow_out_of_order:
-            store.merge_insert_missing(
-                CURATED_PRE,
-                survivors.withColumn("batch_id", F.lit(batch_id)),
-                ["doc_id"],
-            )
+        # every survivor's pre-span text is persisted — the input a later
+        # batch's retroactive span flags (and a retraction) re-dedup
+        store.merge_insert_missing(
+            CURATED_PRE,
+            survivors.withColumn("batch_id", F.lit(batch_id)),
+            ["doc_id"],
+        )
 
         # 3. ExactSubstr span removal vs the sp_occs family + length
-        # floor.  Monotone ids -> the flag set never reaches back into
-        # stored docs, so applying the batch's own flags suffices;
-        # out-of-order, the increment's smaller keys can demote stored
-        # occurrences — those retro flags repair the affected LIVE
-        # curated docs below (flags are MONOTONE, so the accumulated
-        # sp_flags converges to the one-shot flag set in any order).
+        # floor.  The batch's own flags curate the batch; the
+        # increment's smaller keys can also demote stored occurrences —
+        # those retro flags repair the affected curated docs below
+        # (flags are MONOTONE, so the accumulated sp_flags converges to
+        # the one-shot flag set in any batch order).
         if span is not None:
             sp_groups = None
             if not store.exists("sp_occs"):
@@ -1520,7 +1497,7 @@ def ingest_increment(
                 survivors.select("doc_id"), "doc_id", "leftsemi"
             )
             retro = None
-            if allow_out_of_order and sp_groups is not None:
+            if sp_groups is not None:
                 # flags the stored corpus has not seen yet, for docs
                 # outside the batch — pinned BEFORE the extend below
                 # rewrites the tables they scan
@@ -1585,13 +1562,12 @@ def ingest_increment(
                 inc.build_cluster_index(
                     store, pairs.filter(F.col("jaccard") >= cluster_threshold)
                 )
-                remap = None
             else:
                 pairs = inc.dedup_increment(
                     store, hashed, n_hashes, band_size
                 ).localCheckpoint(eager=True)
                 inc.extend_index(store, hashed, pairs, n_hashes, band_size)
-                remap = inc.extend_clusters(
+                inc.extend_clusters(
                     store, pairs.filter(F.col("jaccard") >= cluster_threshold)
                 )
             # only the BATCH docs' labels matter here (anti-join on
@@ -1605,47 +1581,28 @@ def ingest_increment(
                 "left_anti",
             ).localCheckpoint(eager=True)
             stages.append(("near_deduped", kept))
-            if allow_out_of_order:
-                # general demotion sweep: any LIVE curated doc no longer
-                # its cluster's minimum (a late smaller-id doc founding
-                # a cluster around a stored keeper changes no label, so
-                # the monotone remap check below would miss it).
-                # Skipped when the batch produced no ≥-threshold edge:
-                # extend_clusters was a no-op then, no label changed,
-                # and any rebuild path runs its own sweep — so a quiet
-                # batch pays one cheap probe instead of the labels-join
-                # + tombstone merge.
-                th_pairs = pairs.filter(
-                    F.col("jaccard") >= cluster_threshold
+            # demotion sweep: any LIVE curated doc no longer its
+            # cluster's minimum — a merge's old keeper, or a stored
+            # keeper a late smaller-id doc founded a cluster around.
+            # Skipped when the batch produced no ≥-threshold edge:
+            # extend_clusters was a no-op then, no label changed, and any
+            # rebuild path runs its own sweep — so a quiet batch pays one
+            # cheap probe instead of the labels-join + tombstone merge.
+            th_pairs = pairs.filter(F.col("jaccard") >= cluster_threshold)
+            if th_pairs.head(1):
+                # clusters this batch touched = the final (post-extend)
+                # labels of its pair endpoints — a bucket-pruned lookup;
+                # the sweep restricts to their members (see
+                # _sweep_cluster_demotions' soundness argument)
+                eps = _pair_endpoints(th_pairs, cluster_threshold)
+                touched = (
+                    store.read_for_keys("cc_labels", eps)
+                    .join(F.broadcast(eps), "doc_id", "leftsemi")
+                    .select("cluster_id")
+                    .distinct()
                 )
-                if th_pairs.head(1):
-                    # clusters this batch touched = the final (post-
-                    # extend) labels of its pair endpoints — a bucket-
-                    # pruned lookup; the sweep restricts to their
-                    # members (see _sweep_cluster_demotions' soundness
-                    # argument)
-                    eps = _pair_endpoints(th_pairs, cluster_threshold)
-                    touched = (
-                        store.read_for_keys("cc_labels", eps)
-                        .join(F.broadcast(eps), "doc_id", "leftsemi")
-                        .select("cluster_id")
-                        .distinct()
-                    )
-                    demoted = _sweep_cluster_demotions(
-                        store, batch_id, touched=touched
-                    )
-            elif remap is not None:
-                # a merge's old keeper (old cluster minimum) is demoted;
-                # batch-local labels are excluded (handled above)
-                demoted = (
-                    remap.select(F.col("old_label").alias("doc_id"))
-                    .join(new_docs.select("doc_id"), "doc_id", "left_anti")
-                    .localCheckpoint(eager=True)
-                )
-                store.merge_insert_missing(
-                    TOMBSTONES,
-                    demoted.withColumn("batch_id", F.lit(batch_id)),
-                    ["doc_id"],
+                demoted = _sweep_cluster_demotions(
+                    store, batch_id, touched=touched
                 )
 
         # 4b. SimHash family (index + pair maintenance only).  Width-
@@ -1848,7 +1805,7 @@ def retract_documents(
       retracted doc's spans are unflagged (``sp_flag_drops``,
       merge-on-read) and the affected stored docs' curated texts are
       rebuilt from ``cur_pre`` — text GROWS back, the one repair
-      direction out-of-order ingest never needs.  A later batch
+      direction ingest never needs.  A later batch
       re-duplicating the span re-asserts the flag (the drop row is
       removed and the repair re-fires — pinned in tests).
     - **Cluster mate resurrection**: docs demoted only by a retracted
@@ -1863,9 +1820,9 @@ def retract_documents(
       commit (the text is gone, not merely masked); index-side masks
       are folded by ``compact_store``.
 
-    Requires a snapshot-isolation store ingested with
-    ``allow_out_of_order=True`` (the repair tables — ``cur_pre``,
-    retraction causes, merge-on-read drops — are this machinery).
+    Requires a snapshot-isolation store without the SimHash family (no
+    retraction path); every ingest batch keeps the repair tables this
+    reads (``cur_pre``, tombstone causes, merge-on-read drops).
     Redelivery of the same ``retract_id`` is a no-op (``cur_retractions``
     ledger); a crash publishes nothing and the replay converges.
 
@@ -1912,12 +1869,11 @@ def retract_documents(
             "multi-family retraction must publish atomically (a plain "
             "store's partial replay could resurrect a deleted doc)"
         )
-    if store.exists(CURATED) and not store.exists(CURATED_PRE):
+    _require_repair_tables(store)
+    if store.exists("sh_signatures"):
         raise ValueError(
-            "retract_documents needs the repair tables "
-            f"({CURATED_PRE}) — ingest this store with "
-            "allow_out_of_order=True (any batch order, including "
-            "monotone) to enable targeted deletion"
+            "retract_documents cannot serve a store holding the SimHash "
+            "family: it has no retraction path"
         )
 
     if store.exists(RETRACTIONS):
@@ -1989,9 +1945,7 @@ def retract_documents(
         # Three independent single-table writes: on a snapshot store
         # they overlap the exact-family recompute below (any later read
         # of cur_drops / doc_retractions barriers automatically)
-        _tombstone(
-            store, r_ids, retract_id, "retracted", ooo=True, permanent=True
-        )
+        _tombstone(store, r_ids, retract_id, "retracted", permanent=True)
         _mask_insert(store, inc.DOC_RETRACTIONS, r_ids, "doc_id")
         # per-id compliance receipt (the log row below records counts;
         # audits and doc_history want the ids) — keyed insert, so a
@@ -2253,20 +2207,19 @@ def retract_documents(
             # 'cluster' tombstones stay — cluster demotion state is
             # managed by the relabel + the demotion sweep.
             if store.exists(TOMBSTONES):
-                tomb = store.read(TOMBSTONES)
-                if "cause" in tomb.columns:
-                    retired_mates = (
-                        tomb.filter(F.col("cause") == "exact")
-                        .select("doc_id")
-                        .join(F.broadcast(promoted), "doc_id", "leftsemi")
-                        .localCheckpoint(eager=True)
-                    )
-                    if retired_mates.head(1):
-                        store.delete_scope(TOMBSTONES, retired_mates, ["doc_id"])
-                        if store.exists("mh_doc_drops"):
-                            store.delete_scope(
-                                "mh_doc_drops", retired_mates, ["doc_id"]
-                            )
+                retired_mates = (
+                    store.read(TOMBSTONES)
+                    .filter(F.col("cause") == "exact")
+                    .select("doc_id")
+                    .join(F.broadcast(promoted), "doc_id", "leftsemi")
+                    .localCheckpoint(eager=True)
+                )
+                if retired_mates.head(1):
+                    store.delete_scope(TOMBSTONES, retired_mates, ["doc_id"])
+                    if store.exists("mh_doc_drops"):
+                        store.delete_scope(
+                            "mh_doc_drops", retired_mates, ["doc_id"]
+                        )
         if rebuild is not None:
             rebuild = rebuild.distinct().localCheckpoint(eager=True)
             if rebuild.head(1):
@@ -2498,7 +2451,7 @@ def _mask_insert(store: TableStore, table: str, ids: DataFrame, key: str) -> Non
 
 def compact_store(store: TableStore) -> None:
     """Fold EVERY merge-on-read mask into its base table — the one-call
-    OPTIMIZE analog for a store that has absorbed out-of-order repairs
+    OPTIMIZE analog for a store that has absorbed late-batch repairs
     and/or retractions.  Extends ``compact_minhash_drops`` (the mh_*
     masks) with:
 
@@ -2688,43 +2641,42 @@ def _compact_folds(store: TableStore, _unfolded) -> None:
             )
     if store.exists(TOMBSTONES):
         tomb = store.read(TOMBSTONES)
-        if "cause" in tomb.columns:
-            # only 'exact' and 'retracted' are final: an exact-retired
-            # mate revives through mate PROMOTION (its text comes from
-            # the retracted demoter's cur_pre row, not its own), and a
-            # retracted doc can never revive at all.  'floor' is
-            # revivable (flag retraction regrows the text from the
-            # doc's OWN cur_pre row — ADVICE r7), so its tombstone and
-            # cur_pre row must survive the fold.
-            perm = (
-                tomb.filter(F.col("cause").isin("exact", "retracted"))
-                .select("doc_id")
-                .localCheckpoint(eager=True)
-            )
-            if perm.head(1):
-                # the perm docs' tombstones disappear below, so their
-                # (query-masked) BM25 rows must physically leave too —
-                # old text captured before the curated prune
-                old_bm = None
-                if store.exists(rt.BM25_DOC_LEN):
-                    old_bm = (
-                        store.read_for_keys(CURATED, perm, "doc_id")
-                        .join(F.broadcast(perm), "doc_id", "leftsemi")
-                        .select("doc_id", "text")
-                        .localCheckpoint(eager=True)
-                    )
-                store.prune_keys(CURATED, perm, ["doc_id"])
-                store.prune_keys(CURATED_PRE, perm, ["doc_id"])
-                store.overwrite(
-                    TOMBSTONES,
-                    tomb.filter(~F.col("cause").isin("exact", "retracted")),
+        # only 'exact' and 'retracted' are final: an exact-retired mate
+        # revives through mate PROMOTION (its text comes from the
+        # retracted demoter's cur_pre row, not its own), and a retracted
+        # doc can never revive at all.  'floor' is revivable (flag
+        # retraction regrows the text from the doc's OWN cur_pre row —
+        # ADVICE r7), so its tombstone and cur_pre row must survive the
+        # fold.
+        perm = (
+            tomb.filter(F.col("cause").isin("exact", "retracted"))
+            .select("doc_id")
+            .localCheckpoint(eager=True)
+        )
+        if perm.head(1):
+            # the perm docs' tombstones disappear below, so their
+            # (query-masked) BM25 rows must physically leave too — old
+            # text captured before the curated prune
+            old_bm = None
+            if store.exists(rt.BM25_DOC_LEN):
+                old_bm = (
+                    store.read_for_keys(CURATED, perm, "doc_id")
+                    .join(F.broadcast(perm), "doc_id", "leftsemi")
+                    .select("doc_id", "text")
+                    .localCheckpoint(eager=True)
                 )
-                if old_bm is not None:
-                    store.submit_op(
-                        lambda: rt.remove_bm25_docs(store, old_bm),
-                        reads=tuple(rt.BM25_TABLES),
-                        writes=tuple(rt.BM25_TABLES),
-                    )
+            store.prune_keys(CURATED, perm, ["doc_id"])
+            store.prune_keys(CURATED_PRE, perm, ["doc_id"])
+            store.overwrite(
+                TOMBSTONES,
+                tomb.filter(~F.col("cause").isin("exact", "retracted")),
+            )
+            if old_bm is not None:
+                store.submit_op(
+                    lambda: rt.remove_bm25_docs(store, old_bm),
+                    reads=tuple(rt.BM25_TABLES),
+                    writes=tuple(rt.BM25_TABLES),
+                )
     # sp_flag_drops is the ONE transient retraction mask (its effect —
     # flag rows deleted — is fully captured by the fold; a later batch
     # re-duplicating the span re-asserts the flag as a fresh insert).

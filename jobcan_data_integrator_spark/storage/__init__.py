@@ -1659,9 +1659,12 @@ class TableStore:
         # in-process writer composing on this root (they are
         # referenced by no manifest yet — without this, the first
         # publisher's GC would delete a concurrent instance's
-        # in-flight batch data)
+        # in-flight batch data).  Not this instance's own: every dir
+        # its commit still needs is in ``new_tables``, and the rest are
+        # the commit's superseded intermediate writes.
         for inst in list(self._lease_holders()):
-            keep |= inst._pending_dirs()
+            if inst is not self:
+                keep |= inst._pending_dirs()
         for p in self.root.glob("*.v-*"):
             if p.name not in keep:
                 shutil.rmtree(p, ignore_errors=True)

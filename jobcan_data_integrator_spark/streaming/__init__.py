@@ -575,13 +575,11 @@ def ingest_documents_stream(
     redelivers an epoch after a foreachBatch failure, and the
     orchestrator's ``ig_batches`` ledger turns the redelivery into a
     no-op (a crash BEFORE the snapshot publish left nothing visible,
-    so the retry recomputes against the pre-batch state).  Micro-batch
-    order satisfies the orchestrator's monotone-id contract whenever
-    the source assigns ids monotonically — the same assumption as the
-    reference's request-id cursor; a source that can deliver late ids
-    passes ``allow_out_of_order=True`` through for the repairing path.
+    so the retry recomputes against the pre-batch state).  Micro-batches
+    may deliver ids in any order: the orchestrator repairs a late id's
+    effects on absorbed docs, as it does for every batch.
     ``ingest_kwargs`` pass through to ``ingest_increment`` (span,
-    minhash, pack_budget, allow_out_of_order, ...).
+    minhash, pack_budget, ...).
     """
     from jobcan_data_integrator_spark.operators.ingest import (
         ingest_increment,

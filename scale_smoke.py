@@ -286,9 +286,10 @@ def ingest_experiment(spark, sf_dir: str, n_buckets: int, workdir: Path) -> floa
 
     The probe batch is the SAME 20 source documents (sf0.1 doc_id < 20)
     in both runs, re-keyed above the seeded corpus's absorbed high-water
-    mark (the orchestrator's monotone-id contract).  Three sequential
-    probe batches (each must carry fresh monotone ids — a replayed
-    batch_id short-circuits by design), median taken; each probe's cost
+    mark, so this is the in-order case: the repairing path runs, but no
+    repair fires.  Three sequential probe batches (each carries fresh
+    ids under a fresh batch_id — a replayed batch_id short-circuits by
+    design), median taken; each probe's cost
     includes extending every family, i.e. the real steady-state
     per-batch cost.  Bucket count scales with the corpus like the
     dedup probe (bucket SIZE held constant)."""
@@ -347,8 +348,8 @@ def ingest_ooo_experiment(
     spark, sf_dir: str, n_buckets: int, workdir: Path
 ) -> tuple[float, dict]:
     """Median seconds for one fixed ~20-doc OUT-OF-ORDER batch through
-    ``ingest_increment(allow_out_of_order=True)`` against a store
-    seeded (same mode) with the rest of ``sf_dir``'s corpus.
+    ``ingest_increment`` against a store seeded with the rest of
+    ``sf_dir``'s corpus.
 
     The corpus minus three id-combs (doc_id % 250 ∈ {13, 14, 15})
     seeds the store; each comb then arrives as a late batch capped at
@@ -385,10 +386,7 @@ def ingest_ooo_experiment(
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     held = F.pmod(F.col("doc_id"), F.lit(250)).isin(13, 14, 15)
-    ingest_increment(
-        store, docs.filter(~held), "base", span=8, minhash=True,
-        allow_out_of_order=True,
-    )
+    ingest_increment(store, docs.filter(~held), "base", span=8, minhash=True)
     # label-read instrumentation (round 10): per late batch, how is the
     # corpus-sized cc_labels table READ?  The delta path's endpoint /
     # new-node lookups must be bucket-pruned (counted via
@@ -422,10 +420,7 @@ def ingest_ooo_experiment(
                 .localCheckpoint(eager=True)
             )
             t0 = time.perf_counter()
-            ingest_increment(
-                store, batch, f"late-{i}", span=8, minhash=True,
-                allow_out_of_order=True,
-            )
+            ingest_increment(store, batch, f"late-{i}", span=8, minhash=True)
             times.append(time.perf_counter() - t0)
             spark.catalog.clearCache()
     finally:
@@ -522,9 +517,7 @@ def retract_experiment(
         **index_layout(buckets, minhash_pair_bands(1 << 20)),
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    ingest_increment(
-        store, docs, "base", span=8, minhash=True, allow_out_of_order=True,
-    )
+    ingest_increment(store, docs, "base", span=8, minhash=True)
     times = []
     for i, residue in enumerate((13, 14, 15)):
         ids = (

@@ -40,12 +40,8 @@ def test_doc_history_timeline_and_receipts(spark, tmp_path):
     store = TableStore(
         spark, tmp_path, write_partitions=2, snapshot_isolation=True
     )
-    ingest_increment(
-        store, _mk(spark, BATCH1), "b1", allow_out_of_order=True, **CFG
-    )
-    ingest_increment(
-        store, _mk(spark, BATCH2), "b2", allow_out_of_order=True, **CFG
-    )
+    ingest_increment(store, _mk(spark, BATCH1), "b1", **CFG)
+    ingest_increment(store, _mk(spark, BATCH2), "b2", **CFG)
     retract_documents(
         store, spark.createDataFrame([(2,)], "doc_id long"), "rt-1", **CFG
     )
@@ -95,7 +91,7 @@ def test_doc_history_empty_store_and_unknown_ids(spark, tmp_path):
         == 0
     )
     ingest_increment(store, _mk(spark, BATCH1), "b1", **CFG)
-    # unknown id: empty; known id: curated only (monotone store, no
-    # cause column in its tombstones)
+    # unknown id: empty; known id: curated only (a single batch demotes
+    # no stored doc, so no tombstone event)
     ev = _events(store, spark, [1, 999])
     assert set(ev) == {(1, "curated", "b1", None)}

@@ -74,12 +74,14 @@ def _mk(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def _ingest_all(spark, root, batches=None):
+def _ingest(spark, root, batches=(BATCH1, BATCH2, BATCH3)):
+    """Ingest ``batches`` in the given order, as b1, b2, ... — any id
+    order: late batches are repaired in place."""
     store = TableStore(
         spark, root, write_partitions=2, snapshot_isolation=True
     )
     results = []
-    for i, rows in enumerate(batches or (BATCH1, BATCH2, BATCH3), 1):
+    for i, rows in enumerate(batches, 1):
         results.append(
             ingest_increment(
                 store,
@@ -128,7 +130,7 @@ def _rows(df, *cols):
 
 
 def test_n_batches_equal_one_shot(spark, tmp_path):
-    store, results = _ingest_all(spark, tmp_path)
+    store, results = _ingest(spark, tmp_path)
     want = _rows(_one_shot(spark).kept, "doc_id", "text")
     got = _rows(read_curated(store), "doc_id", "text")
     assert got == want
@@ -145,7 +147,7 @@ def test_n_batches_equal_one_shot(spark, tmp_path):
 def test_pairs_and_clusters_match_full_corpus(spark, tmp_path):
     from jobcan_data_integrator_spark.operators.dedup import dup_clusters
 
-    store, _ = _ingest_all(spark, tmp_path)
+    store, _ = _ingest(spark, tmp_path)
     # full-corpus pairs over the one-shot span-deduped text
     one = _one_shot(spark)
     span_deduped = dict(one.stages)["near_deduped"]
@@ -167,7 +169,7 @@ def test_pairs_and_clusters_match_full_corpus(spark, tmp_path):
 
 
 def test_redelivered_batch_is_noop(spark, tmp_path):
-    store, _ = _ingest_all(spark, tmp_path)
+    store, _ = _ingest(spark, tmp_path)
     before = _rows(read_curated(store), "doc_id", "text")
     res = ingest_increment(
         store,
@@ -184,18 +186,12 @@ def test_redelivered_batch_is_noop(spark, tmp_path):
     assert _rows(res.docs, "doc_id") <= {(d,) for d, _ in BATCH2}
 
 
-def test_out_of_order_batch_raises(spark, tmp_path):
-    store, _ = _ingest_all(spark, tmp_path, batches=(BATCH1,))
-    with pytest.raises(ValueError, match="out-of-order"):
-        ingest_increment(store, _mk(spark, [(2, "x y z")]), "late")
-
-
 def test_crash_mid_batch_publishes_nothing_then_replays(
     spark, tmp_path, monkeypatch
 ):
     from jobcan_data_integrator_spark.operators import incremental as inc
 
-    store, _ = _ingest_all(spark, tmp_path, batches=(BATCH1,))
+    store, _ = _ingest(spark, tmp_path, (BATCH1,))
     before = _rows(read_curated(store), "doc_id", "text")
 
     real = inc.extend_index
@@ -362,29 +358,7 @@ def test_streaming_ingest_equals_one_shot(spark, tmp_path):
     assert _rows(read_curated(store), "doc_id", "text") == want
 
 
-# -- out-of-order ingest (allow_out_of_order=True) -------------------------
-
-
-def _ingest_ooo(spark, root, order, names=None):
-    store = TableStore(
-        spark, root, write_partitions=2, snapshot_isolation=True
-    )
-    results = []
-    for i, rows in enumerate(order, 1):
-        results.append(
-            ingest_increment(
-                store,
-                _mk(spark, rows),
-                (names or [f"o{j}" for j in range(1, len(order) + 1)])[i - 1],
-                span=SPAN,
-                min_tokens=MIN_TOKENS,
-                n_hashes=NH,
-                band_size=BS,
-                cluster_threshold=THRESH,
-                allow_out_of_order=True,
-            )
-        )
-    return store, results
+# -- late batches (ids below the absorbed high-water mark) -----------------
 
 
 def _assert_equals_one_shot(spark, store):
@@ -421,14 +395,14 @@ def test_shuffled_batches_equal_one_shot(spark, tmp_path, order):
     exact keeper re-election (late smaller-id twin demotes the stored
     keeper), retroactive span flags repairing stored curated texts from
     cur_pre, MinHash re-signing, and the cluster demotion sweep."""
-    store, _ = _ingest_ooo(spark, tmp_path, order)
+    store, _ = _ingest(spark, tmp_path, order)
     _assert_equals_one_shot(spark, store)
 
 
 def test_ooo_monotone_order_also_works(spark, tmp_path):
-    """allow_out_of_order is a superset: the natural order converges
-    identically (and maintains cur_pre throughout)."""
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH1, BATCH2, BATCH3))
+    """The natural (in-order) batch order converges identically through
+    the same path, and maintains cur_pre throughout."""
+    store, _ = _ingest(spark, tmp_path, (BATCH1, BATCH2, BATCH3))
     _assert_equals_one_shot(spark, store)
     assert store.exists("cur_pre")
 
@@ -437,7 +411,7 @@ def test_ooo_exact_demotion_tombstones_and_retires(spark, tmp_path):
     """A late smaller-id exact twin demotes the stored keeper: the old
     keeper is tombstoned with a PERMANENT cause and masked from the
     MinHash family, and the twin takes its place in the curated set."""
-    store, _ = _ingest_ooo(
+    store, _ = _ingest(
         spark, tmp_path, ([(21, _t("u", 0, 10))], [(1, _t("u", 0, 10))])
     )
     tomb = {
@@ -455,7 +429,7 @@ def test_ooo_retro_span_repair_rewrites_stored_text(spark, tmp_path):
     with the span removed."""
     big = (31, _t("u", 3, 10) + " " + _t("z", 0, 8))
     small = (1, _t("u", 0, 10))
-    store, _ = _ingest_ooo(spark, tmp_path, ([big], [small]))
+    store, _ = _ingest(spark, tmp_path, ([big], [small]))
     got = dict(read_curated(store).select("doc_id", "text").collect())
     assert got[31] == _t("z", 0, 8)       # span u3..u9 removed
     assert got[1] == _t("u", 0, 10)       # the new min keeps its text
@@ -470,7 +444,7 @@ def test_ooo_resurrection_after_demoter_retires(spark, tmp_path):
     under the NEW keeper 4 (one-shot agrees: cluster {4, 41})."""
     T40 = _t("q", 0, 5) + " X " + _t("q", 5, 10)
     T41 = _t("q", 0, 10)
-    store, _ = _ingest_ooo(
+    store, _ = _ingest(
         spark, tmp_path, ([(40, T40)], [(41, T41)], [(4, T40)])
     )
     one = curate_corpus(
@@ -482,30 +456,6 @@ def test_ooo_resurrection_after_demoter_retires(spark, tmp_path):
     assert _rows(read_curated(store), "doc_id", "text") == _rows(
         one.kept, "doc_id", "text"
     )
-
-
-def test_ooo_mode_must_be_consistent(spark, tmp_path):
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH1,))
-    with pytest.raises(ValueError, match="allow_out_of_order"):
-        ingest_increment(store, _mk(spark, BATCH2), "m", span=SPAN)
-    store2 = TableStore(
-        spark, tmp_path / "mono", write_partitions=2, snapshot_isolation=True
-    )
-    ingest_increment(store2, _mk(spark, BATCH1), "b1", span=SPAN)
-    with pytest.raises(ValueError, match="cur_pre"):
-        ingest_increment(
-            store2, _mk(spark, BATCH2), "b2", span=SPAN,
-            allow_out_of_order=True,
-        )
-
-
-def test_ooo_rejects_simhash(spark, tmp_path):
-    store = TableStore(spark, tmp_path, snapshot_isolation=True)
-    with pytest.raises(ValueError, match="simhash"):
-        ingest_increment(
-            store, _mk(spark, BATCH1), "b1",
-            simhash=True, allow_out_of_order=True,
-        )
 
 
 def test_repack_corpus_equals_one_shot_pack(spark, tmp_path):
@@ -598,7 +548,7 @@ def test_compact_minhash_drops_preserves_reads(spark, tmp_path):
 
     # the 321 order exercises retirement (exact demotion of 21 by 1)
     # and repair re-signing (31's text rebuilt) -> all three drop tables
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH3, BATCH2, BATCH1))
+    store, _ = _ingest(spark, tmp_path, (BATCH3, BATCH2, BATCH1))
     assert any(store.exists(t) for t in OOO_DROP_TABLES)
     before_pairs = _rows(read_pairs(store), "doc_a", "doc_b", "jaccard")
     probe = hashed_shingle_rows(
@@ -684,7 +634,7 @@ def test_ooo_random_corpora_and_orders_equal_one_shot(spark, tmp_path, seed):
         rows[a:b] for a, b in zip([0] + cuts, cuts + [len(rows)])
     ]
     rng.shuffle(batches)
-    store, _ = _ingest_ooo(spark, tmp_path, batches)
+    store, _ = _ingest(spark, tmp_path, batches)
 
     one = curate_corpus(
         _mk(spark, rows),
@@ -739,7 +689,6 @@ def test_streaming_ooo_crash_restart_converges(spark, tmp_path, monkeypatch):
             n_hashes=NH,
             band_size=BS,
             cluster_threshold=THRESH,
-            allow_out_of_order=True,
         ).start()
         q.awaitTermination()
 
@@ -791,7 +740,7 @@ def test_streaming_ooo_crash_restart_converges(spark, tmp_path, monkeypatch):
 
 
 def test_streaming_ingest_out_of_order_drains(spark, tmp_path):
-    """The streaming face composes with allow_out_of_order: the SECOND
+    """The streaming face takes late ids: the SECOND
     drain delivers ids interleaved below the first drain's — the repair
     path runs inside foreachBatch and the result still equals the
     one-shot curation."""
@@ -819,7 +768,6 @@ def test_streaming_ingest_out_of_order_drains(spark, tmp_path):
             n_hashes=NH,
             band_size=BS,
             cluster_threshold=THRESH,
-            allow_out_of_order=True,
         ).start()
         q.awaitTermination()
 

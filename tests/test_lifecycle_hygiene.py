@@ -1,18 +1,30 @@
-"""Two lifecycle invariants of the curation store, on small corpora:
+"""Lifecycle invariants of the curation store, on small corpora:
 
 - ``compact_store`` folds the MinHash masks and the retraction masks in
   ONE snapshot commit, so ``rollback(version - 1)`` undoes a whole
   compaction;
+- a snapshot commit's publish leaves only the version dirs that a
+  retained manifest references — none of the commit's own superseded
+  intermediate writes;
 - the exact, span and MinHash families' increment + extend steps leave
   nothing in the session's cache manager — a long-lived session that
-  ingests batch after batch pins no per-batch frame.
+  ingests batch after batch pins no per-batch frame;
+- ingest has one mode: every store it writes is retractable, the
+  SimHash family alone refuses late batches and retraction, and a store
+  in the removed monotone-only layout (``cur_docs`` without
+  ``cur_pre``) is refused.
 """
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
+
 from jobcan_data_integrator_spark.operators import incremental as inc
+from jobcan_data_integrator_spark.operators.curate import curate_corpus
 from jobcan_data_integrator_spark.operators.ingest import (
     compact_store,
+    ingest_increment,
     read_curated,
     retract_documents,
 )
@@ -26,10 +38,19 @@ from test_ingest import (
     NH,
     SPAN,
     THRESH,
-    _ingest_ooo,
+    _ingest,
     _mk,
+    _near_dup_cb,
     _rows,
     _t,
+)
+
+CFG = dict(
+    span=SPAN,
+    min_tokens=MIN_TOKENS,
+    n_hashes=NH,
+    band_size=BS,
+    cluster_threshold=THRESH,
 )
 
 
@@ -37,7 +58,7 @@ def test_compact_store_publishes_one_version(spark, tmp_path):
     # the late twin 1 demotes stored keeper 21 (an mh_doc_drops row);
     # retracting 22 adds a doc_retractions row (and masks 22's MinHash
     # rows too)
-    store, _ = _ingest_ooo(
+    store, _ = _ingest(
         spark,
         tmp_path,
         ([(21, _t("u", 0, 10)), (22, _t("w", 0, 10))], [(1, _t("u", 0, 10))]),
@@ -80,3 +101,80 @@ def test_family_increments_leave_no_cache(spark, tmp_path):
     inc.extend_index(store, hashed, pairs, NH, BS)
 
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_commit_gc_drops_its_own_superseded_dirs(spark, tmp_path):
+    store = TableStore(spark, tmp_path, write_partitions=1, snapshot_isolation=True)
+    with store.commit_bracket("v1"):
+        store.overwrite("t", spark.range(3))
+    with store.commit_bracket("v2"):
+        for n in (4, 5, 6):
+            store.overwrite("t", spark.range(n))
+
+    on_disk = {p.name for p in tmp_path.glob("t.v-*")}
+    history = {r["version"]: r["tables"] for r in store.snapshot_history()}
+    cur = store.current_snapshot()["version"]
+    referenced = {
+        history[v]["t"]
+        for v in range(cur - store.retain_snapshots, cur + 1)
+        if "t" in history.get(v, {})
+    }
+    assert on_disk == referenced
+    assert len(on_disk) == 2
+    assert store.read("t").count() == 6
+
+
+def test_in_order_store_is_retractable(spark, tmp_path):
+    store = TableStore(spark, tmp_path, write_partitions=2, snapshot_isolation=True)
+    for i, rows in enumerate((BATCH1, BATCH2), 1):
+        ingest_increment(store, _mk(spark, rows), f"b{i}", **CFG)
+
+    retract_documents(
+        store, spark.createDataFrame([(2,)], "doc_id long"), "rt-1", **CFG
+    )
+
+    survivors = [r for r in BATCH1 + BATCH2 if r[0] != 2]
+    one = curate_corpus(
+        _mk(spark, survivors),
+        span=SPAN,
+        min_tokens=MIN_TOKENS,
+        near_dup_pairs=_near_dup_cb,
+    )
+    assert _rows(read_curated(store), "doc_id", "text") == _rows(
+        one.kept, "doc_id", "text"
+    )
+
+
+def test_simhash_store_refuses_late_batches_and_retraction(spark, tmp_path):
+    store = TableStore(spark, tmp_path, write_partitions=2, snapshot_isolation=True)
+    sh = dict(CFG, minhash=False, simhash=True)
+    ingest_increment(store, _mk(spark, BATCH2), "b2", **sh)
+
+    late = _mk(spark, [(5, _t("late", 0, 10))])
+    with pytest.raises(ValueError, match="SimHash"):
+        ingest_increment(store, late, "late", **sh)
+    # the stored family alone is enough to refuse the late batch
+    with pytest.raises(ValueError, match="SimHash"):
+        ingest_increment(store, late, "late", **CFG)
+
+    ingest_increment(store, _mk(spark, [(40, _t("next", 0, 10))]), "b3", **sh)
+    assert (40,) in _rows(store.read("sh_signatures"), "doc_id")
+
+    with pytest.raises(ValueError, match="SimHash"):
+        retract_documents(
+            store, spark.createDataFrame([(23,)], "doc_id long"), "rt-1", **CFG
+        )
+
+
+def test_monotone_only_layout_is_refused(spark, tmp_path):
+    store = TableStore(spark, tmp_path, write_partitions=2, snapshot_isolation=True)
+    old_docs = _mk(spark, BATCH1).withColumn("batch_id", F.lit("b1"))
+    with store.commit_bracket("old"):
+        store.overwrite("cur_docs", old_docs)
+
+    with pytest.raises(ValueError, match="cur_pre"):
+        ingest_increment(store, _mk(spark, BATCH2), "b2", **CFG)
+    with pytest.raises(ValueError, match="monotone-only ingest mode is gone"):
+        ingest_increment(
+            store, _mk(spark, BATCH2), "b2", allow_out_of_order=False, **CFG
+        )

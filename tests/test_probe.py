@@ -105,9 +105,7 @@ def test_probe_empty_store_matches_first_ingest(spark, tmp_path):
 
 def test_probe_verdicts_and_dup_targets(spark, tmp_path):
     store = _store(spark, tmp_path)
-    ingest_increment(
-        store, _mk(spark, BATCH1), "b1", allow_out_of_order=True, **CFG
-    )
+    ingest_increment(store, _mk(spark, BATCH1), "b1", **CFG)
     retract_documents(
         store,
         spark.createDataFrame([(2,)], "doc_id long"),
@@ -179,9 +177,7 @@ def test_probe_contamination_from_span_index(spark, tmp_path):
 
     store = _store(spark, tmp_path)
     for i, rows in enumerate((BATCH1, BATCH2), 1):
-        ingest_increment(
-            store, _mk(spark, rows), f"b{i}", allow_out_of_order=True, **CFG
-        )
+        ingest_increment(store, _mk(spark, rows), f"b{i}", **CFG)
 
     bench = spark.createDataFrame(
         [

@@ -47,7 +47,7 @@ from test_ingest import (
     NH,
     SPAN,
     THRESH,
-    _ingest_ooo,
+    _ingest,
     _mk,
     _near_dup_cb,
     _random_corpus,
@@ -104,7 +104,7 @@ def test_retract_equals_one_shot_over_remaining(spark, tmp_path):
     near-dup cluster keeper (2, whose demoted mate 22 must RESURRECT):
     docs + pairs + labels land exactly on the one-shot curation of the
     remaining corpus."""
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH1, BATCH2, BATCH3))
+    store, _ = _ingest(spark, tmp_path, (BATCH1, BATCH2, BATCH3))
     res = _retract(store, _ids(spark, [1, 2]), "r1")
     assert not res.replayed
     assert _rows(res.retracted, "doc_id") == {(1,), (2,)}
@@ -123,7 +123,7 @@ def test_retract_span_owner_regrows_text(spark, tmp_path):
     31's curated text to its original."""
     big = (31, _t("u", 3, 10) + " " + _t("z", 0, 8))
     small = (1, _t("u", 0, 10))
-    store, _ = _ingest_ooo(spark, tmp_path, ([big], [small]))
+    store, _ = _ingest(spark, tmp_path, ([big], [small]))
     got = dict(read_curated(store).select("doc_id", "text").collect())
     assert got[31] == _t("z", 0, 8)  # shrunk while 1 was present
     res = _retract(store, _ids(spark, [1]), "r1")
@@ -142,7 +142,7 @@ def test_retract_revives_floor_tombstoned_doc(spark, tmp_path):
     run = _t("r", 0, SPAN)
     floored = (50, run + " t1 t2")  # 9 tokens; 2 < MIN_TOKENS once run goes
     flagger = (40, run + " s1 s2 s3")
-    store, _ = _ingest_ooo(spark, tmp_path, ([floored], [flagger]))
+    store, _ = _ingest(spark, tmp_path, ([floored], [flagger]))
     # 40 < 50 owns the run -> 50 repaired to "t1 t2" -> under the floor
     assert (50,) not in _rows(read_curated(store), "doc_id")
     tomb = {
@@ -167,7 +167,7 @@ def test_retract_loser_then_keeper_leaves_no_ghost(spark, tmp_path):
     group; retracting the keeper (1) afterwards finds NO mate left and
     the content vanishes entirely — the retracted loser must not be
     promotable."""
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH1, BATCH2, BATCH3))
+    store, _ = _ingest(spark, tmp_path, (BATCH1, BATCH2, BATCH3))
     res = _retract(store, _ids(spark, [21]), "r-loser")
     assert res.promoted is None
     _assert_store_equals(spark, store, [r for r in ALL if r[0] != 21])
@@ -187,7 +187,7 @@ def test_retract_reelects_previously_retired_mate(spark, tmp_path):
     Deleting that twin re-elects the mate BACK: tombstone and
     retirement resolved, curated row re-materialized, re-signed,
     re-labeled — caught originally by the 321-order compaction test."""
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH3, BATCH2, BATCH1))
+    store, _ = _ingest(spark, tmp_path, (BATCH3, BATCH2, BATCH1))
     # BATCH1's doc 1 demoted BATCH2's 21 (exact twin, larger id)
     tomb = {
         (r["doc_id"], r["cause"]) for r in store.read(TOMBSTONES).collect()
@@ -203,7 +203,7 @@ def test_retracted_id_never_reenters(spark, tmp_path):
     """A future batch carrying a retracted id is silently stripped of
     it: the ≡ contract becomes one-shot curation over union ∖ retracted
     even when the source redelivers the deleted doc."""
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH1, BATCH2))
+    store, _ = _ingest(spark, tmp_path, (BATCH1, BATCH2))
     _retract(store, _ids(spark, [2]), "r1")
     late = [(2, _t("v", 0, 10)), *BATCH3]  # 2 comes back in the feed
     ingest_increment(
@@ -215,7 +215,6 @@ def test_retracted_id_never_reenters(spark, tmp_path):
         n_hashes=NH,
         band_size=BS,
         cluster_threshold=THRESH,
-        allow_out_of_order=True,
     )
     _assert_store_equals(spark, store, [r for r in ALL if r[0] != 2])
 
@@ -226,7 +225,7 @@ def test_flag_reasserts_after_retraction(spark, tmp_path):
     is removed and the repair re-fires — the doc's text shrinks again."""
     big = (31, _t("u", 3, 10) + " " + _t("z", 0, 8))
     small = (1, _t("u", 0, 10))
-    store, _ = _ingest_ooo(spark, tmp_path, ([big], [small]))
+    store, _ = _ingest(spark, tmp_path, ([big], [small]))
     _retract(store, _ids(spark, [1]), "r1")
     got = dict(read_curated(store).select("doc_id", "text").collect())
     assert got[31] == big[1]  # regrown
@@ -241,7 +240,6 @@ def test_flag_reasserts_after_retraction(spark, tmp_path):
         n_hashes=NH,
         band_size=BS,
         cluster_threshold=THRESH,
-        allow_out_of_order=True,
     )
     _assert_store_equals(spark, store, [big, redup])
     got = dict(read_curated(store).select("doc_id", "text").collect())
@@ -249,7 +247,7 @@ def test_flag_reasserts_after_retraction(spark, tmp_path):
 
 
 def test_retract_redelivery_is_noop(spark, tmp_path):
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH1, BATCH2))
+    store, _ = _ingest(spark, tmp_path, (BATCH1, BATCH2))
     _retract(store, _ids(spark, [2]), "r1")
     before = _rows(read_curated(store), "doc_id", "text")
     res = _retract(store, _ids(spark, [3]), "r1")  # same retract_id
@@ -263,7 +261,7 @@ def test_retract_crash_publishes_nothing_then_replays(
 ):
     from jobcan_data_integrator_spark.operators import incremental as inc
 
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH1, BATCH2, BATCH3))
+    store, _ = _ingest(spark, tmp_path, (BATCH1, BATCH2, BATCH3))
     before = _rows(read_curated(store), "doc_id", "text")
 
     real = inc.retire_from_minhash
@@ -301,7 +299,7 @@ def test_retract_random_equals_one_shot(spark, tmp_path, seed):
     cuts = sorted(rng.sample(range(1, len(rows)), k - 1))
     batches = [rows[a:b] for a, b in zip([0] + cuts, cuts + [len(rows)])]
     rng.shuffle(batches)
-    store, _ = _ingest_ooo(spark, tmp_path, batches)
+    store, _ = _ingest(spark, tmp_path, batches)
 
     retract = rng.sample([d for d, _ in rows], max(2, len(rows) * 3 // 10))
     _retract(store, _ids(spark, retract), "rr")
@@ -316,13 +314,13 @@ def test_interleaved_ingest_retract_lifecycle(spark, tmp_path):
     retracted ones, including a near-dup of retracted content) → a
     second retraction — the store must land exactly on the one-shot
     curation of everything that arrived minus everything retracted."""
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH2, BATCH3))
+    store, _ = _ingest(spark, tmp_path, (BATCH2, BATCH3))
     _retract(store, _ids(spark, [22]), "r1")  # near-dup of (absent) 2
     late = [(1, _t("u", 0, 10)), (2, _t("v", 0, 10)), (3, _t("a", 0, 12))]
     ingest_increment(
         store, _mk(spark, late), "late",
         span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-        cluster_threshold=THRESH, allow_out_of_order=True,
+        cluster_threshold=THRESH,
     )
     _retract(store, _ids(spark, [1, 24]), "r2")  # keeper of 21 + merger
     survivors = [
@@ -340,7 +338,7 @@ def test_compact_store_preserves_reads_and_prunes(spark, tmp_path):
     (the takedown contract survives the fold)."""
     from jobcan_data_integrator_spark.operators import incremental as inc
 
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH3, BATCH2, BATCH1))
+    store, _ = _ingest(spark, tmp_path, (BATCH3, BATCH2, BATCH1))
     _retract(store, _ids(spark, [1, 2]), "r1")
     before_docs = _rows(read_curated(store), "doc_id", "text")
     before_pairs = _rows(
@@ -374,7 +372,7 @@ def test_compact_store_preserves_reads_and_prunes(spark, tmp_path):
     ingest_increment(
         store, _mk(spark, late), "post-compact",
         span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-        cluster_threshold=THRESH, allow_out_of_order=True,
+        cluster_threshold=THRESH,
     )
     _assert_store_equals(
         spark, store, [r for r in ALL if r[0] not in (1, 2)] + late
@@ -389,14 +387,14 @@ def test_redelivered_retracted_id_never_reenters_after_compact(
     folded the masks must still be stripped (the permanent
     doc_retractions rows survive the fold and the redelivery guard
     keeps consulting them)."""
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH1, BATCH2))
+    store, _ = _ingest(spark, tmp_path, (BATCH1, BATCH2))
     _retract(store, _ids(spark, [2]), "r1")
     compact_store(store)
     late = [(2, _t("v", 0, 10)), *BATCH3]  # 2 comes back in the feed
     ingest_increment(
         store, _mk(spark, late), "late",
         span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-        cluster_threshold=THRESH, allow_out_of_order=True,
+        cluster_threshold=THRESH,
     )
     _assert_store_equals(spark, store, [r for r in ALL if r[0] != 2])
 
@@ -411,7 +409,7 @@ def test_retract_revives_floor_tombstoned_doc_after_compact(
     run = _t("r", 0, SPAN)
     floored = (50, run + " t1 t2")
     flagger = (40, run + " s1 s2 s3")
-    store, _ = _ingest_ooo(spark, tmp_path, ([floored], [flagger]))
+    store, _ = _ingest(spark, tmp_path, ([floored], [flagger]))
     assert (50,) not in _rows(read_curated(store), "doc_id")
 
     compact_store(store)
@@ -432,7 +430,7 @@ def test_retract_promotes_exact_mate_after_compact(spark, tmp_path):
     (final causes) — but mate promotion must still work after the fold,
     because the promoted text comes from the retracted demoter's OWN
     cur_pre row and the mate's ex_docs group membership survives."""
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH3, BATCH2, BATCH1))
+    store, _ = _ingest(spark, tmp_path, (BATCH3, BATCH2, BATCH1))
     tomb = {
         (r["doc_id"], r["cause"]) for r in store.read(TOMBSTONES).collect()
     }
@@ -455,7 +453,7 @@ def test_compact_watermark_does_not_retrigger(spark, tmp_path):
         maybe_compact_store,
     )
 
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH1, BATCH2))
+    store, _ = _ingest(spark, tmp_path, (BATCH1, BATCH2))
     _retract(store, _ids(spark, [2]), "r1", auto_compact_bytes=1)
     # the retraction auto-compacted at threshold 1; the permanent mask
     # is non-empty but recorded as folded -> no re-trigger
@@ -479,7 +477,7 @@ def test_auto_compact_triggers_on_threshold(spark, tmp_path):
         ingest_increment(
             store, _mk(spark, rows), f"o{i}",
             span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-            cluster_threshold=THRESH, allow_out_of_order=True,
+            cluster_threshold=THRESH,
             auto_compact_bytes=1,
         )
     for t in inc.OOO_DROP_TABLES + inc.RETRACT_MASK_TABLES:
@@ -522,7 +520,7 @@ def test_retract_on_bucketed_snapshot_layout(spark, tmp_path):
         ingest_increment(
             store, _mk(spark, rows), f"b{i}",
             span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-            cluster_threshold=THRESH, allow_out_of_order=True,
+            cluster_threshold=THRESH,
         )
     res = _retract(store, _ids(spark, [1, 2]), "r1")
     assert _rows(res.promoted, "doc_id") == {(21,)}
@@ -545,7 +543,7 @@ def test_retract_on_bucketed_snapshot_layout(spark, tmp_path):
     ingest_increment(
         store, _mk(spark, late), "post-fold",
         span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-        cluster_threshold=THRESH, allow_out_of_order=True,
+        cluster_threshold=THRESH,
     )
     _assert_store_equals(
         spark, store, [r for r in ALL if r[0] not in (1, 2)] + late
@@ -553,14 +551,14 @@ def test_retract_on_bucketed_snapshot_layout(spark, tmp_path):
 
 
 def test_retract_requires_repair_tables_and_snapshot(spark, tmp_path):
-    # monotone-mode store: no cur_pre -> actionable error
+    # the removed monotone-only layout: cur_docs without cur_pre
     store = TableStore(
         spark, tmp_path / "mono", write_partitions=2, snapshot_isolation=True
     )
-    ingest_increment(
-        store, _mk(spark, BATCH1), "b1", span=SPAN, min_tokens=MIN_TOKENS
-    )
-    with pytest.raises(ValueError, match="allow_out_of_order"):
+    old_docs = _mk(spark, BATCH1).withColumn("batch_id", F.lit("b1"))
+    with store.commit_bracket("old"):
+        store.overwrite("cur_docs", old_docs)
+    with pytest.raises(ValueError, match="cur_pre"):
         _retract(store, _ids(spark, [1]), "r1")
     # plain (non-snapshot) store: retraction must publish atomically
     plain = TableStore(spark, tmp_path / "plain", write_partitions=2)
@@ -576,7 +574,7 @@ def test_compact_folds_only_mask_rows_added_since_last_fold(spark, tmp_path):
     from jobcan_data_integrator_spark.operators import incremental as inc
     from jobcan_data_integrator_spark.storage import TableStore as _TS
 
-    store, _ = _ingest_ooo(spark, tmp_path, (BATCH1, BATCH2, BATCH3))
+    store, _ = _ingest(spark, tmp_path, (BATCH1, BATCH2, BATCH3))
     _retract(store, _ids(spark, [1, 2]), "r1")
     compact_store(store)
     m = {

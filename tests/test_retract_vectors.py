@@ -229,7 +229,7 @@ def test_retract_documents_cascades_to_embedding_families(
     ingest_increment(
         store, docs, "b1",
         span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-        cluster_threshold=THRESH, allow_out_of_order=True,
+        cluster_threshold=THRESH,
         new_emb=emb_docs, emb_families=("lsh", "ivf", "pq"),
     )
     inc.build_semantic_index(store, emb, threshold=0.3)
@@ -310,7 +310,7 @@ def test_retracted_vec_id_never_reindexes(spark, sf_dir, tmp_path):
     ingest_increment(
         store, docs1, "b1",
         span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-        cluster_threshold=THRESH, allow_out_of_order=True,
+        cluster_threshold=THRESH,
         new_emb=emb.filter(F.col("vec_id") < 20),
         emb_families=("lsh", "ivf", "pq"),
     )
@@ -325,7 +325,7 @@ def test_retracted_vec_id_never_reindexes(spark, sf_dir, tmp_path):
     ingest_increment(
         store, docs2, "b2",
         span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-        cluster_threshold=THRESH, allow_out_of_order=True,
+        cluster_threshold=THRESH,
         new_emb=emb.filter(F.col("vec_id").isin(3, 21, 22)),
         emb_families=("lsh", "ivf", "pq"),
     )

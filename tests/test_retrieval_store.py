@@ -98,7 +98,7 @@ def _assert_equiv(spark, store):
     assert _search_rows(spark, store) == _oracle_rows(spark, store)
 
 
-def _ingest(spark, root, batches, *, ooo=False, names=None):
+def _ingest(spark, root, batches, *, names=None):
     """bm25=True on the FIRST batch only — later batches prove the
     exists-driven maintenance."""
     store = TableStore(
@@ -114,7 +114,6 @@ def _ingest(spark, root, batches, *, ooo=False, names=None):
             n_hashes=NH,
             band_size=BS,
             cluster_threshold=THRESH,
-            allow_out_of_order=ooo,
             bm25=(i == 1),
         )
     return store
@@ -136,9 +135,7 @@ def test_monotone_ingest_matches_one_shot(spark, tmp_path):
 def test_ooo_ingest_repairs_resign_postings(spark, tmp_path):
     """Out-of-order arrival repairs stored texts (span demotions, exact
     re-elections) — the family must track every regrown/shrunk text."""
-    store = _ingest(
-        spark, tmp_path, (BATCH3, BATCH1, BATCH2), ooo=True
-    )
+    store = _ingest(spark, tmp_path, (BATCH3, BATCH1, BATCH2))
     _assert_equiv(spark, store)
 
 
@@ -146,7 +143,7 @@ def test_retract_scrubs_postings(spark, tmp_path):
     """Takedown: retracting an exact keeper (mate promotes) and a
     cluster keeper (mate resurrects) leaves the family ≡ a fresh index
     over the survivors; the retracted ids never appear in results."""
-    store = _ingest(spark, tmp_path, (BATCH1, BATCH2, BATCH3), ooo=True)
+    store = _ingest(spark, tmp_path, (BATCH1, BATCH2, BATCH3))
     _retract(store, _ids(spark, [1, 2]), "r1")
     _assert_equiv(spark, store)
     hits = {
@@ -163,7 +160,7 @@ def test_retract_regrown_text_reindexes(spark, tmp_path):
     again and score as the full text."""
     big = (31, _t("u", 3, 10) + " " + _t("z", 0, 8))
     small = (1, _t("u", 0, 10))
-    store = _ingest(spark, tmp_path, ([big], [small]), ooo=True)
+    store = _ingest(spark, tmp_path, ([big], [small]))
     _assert_equiv(spark, store)
     _retract(store, _ids(spark, [1]), "r1")
     _assert_equiv(spark, store)
@@ -181,7 +178,6 @@ def test_compact_folds_perm_tombstones_out_of_family(spark, tmp_path):
         spark,
         tmp_path,
         ([(21, _t("u", 0, 10))], [(1, _t("u", 0, 10))]),
-        ooo=True,
     )
     _retract(store, _ids(spark, [21]), "r1")
     before = _search_rows(spark, store)
@@ -309,7 +305,7 @@ def test_hybrid_search_curated_matches_composed_one_shot(
     ingest_increment(
         store, docs, "b1",
         span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-        cluster_threshold=THRESH, allow_out_of_order=True,
+        cluster_threshold=THRESH,
         bm25=True, new_emb=emb_docs, emb_families=("ivf",),
     )
     retract_documents(

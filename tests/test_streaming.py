@@ -666,9 +666,7 @@ def test_streaming_retraction_equals_direct(spark, tmp_path):
             snapshot_isolation=True,
         )
         for i, rows in enumerate((BATCH1, BATCH2), 1):
-            ingest_increment(
-                st, _mk(spark, rows), f"b{i}", allow_out_of_order=True, **cfg
-            )
+            ingest_increment(st, _mk(spark, rows), f"b{i}", **cfg)
         return st
 
     store, direct = mkstore("s"), mkstore("d")

@@ -335,13 +335,9 @@ def test_diff_curated_between_versions(spark, tmp_path):
         retain_snapshots=8,
     )
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    ingest_increment(
-        store, mk(b1), "b1", span=7, min_tokens=3, allow_out_of_order=True
-    )
+    ingest_increment(store, mk(b1), "b1", span=7, min_tokens=3)
     v1 = store.current_snapshot()["version"]
-    ingest_increment(
-        store, mk(b2), "b2", span=7, min_tokens=3, allow_out_of_order=True
-    )
+    ingest_increment(store, mk(b2), "b2", span=7, min_tokens=3)
     v2 = store.current_snapshot()["version"]
     retract_documents(store, spark.createDataFrame([(2,)], "doc_id long"),
                       "takedown-1", span=7, min_tokens=3)
