@@ -29,6 +29,7 @@ sf, or at a different cpu count) and "regressions" (gates over
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -85,6 +86,12 @@ def _median(vals: list[float]) -> float:
 
 
 def main() -> None:
+    # no options: the environment variables above configure the run;
+    # parsing first makes --help and unknown flags exit before Spark starts
+    argparse.ArgumentParser(
+        description=__doc__.split("\n\n")[0],
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+    ).parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_trials = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "3")))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

@@ -538,14 +538,12 @@ _SIMHASH_CTE = f"""
     "computed once (cached; persisted at ingest in a real deployment).",
 )
 def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # block/pair building blocks live in operators/simhash.py — the SAME
-    # functions the incremental SimHash index uses (full ≡ index ∪
-    # increment by construction; tests/test_incremental_dedup.py).
-    # r11 rotation: runs the WIDTH-GENERIC (multi-long) implementation
-    # at limbs=1 — the limb-0 fingerprint is the single-long signature
-    # bit-for-bit and the pair set {hamming ≤ n_blocks−1} is geometry-
-    # determined, so the same DuckDB oracle pins the wide code path the
-    # persisted sh_* family now uses past single-long saturation.
+    # block/pair building blocks live in operators/simhash.py.  Runs
+    # the WIDTH-GENERIC (multi-long) implementation at limbs=1 — the
+    # limb-0 fingerprint is the single-long signature bit-for-bit and
+    # the pair set {hamming ≤ n_blocks−1} is geometry-determined, so the
+    # DuckDB oracle pins the wide code path that corpora past single-
+    # long saturation need.
     from jobcan_data_integrator_spark.operators.simhash import (
         block_rows_wide,
         near_dup_pairs_wide,

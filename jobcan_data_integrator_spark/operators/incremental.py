@@ -1,9 +1,9 @@
 """Incremental (new-vs-corpus) deduplication and ANN indexing over
-persisted index tables — ten families: exact-dedup hashes, MinHash
-bands, SimHash blocks, embedding LSH buckets, IVF cell assignments,
-SemDeDup pairs, ExactSubstr span hashes, n-gram LM counts (perplexity
-scoring at ingest), boilerplate line-stats (line cleaning at ingest),
-and PQ codes (compressed ANN serving).
+persisted index tables — nine families: exact-dedup hashes, MinHash
+bands, embedding LSH buckets, IVF cell assignments, SemDeDup pairs,
+ExactSubstr span hashes, n-gram LM counts (perplexity scoring at
+ingest), boilerplate line-stats (line cleaning at ingest), and PQ codes
+(compressed ANN serving).
 
 A 100 TB training pipeline cannot re-dedup the whole corpus for every
 ingest batch — the full-corpus LSH pipeline (gate/llm.py
@@ -184,10 +184,6 @@ def exact_index_buckets(n: int = 64) -> dict[str, tuple[str, int]]:
 
 def embedding_index_buckets(n: int = 64) -> dict[str, tuple[str, int]]:
     return {"eb_buckets": ("bucket", n), "eb_vectors": ("vec_id", n)}
-
-
-def simhash_index_buckets(n: int = 64) -> dict[str, tuple[str, int]]:
-    return {"sh_blocks": ("block_val", n), "sh_signatures": ("doc_id", n)}
 
 
 def minhash_pair_bands(width: int = 1 << 20) -> dict[str, tuple[str, int]]:
@@ -1005,399 +1001,6 @@ def extend_exact_index(
     with store.commit_bracket("ex-index-extend"):
         store.merge_insert_missing("ex_docs", _doc_hashes(new_docs), ["doc_id"])
         store.merge_upsert("ex_groups", merged_groups, ["text_md5"])
-
-
-# ---------------------------------------------------------------------------
-# SimHash block index (same incremental stance, Hamming-distance dedup)
-# ---------------------------------------------------------------------------
-
-#: SimHash index tables: the signature table is the canonical per-doc
-#: record; the BLOCK table is the probe target (persisted, not derived
-#: at probe time, so a store bucketed by block_val serves an increment's
-#: block-key equi-join from only the matching bucket dirs); pairs are
-#: the accumulated output.
-SIMHASH_TABLES = ("sh_signatures", "sh_blocks", "sh_pairs", "sh_geometry")
-
-
-def simhash_store_geometry(store: TableStore) -> dict | None:
-    """The persisted family's geometry — {limbs, bits_per_limb,
-    n_blocks, block_bits} from the one-row ``sh_geometry`` sidecar, or
-    None on a store without the family.  Geometry is an INDEX property:
-    every signer, prober and extender must read it from here rather
-    than assume a width — mixing widths silently drops pairs (the
-    failure class ``near_dup_pairs``'s in-row guard exists for)."""
-    if not store.exists("sh_geometry"):
-        return None
-    r = store.read("sh_geometry").head()
-    return {
-        "limbs": r["limbs"],
-        "bits_per_limb": r["bits_per_limb"],
-        "n_blocks": r["n_blocks"],
-        "block_bits": r["block_bits"],
-    }
-
-
-def _sh_geometry_df(store: TableStore, g: dict) -> DataFrame:
-    return store.spark.createDataFrame(
-        [(g["limbs"], g["bits_per_limb"], g["n_blocks"], g["block_bits"])],
-        "limbs int, bits_per_limb int, n_blocks int, block_bits int",
-    )
-
-
-def _sh_validate_geometry(g: dict) -> None:
-    if g["n_blocks"] % g["limbs"]:
-        raise ValueError(
-            "simhash geometry: limbs must divide n_blocks (blocks never "
-            f"straddle limbs), got limbs={g['limbs']} n_blocks={g['n_blocks']}"
-        )
-    per_limb = g["n_blocks"] // g["limbs"]
-    if per_limb * g["block_bits"] > g["bits_per_limb"]:
-        raise ValueError(
-            f"simhash geometry: {per_limb} blocks x {g['block_bits']} bits "
-            f"exceed the {g['bits_per_limb']}-bit limb"
-        )
-
-
-def _sh_is_wide(signatures: DataFrame) -> bool:
-    from pyspark.sql.types import ArrayType
-
-    return isinstance(signatures.schema["simhash"].dataType, ArrayType)
-
-
-def _sh_check_signatures(signatures: DataFrame, g: dict) -> None:
-    """Fail loudly when a batch was signed at a different width than
-    the store's — the array-vs-long column type carries the limb count
-    (one limb ⇔ ``bigint``, the persisted invariant), so the mismatch
-    is a schema check, not a data scan."""
-    if _sh_is_wide(signatures) != (g["limbs"] > 1):
-        want = "array<bigint>" if g["limbs"] > 1 else "bigint"
-        raise ValueError(
-            f"simhash signatures don't match the store's geometry "
-            f"(limbs={g['limbs']} wants a {want} simhash column) — sign "
-            "batches with simhash_signatures_at(docs, **stored geometry)"
-        )
-
-
-def _sh_block_rows(signatures: DataFrame, g: dict) -> DataFrame:
-    from jobcan_data_integrator_spark.operators.simhash import (
-        block_rows,
-        block_rows_wide,
-    )
-
-    if g["limbs"] == 1:
-        return block_rows(signatures, g["n_blocks"], g["block_bits"])
-    return block_rows_wide(
-        signatures, g["n_blocks"], g["limbs"], g["block_bits"]
-    )
-
-
-def _sh_near_dup_pairs(
-    blocks: DataFrame, other: DataFrame | None, g: dict
-) -> DataFrame:
-    from jobcan_data_integrator_spark.operators.simhash import (
-        near_dup_pairs,
-        near_dup_pairs_wide,
-    )
-
-    if g["limbs"] == 1:
-        return near_dup_pairs(
-            blocks, other, n_blocks=g["n_blocks"], block_bits=g["block_bits"]
-        )
-    return near_dup_pairs_wide(
-        blocks,
-        other,
-        n_blocks=g["n_blocks"],
-        limbs=g["limbs"],
-        block_bits=g["block_bits"],
-    )
-
-
-def build_simhash_index(
-    store: TableStore,
-    signatures: DataFrame,
-    n_blocks: int = 4,
-    block_bits: int | None = 15,
-    limbs: int | None = None,
-    bits_per_limb: int = 60,
-) -> None:
-    """Persist (doc_id, simhash), the pigeonhole block table, the
-    corpus-internal near-dup pairs (doc_a, doc_b, hamming), and the
-    one-row ``sh_geometry`` sidecar for an initial corpus.
-
-    Width-generic (r11): signatures may be single-``bigint`` (one limb)
-    or ``array<bigint>`` (``simhash_signatures_wide`` — the persisted
-    layout past single-long saturation at ~410k docs).  ``limbs=None``
-    infers the count from the column type; ``block_bits=None`` derives
-    the width from the corpus count at build time
-    (``simhash.derived_block_bits`` at the full fingerprint width — the
-    quadratic-control scaling rule made automatic).  Probes and extends
-    read the persisted geometry, so nothing downstream re-guesses the
-    width; re-signing at a new geometry is ``resign_simhash_index``.
-
-    Signatures are deduped on doc_id first: near_dup_pairs removes
-    block-level duplicates with an in-row min-block predicate (no
-    terminal distinct), so duplicate doc_id rows in the input (e.g. a
-    replayed ingest) would otherwise persist duplicate
-    (doc_a, doc_b, hamming) rows into sh_pairs."""
-    from jobcan_data_integrator_spark.operators.simhash import (
-        derived_block_bits,
-    )
-
-    sig = signatures.dropDuplicates(["doc_id"])
-    if limbs is None:
-        if not _sh_is_wide(sig):
-            limbs = 1
-        else:
-            head = sig.select(F.size("simhash").alias("n")).head()
-            if head is None:
-                raise ValueError(
-                    "build_simhash_index: cannot infer limbs from an "
-                    "empty array-signature frame — pass limbs explicitly"
-                )
-            limbs = head["n"]
-    if limbs == 1 and _sh_is_wide(sig):
-        # persisted invariant: one limb ⇔ bigint column (the column
-        # type IS the limb count for every later schema check)
-        sig = sig.withColumn("simhash", F.element_at("simhash", 1))
-    sig = sig.cache()
-    if block_bits is None:
-        block_bits = derived_block_bits(
-            sig.count(), bits=limbs * bits_per_limb, n_blocks=n_blocks
-        )
-    g = {
-        "limbs": limbs,
-        "bits_per_limb": bits_per_limb,
-        "n_blocks": n_blocks,
-        "block_bits": block_bits,
-    }
-    _sh_validate_geometry(g)
-    blocks = _sh_block_rows(sig, g).cache()
-    pairs = _sh_near_dup_pairs(blocks, None, g)
-    with store.commit_bracket("sh-index-build"):
-        try:
-            store.overwrite("sh_signatures", sig)
-            store.overwrite("sh_blocks", blocks)
-            store.overwrite("sh_pairs", pairs)
-            store.overwrite("sh_geometry", _sh_geometry_df(store, g))
-        finally:
-            # drop the scratch caches once the writes are done
-            store.submit_op(
-                lambda: [df.unpersist() for df in (blocks, sig)],
-                reads=tuple(SIMHASH_TABLES),
-            )
-
-
-def _sh_geometry(store: TableStore) -> dict:
-    """``simhash_store_geometry``, raising on a store without the
-    ``sh_geometry`` sidecar (``build_simhash_index`` and
-    ``resign_simhash_index`` always write it)."""
-    g = simhash_store_geometry(store)
-    if g is None:
-        raise ValueError(
-            f"store {store.root} has no sh_geometry sidecar — build the "
-            "SimHash family with build_simhash_index first"
-        )
-    return g
-
-
-def simhash_increment(store: TableStore, new_signatures: DataFrame) -> DataFrame:
-    """Near-dup pairs INVOLVING the increment (new-vs-corpus ∪
-    new-vs-new) — union with stored ``sh_pairs`` to reproduce the full
-    corpus's pair set.  The corpus side is one block-key equi-join
-    against the persisted block table — bucket-pruned to the
-    increment's block values on a store bucketed with
-    ``simhash_index_buckets`` — so per-batch scan and shuffle volume is
-    bounded by the candidate set, not the corpus.  Replay of an absorbed
-    batch is benign here: a doc's corpus copy cannot self-pair and
-    duplicate pairs collapse in the final ``distinct`` (Hamming is a
-    pure per-pair function, not a count over unioned rows).
-
-    Runs at the store's persisted ``sh_geometry`` (raises without it);
-    ``new_signatures`` must be signed at that geometry
-    (``simhash_signatures_at``) — the column type is checked."""
-    g = _sh_geometry(store)
-    _sh_check_signatures(new_signatures, g)
-    new_blocks = _sh_block_rows(new_signatures, g).localCheckpoint(eager=True)
-    corpus_blocks = store.read_for_keys(
-        "sh_blocks", new_blocks.select("block_val")
-    )
-    return _sh_near_dup_pairs(new_blocks, corpus_blocks, g).unionByName(
-        _sh_near_dup_pairs(new_blocks, None, g)
-    ).distinct()
-
-
-def extend_simhash_index(
-    store: TableStore,
-    new_signatures: DataFrame,
-    new_pairs: DataFrame,
-) -> None:
-    """Absorb a processed increment: append signatures + their block
-    rows, upsert pairs — at the store's persisted geometry (see
-    ``simhash_increment``).  ``new_pairs`` AND ``new_signatures`` are
-    materialized first — both may lazily scan tables this function
-    rewrites (new_pairs via the probe, new_signatures via any
-    caller-side derivation), and the second merge would otherwise
-    re-evaluate ``sig`` against files the first merge replaced."""
-    g = _sh_geometry(store)
-    _sh_check_signatures(new_signatures, g)
-    new_pairs = new_pairs.localCheckpoint(eager=True)
-    sig = new_signatures.localCheckpoint(eager=True)
-    with store.commit_bracket("sh-index-extend"):
-        store.merge_insert_missing("sh_signatures", sig, ["doc_id"])
-        store.merge_insert_missing(
-            "sh_blocks", _sh_block_rows(sig, g), ["doc_id", "b"]
-        )
-        store.merge_upsert("sh_pairs", new_pairs, ["doc_a", "doc_b"])
-
-
-def resign_simhash_index(
-    store: TableStore,
-    docs: DataFrame | None = None,
-    *,
-    limbs: int | None = None,
-    n_blocks: int | None = None,
-    block_bits: int | None = None,
-    bits_per_limb: int | None = None,
-) -> dict:
-    """Move the persisted family to a NEW geometry (returns it).  The
-    maintenance half of the scaling rule: ``derived_block_bits`` widens
-    blocks as the corpus grows, and past single-long saturation the
-    fingerprint itself must widen (more limbs) — this is the operation
-    that applies either change to a live store.  Omitted parameters
-    keep the current value; ``block_bits=None`` re-derives from the
-    stored corpus count at the (new) fingerprint width.
-
-    Cost is geometry-aware, which is what makes routine widening cheap:
-
-    - **Fingerprint unchanged** (same limbs × bits_per_limb, same
-      n_blocks — only ``block_bits`` moves): signatures AND pairs are
-      reused as-is.  The pair set is {hamming ≤ n_blocks−1}, which is
-      block-width-INDEPENDENT (pigeonhole completeness holds at every
-      width; width only controls candidate volume), so only the block
-      table is rebuilt — one linear re-block of the signature table,
-      no pair join.  This is the common "corpus grew 10×, widen the
-      blocks" maintenance call.
-    - **Fingerprint changed** (limbs or bits_per_limb): every stored
-      hamming distance is redefined, so ``docs`` — the FULL stored
-      corpus as (doc_id, text) — is required; signatures are recomputed
-      at the new width and the whole family rebuilds.  A missing-doc
-      guard fails the call rather than silently dropping corpus rows.
-    - **n_blocks changed** (fingerprint same): signatures are reused,
-      but the hamming bound n_blocks−1 moved, so pairs rebuild from the
-      re-blocked table.
-    """
-    from jobcan_data_integrator_spark.operators.simhash import (
-        derived_block_bits,
-        simhash_signatures_at,
-    )
-
-    old = _sh_geometry(store)
-    new = {
-        "limbs": limbs if limbs is not None else old["limbs"],
-        "bits_per_limb": (
-            bits_per_limb if bits_per_limb is not None else old["bits_per_limb"]
-        ),
-        "n_blocks": n_blocks if n_blocks is not None else old["n_blocks"],
-    }
-    stored_sig = store.read("sh_signatures")
-    if block_bits is None:
-        block_bits = derived_block_bits(
-            stored_sig.count(),
-            bits=new["limbs"] * new["bits_per_limb"],
-            n_blocks=new["n_blocks"],
-        )
-    new["block_bits"] = block_bits
-    _sh_validate_geometry(new)
-
-    fingerprint_changed = (new["limbs"], new["bits_per_limb"]) != (
-        old["limbs"],
-        old["bits_per_limb"],
-    )
-    if fingerprint_changed:
-        if docs is None:
-            raise ValueError(
-                "resign_simhash_index: changing the fingerprint width "
-                f"({old['limbs']}x{old['bits_per_limb']} -> "
-                f"{new['limbs']}x{new['bits_per_limb']}) redefines every "
-                "hamming distance — pass the full stored corpus as docs"
-            )
-        missing = (
-            stored_sig.select("doc_id")
-            .join(docs.select("doc_id"), "doc_id", "left_anti")
-            .count()
-        )
-        if missing:
-            raise ValueError(
-                f"resign_simhash_index: docs is missing {missing} stored "
-                "doc_ids — a partial re-sign would silently drop them"
-            )
-        sig = simhash_signatures_at(
-            docs, new["limbs"], new["bits_per_limb"]
-        ).join(stored_sig.select("doc_id"), "doc_id", "leftsemi")
-        build_simhash_index(
-            store,
-            sig,
-            n_blocks=new["n_blocks"],
-            block_bits=new["block_bits"],
-            limbs=new["limbs"],
-            bits_per_limb=new["bits_per_limb"],
-        )
-        return new
-
-    blocks = _sh_block_rows(stored_sig, new).localCheckpoint(eager=True)
-    with store.commit_bracket("sh-index-resign"):
-        store.overwrite("sh_blocks", blocks)
-        store.overwrite("sh_geometry", _sh_geometry_df(store, new))
-        if new["n_blocks"] != old["n_blocks"]:
-            store.overwrite("sh_pairs", _sh_near_dup_pairs(blocks, None, new))
-    return new
-
-
-def maybe_widen_simhash_index(
-    store: TableStore,
-    docs: DataFrame | None = None,
-    *,
-    target_candidates_per_doc: float = 8.0,
-) -> dict | None:
-    """Widen the persisted geometry iff the stored corpus has outgrown
-    it — the SimHash twin of ``maybe_compact_store`` /
-    ``maybe_refresh_codebooks``: call it after (a batch of) extends and
-    the family re-signs itself past the saturation point the module
-    docstring documents (~410k docs for the single-long layout) instead
-    of sliding into quadratic candidate volume.  The check is one count
-    of the signature table plus ``derived_geometry``; it only ever
-    GROWS the width (a shrunken corpus keeps its wide fingerprint —
-    harmless).  ``docs`` (the full stored corpus) is required only when
-    the limb count must grow; a blocks-only widening runs without it.
-    Returns the new geometry when a resign ran, else None."""
-    from jobcan_data_integrator_spark.operators.simhash import (
-        derived_geometry,
-    )
-
-    g = _sh_geometry(store)
-    n = store.read("sh_signatures").count()
-    want_limbs, want_bits = derived_geometry(
-        n,
-        n_blocks=g["n_blocks"],
-        bits_per_limb=g["bits_per_limb"],
-        target_candidates_per_doc=target_candidates_per_doc,
-    )
-    if want_limbs < g["limbs"] or (
-        want_limbs == g["limbs"] and want_bits <= g["block_bits"]
-    ):
-        return None
-    if want_limbs > g["limbs"] and docs is None:
-        raise ValueError(
-            f"maybe_widen_simhash_index: the corpus ({n} docs) needs "
-            f"{want_limbs} limbs but the store holds {g['limbs']} — pass "
-            "the full stored corpus as docs to re-sign the fingerprint"
-        )
-    return resign_simhash_index(
-        store,
-        docs if want_limbs > g["limbs"] else None,
-        limbs=want_limbs,
-        block_bits=want_bits,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -38,9 +38,7 @@ become TOMBSTONES (``cur_drops``, with a cause) — merge-on-read
 deletes, the lakehouse pattern — so ``read_curated`` (curated docs
 anti-join tombstones) stays equivalent to the one-shot result without
 rewriting historical partitions.  The same tables make every store
-retractable (``retract_documents``) — except one holding the SimHash
-family, which has no repair or retraction path and so takes in-order
-batches only.
+retractable (``retract_documents``).
 
 Per-batch packing is batch-scoped: shard boundaries never span batches;
 ``repack_corpus`` is the one-call global reshard (chunk + pack
@@ -48,7 +46,7 @@ Per-batch packing is batch-scoped: shard boundaries never span batches;
 snapshot commit).
 
 Atomicity: every family write lands inside ONE ``store.commit_bracket``
-— on a snapshot-isolation store the whole batch (all ten families, the
+— on a snapshot-isolation store the whole batch (every family, the
 curated table, the ledger) publishes with one pointer swap, and a crash
 anywhere publishes NOTHING; the replay (same batch_id) reruns against
 the untouched pre-batch snapshot.  A batch REDELIVERED after a
@@ -785,13 +783,20 @@ def _tombstone(
 
 
 def _require_repair_tables(store: TableStore) -> None:
-    """Refuse the removed monotone-only mode's layout (``cur_docs``
-    without ``cur_pre``): no current code can repair or retract it."""
+    """Refuse the layouts of removed features that no current code can
+    repair or retract: the monotone-only mode's (``cur_docs`` without
+    ``cur_pre``) and the persisted SimHash family's (``sh_signatures``)."""
     if store.exists(CURATED) and not store.exists(CURATED_PRE):
         raise ValueError(
             f"store holds {CURATED} but no {CURATED_PRE}: it was written "
             "by the removed monotone-only ingest mode, which kept no "
             "repair tables — re-ingest it from its source batches"
+        )
+    if store.exists("sh_signatures"):
+        raise ValueError(
+            "store holds sh_signatures: the persisted SimHash family was "
+            "removed (it had no repair or retraction path) — re-ingest "
+            "the store from its source batches"
         )
 
 
@@ -1192,8 +1197,6 @@ def ingest_increment(
     n_hashes: int = 8,
     band_size: int = 2,
     cluster_threshold: float = 0.5,
-    simhash: bool = False,
-    simhash_auto_geometry: bool = False,
     pack_budget: int | None = None,
     chunk_tokens: int = 32,
     chunk_overlap: int = 8,
@@ -1215,16 +1218,6 @@ def ingest_increment(
       ``near_dup_pairs`` callback specialized to the MinHash-LSH family
       (the one with a maintained pair index), clustered at
       ``cluster_threshold`` with min-id keepers via ``cc_labels``.
-    - ``simhash``: additionally maintain the SimHash family (index +
-      pairs only — it does not feed the keep/drop decision; choose ONE
-      pair family for canonicalization, as curate_corpus does).
-      ``simhash_auto_geometry`` sizes the FIRST build's fingerprint
-      from the corpus count (``simhash.derived_geometry`` — limbs ×
-      block width); every later batch signs at the store's persisted
-      ``sh_geometry`` regardless.  Widening a live store as it grows
-      is ``incremental.maybe_widen_simhash_index`` (a maintenance op:
-      growing the limb count re-signs from the full corpus text, which
-      ingest does not hold).
     - ``pack_budget``: chunk + pack the batch's kept docs into
       batch-scoped shards (``cur_chunks``/``cur_shards``).
     - ``new_emb``: this batch's (vec_id, embedding) rows; the
@@ -1266,10 +1259,8 @@ def ingest_increment(
       conservative merged labels — the same as-of-ingest stance as the
       boilerplate line stats.
 
-    The SimHash family has no repair path: with ``simhash=True``, or on
-    a store holding ``sh_signatures``, a batch whose lowest id is not
-    above every absorbed id raises.  So does a store whose ``cur_docs``
-    has no ``cur_pre`` (the removed monotone-only mode's layout), and
+    Two removed layouts raise (``_require_repair_tables``): the
+    monotone-only mode's and the persisted SimHash family's.  So does
     ``allow_out_of_order=False`` (kept for existing callers; ``True`` is
     its one value).  Batch-order equivalence with the one-shot curation
     (docs + pairs + labels) is pinned in tests/test_ingest.py.
@@ -1334,13 +1325,8 @@ def ingest_increment(
         )
     _require_repair_tables(store)
 
-    # ONE ledger pass answers both questions: was this batch already
-    # absorbed (redelivery), and what is the absorbed id high-water mark
-    # (the SimHash family's in-order guard)
-    prev_hi = None
     if store.exists(LEDGER):
         led = store.read(LEDGER).agg(
-            F.max("max_doc_id").alias("hi"),
             F.max((F.col("batch_id") == batch_id).cast("int")).alias("seen"),
         ).first()
         if led["seen"]:
@@ -1352,25 +1338,12 @@ def ingest_increment(
                 .select("doc_id", "text")
             )
             return IngestResult(batch_id, True, prior)
-        prev_hi = led["hi"]
 
     bounds = new_docs.agg(
         F.min("doc_id").alias("lo"),
         F.max("doc_id").alias("hi"),
         F.count("*").alias("n"),
     ).first()
-    if (
-        (simhash or store.exists("sh_signatures"))
-        and prev_hi is not None
-        and bounds["lo"] is not None
-        and bounds["lo"] <= prev_hi
-    ):
-        raise ValueError(
-            f"out-of-order batch: doc_id {bounds['lo']} <= absorbed "
-            f"max {prev_hi}; the SimHash family has no repair or "
-            "retraction path, so a store holding it takes only batches "
-            "whose ids all exceed every absorbed id"
-        )
 
     # JVM-native literal row (spark.range + lit), NOT createDataFrame: a
     # Python local relation costs ~3x more per downstream job (measured
@@ -1605,37 +1578,6 @@ def ingest_increment(
                     store, batch_id, touched=touched
                 )
 
-        # 4b. SimHash family (index + pair maintenance only).  Width-
-        # generic (r11): an existing store's persisted sh_geometry wins
-        # — every batch signs at the stored width (mixing widths
-        # silently drops pairs); a FIRST build either takes the
-        # single-long default or, with simhash_auto_geometry, derives
-        # (limbs, block_bits) from the batch's corpus count so a
-        # past-saturation seed corpus starts wide instead of dying at
-        # ~410k docs (simhash.py's measured single-long limit).
-        if simhash:
-            from jobcan_data_integrator_spark.operators.simhash import (
-                derived_geometry,
-                simhash_signatures_at,
-            )
-
-            if not store.exists("sh_signatures"):
-                if simhash_auto_geometry:
-                    limbs, bb = derived_geometry(kept.count())
-                else:
-                    limbs, bb = 1, 15
-                sigs = simhash_signatures_at(kept, limbs)
-                inc.build_simhash_index(
-                    store, sigs, block_bits=bb, limbs=limbs
-                )
-            else:
-                g = inc._sh_geometry(store)
-                sigs = simhash_signatures_at(
-                    kept, g["limbs"], g["bits_per_limb"]
-                )
-                sh_pairs = inc.simhash_increment(store, sigs)
-                inc.extend_simhash_index(store, sigs, sh_pairs)
-
         # 5. curated-corpus merge + optional batch-scoped chunk/pack —
         # independent single-table merges issued HERE, so on a snapshot
         # store they overlap the embedding-family section below (inline,
@@ -1820,11 +1762,11 @@ def retract_documents(
       commit (the text is gone, not merely masked); index-side masks
       are folded by ``compact_store``.
 
-    Requires a snapshot-isolation store without the SimHash family (no
-    retraction path); every ingest batch keeps the repair tables this
-    reads (``cur_pre``, tombstone causes, merge-on-read drops).
-    Redelivery of the same ``retract_id`` is a no-op (``cur_retractions``
-    ledger); a crash publishes nothing and the replay converges.
+    Requires a snapshot-isolation store; every ingest batch keeps the
+    repair tables this reads (``cur_pre``, tombstone causes, merge-on-
+    read drops).  Redelivery of the same ``retract_id`` is a no-op
+    (``cur_retractions`` ledger); a crash publishes nothing and the
+    replay converges.
 
     Cost shape: one narrow broadcast-semi pass over the ``ex_docs`` hash
     map (finding retracted keepers' groups), bucket-pruned probes of the
@@ -1870,11 +1812,6 @@ def retract_documents(
             "store's partial replay could resurrect a deleted doc)"
         )
     _require_repair_tables(store)
-    if store.exists("sh_signatures"):
-        raise ValueError(
-            "retract_documents cannot serve a store holding the SimHash "
-            "family: it has no retraction path"
-        )
 
     if store.exists(RETRACTIONS):
         seen = (

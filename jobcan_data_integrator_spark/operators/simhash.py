@@ -1,7 +1,6 @@
-"""SimHash pigeonhole-block building blocks, shared by the full-corpus
-gate (gate/llm.py dd_simhash_pairs) and the incremental index
-(operators/incremental.py) — like operators/minhash.py, ONE
-implementation so "full ≡ index ∪ increment" holds by construction.
+"""SimHash pigeonhole-block building blocks for the full-corpus gates
+(gate/llm.py dd_simhash, dd_simhash_pairs) and the scale smoke's
+candidate-volume budget (scale_smoke.py simhash_experiment).
 
 Geometry: a ``bits``-wide fingerprint splits into ``n_blocks`` blocks;
 any pair within Hamming distance ``n_blocks - 1`` must agree on at least
@@ -37,8 +36,7 @@ def simhash_signatures(
     per-bit signed vote of each token hash bit, majority sign → bit.
     Fully in-row (nested higher-order aggregates over the split text):
     zero shuffle at any corpus size.  Same formulation as the
-    dd_simhash gate (gate/llm.py), factored here so the incremental
-    index and the ingest orchestrator share one definition."""
+    dd_simhash gate (gate/llm.py), factored here for the scale smoke."""
     from jobcan_data_integrator_spark.operators.minhash import H60
 
     h = H60.format(x="t")
@@ -88,10 +86,7 @@ def derived_block_bits(
     tells you): per-doc candidates grow linearly with further corpus
     growth and the fix is a wider fingerprint (128-bit two-long blocks),
     not this knob.  Pass the result to ``block_rows`` /
-    ``near_dup_pairs`` — and remember geometry is an INDEX property:
-    changing it on a persisted store requires re-signing the block
-    table (incremental.build_simhash_index over the stored signatures),
-    never mixing widths."""
+    ``near_dup_pairs_wide``."""
     import math
 
     need = math.ceil(
@@ -119,180 +114,9 @@ def simhash_geometry_saturated(
     return need > bits // n_blocks
 
 
-def near_dup_pairs(
-    blocks: DataFrame,
-    other_blocks: DataFrame | None = None,
-    max_hamming: int | None = None,
-    n_blocks: int = 4,
-    block_bits: int = 15,
-) -> DataFrame:
-    """(doc_a, doc_b, hamming) for pairs agreeing on >= 1 block and
-    within ``max_hamming`` (default ``n_blocks - 1``, the pigeonhole
-    completeness bound).
-
-    One frame: within-set pairs (doc_a < doc_b).  Two frames: cross
-    pairs normalized to (least, greatest) — the split-corpus composition
-    (within-corpus ∪ cross ∪ within-new) reproduces the full corpus's
-    pair set exactly, because blocks are a pure per-doc function.
-
-    A pair agreeing on k blocks comes out of the equi-join k times; the
-    duplicates are removed WITHOUT a shuffle by emitting the pair only
-    at its MINIMAL agreeing block — both full fingerprints ride on the
-    joined row, so "no earlier block also agrees" is a narrow in-row
-    predicate on (sa, sb, b).  That predicate RE-DERIVES block values
-    from ``block_bits``, so ``block_bits`` here MUST equal the value the
-    blocks frame was built with (block_rows) — a mismatch would silently
-    drop pairs (no row looks canonical).  Rather than trust the caller,
-    the plan carries an in-row assertion: each candidate's joined
-    ``block_val`` is re-derived from (simhash, b, block_bits) and a
-    mismatch raises at execution time (one shift+mask per candidate —
-    negligible next to the hamming popcount on the same row).  (Through round 4 this was a .distinct()
-    over the candidate set: a second full exchange that dominated the
-    10x scale smoke; the pair set is identical by construction.)  The
-    hamming filter runs before the min-block check so above-threshold
-    candidates die in the same narrow stage.  Cross-frame inputs are
-    assumed doc_id-disjoint (the incremental index ∪ increment split);
-    overlapping frames would emit one row per orientation, which the
-    callers' terminal .distinct() collapses.
-    """
-    if max_hamming is None:
-        max_hamming = n_blocks - 1
-    mask = (1 << block_bits) - 1
-    a = blocks.alias("a")
-    if other_blocks is None:
-        b = blocks.alias("b")
-        cand = a.join(
-            b,
-            (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sa"),
-            F.col("b.simhash").alias("sb"),
-            F.col("a.b").alias("b"),
-            F.col("a.block_val").alias("bv"),
-        )
-    else:
-        b = other_blocks.alias("b")
-        cand = a.join(
-            b,
-            (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        ).select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-            F.when(
-                F.col("a.doc_id") < F.col("b.doc_id"), F.col("a.simhash")
-            ).otherwise(F.col("b.simhash")).alias("sa"),
-            F.when(
-                F.col("a.doc_id") < F.col("b.doc_id"), F.col("b.simhash")
-            ).otherwise(F.col("a.simhash")).alias("sb"),
-            F.col("a.b").alias("b"),
-            F.col("a.block_val").alias("bv"),
-        )
-    hamming = F.bit_count(F.expr("sa ^ sb")).cast("int")
-    # sequence(0, b) (never empty, always ascending — sequence(0, b-1)
-    # flips descending at b=0) with the j < b guard inside: true iff some
-    # EARLIER block also agrees, i.e. this row is not the canonical one.
-    earlier_agrees = F.expr(
-        f"exists(sequence(0, b), j -> j < b AND"
-        f" ((sa >> cast({block_bits} * j as int)) & {mask}) ="
-        f" ((sb >> cast({block_bits} * j as int)) & {mask}))"
-    )
-    # Geometry guard (see docstring): the joined row's block_val must be
-    # reproducible from (simhash, b) with THIS call's block_bits.  On a
-    # candidate row sa and sb agree at block b (join condition), so sa is
-    # a valid re-derivation source regardless of the cross-branch swap.
-    # assert_true returns NULL on success, so the isNull filter is a
-    # no-op pass-through that keeps the assertion in the executed plan.
-    geometry_ok = F.expr(
-        f"((sa >> cast({block_bits} * b as int)) & {mask}) = bv"
-    )
-    guard = F.assert_true(
-        geometry_ok,
-        F.lit(
-            "near_dup_pairs: block_bits disagrees with the geometry"
-            " used by block_rows — pairs would be silently dropped"
-        ),
-    )
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .filter(guard.isNull())
-        .filter(~earlier_agrees)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
-def derived_geometry(
-    n_docs: int,
-    *,
-    n_blocks: int = 4,
-    bits_per_limb: int = 60,
-    target_candidates_per_doc: float = 8.0,
-) -> tuple[int, int]:
-    """(limbs, block_bits): the narrowest fingerprint that holds the
-    per-doc candidate target for an ``n_docs`` corpus — the full
-    scaling rule with BOTH knobs.  ``derived_block_bits`` alone widens
-    blocks until the single-long fingerprint saturates (~65k docs at
-    the default target); past that the fix is more limbs, so this
-    walks the divisors of ``n_blocks`` (blocks must never straddle a
-    limb) and returns the first un-saturated width with its derived
-    block_bits.  With ``n_blocks=4`` the ladder is 1 limb (60-bit) →
-    2 limbs (120-bit, ≤30-bit blocks, good to ~2×10⁹ docs) → 4 limbs
-    (240-bit, ≤60-bit blocks — effectively unbounded).  If even the
-    widest rung saturates it is returned clamped (candidates then grow
-    linearly with the corpus — raise ``n_blocks`` at that point)."""
-    divisors = [d for d in range(1, n_blocks + 1) if n_blocks % d == 0]
-    for limbs in divisors:
-        bits = limbs * bits_per_limb
-        if not simhash_geometry_saturated(
-            n_docs,
-            bits=bits,
-            n_blocks=n_blocks,
-            target_candidates_per_doc=target_candidates_per_doc,
-        ):
-            return limbs, derived_block_bits(
-                n_docs,
-                bits=bits,
-                n_blocks=n_blocks,
-                target_candidates_per_doc=target_candidates_per_doc,
-            )
-    limbs = divisors[-1]
-    return limbs, derived_block_bits(
-        n_docs,
-        bits=limbs * bits_per_limb,
-        n_blocks=n_blocks,
-        target_candidates_per_doc=target_candidates_per_doc,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Wide (multi-long) fingerprints — the documented >60-bit scale path
 # ---------------------------------------------------------------------------
-
-
-def simhash_signatures_at(
-    docs: DataFrame,
-    limbs: int = 1,
-    bits_per_limb: int = 60,
-    text_col: str = "text",
-) -> DataFrame:
-    """Signature computation at a GEOMETRY: the dispatch the persisted
-    index family (operators/incremental.py) uses so every caller signs
-    a batch at the store's recorded width.  ``limbs == 1`` returns the
-    single-``bigint`` column ``simhash_signatures`` produces (the
-    persisted invariant: one limb ⇔ ``bigint``, several ⇔
-    ``array<bigint>`` — never a one-element array), wider geometries
-    the array the wide block/pair functions consume."""
-    if limbs == 1:
-        return simhash_signatures(docs, bits=bits_per_limb, text_col=text_col)
-    return simhash_signatures_wide(
-        docs, limbs=limbs, bits_per_limb=bits_per_limb, text_col=text_col
-    )
 
 
 def simhash_signatures_wide(
@@ -381,11 +205,14 @@ def near_dup_pairs_wide(
 ) -> DataFrame:
     """(doc_a, doc_b, hamming) over wide fingerprints: pigeonhole
     equi-join on (b, block_val), Hamming = summed popcount of per-limb
-    XORs, duplicates removed without a shuffle by the same minimal-
-    agreeing-block in-row predicate as ``near_dup_pairs`` (re-derived
-    from the array limbs, so the geometry here MUST match block_rows_wide's).
-    Same completeness bound: any pair within ``n_blocks - 1`` agrees on
-    at least one whole block."""
+    XORs.  One frame gives within-set pairs; two frames give cross pairs
+    normalized to (least, greatest).  A pair agreeing on k blocks comes
+    out of the join k times; the duplicates are removed without a
+    shuffle by keeping only the row at the pair's minimal agreeing
+    block, an in-row predicate re-derived from the array limbs (so the
+    geometry here MUST match block_rows_wide's).  Completeness bound:
+    any pair within ``n_blocks - 1`` agrees on at least one whole
+    block."""
     if max_hamming is None:
         max_hamming = n_blocks - 1
     a = blocks.alias("a")

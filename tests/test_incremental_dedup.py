@@ -139,47 +139,6 @@ def test_crash_mid_build_is_detected(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# SimHash block index
-# ---------------------------------------------------------------------------
-
-
-def test_simhash_split_equals_full(spark, sf_dir, tmp_path):
-    from jobcan_data_integrator_spark.gate.llm import (
-        _simhash_signatures,
-        dd_simhash_pairs,
-    )
-    from jobcan_data_integrator_spark.operators.incremental import (
-        build_simhash_index,
-        extend_simhash_index,
-        simhash_increment,
-    )
-
-    sig = _simhash_signatures(spark, sf_dir).cache()
-    full = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in dd_simhash_pairs(spark, sf_dir).collect()
-    }
-
-    store = TableStore(spark, tmp_path, write_partitions=2)
-    build_simhash_index(store, sig.filter(F.col("doc_id") % 3 != 0))
-    inc_sig = sig.filter(F.col("doc_id") % 3 == 0)
-    inc = simhash_increment(store, inc_sig)
-    got = {(r.doc_a, r.doc_b, r.hamming) for r in inc.collect()} | {
-        (r.doc_a, r.doc_b, r.hamming) for r in store.read("sh_pairs").collect()
-    }
-    assert got == full
-
-    # absorb and verify the index now covers everything
-    extend_simhash_index(store, inc_sig, inc)
-    assert store.read("sh_signatures").count() == sig.count()
-    stored = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in store.read("sh_pairs").collect()
-    }
-    assert stored == full
-
-
-# ---------------------------------------------------------------------------
 # IVF cell-assignment index
 # ---------------------------------------------------------------------------
 
@@ -588,19 +547,14 @@ def test_cluster_extend_bucketed_delta_equals_overwrite(spark, tmp_path):
     ]
 
 
-def test_derived_simhash_geometry(spark, tmp_path):
+def test_derived_simhash_geometry():
     """derived_block_bits: the scaling rule (grow width with
     2·log2(corpus growth)) as a function — formula values, monotone in
     corpus size, capped at the fingerprint, saturation flag past the
-    cap; and build_simhash_index(block_bits=None) derives it, producing
-    the same index the explicit value produces."""
-    from jobcan_data_integrator_spark.operators.incremental import (
-        build_simhash_index,
-    )
+    cap."""
     from jobcan_data_integrator_spark.operators.simhash import (
         derived_block_bits,
         simhash_geometry_saturated,
-        simhash_signatures,
     )
 
     # ceil(log2(4n/8)) clamped to [1, 15]: spot values
@@ -621,23 +575,8 @@ def test_derived_simhash_geometry(spark, tmp_path):
     assert simhash_geometry_saturated(500_000)
     assert not simhash_geometry_saturated(500_000, bits=128)
 
-    docs = spark.createDataFrame(
-        [(i, f"w{i} x y z common tail tokens here") for i in range(6)],
-        "doc_id long, text string",
-    )
-    sig = simhash_signatures(docs)
-    auto = TableStore(spark, tmp_path / "auto", write_partitions=1)
-    build_simhash_index(auto, sig)  # explicit default 15
     # derived width for n=6 is ceil(log2(3)) = 2
     assert derived_block_bits(6) == 2
-    man = TableStore(spark, tmp_path / "man", write_partitions=1)
-    build_simhash_index(man, sig, block_bits=2)
-    drv = TableStore(spark, tmp_path / "drv", write_partitions=1)
-    build_simhash_index(drv, sig, block_bits=None)
-    for t in ("sh_signatures", "sh_blocks", "sh_pairs"):
-        assert sorted(map(tuple, drv.read(t).collect())) == sorted(
-            map(tuple, man.read(t).collect())
-        ), t
 
 
 def test_wide_simhash_pairs(spark):
@@ -723,230 +662,6 @@ def test_wide_simhash_pairs(spark):
     assert {
         (r.doc_a, r.doc_b): r.hamming for r in parts.collect()
     } == want
-
-
-# ---------------------------------------------------------------------------
-# Width-generic persisted SimHash family (r11): the wide functions above,
-# persisted — sh_geometry sidecar, geometry-checked signing, resign
-# ---------------------------------------------------------------------------
-
-
-def _sh_pairs_set(df):
-    return {(r.doc_a, r.doc_b, r.hamming) for r in df.collect()}
-
-
-def test_wide_simhash_store_lifecycle(spark, sf_dir, tmp_path):
-    """The persisted family at a 2-limb (120-bit) geometry: build stores
-    the sidecar + array signatures, split-corpus increment ∪ index ≡ the
-    full-corpus wide pair set (the functions are pinned ≡ brute-force
-    Hamming in test_wide_simhash_pairs), extend absorbs, and a batch
-    signed at the WRONG width fails loudly on the schema check."""
-    import pytest
-
-    from jobcan_data_integrator_spark.operators.incremental import (
-        build_simhash_index,
-        extend_simhash_index,
-        simhash_increment,
-        simhash_store_geometry,
-    )
-    from jobcan_data_integrator_spark.operators.simhash import (
-        block_rows_wide,
-        near_dup_pairs_wide,
-        simhash_signatures,
-        simhash_signatures_wide,
-    )
-    from jobcan_data_integrator_spark.session import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sig = simhash_signatures_wide(docs, limbs=2).cache()
-    full = _sh_pairs_set(
-        near_dup_pairs_wide(
-            block_rows_wide(sig, n_blocks=4, limbs=2, block_bits=30),
-            n_blocks=4,
-            limbs=2,
-            block_bits=30,
-        )
-    )
-
-    store = TableStore(spark, tmp_path, write_partitions=2)
-    build_simhash_index(
-        store, sig.filter(F.col("doc_id") % 3 != 0), block_bits=30
-    )  # limbs inferred from the array column
-    assert simhash_store_geometry(store) == {
-        "limbs": 2,
-        "bits_per_limb": 60,
-        "n_blocks": 4,
-        "block_bits": 30,
-    }
-
-    inc_sig = sig.filter(F.col("doc_id") % 3 == 0)
-    inc = simhash_increment(store, inc_sig)  # runs at the sidecar's geometry
-    assert _sh_pairs_set(inc) | _sh_pairs_set(store.read("sh_pairs")) == full
-
-    extend_simhash_index(store, inc_sig, inc)
-    assert store.read("sh_signatures").count() == sig.count()
-    assert _sh_pairs_set(store.read("sh_pairs")) == full
-
-    # single-long signatures against a 2-limb store: loud schema error
-    with pytest.raises(ValueError, match="geometry"):
-        simhash_increment(store, simhash_signatures(docs))
-
-
-def test_simhash_store_without_geometry_sidecar_raises(spark, sf_dir, tmp_path):
-    """The family's width lives only in the ``sh_geometry`` sidecar that
-    build and resign write: a store holding signatures without it is
-    refused by every probe/extend/resign/widen entry point, and nothing
-    is written."""
-    import pytest
-
-    from jobcan_data_integrator_spark.operators.incremental import (
-        extend_simhash_index,
-        maybe_widen_simhash_index,
-        resign_simhash_index,
-        simhash_increment,
-    )
-    from jobcan_data_integrator_spark.operators.simhash import (
-        simhash_signatures,
-    )
-    from jobcan_data_integrator_spark.session import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sig = simhash_signatures(docs)
-    store = TableStore(spark, tmp_path, write_partitions=2)
-    store.overwrite("sh_signatures", sig.filter(F.col("doc_id") % 3 != 0))
-    inc_sig = sig.filter(F.col("doc_id") % 3 == 0)
-    for call in (
-        lambda: simhash_increment(store, inc_sig),
-        lambda: extend_simhash_index(store, inc_sig, inc_sig.limit(0)),
-        lambda: resign_simhash_index(store, block_bits=10),
-        lambda: maybe_widen_simhash_index(store),
-    ):
-        with pytest.raises(ValueError, match="sh_geometry"):
-            call()
-    assert sorted(p.name for p in tmp_path.iterdir()) == ["sh_signatures"]
-
-
-def test_simhash_resign_paths(spark, sf_dir, tmp_path):
-    """resign_simhash_index's three cost tiers: a block-width-only
-    resign reuses signatures AND pairs (the pair set is block-width-
-    independent — pinned here by value), a fingerprint widening
-    (limbs 1→2) requires the corpus text, recomputes everything, and
-    lands exactly the from-scratch wide index; a partial docs frame is
-    rejected rather than silently dropping corpus rows."""
-    import pytest
-
-    from jobcan_data_integrator_spark.gate.llm import _simhash_signatures
-    from jobcan_data_integrator_spark.operators.incremental import (
-        build_simhash_index,
-        resign_simhash_index,
-        simhash_store_geometry,
-    )
-    from jobcan_data_integrator_spark.operators.simhash import (
-        block_rows_wide,
-        near_dup_pairs_wide,
-        simhash_signatures_wide,
-    )
-    from jobcan_data_integrator_spark.session import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sig = _simhash_signatures(spark, sf_dir).cache()
-    store = TableStore(spark, tmp_path, write_partitions=2)
-    build_simhash_index(store, sig)  # single-long, block_bits=15
-    narrow_pairs = _sh_pairs_set(store.read("sh_pairs"))
-
-    # 1. block-width-only: geometry moves, pairs identical, blocks rebuilt
-    g = resign_simhash_index(store, block_bits=10)
-    assert g["block_bits"] == 10 and g["limbs"] == 1
-    assert simhash_store_geometry(store)["block_bits"] == 10
-    assert _sh_pairs_set(store.read("sh_pairs")) == narrow_pairs
-    bv_max = store.read("sh_blocks").agg(F.max("block_val")).first()[0]
-    assert bv_max < (1 << 10)
-
-    # 2. fingerprint widening without docs: loud error
-    with pytest.raises(ValueError, match="full stored corpus"):
-        resign_simhash_index(store, limbs=2, block_bits=30)
-    # ... with a PARTIAL docs frame: loud error, not silent row loss
-    with pytest.raises(ValueError, match="missing"):
-        resign_simhash_index(
-            store,
-            docs.filter(F.col("doc_id") % 2 == 0),
-            limbs=2,
-            block_bits=30,
-        )
-
-    # 3. the real widening ≡ a from-scratch wide build
-    g = resign_simhash_index(store, docs, limbs=2, block_bits=30)
-    assert g == {
-        "limbs": 2,
-        "bits_per_limb": 60,
-        "n_blocks": 4,
-        "block_bits": 30,
-    }
-    wide_sig = simhash_signatures_wide(docs, limbs=2)
-    want = _sh_pairs_set(
-        near_dup_pairs_wide(
-            block_rows_wide(wide_sig, n_blocks=4, limbs=2, block_bits=30),
-            n_blocks=4,
-            limbs=2,
-            block_bits=30,
-        )
-    )
-    assert _sh_pairs_set(store.read("sh_pairs")) == want
-    assert dict(store.read("sh_signatures").dtypes)["simhash"] == (
-        "array<bigint>"
-    )
-
-
-def test_maybe_widen_simhash_index(spark, sf_dir, tmp_path):
-    """The auto-widen trigger: a store whose geometry already holds the
-    candidate target is a no-op; shrinking the target (the stand-in for
-    corpus growth past saturation) trips a widening, which needs the
-    corpus text when the limb count must grow; after the resign the
-    signal is quiet at the new geometry."""
-    import pytest
-
-    from jobcan_data_integrator_spark.gate.llm import _simhash_signatures
-    from jobcan_data_integrator_spark.operators.incremental import (
-        build_simhash_index,
-        maybe_widen_simhash_index,
-        simhash_store_geometry,
-    )
-    from jobcan_data_integrator_spark.operators.simhash import (
-        derived_geometry,
-    )
-    from jobcan_data_integrator_spark.session import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sig = _simhash_signatures(spark, sf_dir).cache()
-    n = sig.count()
-    store = TableStore(spark, tmp_path, write_partitions=2)
-    build_simhash_index(store, sig, block_bits=None)  # derived width
-
-    # at the derived width the trigger is quiet
-    assert maybe_widen_simhash_index(store) is None
-
-    # an absurdly tight candidate target saturates every single-long
-    # width — the same condition corpus growth produces.  Without docs:
-    # loud; with docs: resigns to the derived wide geometry.
-    tight = 4 * n / (1 << 16)  # forces need > 15 ⇒ limbs must grow
-    want_limbs, want_bits = derived_geometry(
-        n, target_candidates_per_doc=tight
-    )
-    assert want_limbs > 1
-    with pytest.raises(ValueError, match="limbs"):
-        maybe_widen_simhash_index(store, target_candidates_per_doc=tight)
-    g = maybe_widen_simhash_index(
-        store, docs, target_candidates_per_doc=tight
-    )
-    assert (g["limbs"], g["block_bits"]) == (want_limbs, want_bits)
-    assert simhash_store_geometry(store)["limbs"] == want_limbs
-    # quiet again at the new geometry
-    assert (
-        maybe_widen_simhash_index(
-            store, docs, target_candidates_per_doc=tight
-        )
-        is None
-    )
 
 
 # Long-haul integration tier (r12): excluded from the DEFAULT pytest run

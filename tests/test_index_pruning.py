@@ -25,7 +25,6 @@ from jobcan_data_integrator_spark.operators.incremental import (
     embedding_index_buckets,
     exact_index_buckets,
     minhash_index_buckets,
-    simhash_index_buckets,
 )
 from jobcan_data_integrator_spark.storage import BUCKET_COL, TableStore
 
@@ -99,39 +98,6 @@ def test_minhash_bucketed_split_equals_full(spark, sf_dir, tmp_path):
 
     pruned = store.read_for_keys("mh_bands", band_rows(tiny).select("band_key"))
     assert f"PartitionFilters: [{BUCKET_COL}" in _plan(pruned)
-
-
-def test_simhash_bucketed_split_equals_full(spark, sf_dir, tmp_path):
-    from jobcan_data_integrator_spark.gate.llm import (
-        _simhash_signatures,
-        dd_simhash_pairs,
-    )
-    from jobcan_data_integrator_spark.operators.incremental import (
-        build_simhash_index,
-        extend_simhash_index,
-        simhash_increment,
-    )
-
-    sig = _simhash_signatures(spark, sf_dir).cache()
-    full = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in dd_simhash_pairs(spark, sf_dir).collect()
-    }
-    store = TableStore(
-        spark, tmp_path, write_partitions=2, bucketed=simhash_index_buckets(16)
-    )
-    build_simhash_index(store, sig.filter(F.col("doc_id") % 3 != 0))
-    inc_sig = sig.filter(F.col("doc_id") % 3 == 0)
-    inc = simhash_increment(store, inc_sig)
-    got = {(r.doc_a, r.doc_b, r.hamming) for r in inc.collect()} | {
-        (r.doc_a, r.doc_b, r.hamming) for r in store.read("sh_pairs").collect()
-    }
-    assert got == full
-
-    # absorption keeps working on the bucketed layout
-    extend_simhash_index(store, inc_sig, inc)
-    assert store.read("sh_signatures").count() == sig.count()
-    assert store.read("sh_blocks").count() == sig.count() * 4
 
 
 def test_exact_bucketed_split_equals_full(spark, sf_dir, tmp_path):

@@ -797,75 +797,6 @@ def test_streaming_ingest_out_of_order_drains(spark, tmp_path):
     assert _rows(read_curated(store), "doc_id", "text") == want
 
 
-def test_ingest_wide_simhash_store(spark, tmp_path):
-    """Width-generic SimHash under the orchestrator (r11): the first
-    batch with ``simhash_auto_geometry`` derives and PERSISTS the
-    geometry; a mid-stream ``resign_simhash_index`` widens the store to
-    the 2-limb fingerprint; every later batch signs at the stored width
-    automatically, and the final pair table equals the full-corpus wide
-    pair set over the curated text."""
-    from jobcan_data_integrator_spark.operators.incremental import (
-        resign_simhash_index,
-        simhash_store_geometry,
-    )
-    from jobcan_data_integrator_spark.operators.ingest import ingest_increment
-    from jobcan_data_integrator_spark.operators.simhash import (
-        block_rows_wide,
-        derived_block_bits,
-        near_dup_pairs_wide,
-        simhash_signatures_wide,
-    )
-
-    # 20 docs with real near-dup mass: pairs (i, i+1) share 60 of 61
-    # tokens (long docs keep the per-bit vote margins wide, so a
-    # one-token diff stays within a few fingerprint bits)
-    def txt(i):
-        return _t(f"g{i // 2}", 0, 60) + f" tail{i}"
-
-    docs1 = spark.createDataFrame(
-        [(i, txt(i)) for i in range(20)], "doc_id long, text string"
-    )
-    docs2 = spark.createDataFrame(
-        [(100 + i, txt(i) + f" extra{i}") for i in range(10)],
-        "doc_id long, text string",
-    )
-    store = TableStore(spark, tmp_path, write_partitions=2)
-    ingest_increment(
-        store, docs1, "b1", span=None, min_tokens=MIN_TOKENS,
-        minhash=False, simhash=True, simhash_auto_geometry=True,
-    )
-    g = simhash_store_geometry(store)
-    # derived from the batch's KEPT docs (post near-dup canonicalization)
-    n_kept = store.read("sh_signatures").count()
-    assert g["limbs"] == 1 and g["block_bits"] == derived_block_bits(n_kept)
-
-    # the corpus "outgrew" the single-long width: widen to 2 limbs from
-    # the curated text (== the signed text on this filterless config)
-    cur = store.read("cur_docs").select("doc_id", "text")
-    g = resign_simhash_index(store, cur, limbs=2, n_blocks=8, block_bits=15)
-    assert simhash_store_geometry(store) == g and g["limbs"] == 2
-
-    # the next batch signs wide with NO caller-side geometry knowledge
-    ingest_increment(
-        store, docs2, "b2", span=None, min_tokens=MIN_TOKENS,
-        minhash=False, simhash=True,
-    )
-    all_cur = store.read("cur_docs").select("doc_id", "text")
-    sig = simhash_signatures_wide(all_cur, limbs=2)
-    want = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in near_dup_pairs_wide(
-            block_rows_wide(sig, n_blocks=8, limbs=2, block_bits=15),
-            n_blocks=8, limbs=2, block_bits=15,
-        ).collect()
-    }
-    got = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in store.read("sh_pairs").collect()
-    }
-    assert got == want and want
-
-
 # Long-haul integration tier (r12): excluded from the DEFAULT pytest run
 # (pytest.ini addopts) so the driver's verify window completes; run the
 # full suite with `python -m pytest tests/ -q -o addopts=""`.

@@ -9,10 +9,10 @@
 - the exact, span and MinHash families' increment + extend steps leave
   nothing in the session's cache manager — a long-lived session that
   ingests batch after batch pins no per-batch frame;
-- ingest has one mode: every store it writes is retractable, the
-  SimHash family alone refuses late batches and retraction, and a store
-  in the removed monotone-only layout (``cur_docs`` without
-  ``cur_pre``) is refused.
+- ingest has one mode: every store it writes is retractable, and a
+  store in a removed layout — the monotone-only mode's (``cur_docs``
+  without ``cur_pre``) or the persisted SimHash family's
+  (``sh_signatures``) — is refused.
 """
 
 from __future__ import annotations
@@ -145,25 +145,20 @@ def test_in_order_store_is_retractable(spark, tmp_path):
     )
 
 
-def test_simhash_store_refuses_late_batches_and_retraction(spark, tmp_path):
+def test_simhash_layout_is_refused(spark, tmp_path):
     store = TableStore(spark, tmp_path, write_partitions=2, snapshot_isolation=True)
-    sh = dict(CFG, minhash=False, simhash=True)
-    ingest_increment(store, _mk(spark, BATCH2), "b2", **sh)
+    sigs = spark.createDataFrame([(21, 5)], "doc_id long, simhash long")
+    with store.commit_bracket("old"):
+        store.overwrite("sh_signatures", sigs)
 
-    late = _mk(spark, [(5, _t("late", 0, 10))])
     with pytest.raises(ValueError, match="SimHash"):
-        ingest_increment(store, late, "late", **sh)
-    # the stored family alone is enough to refuse the late batch
-    with pytest.raises(ValueError, match="SimHash"):
-        ingest_increment(store, late, "late", **CFG)
-
-    ingest_increment(store, _mk(spark, [(40, _t("next", 0, 10))]), "b3", **sh)
-    assert (40,) in _rows(store.read("sh_signatures"), "doc_id")
-
+        ingest_increment(store, _mk(spark, BATCH2), "b2", **CFG)
     with pytest.raises(ValueError, match="SimHash"):
         retract_documents(
-            store, spark.createDataFrame([(23,)], "doc_id long"), "rt-1", **CFG
+            store, spark.createDataFrame([(21,)], "doc_id long"), "rt-1", **CFG
         )
+    with pytest.raises(TypeError):
+        ingest_increment(store, _mk(spark, BATCH2), "b2", simhash=True, **CFG)
 
 
 def test_monotone_only_layout_is_refused(spark, tmp_path):
