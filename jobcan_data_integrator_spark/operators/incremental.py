@@ -1,9 +1,8 @@
 """Incremental (new-vs-corpus) deduplication and ANN indexing over
-persisted index tables — nine families: exact-dedup hashes, MinHash
-bands, embedding LSH buckets, IVF cell assignments, SemDeDup pairs,
-ExactSubstr span hashes, n-gram LM counts (perplexity scoring at
-ingest), boilerplate line-stats (line cleaning at ingest), and PQ codes
-(compressed ANN serving).
+persisted index tables — eight families: exact-dedup hashes, MinHash
+bands, IVF cell assignments, SemDeDup pairs, ExactSubstr span hashes,
+n-gram LM counts (perplexity scoring at ingest), boilerplate line-stats
+(line cleaning at ingest), and PQ codes (compressed ANN serving).
 
 A 100 TB training pipeline cannot re-dedup the whole corpus for every
 ingest batch — the full-corpus LSH pipeline (gate/llm.py
@@ -106,15 +105,7 @@ OOO_DROP_TABLES = ("mh_doc_drops", "mh_band_drops", "mh_pair_drops")
 #: tables by ``compact_store``.
 DOC_RETRACTIONS = "doc_retractions"
 FLAG_DROPS = "sp_flag_drops"
-#: vec_id-keyed sibling of ``doc_retractions`` for the embedding
-#: families (operators/ingest.retract_vectors): masks the corpus side
-#: of ``embedding_increment``/``semantic_increment`` and the
-#: IVF/PQ serving paths; pair rows touching retracted vectors are
-#: physically deleted at retract time (the pair tables are unmanaged),
-#: and ``compact_store`` folds the mask into the vector/bucket/
-#: assignment/code tables.
-EMB_RETRACTIONS = "emb_retractions"
-RETRACT_MASK_TABLES = (DOC_RETRACTIONS, FLAG_DROPS, EMB_RETRACTIONS)
+RETRACT_MASK_TABLES = (DOC_RETRACTIONS, FLAG_DROPS)
 
 
 def _mask_retracted(store: TableStore, df: DataFrame) -> DataFrame:
@@ -122,15 +113,6 @@ def _mask_retracted(store: TableStore, df: DataFrame) -> DataFrame:
     if store.exists(DOC_RETRACTIONS):
         df = df.join(
             F.broadcast(store.read(DOC_RETRACTIONS)), "doc_id", "left_anti"
-        )
-    return df
-
-
-def _mask_emb_retracted(store: TableStore, df: DataFrame) -> DataFrame:
-    """Anti-join the vector-retraction mask (no-op when absent)."""
-    if store.exists(EMB_RETRACTIONS):
-        df = df.join(
-            F.broadcast(store.read(EMB_RETRACTIONS)), "vec_id", "left_anti"
         )
     return df
 
@@ -182,10 +164,6 @@ def exact_index_buckets(n: int = 64) -> dict[str, tuple[str, int]]:
     return {"ex_docs": ("text_md5", n)}
 
 
-def embedding_index_buckets(n: int = 64) -> dict[str, tuple[str, int]]:
-    return {"eb_buckets": ("bucket", n), "eb_vectors": ("vec_id", n)}
-
-
 def minhash_pair_bands(width: int = 1 << 20) -> dict[str, tuple[str, int]]:
     """Range-band layout for the pair table: ``mh_pairs`` partitioned by
     ``doc_b div width`` (TableStore.range_partitioned).  Pairs always
@@ -215,7 +193,6 @@ DRIVER_BOUNDED_TABLES: dict[str, int] = {
         *OOO_DROP_TABLES,          # mh_doc_drops / mh_band_drops / mh_pair_drops
         DOC_RETRACTIONS,
         FLAG_DROPS,                # sp_flag_drops
-        EMB_RETRACTIONS,
         "sp_mask_hashes",          # SPAN_MASK_HASHES
         "ig_batches",              # ingest.LEDGER
         "cur_drops",               # ingest.TOMBSTONES
@@ -1031,9 +1008,8 @@ def build_ivf_index(
     # so assignments are recomputed under it — the same per-row map an
     # increment gets, which is exactly what makes stored ∪ increment
     # equal a one-pass assignment of everything.  The embedding rides
-    # along so ``ann_search_indexed`` probes read vectors directly from
-    # the assignment table (at warehouse scale: partitioned by cell_id,
-    # so a probe scans n_probe/n_cells of the data).
+    # along so the semantic family's within-cell pairs and the codebook
+    # refresh read vectors directly from the assignment table.
     assign = assign_cells(
         emb.select(
             "vec_id", "embedding", quantized_expr("embedding").alias("q")
@@ -1045,10 +1021,6 @@ def build_ivf_index(
     with store.commit_bracket("ivf-index-build"):
         store.overwrite("ivf_codebook", cent)
         store.overwrite("ivf_assignments", assign)
-        store.overwrite(
-            IVF_CELL_STATS,
-            assign.groupBy("cell_id").agg(F.count("*").alias("n_vecs")),
-        )
 
 
 def assign_increment(store: TableStore, new_emb: DataFrame) -> DataFrame:
@@ -1068,378 +1040,13 @@ def assign_increment(store: TableStore, new_emb: DataFrame) -> DataFrame:
 
 
 def extend_ivf_index(store: TableStore, new_assignments: DataFrame) -> None:
-    """Absorb an assigned increment into the assignment table, updating
-    the affected cells' occupancy stats (the drift signal) in the same
-    commit."""
-    new_assignments = new_assignments.localCheckpoint(eager=True)
-    stats = _cell_stat_rows(store, new_assignments)
+    """Absorb an assigned increment into the assignment table."""
     with store.commit_bracket("ivf-index-extend"):
         store.merge_insert_missing("ivf_assignments", new_assignments, ["vec_id"])
-        store.merge_upsert(IVF_CELL_STATS, stats, ["cell_id"])
-
-
-#: advisory sidecar (deliberately NOT in IVF_TABLES — retraction /
-#: compaction sweeps must not treat it as index state): per-cell LIVE
-#: vector counts, maintained for the AFFECTED cells at build / extend /
-#: refresh time so the codebook-drift signal (``ivf_drift_stats``) is an
-#: O(n_cells) read instead of a per-check corpus aggregation.  Vector
-#: retractions between extends leave counts stale until the next
-#: extend / refresh touches their cells — the signal is an advisory
-#: maintenance TRIGGER, and ``refresh_embedding_codebooks`` (its
-#: consumer) rebuilds the counts exactly.
-IVF_CELL_STATS = "ivf_cell_stats"
-
-#: refresh when the live mass is as concentrated as a uniform corpus
-#: over HALF the cells (normalized HHI ≥ 2), or when any single cell
-#: holds 4× its uniform share — either way the frozen codebook has
-#: drifted far enough that IVF probes re-rank multiples of their
-#: intended candidate volume.
-DRIFT_SKEW_THRESHOLD = 2.0
-DRIFT_MAX_SHARE_FACTOR = 4.0
-
-
-def _cell_stat_rows(store: TableStore, inc_assign: DataFrame) -> DataFrame:
-    """Exact post-extend (cell_id, n_vecs) for the increment's cells:
-    stored live rows in those cells plus the increment's genuinely-new
-    vec_ids.  Replay-safe by the same argument as merge_insert_missing —
-    an already-stored vec_id re-assigns to the SAME cell under the
-    frozen codebook, so the anti-join drops exactly the rows the insert
-    skips.  Cost is bounded by the affected cells' populations
-    (partition-pruned when ``ivf_assignments`` is declared
-    hive-partitioned by cell_id), never the corpus."""
-    corpus = store.read("ivf_assignments")
-    if store.exists(IVF_CELL_STATS):
-        cells_df = inc_assign.select("cell_id").distinct()
-        if "ivf_assignments" in store.partitioned:
-            cells = [r[0] for r in cells_df.collect()]
-            corpus = corpus.filter(F.col("cell_id").isin(cells))
-        else:
-            corpus = corpus.join(F.broadcast(cells_df), "cell_id", "leftsemi")
-    # else: first maintenance touch on a store built before the sidecar
-    # existed — count EVERY cell once (an affected-cells-only upsert
-    # would create a partial table), after which updates stay bounded
-    corpus = _mask_emb_retracted(store, corpus)
-    fresh = inc_assign.join(corpus.select("vec_id"), "vec_id", "left_anti")
-    return (
-        corpus.select("cell_id")
-        .unionAll(fresh.select("cell_id"))
-        .groupBy("cell_id")
-        .agg(F.count("*").alias("n_vecs"))
-        .localCheckpoint(eager=True)
-    )
-
-
-def ivf_drift_stats(store: TableStore) -> dict[str, float]:
-    """The codebook-drift signal: live-vector occupancy skew over the
-    frozen IVF cells.  Returns ``n_cells`` (codebook size), ``n_vecs``
-    (live vectors counted), ``live_cells``, ``empty_cells``,
-    ``max_share`` (largest cell's fraction) and ``skew`` — the
-    normalized Herfindahl index ``n_cells · Σ share²``: 1.0 for a
-    perfectly balanced corpus, ``n_cells`` when one cell holds
-    everything.  Reads the O(n_cells) ``ivf_cell_stats`` sidecar, which
-    every writer of ``ivf_assignments`` (build, extend, semantic extend,
-    refresh) writes in the same commit.  Feed to
-    ``should_refresh_codebooks`` or threshold directly."""
-    n_cells = store.read("ivf_codebook").count()
-    row = store.read(IVF_CELL_STATS).agg(
-        F.coalesce(F.sum("n_vecs"), F.lit(0)).alias("n"),
-        F.coalesce(F.max("n_vecs"), F.lit(0)).alias("mx"),
-        F.coalesce(F.sum(F.col("n_vecs") * F.col("n_vecs")), F.lit(0)).alias(
-            "sq"
-        ),
-        F.count("*").alias("live"),
-    ).first()
-    n, mx, sq, live = row["n"], row["mx"], row["sq"], row["live"]
-    return {
-        "n_cells": float(n_cells),
-        "n_vecs": float(n),
-        "live_cells": float(live),
-        "empty_cells": float(n_cells - live),
-        "max_share": (mx / n) if n else 0.0,
-        "skew": (n_cells * sq / (n * n)) if n else 1.0,
-    }
-
-
-def maybe_refresh_codebooks(
-    store: TableStore,
-    *,
-    skew_threshold: float = DRIFT_SKEW_THRESHOLD,
-    max_share_factor: float = DRIFT_MAX_SHARE_FACTOR,
-    **refresh_kwargs,
-) -> bool:
-    """Run ``refresh_embedding_codebooks`` iff the drift signal fires —
-    the codebook twin of ``ingest.maybe_compact_store``: the check costs
-    one O(n_cells) read of the occupancy sidecar (no assignment-table
-    scan), so callers can invoke it after every extend (or cron it) and
-    pay the corpus-sized retrain only when the frozen codebook has
-    actually drifted past the documented thresholds.  Returns True when
-    a refresh ran.  No-op on stores without the IVF family (PQ-only
-    stores have no occupancy signal to threshold — cron their refresh)."""
-    if not store.exists("ivf_codebook"):
-        return False
-    if not should_refresh_codebooks(
-        store,
-        skew_threshold=skew_threshold,
-        max_share_factor=max_share_factor,
-    ):
-        return False
-    refresh_embedding_codebooks(store, **refresh_kwargs)
-    return True
-
-
-def should_refresh_codebooks(
-    store: TableStore,
-    *,
-    skew_threshold: float = DRIFT_SKEW_THRESHOLD,
-    max_share_factor: float = DRIFT_MAX_SHARE_FACTOR,
-) -> bool:
-    """The maintenance-policy decision ``refresh_embedding_codebooks``'s
-    docstring defers to ("run it on a drift signal or a cron"): True
-    when the occupancy skew crosses either documented threshold.  Call
-    it after (a batch of) extends — the check is O(n_cells) — and run
-    the refresh when it fires; the rebuilt codebook re-balances the
-    cells and the signal resets (pinned in tests/test_codebook_refresh)."""
-    s = ivf_drift_stats(store)
-    return (
-        s["skew"] >= skew_threshold
-        or s["max_share"] >= max_share_factor / s["n_cells"]
-    )
-
-
-def ann_search_indexed(
-    store: TableStore,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    *,
-    exclude_self: bool = True,
-    exclude: DataFrame | None = None,
-    restrict_to: DataFrame | None = None,
-) -> DataFrame:
-    """(q_id, vec_id, cosine_sim) top-k over the PERSISTED IVF index —
-    the serving path: queries probe their ``n_probe`` best cells under
-    the stored codebook (broadcast, zero shuffle on the corpus side) and
-    re-rank only the vectors assigned to those cells, read straight from
-    the assignment table.  No corpus-wide assignment recompute — that
-    already happened at build/extend time.  Declare the assignment table
-    hive-partitioned (``TableStore(..., partitioned={"ivf_assignments":
-    ["cell_id"]})``) and the probe is PARTITION-PRUNED: the probed cell
-    set is collected (≤ n_probe × queries, a serving-path action) and
-    pushed as a partition filter, so each search scans ~n_probe/n_cells
-    of the table instead of all of it.  Results match ``ann_topk_ivf``
-    run with the stored codebook exactly (same rounded-cosine + vec_id
-    ranking) in either layout.
-
-    ``exclude_self`` (default True — the corpus-internal near-dup
-    shape): drop the hit whose vec_id EQUALS the query's id.  Pass
-    False when query ids live in a DIFFERENT id space than the corpus
-    (e.g. hybrid_search_curated's external q_ids): a numeric collision
-    between a query id and a corpus vec_id must not silently drop that
-    vector.  ``exclude`` (a vec_id frame) masks corpus vectors BEFORE
-    the top-k cut — the liveness lever (same contract as
-    bm25_query_indexed's exclude), so a caller needing k LIVE hits gets
-    k, not k minus however many masked rows made the cut.  ``exclude``
-    is for BROADCAST-SMALL sets (it anti-joins broadcast); when the
-    allowed set is the corpus-sized one (e.g. "vectors of live curated
-    docs", hybrid_search_curated), pass it as ``restrict_to`` instead —
-    a left-semi join applied pre-cut, which Spark plans as an ordinary
-    keyed join on the cell-pruned candidate set."""
-    from jobcan_data_integrator_spark.operators.similarity import (
-        cosine_expr,
-        probe_cells,
-        quantized_expr,
-    )
-    from pyspark.sql.window import Window
-
-    cent = store.read("ivf_codebook")
-    assign = _mask_emb_retracted(store, store.read("ivf_assignments"))
-    if exclude is not None:
-        assign = assign.join(
-            F.broadcast(exclude.select("vec_id")), "vec_id", "left_anti"
-        )
-    if restrict_to is not None:
-        assign = assign.join(
-            restrict_to.select("vec_id"), "vec_id", "leftsemi"
-        )
-    probe = probe_cells(
-        queries.select("vec_id", quantized_expr("embedding").alias("q")),
-        cent,
-        n_probe,
-    ).withColumnRenamed("vec_id", "q_id")
-    if "ivf_assignments" in store.partitioned:
-        # checkpoint, not cache: serving calls repeat, and forgotten
-        # cache entries would accumulate (GC reclaims checkpoint RDDs)
-        probe = probe.localCheckpoint(eager=True)
-        cells = [r[0] for r in probe.select("cell_id").distinct().collect()]
-        assign = assign.filter(F.col("cell_id").isin(cells))
-    q_emb = queries.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    sims = F.broadcast(probe).join(assign, "cell_id")
-    if exclude_self:
-        sims = sims.filter(F.col("vec_id") != F.col("q_id"))
-    sims = sims.join(F.broadcast(q_emb), "q_id").withColumn(
-        "cosine_sim", cosine_expr("q_emb", "embedding")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine_sim")
-    )
 
 
 # ---------------------------------------------------------------------------
-# Embedding LSH-bucket index (cosine near-dup, the 4th index family)
-# ---------------------------------------------------------------------------
-
-#: embedding index tables: vectors + their per-band LSH buckets + pairs.
-EMBEDDING_TABLES = ("eb_vectors", "eb_buckets", "eb_pairs")
-
-
-def build_embedding_index(
-    store: TableStore,
-    emb: DataFrame,
-    threshold: float = 0.3,
-    n_planes: int = 8,
-    dim: int = 64,
-    n_bands: int = 1,
-) -> None:
-    """Persist (vec_id, embedding), the per-band bucket table, and the
-    corpus-internal near-dup pairs for an initial corpus."""
-    from jobcan_data_integrator_spark.operators.similarity import (
-        bucket_rows,
-        embedding_near_dup_pairs,
-    )
-
-    emb = emb.cache()
-    pairs = embedding_near_dup_pairs(emb, threshold, n_planes, dim, n_bands)
-    with store.commit_bracket("eb-index-build"):
-        try:
-            store.overwrite("eb_vectors", emb)
-            store.overwrite(
-                "eb_buckets",
-                bucket_rows(emb, n_planes, dim, n_bands).select(
-                    "vec_id", "band", "bucket"
-                ),
-            )
-            store.overwrite("eb_pairs", pairs)
-        finally:
-            # drop the scratch cache once the writes are done
-            store.submit_op(emb.unpersist, reads=tuple(EMBEDDING_TABLES))
-
-
-def embedding_increment(
-    store: TableStore,
-    new_emb: DataFrame,
-    threshold: float = 0.3,
-    n_planes: int = 8,
-    dim: int = 64,
-    n_bands: int = 1,
-) -> DataFrame:
-    """(vec_a, vec_b, cosine_sim) near-dup pairs INVOLVING the increment
-    — union with stored ``eb_pairs`` to reproduce the full corpus's pair
-    set.  Candidates come from one (band, bucket) equi-join against the
-    persisted bucket table plus the increment's self-join; embeddings are
-    fetched for candidate ids only (ids-only dedup first, the same
-    vector-movement discipline as embedding_near_dup_pairs).
-
-    REPLAY-SAFE like ``dedup_increment``: corpus-side vectors for
-    increment vec_ids are anti-joined away before the union, so a
-    re-delivered batch the index already absorbed cannot double-match
-    the embedding fetch join (which would emit duplicate pair rows)."""
-    from jobcan_data_integrator_spark.operators.similarity import (
-        bucket_rows,
-        cosine_expr,
-    )
-
-    new_emb = new_emb.localCheckpoint(eager=True)
-    new_b = (
-        bucket_rows(new_emb, n_planes, dim, n_bands)
-        .select("vec_id", "band", "bucket")
-        .localCheckpoint(eager=True)
-    )
-    # bucket-pruned on a store bucketed with ``embedding_index_buckets``:
-    # the corpus bucket table is scanned only where the increment's LSH
-    # bucket values hash, and vectors are fetched only from the candidate
-    # ids' buckets (plain read on an unbucketed store, same results)
-    corpus_b = _mask_emb_retracted(
-        store, store.read_for_keys("eb_buckets", new_b.select("bucket"))
-    )
-    a = new_b.alias("a")
-    cross = (
-        a.join(
-            corpus_b.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.least(F.col("a.vec_id"), F.col("b.vec_id")).alias("vec_a"),
-            F.greatest(F.col("a.vec_id"), F.col("b.vec_id")).alias("vec_b"),
-        )
-    )
-    within = (
-        a.join(
-            new_b.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-    )
-    cand = cross.unionByName(within).distinct()
-    if "eb_vectors" in store.bucketed:
-        cand = cand.localCheckpoint(eager=True)
-        cand_ids = cand.select(
-            F.explode(F.array("vec_a", "vec_b")).alias("vec_id")
-        )
-        corpus_vecs = store.read_for_keys("eb_vectors", cand_ids)
-    else:
-        corpus_vecs = store.read("eb_vectors")
-    corpus_vecs = _mask_emb_retracted(store, corpus_vecs).join(
-        F.broadcast(new_emb.select("vec_id")), "vec_id", "left_anti"
-    )
-    vecs = corpus_vecs.unionByName(new_emb)
-    return (
-        cand.join(vecs.alias("va"), F.col("vec_a") == F.col("va.vec_id"))
-        .join(vecs.alias("vb"), F.col("vec_b") == F.col("vb.vec_id"))
-        .select(
-            "vec_a",
-            "vec_b",
-            cosine_expr("va.embedding", "vb.embedding").alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-    )
-
-
-def extend_embedding_index(
-    store: TableStore,
-    new_emb: DataFrame,
-    new_pairs: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    n_bands: int = 1,
-) -> None:
-    """Absorb a processed increment: append vectors + buckets, upsert
-    pairs (materialized first — it scans the tables being rewritten)."""
-    from jobcan_data_integrator_spark.operators.similarity import bucket_rows
-
-    new_pairs = new_pairs.localCheckpoint(eager=True)
-    with store.commit_bracket("eb-index-extend"):
-        store.merge_insert_missing("eb_vectors", new_emb, ["vec_id"])
-        store.merge_insert_missing(
-            "eb_buckets",
-            bucket_rows(new_emb, n_planes, dim, n_bands).select(
-                "vec_id", "band", "bucket"
-            ),
-            ["vec_id", "band"],
-        )
-        store.merge_upsert("eb_pairs", new_pairs, ["vec_a", "vec_b"])
-
-
-# ---------------------------------------------------------------------------
-# Semantic-dedup pair index (SemDeDup over the IVF assignments, the 6th
+# Semantic-dedup pair index (SemDeDup over the IVF assignments, the 4th
 # incremental family — closes the loop: IVF cells -> within-cell cosine
 # pairs -> cluster-label maintenance via extend_clusters)
 # ---------------------------------------------------------------------------
@@ -1533,7 +1140,7 @@ def semantic_increment(
     if "ivf_assignments" in store.partitioned:
         cells = [r[0] for r in inc.select("cell_id").distinct().collect()]
         corpus = corpus.filter(F.col("cell_id").isin(cells))
-    corpus = _mask_emb_retracted(store, corpus).join(
+    corpus = corpus.join(
         F.broadcast(inc.select("vec_id")), "vec_id", "left_anti"
     )
     return _cell_pairs(inc, corpus, threshold).unionByName(
@@ -1547,16 +1154,14 @@ def extend_semantic_index(
     """Absorb a processed increment: insert its assignments (computed
     under the stored codebook), upsert its pairs."""
     new_pairs = new_pairs.localCheckpoint(eager=True)
-    inc = assign_increment(store, new_emb).localCheckpoint(eager=True)
-    stats = _cell_stat_rows(store, inc)
+    inc = assign_increment(store, new_emb)
     with store.commit_bracket("sd-index-extend"):
         store.merge_insert_missing("ivf_assignments", inc, ["vec_id"])
         store.merge_upsert("sd_pairs", new_pairs, ["vec_a", "vec_b"])
-        store.merge_upsert(IVF_CELL_STATS, stats, ["cell_id"])
 
 
 # ---------------------------------------------------------------------------
-# Span-hash index (incremental ExactSubstr dedup — the 7th family)
+# Span-hash index (incremental ExactSubstr dedup — the 5th family)
 # ---------------------------------------------------------------------------
 
 #: span-dedup index tables: the occurrence table is the canonical
@@ -1708,7 +1313,7 @@ def extend_span_index(
 
 
 # ---------------------------------------------------------------------------
-# n-gram LM count index (the 8th family: perplexity scoring at ingest)
+# n-gram LM count index (the 6th family: perplexity scoring at ingest)
 # ---------------------------------------------------------------------------
 
 #: LM index tables: the three count tables keyed by the 60-bit n-gram
@@ -1897,7 +1502,7 @@ def extend_lm_index(
 
 # ---------------------------------------------------------------------------
 # Boilerplate line-stats index (incremental line-level cleaning — the
-# 9th family): persist per-line-hash document frequencies so each
+# 7th family): persist per-line-hash document frequencies so each
 # ingest batch cleans ITSELF against the accumulated corpus stats and
 # then adds its own counts, without ever rescanning stored text.
 # ---------------------------------------------------------------------------
@@ -2028,7 +1633,7 @@ def extend_line_index(
 
 
 # ---------------------------------------------------------------------------
-# PQ code index (compressed ANN serving — the 10th family): persist the
+# PQ code index (compressed ANN serving — the 8th family): persist the
 # trained product-quantization codebook and every vector's codes so ADC
 # search runs against ~8-byte rows, and each ingest batch encodes
 # itself against the FROZEN codebook (the standard PQ stance: the
@@ -2102,19 +1707,17 @@ def refresh_embedding_codebooks(
     single snapshot publish.
 
     Equivalence contract (tests/test_codebook_refresh.py): after any
-    sequence of builds, extends, and vector retractions, the refreshed
+    sequence of builds and extends, the refreshed
     ``ivf_codebook``/``ivf_assignments``/``pq_codebooks``/``pq_codes``
     equal a from-scratch ``build_ivf_index``/``build_pq_index`` over
-    the surviving vectors — exactly, because the integer k-means is
-    bit-stable (train_ivf_centroids) and retraction masks are applied
-    to the training input.
+    the stored vectors — exactly, because the integer k-means is
+    bit-stable (train_ivf_centroids).
 
     Defaults re-use each family's current geometry (cell count from
     ``ivf_codebook``, ``m``/``k`` from ``pq_codebooks``); pass explicit
     values when cells have dropped out and the original geometry should
-    be restored.  The LSH family (``eb_*``) has no trained state — its
-    hyperplanes are data-independent — so it is left untouched, as is
-    the ``emb_retractions`` mask (folded by ``compact_store``)."""
+    be restored.  The vectors come from ``ivf_assignments`` (``pq_codes``
+    stores codes only), so a PQ-only store is refused."""
     from jobcan_data_integrator_spark.operators.pq import pq_encode, train_pq
     from jobcan_data_integrator_spark.operators.similarity import (
         assign_cells,
@@ -2127,51 +1730,36 @@ def refresh_embedding_codebooks(
     if not has_ivf and not has_pq:
         raise ValueError(
             "refresh_embedding_codebooks: store has neither the IVF nor "
-            "the PQ family (the LSH family's hyperplanes are "
-            "data-independent and never need retraining)"
+            "the PQ family"
         )
-    if has_ivf:
-        src = store.read("ivf_assignments").select("vec_id", "embedding")
-    elif store.exists("eb_vectors"):
-        src = store.read("eb_vectors").select("vec_id", "embedding")
-    else:
+    if not has_ivf:
         raise ValueError(
             "refresh_embedding_codebooks: no vector-bearing family to "
             "retrain from (pq_codes stores codes only) — keep the IVF "
-            "assignments or the LSH vector table alongside PQ"
+            "assignments alongside PQ"
         )
     live = (
-        _mask_emb_retracted(store, src)
+        store.read("ivf_assignments")
+        .select("vec_id", "embedding")
         .dropDuplicates(["vec_id"])
         .localCheckpoint(eager=True)
     )
 
     summary: dict[str, int] = {"n_vectors": live.count()}
     with store.commit_bracket("codebook-refresh"):
-        if has_ivf:
-            n_cells = ivf_cells or store.read("ivf_codebook").count()
-            cent, _ = train_ivf_centroids(
-                live, n_cells=n_cells, iters=ivf_iters
-            )
-            cent = cent.localCheckpoint(eager=True)
-            assign = assign_cells(
-                live.select(
-                    "vec_id",
-                    "embedding",
-                    quantized_expr("embedding").alias("q"),
-                ),
-                cent,
-                keep=("embedding",),
-            ).localCheckpoint(eager=True)
-            store.overwrite("ivf_codebook", cent)
-            store.overwrite("ivf_assignments", assign)
-            # exact occupancy rebuild: the refresh is what RESETS the
-            # drift signal (ivf_drift_stats)
-            store.overwrite(
-                IVF_CELL_STATS,
-                assign.groupBy("cell_id").agg(F.count("*").alias("n_vecs")),
-            )
-            summary["ivf_cells"] = cent.count()
+        n_cells = ivf_cells or store.read("ivf_codebook").count()
+        cent, _ = train_ivf_centroids(live, n_cells=n_cells, iters=ivf_iters)
+        cent = cent.localCheckpoint(eager=True)
+        assign = assign_cells(
+            live.select(
+                "vec_id", "embedding", quantized_expr("embedding").alias("q")
+            ),
+            cent,
+            keep=("embedding",),
+        ).localCheckpoint(eager=True)
+        store.overwrite("ivf_codebook", cent)
+        store.overwrite("ivf_assignments", assign)
+        summary["ivf_cells"] = cent.count()
         if has_pq:
             cur = store.read("pq_codebooks")
             m = pq_m or cur.agg(F.max("sub")).first()[0] + 1
@@ -2196,7 +1784,7 @@ def pq_search_indexed(
     from jobcan_data_integrator_spark.operators.pq import pq_search
 
     return pq_search(
-        _mask_emb_retracted(store, store.read("pq_codes")),
+        store.read("pq_codes"),
         store.read("pq_codebooks"),
         queries,
         k=k,
@@ -2215,7 +1803,7 @@ def ivfpq_search_indexed(
     from jobcan_data_integrator_spark.operators.pq import ann_topk_ivfpq
 
     return ann_topk_ivfpq(
-        _mask_emb_retracted(store, store.read("pq_codes")),
+        store.read("pq_codes"),
         store.read("ivf_assignments").select("vec_id", "cell_id"),
         store.read("pq_codebooks"),
         store.read("ivf_codebook"),

@@ -65,7 +65,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from jobcan_data_integrator_spark.storage import TableStore
 
@@ -82,12 +81,6 @@ CURATED_PRE = "cur_pre"
 #: absorbed-retraction ledger (retract_documents): one row per
 #: retract_id, so a redelivered retraction is a no-op.
 RETRACTIONS = "cur_retractions"
-#: (doc_id, vec_id) mapping recorded when ``ingest_increment`` absorbs
-#: a batch whose ``new_emb`` carries a ``doc_id`` column — the link
-#: that lets ``retract_documents`` CASCADE a doc takedown into the
-#: embedding families (a compliance request arrives as doc ids; without
-#: the mapping the retracted docs' vectors keep serving ANN results).
-DOC_VECS = "doc_vecs"
 #: compliance receipt: one row per absorbed retraction (ids count,
 #: families touched, the snapshot version it published) — written
 #: inside the retraction's own commit, so the receipt exists iff the
@@ -330,100 +323,6 @@ def bm25_search_curated(
         max_df_ratio=max_df_ratio,
         exclude=exclude,
     )
-
-
-def hybrid_search_curated(
-    store: TableStore,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    n_probe: int = 2,
-    rrf_k: int = 60,
-    k1: float = 1.2,
-    b: float = 0.75,
-    max_df_ratio: float | None = None,
-) -> DataFrame:
-    """Hybrid top-k over the LIVE curated corpus, served entirely from
-    the PERSISTED families: the BM25 lexical list
-    (``bm25_search_curated`` — posting reads bucket-pruned) and the
-    IVF-ANN dense list (``ann_search_indexed`` — cell-probe-pruned,
-    mapped to docs through the ``doc_vecs`` table the embedding ingest
-    records), fused with reciprocal-rank fusion
-    (operators/retrieval.rrf_fuse).
-
-    ``queries``: ``(q_id, q_text[, embedding])`` — rows with a non-null
-    ``embedding`` get a dense list; rows without degrade to lexical-only
-    contributions (RRF's union semantics).  A store without the
-    embedding families or the ``doc_vecs`` mapping serves lexical-only.
-    Liveness matches ``read_curated`` on BOTH sides, applied BEFORE
-    each retriever's top-k cut: the tombstone set masks the lexical
-    stats before df/avgdl are derived, and the dense candidate set is
-    semi-joined (inside ``ann_search_indexed``) to the vectors of LIVE
-    curated docs — so neither a cluster-demoted doc whose vectors were
-    never retracted NOR a doc the curation itself dropped (exact dupe /
-    floor: no cur_docs row, no tombstone) can consume dense slots or
-    serve at all (vector retractions are masked there too).  Query ids
-    are an EXTERNAL id space: the ANN self-exclusion is off, so a
-    numeric collision between a q_id and a corpus vec_id drops nothing.
-    A doc with several vectors counts once, by its best similarity.
-    This is the write-once/query-many production path — the stateless
-    gate ``rt_hybrid_rrf`` is its oracle-friendly rebuild-per-run
-    sibling."""
-    from jobcan_data_integrator_spark.operators import incremental as inc
-    from jobcan_data_integrator_spark.operators import retrieval as rt
-
-    lex = bm25_search_curated(
-        store,
-        queries.select("q_id", "q_text"),
-        k1=k1,
-        b=b,
-        k=k,
-        max_df_ratio=max_df_ratio,
-    ).select("q_id", "doc_id", "rank")
-    lists = [lex]
-    if (
-        "embedding" in queries.columns
-        and store.exists("ivf_assignments")
-        and store.exists(DOC_VECS)
-    ):
-        qv = (
-            queries.filter(F.col("embedding").isNotNull())
-            .select(F.col("q_id").alias("vec_id"), "embedding")
-            .localCheckpoint(eager=True)
-        )
-        if qv.head(1):
-            doc_map = inc._mask_retracted(
-                store, store.read(DOC_VECS).select("vec_id", "doc_id")
-            )
-            # liveness = "maps to a read_curated doc": tombstoned docs
-            # AND docs the curation itself dropped (exact dupes, floors
-            # — no cur_docs row, no tombstone) both have vectors in the
-            # family, and neither may serve.  The live set is corpus-
-            # sized, so it rides a semi-join inside the ANN (pre-cut),
-            # never a broadcast mask.
-            live_vecs = doc_map.join(
-                read_curated(store).select("doc_id"), "doc_id", "leftsemi"
-            ).select("vec_id")
-            ann = inc.ann_search_indexed(
-                store,
-                qv,
-                k=k,
-                n_probe=n_probe,
-                exclude_self=False,
-                restrict_to=live_vecs,
-            )
-            best = ann.join(doc_map, "vec_id").groupBy("q_id", "doc_id").agg(
-                F.max("cosine_sim").alias("cosine_sim")
-            )
-            w = Window.partitionBy("q_id").orderBy(
-                F.col("cosine_sim").desc(), F.col("doc_id")
-            )
-            lists.append(
-                best.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("q_id", "doc_id", "rank")
-            )
-    return rt.rrf_fuse(lists, k=rrf_k, topk=k)
 
 
 def probe_duplicates(
@@ -782,22 +681,31 @@ def _tombstone(
     write(TOMBSTONES, rows, ["doc_id"])
 
 
+#: (table, feature) for each removed feature whose tables no current
+#: code maintains, repairs or retracts
+_REMOVED_LAYOUTS = (
+    ("sh_signatures", "the persisted SimHash family"),
+    ("doc_vecs", "the embedding families' doc-to-vector cascade"),
+    ("emb_retractions", "the embedding families' vector retraction"),
+)
+
+
 def _require_repair_tables(store: TableStore) -> None:
     """Refuse the layouts of removed features that no current code can
     repair or retract: the monotone-only mode's (``cur_docs`` without
-    ``cur_pre``) and the persisted SimHash family's (``sh_signatures``)."""
+    ``cur_pre``) and each ``_REMOVED_LAYOUTS`` table."""
     if store.exists(CURATED) and not store.exists(CURATED_PRE):
         raise ValueError(
             f"store holds {CURATED} but no {CURATED_PRE}: it was written "
             "by the removed monotone-only ingest mode, which kept no "
             "repair tables — re-ingest it from its source batches"
         )
-    if store.exists("sh_signatures"):
-        raise ValueError(
-            "store holds sh_signatures: the persisted SimHash family was "
-            "removed (it had no repair or retraction path) — re-ingest "
-            "the store from its source batches"
-        )
+    for table, feature in _REMOVED_LAYOUTS:
+        if store.exists(table):
+            raise ValueError(
+                f"store holds {table}: {feature} was removed — re-ingest "
+                "the store from its source batches"
+            )
 
 
 def _relabel_after_retraction(
@@ -1200,11 +1108,8 @@ def ingest_increment(
     pack_budget: int | None = None,
     chunk_tokens: int = 32,
     chunk_overlap: int = 8,
-    new_emb: DataFrame | None = None,
-    emb_families: tuple[str, ...] = ("lsh", "ivf", "pq"),
     allow_out_of_order: bool = True,
     auto_compact_bytes: int | None = 8 << 20,
-    auto_refresh_codebooks: bool | dict = False,
     bm25: bool = False,
 ) -> IngestResult:
     """Curate one arriving (doc_id, text) batch against — and into —
@@ -1220,10 +1125,6 @@ def ingest_increment(
       ``cluster_threshold`` with min-id keepers via ``cc_labels``.
     - ``pack_budget``: chunk + pack the batch's kept docs into
       batch-scoped shards (``cur_chunks``/``cur_shards``).
-    - ``new_emb``: this batch's (vec_id, embedding) rows; the
-      ``emb_families`` among lsh/ivf/semantic/pq are built on first
-      sight and extended after (semantic requires an existing
-      ``sd_pairs`` — seed with build_semantic_index).
 
     First batch against an empty store BUILDS each family; later
     batches increment.  Batches may arrive in any doc-id order, their
@@ -1259,23 +1160,11 @@ def ingest_increment(
       conservative merged labels — the same as-of-ingest stance as the
       boilerplate line stats.
 
-    Two removed layouts raise (``_require_repair_tables``): the
-    monotone-only mode's and the persisted SimHash family's.  So does
+    Removed layouts raise (``_require_repair_tables``): the
+    monotone-only mode's and each ``_REMOVED_LAYOUTS`` table.  So does
     ``allow_out_of_order=False`` (kept for existing callers; ``True`` is
     its one value).  Batch-order equivalence with the one-shot curation
     (docs + pairs + labels) is pinned in tests/test_ingest.py.
-
-    ``auto_refresh_codebooks``: after a successful publish, check the
-    IVF codebook-drift signal (``incremental.should_refresh_codebooks``
-    — one O(n_cells) read of the ``ivf_cell_stats`` sidecar, no
-    assignment-table scan) and run ``refresh_embedding_codebooks`` iff
-    it fires — the orchestrated form of the r10 drift trigger, wired
-    exactly like ``auto_compact_bytes``: the check is per-batch cheap,
-    the corpus-sized retrain runs only when the frozen codebook has
-    actually drifted past the documented thresholds.  No-op on stores
-    without the IVF family.  Pass a dict to forward kwargs to
-    ``maybe_refresh_codebooks`` (e.g. ``{"ivf_cells": 64}`` to grow the
-    cell count with the corpus, or tightened thresholds).
 
     ``auto_compact_bytes``: after a successful publish, fold the
     merge-on-read masks into their base tables (``compact_store``) once
@@ -1580,8 +1469,8 @@ def ingest_increment(
 
         # 5. curated-corpus merge + optional batch-scoped chunk/pack —
         # independent single-table merges issued HERE, so on a snapshot
-        # store they overlap the embedding-family section below (inline,
-        # hence still ledger-last, on plain stores)
+        # store they overlap each other (inline, hence still ledger-last,
+        # on plain stores)
         store.merge_insert_missing(
             CURATED, kept.withColumn("batch_id", F.lit(batch_id)), ["doc_id"]
         )
@@ -1627,50 +1516,7 @@ def ingest_increment(
             store.merge_insert_missing(SHARDS, packed, ["chunk_id"])
             stages.append(("chunks", chunks))
 
-        # 6. embedding families for this batch's vectors.  A ``doc_id``
-        # column on new_emb records the (doc_id, vec_id) mapping so a
-        # later ``retract_documents`` cascades into these families; a
-        # vec_id retracted by ``retract_vectors`` stays retracted (same
-        # permanence stance as the doc-side guard above).
-        if new_emb is not None:
-            emb = inc._mask_emb_retracted(store, new_emb).localCheckpoint(
-                eager=True
-            )
-            if "doc_id" in emb.columns:
-                store.merge_insert_missing(
-                    DOC_VECS, emb.select("doc_id", "vec_id"), ["vec_id"]
-                )
-                emb = emb.drop("doc_id")
-            if "lsh" in emb_families:
-                if not store.exists("eb_vectors"):
-                    inc.build_embedding_index(store, emb)
-                else:
-                    ep = inc.embedding_increment(store, emb)
-                    inc.extend_embedding_index(store, emb, ep)
-            if "ivf" in emb_families:
-                if not store.exists("ivf_codebook"):
-                    inc.build_ivf_index(store, emb)
-                else:
-                    inc.extend_ivf_index(
-                        store, inc.assign_increment(store, emb)
-                    )
-            if "semantic" in emb_families:
-                if not store.exists("sd_pairs"):
-                    raise ValueError(
-                        "semantic family needs a seeded sd_pairs — run "
-                        "build_semantic_index on the initial corpus first"
-                    )
-                sp = inc.semantic_increment(store, emb)
-                inc.extend_semantic_index(store, emb, sp)
-            if "pq" in emb_families:
-                if not store.exists("pq_codebooks"):
-                    inc.build_pq_index(store, emb)
-                else:
-                    inc.extend_pq_index(
-                        store, inc.encode_pq_increment(store, emb)
-                    )
-
-        # 7. the ledger, written LAST.  On a plain store every write
+        # 6. the ledger, written LAST.  On a plain store every write
         # above ran inline in program order, so the ledger still lands
         # after every family write — a crash before it leaves the batch
         # replayable (idempotent family merges), after it redelivery
@@ -1683,15 +1529,6 @@ def ingest_increment(
     )
     if auto_compact_bytes is not None:
         maybe_compact_store(store, threshold_bytes=auto_compact_bytes)
-    if auto_refresh_codebooks:
-        inc.maybe_refresh_codebooks(
-            store,
-            **(
-                auto_refresh_codebooks
-                if isinstance(auto_refresh_codebooks, dict)
-                else {}
-            ),
-        )
     return result
 
 
@@ -1782,18 +1619,10 @@ def retract_documents(
     ``repack_corpus`` re-densifies the whole corpus in one call.
 
     Scope: this call covers the DOC-keyed families (curated corpus,
-    exact hash map, span tables, MinHash family, cluster labels,
-    chunks/shards) AND — when the store carries the ``doc_vecs``
-    mapping ``ingest_increment`` records from a doc_id-carrying
-    ``new_emb`` — CASCADES into the embedding families
-    (eb_*/ivf_*/sd_*/pq_*): the retracted docs' vec_ids are scrubbed
-    via the same machinery as ``retract_vectors``, inside this same
-    commit, so a compliance takedown that arrives as doc ids covers the
-    ANN serving paths too (pinned in tests/test_retract_vectors.py).
-    On a store WITHOUT the mapping (vectors ingested by bare vec_id),
-    pass the mapped vec_ids to ``retract_vectors`` yourself.  Every
-    retraction appends a ``retraction_log`` receipt row (ids count,
-    families touched, snapshot version) in the same commit.
+    exact hash map, span tables, MinHash family, cluster labels, BM25,
+    chunks/shards).  Every retraction appends a ``retraction_log``
+    receipt row (ids count, families touched, snapshot version) in the
+    same commit.
     """
     from jobcan_data_integrator_spark.operators import incremental as inc
     from jobcan_data_integrator_spark.operators import retrieval as rt
@@ -1850,13 +1679,6 @@ def retract_documents(
         families += ["cc_labels"]
     if store.exists(CHUNKS):
         families += [CHUNKS, SHARDS]
-    # doc→vec cascade: a store whose ingest recorded the (doc_id,
-    # vec_id) mapping scrubs the embedding families in the SAME commit
-    cascade = store.exists(DOC_VECS)
-    if cascade:
-        families += [DOC_VECS, inc.EMB_RETRACTIONS]
-        families += [t for t in _EMB_ROW_TABLES if store.exists(t)]
-        families += [t for t, _, _ in _EMB_PAIR_TABLES if store.exists(t)]
 
     stages: list[tuple[str, DataFrame]] = []
     promoted: DataFrame | None = None
@@ -2176,30 +1998,8 @@ def retract_documents(
         if minhash and store.exists("cc_labels"):
             _sweep_cluster_demotions(store, retract_id)
 
-        # 7. doc→vec cascade: scrub the retracted docs' vectors from
-        # every embedding family (LSH/IVF/SemDeDup/PQ) inside this same
-        # commit — a takedown request arrives as doc ids, and a doc
-        # whose vectors keep serving ANN results is not deleted.  The
-        # mapping rows themselves are removed (takedown) where the
-        # table is unmanaged; a managed doc_vecs stays masked by
-        # doc_retractions until compact_store folds it.
-        if cascade:
-            vec_r = (
-                store.read(DOC_VECS)
-                .join(F.broadcast(r_ids), "doc_id", "leftsemi")
-                .select("vec_id")
-                .distinct()
-            )
-            vec_r = inc._mask_emb_retracted(store, vec_r)
-            vec_r = vec_r.localCheckpoint(eager=True)
-            if vec_r.head(1):
-                _retract_vec_rows(store, vec_r)
-            store.prune_keys(DOC_VECS, r_ids, ["doc_id"])
-
-        # 8. receipt + ledger LAST (same stance as ingest_increment)
-        _log_retraction(
-            store, retract_id, "documents", n_ids, sorted(set(families))
-        )
+        # 7. receipt + ledger LAST (same stance as ingest_increment)
+        _log_retraction(store, retract_id, n_ids, sorted(set(families)))
         store.merge_insert_missing(RETRACTIONS, ledger_row, ["retract_id"])
 
     result = RetractResult(retract_id, False, r_ids, promoted, repaired)
@@ -2208,145 +2008,9 @@ def retract_documents(
     return result
 
 
-def retract_vectors(
-    store: TableStore,
-    vec_ids: DataFrame,
-    retract_id: str,
-    *,
-    auto_compact_bytes: int | None = 8 << 20,
-) -> RetractResult:
-    """Targeted deletion for the EMBEDDING families — the vec_id-keyed
-    sibling of ``retract_documents``: one call removes vectors from the
-    LSH (``eb_*``), IVF (``ivf_assignments``), SemDeDup (``sd_pairs``)
-    and PQ (``pq_codes``) families under one commit, so a takedown that
-    maps its doc ids to vector ids scrubs the embedding side too.
-
-    Semantics: after the call, every probe and serving path —
-    ``embedding_increment``, ``semantic_increment``,
-    ``ann_search_indexed``, ``pq_search_indexed``,
-    ``ivfpq_search_indexed`` — behaves exactly as if the vectors were
-    never indexed (pinned in tests/test_retract_vectors.py against
-    stores built from the surviving vectors).  Mechanics: pair rows
-    touching a retracted vector are PHYSICALLY deleted, and so are the
-    vector/bucket/assignment/code rows — partition-SCOPED on bucketed
-    snapshot tables (``TableStore.prune_keys``: only the buckets the
-    ids hash into are rewritten; emptied buckets become layer
-    delete-markers).  A managed table the prune could only
-    full-rewrite (hive partition layouts) stays MASKED via the
-    ``emb_retractions`` broadcast mask instead, with ``compact_store``
-    folding the mask into the base tables later; the mask row is
-    always inserted regardless (permanence — a redelivered vec_id can
-    never re-index).
-    The frozen IVF/PQ codebooks are unaffected (they are trained
-    aggregates, not per-vector data — the standard takedown stance for
-    model-derived artifacts; retrain offline if required).
-
-    Cluster-label maintenance for vector-keyed label stores is the
-    pipeline's own composition (the labels live wherever it ran
-    ``extend_clusters`` on the semantic pairs); the deleted ``sd_pairs``
-    rows are exactly the retraction set such a relabel needs.
-
-    Same ledger (``cur_retractions``) and atomicity contract as
-    ``retract_documents``: redelivery of the same ``retract_id`` is a
-    no-op, a crash publishes nothing."""
-    from jobcan_data_integrator_spark.operators import incremental as inc
-
-    spark = vec_ids.sparkSession
-    if not store.snapshot_isolation:
-        raise ValueError(
-            "retract_vectors needs a snapshot-isolation store: the "
-            "multi-family retraction must publish atomically"
-        )
-    if store.exists(RETRACTIONS):
-        if (
-            store.read(RETRACTIONS)
-            .filter(F.col("retract_id") == retract_id)
-            .head(1)
-        ):
-            return RetractResult(
-                retract_id, True, spark.createDataFrame([], "vec_id bigint")
-            )
-
-    r_ids = inc._mask_emb_retracted(
-        store, vec_ids.select("vec_id").distinct()
-    ).localCheckpoint(eager=True)
-    n_ids = r_ids.count()
-    ledger_row = spark.range(1).select(
-        F.lit(retract_id).alias("retract_id"),
-        F.lit(n_ids).cast("bigint").alias("n_ids"),
-    )
-
-    with store.commit_bracket(retract_id):
-        if n_ids == 0:
-            store.merge_insert_missing(RETRACTIONS, ledger_row, ["retract_id"])
-            return RetractResult(retract_id, False, r_ids)
-        families = _retract_vec_rows(store, r_ids)
-        _log_retraction(store, retract_id, "vectors", n_ids, families)
-        store.merge_insert_missing(RETRACTIONS, ledger_row, ["retract_id"])
-
-    result = RetractResult(retract_id, False, r_ids)
-    if auto_compact_bytes is not None:
-        maybe_compact_store(store, threshold_bytes=auto_compact_bytes)
-    return result
-
-
-#: the embedding families' per-vector and pair tables (retract_vectors
-#: and the retract_documents cascade share this scrub)
-_EMB_ROW_TABLES = ("eb_vectors", "eb_buckets", "ivf_assignments", "pq_codes")
-_EMB_PAIR_TABLES = (
-    ("eb_pairs", "vec_a", "vec_b"),
-    ("sd_pairs", "vec_a", "vec_b"),
-)
-
-
-def _retract_vec_rows(store: TableStore, r_ids: DataFrame) -> list[str]:
-    """The embedding-family scrub both ``retract_vectors`` and the
-    ``retract_documents`` doc→vec cascade run (inside the caller's
-    commit; no ledger handling here): insert the permanent
-    ``emb_retractions`` mask (a redelivered vec_id can never re-index),
-    physically delete pair rows touching a retracted vector, and
-    physically delete per-vector rows — partition-SCOPED on managed
-    snapshot tables (``TableStore.prune_keys``: only the buckets the
-    retracted ids hash into are rewritten, emptied ones become layer
-    delete-markers).  Returns the family tables touched (for the
-    retraction log)."""
-    from jobcan_data_integrator_spark.operators import incremental as inc
-
-    touched: list[str] = [inc.EMB_RETRACTIONS]
-    _mask_insert(store, inc.EMB_RETRACTIONS, r_ids, "vec_id")
-    b = F.broadcast(r_ids.select(F.col("vec_id").alias("_rid")))
-    for t, ca, cb in _EMB_PAIR_TABLES:
-        if not store.exists(t):
-            continue
-        touching = (
-            store.read(t)
-            .select(ca, cb)
-            .join(
-                b,
-                (F.col(ca) == F.col("_rid")) | (F.col(cb) == F.col("_rid")),
-                "left_semi",
-            )
-            .localCheckpoint(eager=True)
-        )
-        if touching.head(1):
-            store.prune_keys(t, touching, [ca, cb])
-            touched.append(t)
-    for t in _EMB_ROW_TABLES:
-        if store.exists(t):
-            touched.append(t)
-            # physical delete when it is cheap (unmanaged tables, or
-            # the scoped prune); a managed table the prune could only
-            # FULL-rewrite (hive partition layouts) stays masked by
-            # emb_retractions until compact_store folds it
-            if not store.is_managed(t) or store.prunes_scoped(t):
-                store.prune_keys(t, r_ids, ["vec_id"])
-    return touched
-
-
 def _log_retraction(
     store: TableStore,
     retract_id: str,
-    kind: str,
     n_ids: int,
     families: list[str],
 ) -> None:
@@ -2366,7 +2030,7 @@ def _log_retraction(
     )
     row = spark.range(1).select(
         F.lit(retract_id).alias("retract_id"),
-        F.lit(kind).alias("kind"),
+        F.lit("documents").alias("kind"),
         F.lit(n_ids).cast("bigint").alias("n_ids"),
         F.lit(",".join(sorted(set(families)))).alias("families"),
         F.lit(version).cast("bigint").alias("over_version"),
@@ -2397,9 +2061,6 @@ def compact_store(store: TableStore) -> None:
       occurrence table);
     - ``sp_flag_drops`` folded into ``sp_flags`` (retracted flags
       physically leave);
-    - ``emb_retractions`` folded into ``eb_vectors``/``eb_buckets``/
-      ``ivf_assignments``/``pq_codes`` (the vector-retraction sibling,
-      ``retract_vectors``);
     - ``cur_pre`` rows pruned and PERMANENT tombstones resolved: a doc
       retired for cause 'exact' or 'retracted' can never re-enter under
       its own text (its id is unique for all time and every probe now
@@ -2413,14 +2074,14 @@ def compact_store(store: TableStore) -> None:
       by the live corpus's near-dup cluster structure, not by repair
       traffic.
 
-    PERMANENCE: the ``doc_retractions`` / ``emb_retractions`` masks are
-    NEVER folded away — they are the takedown contract ("a redelivered
-    copy can never re-enter"), consulted by ``ingest_increment``'s
-    redelivery guard and every exact/span/embedding probe for all time.
-    Compaction folds their EFFECT into the base tables (the masked rows
-    physically leave) but keeps the id sets; the auto-trigger accounts
-    for this by measuring mask GROWTH since the last fold (a driver-side
-    stat file), so an already-folded permanent mask never re-triggers.
+    PERMANENCE: the ``doc_retractions`` mask is NEVER folded away — it
+    is the takedown contract ("a redelivered copy can never re-enter"),
+    consulted by ``ingest_increment``'s redelivery guard and every
+    exact/span probe for all time.  Compaction folds its EFFECT into the
+    base tables (the masked rows physically leave) but keeps the id set;
+    the auto-trigger accounts for this by measuring mask GROWTH since
+    the last fold (a driver-side stat file), so an already-folded
+    permanent mask never re-triggers.
     The fold itself is delta-scoped the same way: mask rows carry a
     ``folded`` watermark flag — each fold prunes with only the rows
     added since the last fold and then flips them, so per-fold cost
@@ -2439,7 +2100,6 @@ def compact_store(store: TableStore) -> None:
         for t in (
             inc.DOC_RETRACTIONS,
             inc.FLAG_DROPS,
-            inc.EMB_RETRACTIONS,
             TOMBSTONES,
         )
     ):
@@ -2482,13 +2142,12 @@ def _compact_folds(store: TableStore, _unfolded) -> None:
     """The fold body of ``compact_store`` (one ``commit_bracket``): the
     base-table prunes, the mask watermark flips, the permanent-tombstone
     resolution and the transient-mask reset.  Writes of different
-    tables overlap on a snapshot store; the two ops that read a mask
-    table when they run declare it, so the flip or reset of that mask
-    waits for them, and the commit publishes once."""
+    tables overlap on a snapshot store; the sp_flags fold reads
+    ``sp_flag_drops`` when it runs and declares it, so the reset of that
+    mask waits for it, and the commit publishes once."""
     from jobcan_data_integrator_spark.operators import incremental as inc
     from jobcan_data_integrator_spark.operators import retrieval as rt
 
-    emb_mask = _unfolded(inc.EMB_RETRACTIONS, "vec_id")
     mask = _unfolded(inc.DOC_RETRACTIONS, "doc_id")
 
     def _fold_sp_flags() -> None:
@@ -2504,9 +2163,6 @@ def _compact_folds(store: TableStore, _unfolded) -> None:
         reads=("sp_flags", inc.FLAG_DROPS),
         writes=("sp_flags",),
     )
-    if emb_mask is not None:
-        for t in ("eb_vectors", "eb_buckets", "ivf_assignments", "pq_codes"):
-            store.prune_keys(t, emb_mask, ["vec_id"])
     if mask is not None:
         # sp_occs is bucketed by span hash, so a doc-keyed fold would
         # pay a full-bucket semi-join scan to find affected buckets —
@@ -2530,8 +2186,7 @@ def _compact_folds(store: TableStore, _unfolded) -> None:
                     .select("h")
                     .distinct()
                 )
-        for t in ("ex_docs", DOC_VECS):
-            store.prune_keys(t, mask, ["doc_id"])
+        store.prune_keys("ex_docs", mask, ["doc_id"])
         if sp_hint is not None:
             store.prune_keys(
                 "sp_occs", mask, ["doc_id"], segment_keys=sp_hint, segment_col="h"
@@ -2541,41 +2196,14 @@ def _compact_folds(store: TableStore, _unfolded) -> None:
             store.delete_scope(inc.SPAN_MASK_HASHES, mask, ["doc_id"])
         else:
             store.prune_keys("sp_occs", mask, ["doc_id"])
-    if (
-        emb_mask is not None
-        and store.exists("ivf_assignments")
-        and store.exists(inc.IVF_CELL_STATS)
-    ):
-        # retractions between extends leave the occupancy sidecar stale
-        # for their cells (advisory by contract); the fold is the point
-        # where it becomes exact again — masked pre-state ≡ post-fold.
-        # It reads the pruned assignments when it runs (after the
-        # prune above, by the declared read)
-        store.submit_op(
-            lambda: store.overwrite(
-                inc.IVF_CELL_STATS,
-                inc._mask_emb_retracted(store, store.read("ivf_assignments"))
-                .groupBy("cell_id")
-                .agg(F.count("*").alias("n_vecs")),
-            ),
-            reads=("ivf_assignments", inc.EMB_RETRACTIONS),
-            writes=(inc.IVF_CELL_STATS,),
-        )
     # flip the folded delta's watermark: the permanent ids STAY (the
-    # takedown contract), but the next fold's prune scope starts empty.
-    # The emb-side flip waits for the IVF sidecar rebuild, which reads
-    # emb_retractions
-    for t, key, m in (
-        (inc.DOC_RETRACTIONS, "doc_id", mask),
-        (inc.EMB_RETRACTIONS, "vec_id", emb_mask),
-    ):
-        if m is not None:
-            store.overwrite(
-                t,
-                store.read(t).select(key).distinct().withColumn(
-                    "folded", F.lit(True)
-                ),
-            )
+    # takedown contract), but the next fold's prune scope starts empty
+    if mask is not None:
+        store.overwrite(
+            inc.DOC_RETRACTIONS,
+            store.read(inc.DOC_RETRACTIONS).select("doc_id").distinct()
+            .withColumn("folded", F.lit(True)),
+        )
     if store.exists(TOMBSTONES):
         tomb = store.read(TOMBSTONES)
         # only 'exact' and 'retracted' are final: an exact-retired mate
@@ -2617,9 +2245,9 @@ def _compact_folds(store: TableStore, _unfolded) -> None:
     # sp_flag_drops is the ONE transient retraction mask (its effect —
     # flag rows deleted — is fully captured by the fold; a later batch
     # re-duplicating the span re-asserts the flag as a fresh insert).
-    # doc_retractions / emb_retractions are PERMANENT by contract and
-    # are never emptied here — see the docstring.  (Waits for the
-    # sp_flags fold, which reads sp_flag_drops when it runs.)
+    # doc_retractions is PERMANENT by contract and is never emptied
+    # here — see the docstring.  (Waits for the sp_flags fold, which
+    # reads sp_flag_drops when it runs.)
     if store.exists(inc.FLAG_DROPS):
         store.overwrite(inc.FLAG_DROPS, store.read(inc.FLAG_DROPS).limit(0))
 
@@ -2637,11 +2265,7 @@ def _mask_tables() -> tuple[str, ...]:
     but retained)."""
     from jobcan_data_integrator_spark.operators import incremental as inc
 
-    return tuple(inc.OOO_DROP_TABLES) + (
-        inc.FLAG_DROPS,
-        inc.DOC_RETRACTIONS,
-        inc.EMB_RETRACTIONS,
-    )
+    return inc.OOO_DROP_TABLES + inc.RETRACT_MASK_TABLES
 
 
 def _read_compact_stat(store: TableStore) -> dict:

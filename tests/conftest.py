@@ -17,6 +17,8 @@ SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 def spark():
     from jobcan_data_integrator_spark.session import get_spark
 
+    # a 4 GB driver heap covers both tiers; an explicit setting still wins
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     s = get_spark("jdi-spark-tests")
     yield s
 

@@ -1,12 +1,11 @@
 """refresh_embedding_codebooks: offline retraining of the frozen IVF /
 PQ trained aggregates (operators/incremental.py).
 
-The load-bearing contract: after ANY sequence of builds, extends, and
-vector retractions, a refresh leaves
-``ivf_codebook``/``ivf_assignments``/``pq_codebooks``/``pq_codes``
-EXACTLY equal to a from-scratch ``build_ivf_index``/``build_pq_index``
-over the surviving vectors — the integer k-means is bit-stable, so the
-equality is value-for-value, not approximate.  Plus the drift story the
+The load-bearing contract: after ANY sequence of builds and extends, a
+refresh leaves ``ivf_codebook``/``ivf_assignments``/``pq_codebooks``/
+``pq_codes`` EXACTLY equal to a from-scratch ``build_ivf_index``/
+``build_pq_index`` over the stored vectors — the integer k-means is
+bit-stable, so the equality is value-for-value, not approximate.  Plus the drift story the
 operator exists for: a codebook frozen on yesterday's distribution
 piles today's vectors into one cell; the refresh re-balances.
 """
@@ -26,7 +25,6 @@ from jobcan_data_integrator_spark.operators.incremental import (
     extend_pq_index,
     refresh_embedding_codebooks,
 )
-from jobcan_data_integrator_spark.operators.ingest import retract_vectors
 from jobcan_data_integrator_spark.session import load_table
 from jobcan_data_integrator_spark.storage import TableStore
 
@@ -74,29 +72,6 @@ def test_refresh_matches_from_scratch_build(spark, sf_dir, tmp_path):
         assert _rows(store, table, cols) == _rows(fresh, table, cols), table
 
 
-def test_refresh_after_retraction_trains_on_survivors(spark, sf_dir, tmp_path):
-    emb = _emb(spark, sf_dir).cache()
-    store = TableStore(
-        spark, tmp_path / "a", write_partitions=2, snapshot_isolation=True
-    )
-    build_ivf_index(store, emb)
-    build_pq_index(store, emb)
-    gone = emb.filter(F.col("vec_id") % 9 == 0).select("vec_id")
-    retract_vectors(store, gone, "rv-1")
-
-    refresh_embedding_codebooks(store)
-
-    survivors = emb.join(gone, "vec_id", "left_anti")
-    fresh = TableStore(spark, tmp_path / "b", write_partitions=2)
-    build_ivf_index(fresh, survivors)
-    build_pq_index(fresh, survivors)
-    for table, cols in _TABLES:
-        assert _rows(store, table, cols) == _rows(fresh, table, cols), table
-    # the retracted ids left the per-vector tables physically
-    kept_ids = {r.vec_id for r in store.read("ivf_assignments").collect()}
-    assert not kept_ids & {r.vec_id for r in gone.collect()}
-
-
 def test_refresh_rebalances_after_drift(spark, tmp_path):
     """The operational motivation: a codebook frozen on region A piles
     every region-B arrival into one cell (probe cost degrades toward a
@@ -131,180 +106,6 @@ def test_refresh_refuses_stores_without_trained_families(spark, tmp_path):
     store = TableStore(spark, tmp_path, write_partitions=2)
     with pytest.raises(ValueError, match="neither the IVF nor the PQ"):
         refresh_embedding_codebooks(store)
-
-
-def test_drift_signal_trips_and_resets(spark, tmp_path):
-    """The maintenance-policy loop (ivf_cell_stats + ivf_drift_stats +
-    should_refresh_codebooks): balanced 4-region build -> no trigger; a
-    drifted increment (four NEW tight regions along +x, all nearest the
-    frozen region-0 centroid) piles into one cell -> skew trips; a
-    refresh at ivf_cells=8 (one seed per region by id construction)
-    gives each region its own centroid -> signal resets.  The sidecar
-    stays exact vs a direct count over the assignment table at every
-    step, and reading the signal is O(n_cells)."""
-    from jobcan_data_integrator_spark.operators.incremental import (
-        IVF_CELL_STATS,
-        ivf_drift_stats,
-        maybe_refresh_codebooks,
-        should_refresh_codebooks,
-    )
-
-    # assign_cells is an integer DOT-PRODUCT argmax (MIPS-style coarse
-    # quantizer), so regions must differ in DIRECTION: one axis each in
-    # 8-dim space, tight jitter on a neighboring axis
-    def vec(axis, jitter, bias0=0.0):
-        v = [0.0] * 8
-        v[axis] = 1000.0
-        v[(axis + 1) % 8] += float(jitter)
-        v[0] += bias0
-        return v
-
-    # build: 4 regions on axes 0..3, 3 vecs each; ids r / 8+2r / 9+2r so
-    # the K=8 refresh seeds (vec_id < 8) cover ids 0..3 here + 4..7 below
-    a = []
-    for r in range(4):
-        for j, i in enumerate((r, 8 + 2 * r, 9 + 2 * r)):
-            a.append((i, vec(r, j)))
-    # drift: 4 new tight regions on axes 4..7, 5 vecs each (ids 4+m seed
-    # the refresh; 16+4m..19+4m fill), each with a small axis-0 bias —
-    # orthogonal to every frozen centroid except region 0's, so all 20
-    # pile deterministically into that one frozen cell
-    b = []
-    for m in range(4):
-        for j, i in enumerate((4 + m, 16 + 4 * m, 17 + 4 * m, 18 + 4 * m, 19 + 4 * m)):
-            b.append((i, vec(4 + m, j, bias0=50.0)))
-    mk = lambda rows: spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>"
-    )
-
-    def sidecar_exact(st):
-        want = sorted(
-            (r.cell_id, r["count"])
-            for r in st.read("ivf_assignments")
-            .groupBy("cell_id")
-            .count()
-            .collect()
-        )
-        got = sorted(
-            (r.cell_id, r.n_vecs) for r in st.read(IVF_CELL_STATS).collect()
-        )
-        assert got == want
-
-    store = TableStore(spark, tmp_path, write_partitions=2)
-    build_ivf_index(store, mk(a), n_cells=4)
-    sidecar_exact(store)
-    s0 = ivf_drift_stats(store)
-    assert s0["n_cells"] == 4 and s0["n_vecs"] == 12
-    assert abs(s0["skew"] - 1.0) < 1e-9  # 3/3/3/3: perfectly balanced
-    assert not should_refresh_codebooks(store)
-
-    extend_ivf_index(store, assign_increment(store, mk(b)))
-    sidecar_exact(store)
-    # replay safety: re-extending the same batch changes nothing
-    extend_ivf_index(store, assign_increment(store, mk(b)))
-    sidecar_exact(store)
-
-    s1 = ivf_drift_stats(store)
-    assert s1["n_vecs"] == 32
-    assert s1["max_share"] == 23 / 32  # the whole drift in one frozen cell
-    assert s1["skew"] >= 2.0 and should_refresh_codebooks(store)
-
-    # the orchestrated trigger: fires exactly once, then quiesces
-    assert maybe_refresh_codebooks(store, ivf_cells=8)
-    sidecar_exact(store)
-    s2 = ivf_drift_stats(store)
-    assert s2["n_cells"] == 8 and s2["max_share"] == 5 / 32
-    assert s2["skew"] < 2.0 and not should_refresh_codebooks(store)
-    assert not maybe_refresh_codebooks(store, ivf_cells=8)
-
-
-def test_ingest_auto_refresh_codebooks(spark, tmp_path):
-    """The drift trigger under the INGEST ORCHESTRATOR (r11, verdict #7):
-    ``ingest_increment(auto_refresh_codebooks=True)`` wires
-    ``maybe_refresh_codebooks`` in next to ``maybe_compact_store`` — a
-    balanced batch pays only the O(n_cells) sidecar read, a drifted
-    batch trips the corpus-sized retrain, and the refreshed tables equal
-    a from-scratch build over every live vector (the bit-stable k-means
-    equality the per-family tests pin)."""
-    from jobcan_data_integrator_spark.operators.incremental import (
-        ivf_drift_stats,
-        should_refresh_codebooks,
-    )
-    from jobcan_data_integrator_spark.operators.ingest import ingest_increment
-    from test_ingest import BS, MIN_TOKENS, NH, SPAN, THRESH, _t
-
-    def vec(axis, jitter, bias0=0.0):
-        v = [0.0] * 8
-        v[axis] = 1000.0
-        v[(axis + 1) % 8] += float(jitter)
-        v[0] += bias0
-        return v
-
-    mk = lambda rows: spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>"
-    )
-    # same geometry as test_drift_signal_trips_and_resets: 4 balanced
-    # regions seed the codebook; 4 NEW regions (ids 4+m seed the K=8
-    # retrain) pile into the frozen region-0 cell
-    a = []
-    for r in range(4):
-        for j, i in enumerate((r, 8 + 2 * r, 9 + 2 * r)):
-            a.append((i, vec(r, j)))
-    b = []
-    for m in range(4):
-        for j, i in enumerate(
-            (4 + m, 16 + 4 * m, 17 + 4 * m, 18 + 4 * m, 19 + 4 * m)
-        ):
-            b.append((i, vec(4 + m, j, bias0=50.0)))
-
-    store = TableStore(
-        spark, tmp_path / "main", write_partitions=2, snapshot_isolation=True
-    )
-    # seed the family at a controlled cell count (the semantic-family
-    # "build first, ingest extends" pattern), then ingest docs+vectors
-    build_ivf_index(store, mk(a), n_cells=4)
-    docs1 = spark.createDataFrame(
-        [(i, _t(f"w{i}", 0, 12)) for i in range(8)], "doc_id long, text string"
-    )
-    r1 = ingest_increment(
-        store, docs1, "b1",
-        span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-        cluster_threshold=THRESH,
-        auto_refresh_codebooks=True,
-    )
-    assert not r1.replayed
-    # balanced store: the trigger stayed quiet — codebook untouched
-    cb0 = sorted(map(tuple, store.read("ivf_codebook").collect()))
-    assert not should_refresh_codebooks(store)
-
-    docs2 = spark.createDataFrame(
-        [(100 + i, _t(f"z{i}", 1, 12)) for i in range(8)],
-        "doc_id long, text string",
-    )
-    r2 = ingest_increment(
-        store, docs2, "b2",
-        span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-        cluster_threshold=THRESH,
-        new_emb=mk(b), emb_families=("ivf",),
-        auto_refresh_codebooks={"ivf_cells": 8},
-    )
-    assert not r2.replayed
-    # the drifted batch tripped the retrain inside the orchestrator:
-    # signal reset, codebook actually moved, and the rebuilt tables
-    # equal a from-scratch build over all 32 vectors
-    assert not should_refresh_codebooks(store)
-    s = ivf_drift_stats(store)
-    assert s["n_vecs"] == 32 and s["max_share"] == 5 / 32
-    assert sorted(map(tuple, store.read("ivf_codebook").collect())) != cb0
-    ref = TableStore(spark, tmp_path / "ref", write_partitions=2)
-    build_ivf_index(ref, mk(a + b), n_cells=8)
-    for t, cols in (
-        ("ivf_codebook", ("cell_id", "cq")),
-        ("ivf_assignments", ("vec_id", "cell_id")),
-    ):
-        assert _rows(store, t, cols) == _rows(ref, t, cols), t
-    # curated doc side is intact across the refresh commit
-    assert store.read("cur_docs").count() == 16
 
 
 # Long-haul integration tier (r12): excluded from the DEFAULT pytest run

@@ -181,48 +181,6 @@ def test_ivf_increment_assignment_matches_full(spark, sf_dir, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_embedding_split_equals_full(spark, sf_dir, tmp_path):
-    from jobcan_data_integrator_spark.operators.incremental import (
-        build_embedding_index,
-        embedding_increment,
-        extend_embedding_index,
-    )
-    from jobcan_data_integrator_spark.operators.similarity import (
-        embedding_near_dup_pairs,
-    )
-    from jobcan_data_integrator_spark.session import load_table
-
-    # n_bands=2 exercises the multi-band path on both sides of the split
-    kw = dict(threshold=0.2, n_planes=6, n_bands=2)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").cache()
-    full = {
-        (r.vec_a, r.vec_b, r.cosine_sim)
-        for r in embedding_near_dup_pairs(emb, **kw).collect()
-    }
-    assert full  # the parameters must actually produce pairs to prove anything
-
-    store = TableStore(spark, tmp_path, write_partitions=2)
-    build_embedding_index(store, emb.filter(F.col("vec_id") % 3 != 0), **kw)
-    inc_emb = emb.filter(F.col("vec_id") % 3 == 0)
-    inc = embedding_increment(store, inc_emb, **kw)
-    got = {(r.vec_a, r.vec_b, r.cosine_sim) for r in inc.collect()} | {
-        (r.vec_a, r.vec_b, r.cosine_sim) for r in store.read("eb_pairs").collect()
-    }
-    assert got == full
-
-    extend_embedding_index(store, inc_emb, inc, n_planes=6, n_bands=2)
-    stored = {
-        (r.vec_a, r.vec_b, r.cosine_sim) for r in store.read("eb_pairs").collect()
-    }
-    assert stored == full
-    assert store.read("eb_vectors").count() == emb.count()
-
-
-# ---------------------------------------------------------------------------
-# Exact-dedup hash index
-# ---------------------------------------------------------------------------
-
-
 def test_exact_split_equals_full(spark, sf_dir, tmp_path):
     from jobcan_data_integrator_spark.gate import REGISTRY
     from jobcan_data_integrator_spark.operators.incremental import (
@@ -324,41 +282,6 @@ def test_cluster_extend_bridges_two_existing_clusters(spark, tmp_path):
     assert got == {(1, 1), (2, 1), (10, 1), (11, 1), (20, 1)}
 
 
-def test_ann_search_over_persisted_index_matches_direct(spark, sf_dir, tmp_path):
-    from jobcan_data_integrator_spark.operators.incremental import (
-        ann_search_indexed,
-        assign_increment,
-        build_ivf_index,
-        extend_ivf_index,
-    )
-    from jobcan_data_integrator_spark.operators.similarity import ann_topk_ivf
-    from jobcan_data_integrator_spark.session import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").cache()
-    store = TableStore(spark, tmp_path, write_partitions=2)
-    # index built from a split: corpus first, increment absorbed after
-    build_ivf_index(store, emb.filter(F.col("vec_id") % 2 == 0))
-    extend_ivf_index(store, assign_increment(store, emb.filter(F.col("vec_id") % 2 == 1)))
-
-    queries = emb.filter(F.col("vec_id") < 5)
-    got = {
-        (r.q_id, r.vec_id, r.cosine_sim)
-        for r in ann_search_indexed(store, queries, k=5, n_probe=2).collect()
-    }
-    want = {
-        (r.q_id, r.vec_id, r.cosine_sim)
-        for r in ann_topk_ivf(
-            emb, queries, k=5, n_probe=2, centroids=store.read("ivf_codebook")
-        ).collect()
-    }
-    assert got == want and got
-
-
-# ---------------------------------------------------------------------------
-# Crash-replay convergence (re-delivered batches the index already absorbed)
-# ---------------------------------------------------------------------------
-
-
 def test_minhash_replay_of_absorbed_batch_converges(spark, sf_dir, tmp_path):
     """A streaming crash between extend_index and the stream checkpoint
     re-delivers the batch.  The re-run must produce EXACTLY the first
@@ -380,37 +303,6 @@ def test_minhash_replay_of_absorbed_batch_converges(spark, sf_dir, tmp_path):
     extend_index(store, inc_sh, replay)
     full = _pairs_set(dd_lsh_verified_pairs(spark, sf_dir))
     assert _pairs_set(store.read("mh_pairs")) == full
-
-
-def test_embedding_replay_of_absorbed_batch_converges(spark, sf_dir, tmp_path):
-    from jobcan_data_integrator_spark.operators.incremental import (
-        build_embedding_index,
-        embedding_increment,
-        extend_embedding_index,
-    )
-    from jobcan_data_integrator_spark.session import load_table
-
-    kw = dict(threshold=0.2, n_planes=6, n_bands=2)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").cache()
-    store = TableStore(spark, tmp_path, write_partitions=2)
-    build_embedding_index(store, emb.filter(F.col("vec_id") % 3 != 0), **kw)
-    inc_emb = emb.filter(F.col("vec_id") % 3 == 0)
-    first = embedding_increment(store, inc_emb, **kw)
-    first_rows = first.collect()
-    extend_embedding_index(store, inc_emb, first, n_planes=6, n_bands=2)
-
-    replay_rows = embedding_increment(store, inc_emb, **kw).collect()
-    # no duplicate pair rows from double-matching the vector fetch join
-    keys = [(r.vec_a, r.vec_b) for r in replay_rows]
-    assert len(keys) == len(set(keys))
-    assert {(r.vec_a, r.vec_b, r.cosine_sim) for r in replay_rows} == {
-        (r.vec_a, r.vec_b, r.cosine_sim) for r in first_rows
-    }
-
-
-# ---------------------------------------------------------------------------
-# Semantic-dedup pair index (SemDeDup over IVF cells, incrementally)
-# ---------------------------------------------------------------------------
 
 
 def test_semantic_split_equals_full_and_clusters_maintain(spark, sf_dir, tmp_path):

@@ -22,7 +22,6 @@ from jobcan_data_integrator_spark.gate.llm import dd_lsh_verified_pairs
 from jobcan_data_integrator_spark.operators.incremental import (
     build_minhash_index,
     dedup_increment,
-    embedding_index_buckets,
     exact_index_buckets,
     minhash_index_buckets,
 )
@@ -125,67 +124,6 @@ def test_exact_bucketed_split_equals_full(spark, sf_dir, tmp_path):
         for r in store.read("ex_groups").collect()
     }
     assert stored == full
-
-
-def test_embedding_bucketed_split_equals_full(spark, sf_dir, tmp_path):
-    from jobcan_data_integrator_spark.operators.incremental import (
-        build_embedding_index,
-        embedding_increment,
-    )
-    from jobcan_data_integrator_spark.operators.similarity import (
-        embedding_near_dup_pairs,
-    )
-    from jobcan_data_integrator_spark.session import load_table
-
-    kw = dict(threshold=0.2, n_planes=6, n_bands=2)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").cache()
-    full = {
-        (r.vec_a, r.vec_b, r.cosine_sim)
-        for r in embedding_near_dup_pairs(emb, **kw).collect()
-    }
-    assert full
-    store = TableStore(
-        spark, tmp_path, write_partitions=2, bucketed=embedding_index_buckets(16)
-    )
-    build_embedding_index(store, emb.filter(F.col("vec_id") % 3 != 0), **kw)
-    inc = embedding_increment(store, emb.filter(F.col("vec_id") % 3 == 0), **kw)
-    got = {(r.vec_a, r.vec_b, r.cosine_sim) for r in inc.collect()} | {
-        (r.vec_a, r.vec_b, r.cosine_sim)
-        for r in store.read("eb_pairs").collect()
-    }
-    assert got == full
-
-
-def test_ivf_partitioned_search_matches_and_prunes(spark, sf_dir, tmp_path):
-    from jobcan_data_integrator_spark.operators.incremental import (
-        ann_search_indexed,
-        build_ivf_index,
-    )
-    from jobcan_data_integrator_spark.operators.similarity import ann_topk_ivf
-    from jobcan_data_integrator_spark.session import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").cache()
-    store = TableStore(
-        spark,
-        tmp_path,
-        write_partitions=2,
-        partitioned={"ivf_assignments": ["cell_id"]},
-    )
-    build_ivf_index(store, emb)
-
-    queries = emb.filter(F.col("vec_id") < 5)
-    res = ann_search_indexed(store, queries, k=5, n_probe=2)
-    got = {(r.q_id, r.vec_id, r.cosine_sim) for r in res.collect()}
-    want = {
-        (r.q_id, r.vec_id, r.cosine_sim)
-        for r in ann_topk_ivf(
-            emb, queries, k=5, n_probe=2, centroids=store.read("ivf_codebook")
-        ).collect()
-    }
-    assert got == want and got
-
-    # the probe is partition-pruned on cell_id
-    assert "PartitionFilters: [cell_id" in _plan(res)
 
 
 def test_read_for_keys_pushes_key_values_when_small(spark, tmp_path):

@@ -11,8 +11,9 @@
   ingests batch after batch pins no per-batch frame;
 - ingest has one mode: every store it writes is retractable, and a
   store in a removed layout — the monotone-only mode's (``cur_docs``
-  without ``cur_pre``) or the persisted SimHash family's
-  (``sh_signatures``) — is refused.
+  without ``cur_pre``), the persisted SimHash family's
+  (``sh_signatures``) or the embedding families' (``doc_vecs``,
+  ``emb_retractions``) — is refused.
 """
 
 from __future__ import annotations
@@ -145,20 +146,50 @@ def test_in_order_store_is_retractable(spark, tmp_path):
     )
 
 
-def test_simhash_layout_is_refused(spark, tmp_path):
+@pytest.mark.parametrize(
+    "table, schema, row, feature, removed_kw",
+    [
+        (
+            "sh_signatures",
+            "doc_id long, simhash long",
+            (21, 5),
+            "persisted SimHash family",
+            "simhash",
+        ),
+        (
+            "doc_vecs",
+            "doc_id long, vec_id long",
+            (21, 7),
+            "embedding families' doc-to-vector cascade",
+            "new_emb",
+        ),
+        (
+            "emb_retractions",
+            "vec_id long, folded boolean",
+            (7, False),
+            "embedding families' vector retraction",
+            "auto_refresh_codebooks",
+        ),
+    ],
+    ids=["sh_signatures", "doc_vecs", "emb_retractions"],
+)
+def test_removed_layout_is_refused(
+    spark, tmp_path, table, schema, row, feature, removed_kw
+):
     store = TableStore(spark, tmp_path, write_partitions=2, snapshot_isolation=True)
-    sigs = spark.createDataFrame([(21, 5)], "doc_id long, simhash long")
     with store.commit_bracket("old"):
-        store.overwrite("sh_signatures", sigs)
+        store.overwrite(table, spark.createDataFrame([row], schema))
 
-    with pytest.raises(ValueError, match="SimHash"):
+    with pytest.raises(ValueError, match=feature):
         ingest_increment(store, _mk(spark, BATCH2), "b2", **CFG)
-    with pytest.raises(ValueError, match="SimHash"):
+    with pytest.raises(ValueError, match=feature):
         retract_documents(
             store, spark.createDataFrame([(21,)], "doc_id long"), "rt-1", **CFG
         )
     with pytest.raises(TypeError):
-        ingest_increment(store, _mk(spark, BATCH2), "b2", simhash=True, **CFG)
+        ingest_increment(
+            store, _mk(spark, BATCH2), "b2", **{removed_kw: True}, **CFG
+        )
 
 
 def test_monotone_only_layout_is_refused(spark, tmp_path):

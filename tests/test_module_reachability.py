@@ -13,6 +13,12 @@ curation orchestrators must be set by some call site in the package,
 ``bench.py``, ``scale_smoke.py`` or ``perfbench/``.  Tests do not count
 as callers; the options only tests set today are listed in
 ``TEST_ONLY_OPTIONS``, a list that may only shrink.
+
+And for functions: every public top-level package function must be
+reached, by name, from those surfaces, a gate, a documented entry
+module's public API or a module-level statement.  The functions only
+tests reach today are listed in ``TEST_ONLY_FUNCTIONS``, which may only
+shrink too.
 """
 
 from __future__ import annotations
@@ -116,10 +122,7 @@ TEST_ONLY_OPTIONS = {
         "chunk_tokens",
         "chunk_overlap",
         "pack_budget",
-        "new_emb",
-        "emb_families",
         "auto_compact_bytes",
-        "auto_refresh_codebooks",
         "bm25",
     ),
     "probe_duplicates": _PAIR_KNOBS,
@@ -203,4 +206,142 @@ def test_every_orchestrator_option_is_set_by_a_caller():
     assert not stale, (
         "TEST_ONLY_OPTIONS entries that are gone or now set by a non-test "
         f"caller: {stale} — remove them from the list"
+    )
+
+
+#: public package functions that only tests reach, by module: each must
+#: still be defined there and still be reached by nothing else, so
+#: entries can only be removed.  ``views.export_views`` and
+#: ``operators.entities.retrieve_users`` are the paper's own BI egress
+#: and JSON re-assembly surface, kept until they get a measurement.
+TEST_ONLY_FUNCTIONS = {
+    "operators.bpe": (
+        "bpe_stats",
+        "bpe_token_counts",
+        "encode_bpe",
+        "load_bpe",
+        "save_bpe",
+    ),
+    "operators.dedup": ("connected_components_twophase", "keep_best_per_cluster"),
+    "operators.entities": ("retrieve_users",),
+    "operators.incremental": (
+        "build_lm_index",
+        "extend_ivf_index",
+        "extend_lm_index",
+        "ivfpq_search_indexed",
+        "line_index_buckets",
+        "lm_from_store",
+        "lm_index_buckets",
+        "perplexity_increment",
+        "pq_index_buckets",
+        "pq_search_indexed",
+    ),
+    "operators.ingest": (
+        "bm25_search_curated",
+        "diff_curated",
+        "doc_history",
+        "repack_corpus",
+    ),
+    "operators.multimodal": ("extract_av_metadata", "sample_audio_segments"),
+    "operators.packing": ("temperature_weights", "write_shards"),
+    "operators.pq": ("ann_topk_ivfpq", "pq_search"),
+    "operators.selection": ("sample_per_cluster",),
+    "operators.simhash": ("simhash_signatures_wide",),
+    "operators.similarity": ("semantic_dedup",),
+    "operators.sketch": (
+        "cms_lookup",
+        "cms_table",
+        "hll_count_distinct",
+        "hll_estimate",
+        "hll_registers",
+    ),
+    "operators.temporal": ("asof_join_broadcast", "range_join", "scd2_from_changelog"),
+    "sources.bronze": ("read_archived",),
+    "state": ("merge_watermarks",),
+    "views": ("export_views",),
+}
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _refs(nodes) -> set[str]:
+    """Every ``Name`` and ``Attribute`` identifier under ``nodes``."""
+    out: set[str] = set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+    return out
+
+
+def _reached_functions() -> tuple[set[str], dict[str, set[str]]]:
+    """(reached names, public top-level function name -> defining
+    modules).  Edges are by name: an identifier in a reached body
+    reaches every top-level def and method of that name, and a class
+    name reaches its dunder methods.  Roots: the whole of the surface
+    scripts, every function under ``gate/``, the public functions of
+    the documented entry modules, and every statement the package runs
+    at import (module-level code, decorators, class-level code)."""
+    entry = {f"{PKG}.{m}" for m in DOCUMENTED_ENTRY_MODULES}
+    bodies: dict[str, list[ast.AST]] = {}
+    public: dict[str, set[str]] = {}
+    roots: list[ast.AST] = []
+    reached: set[str] = set()
+    for mod, path in _package_modules().items():
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, _DEFS):
+                bodies.setdefault(node.name, []).append(node)
+                roots += node.decorator_list
+                if node.name.startswith("_"):
+                    continue
+                public.setdefault(node.name, set()).add(mod)
+                if mod.startswith(f"{PKG}.gate") or mod in entry:
+                    roots.append(node)
+                    reached.add(node.name)
+            elif isinstance(node, ast.ClassDef):
+                roots += node.decorator_list + node.bases + node.keywords
+                for m in node.body:
+                    if not isinstance(m, _DEFS):
+                        roots.append(m)
+                        continue
+                    bodies.setdefault(m.name, []).append(m)
+                    roots += m.decorator_list
+                    if m.name.startswith("__"):
+                        bodies.setdefault(node.name, []).append(m)
+            else:
+                roots.append(node)
+    scripts = [REPO / "bench.py", REPO / "__spark_entry__.py", REPO / "scale_smoke.py"]
+    scripts += sorted((REPO / "perfbench").glob("*.py"))
+    roots += [ast.parse(p.read_text(), str(p)) for p in scripts]
+    todo = _refs(roots)
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo |= _refs(bodies.get(name, ()))
+    return reached, public
+
+
+def test_every_public_function_is_reached():
+    reached, public = _reached_functions()
+    unreached = {
+        (mod, name)
+        for name, mods in public.items()
+        if name not in reached
+        for mod in mods
+    }
+    listed = {
+        (f"{PKG}.{mod}", name)
+        for mod, names in TEST_ONLY_FUNCTIONS.items()
+        for name in names
+    }
+    assert not unreached - listed, (
+        f"public functions only tests reach: {sorted(unreached - listed)} "
+        "— delete them, or give them a gate, workload or budget"
+    )
+    assert not listed - unreached, (
+        "TEST_ONLY_FUNCTIONS entries that are gone or now reached: "
+        f"{sorted(listed - unreached)} — remove them from the list"
     )

@@ -35,7 +35,6 @@ from jobcan_data_integrator_spark.operators.retrieval import (
 )
 from jobcan_data_integrator_spark.storage import TableStore
 from test_ingest import (
-    ALL,
     BATCH1,
     BATCH2,
     BATCH3,
@@ -251,171 +250,6 @@ def test_bm25_family_requires_snapshot_store(spark, tmp_path):
     with pytest.raises(ValueError, match="snapshot-isolation"):
         extend_bm25_index(store, _mk(spark, BATCH1).select("doc_id", "text"))
     assert not list(store.root.iterdir())
-
-
-def test_hybrid_search_curated_matches_composed_one_shot(
-    spark, sf_dir, tmp_path
-):
-    """The write-once/query-many hybrid path: BM25 over the persisted
-    inverted index ⊕ IVF-ANN over the persisted embedding family
-    (doc-mapped via doc_vecs), RRF-fused — after an ingest, a doc-keyed
-    takedown (vectors cascade-retracted), AND a cluster-style demotion
-    (tombstoned doc whose vectors were NEVER retracted), the result
-    must equal the same fusion composed from one-shot parts over the
-    LIVE docs: BM25 rebuilt on read_curated; dense served from a
-    REFERENCE store holding only live docs' vectors under the same
-    frozen codebook (physical absence vs the main store's masks +
-    pre-cut exclusion — a real check, not a tautology).  Query ids are
-    an external id space: each query doc is itself live, so its own
-    vector (cosine 1.0) MUST appear in its dense list — the collision
-    with vec_id == q_id drops nothing."""
-    from jobcan_data_integrator_spark.operators import incremental as inc
-    from jobcan_data_integrator_spark.operators.ingest import (
-        TOMBSTONES,
-        hybrid_search_curated,
-        read_curated,
-        retract_documents,
-    )
-    from jobcan_data_integrator_spark.operators.retrieval import (
-        bm25_scores,
-        bm25_topk,
-        build_inverted_index,
-        query_terms,
-        rrf_fuse,
-    )
-    from jobcan_data_integrator_spark.session import load_table
-    from test_ingest import _t
-    from pyspark.sql.window import Window as W
-
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .filter(F.col("vec_id") < 40)
-        .localCheckpoint(eager=True)
-    )
-    # one vector per doc: doc_id == vec_id -> docs 0..39
-    emb_docs = emb.select(F.col("vec_id").alias("doc_id"), "vec_id", "embedding")
-    docs = spark.createDataFrame(
-        [(i, _t(f"w{i % 7}", 0, 12)) for i in range(40)],
-        "doc_id long, text string",
-    )
-    store = TableStore(
-        spark, tmp_path / "main", write_partitions=2, snapshot_isolation=True
-    )
-    ingest_increment(
-        store, docs, "b1",
-        span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-        cluster_threshold=THRESH,
-        bm25=True, new_emb=emb_docs, emb_families=("ivf",),
-    )
-    retract_documents(
-        store,
-        spark.createDataFrame(
-            [(i,) for i in range(40) if i % 5 == 2], "doc_id long"
-        ),
-        "takedown-h",
-        span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-        cluster_threshold=THRESH,
-    )
-    # cluster-style demotion: doc 4 tombstoned, vectors NOT retracted —
-    # the dense side must exclude it BEFORE the top-k cut
-    demoted = store.read(TOMBSTONES).limit(1).withColumn("doc_id", F.lit(4))
-    store.begin_commit("demote-4")
-    store.merge_insert_missing(TOMBSTONES, demoted, ["doc_id"])
-    store.end_commit()
-
-    q = (
-        docs.filter(F.col("doc_id").isin(1, 3))
-        .join(emb_docs.select("doc_id", "embedding"), "doc_id")
-        .select(
-            F.col("doc_id").alias("q_id"),
-            F.col("text").alias("q_text"),
-            "embedding",
-        )
-    )
-    got = {
-        (r.q_id, r.doc_id, r.rrf_rank, r.rrf_micro, r.n_lists)
-        for r in hybrid_search_curated(store, q, k=5).collect()
-    }
-
-    # composed one-shot over the LIVE docs
-    live = read_curated(store).select("doc_id", "text").localCheckpoint(eager=True)
-    index = build_inverted_index(live)
-    lex = bm25_topk(
-        bm25_scores(index, query_terms(q.select("q_id", "q_text"))), k=5
-    ).select("q_id", "doc_id", "rank")
-    # dense reference: same frozen codebook (trained on the FULL vector
-    # set, as the ingest build did), only live docs' vectors present
-    ref = TableStore(
-        spark, tmp_path / "ref", write_partitions=2, snapshot_isolation=True
-    )
-    inc.build_ivf_index(ref, emb)
-    dead_vecs = (
-        emb_docs.join(live.select("doc_id"), "doc_id", "left_anti")
-        .select("vec_id")
-        .localCheckpoint(eager=True)
-    )
-    ref.begin_commit("prune-dead")
-    ref.delete_scope("ivf_assignments", dead_vecs, ["vec_id"])
-    ref.end_commit()
-    ann_ref = inc.ann_search_indexed(
-        ref,
-        q.select(F.col("q_id").alias("vec_id"), "embedding"),
-        k=5,
-        n_probe=2,
-        exclude_self=False,
-    )
-    best = (
-        ann_ref.join(emb_docs.select("vec_id", "doc_id"), "vec_id")
-        .groupBy("q_id", "doc_id")
-        .agg(F.max("cosine_sim").alias("cosine_sim"))
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cosine_sim").desc(), F.col("doc_id"))
-    dense = (
-        best.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("q_id", "doc_id", "rank")
-    )
-    want = {
-        (r.q_id, r.doc_id, r.rrf_rank, r.rrf_micro, r.n_lists)
-        for r in rrf_fuse([lex, dense], topk=5).collect()
-    }
-    assert got == want
-    fused_docs = {d for _, d, _, _, _ in got}
-    # takedown + demotion both invisible
-    assert not fused_docs & ({i for i in range(40) if i % 5 == 2} | {4})
-    # external-id-space semantics: each live query doc's own vector is
-    # its top dense hit, so it appears in its fused list
-    by_q = {}
-    for qid, d, rank, _, n in got:
-        by_q.setdefault(qid, set()).add(d)
-    assert 1 in by_q[1] and 3 in by_q[3]
-
-
-
-def test_hybrid_degrades_to_lexical_without_embeddings(spark, tmp_path):
-    """No embedding families / no query vectors -> the hybrid path IS
-    the BM25 path (n_lists == 1 everywhere)."""
-    from jobcan_data_integrator_spark.operators.ingest import (
-        hybrid_search_curated,
-    )
-    from test_ingest import _t
-
-    docs = spark.createDataFrame(
-        [(i, _t(f"w{i % 5}", 0, 10)) for i in range(20)],
-        "doc_id long, text string",
-    )
-    store = TableStore(
-        spark, tmp_path, write_partitions=2, snapshot_isolation=True
-    )
-    ingest_increment(
-        store, docs, "b1", span=SPAN, min_tokens=MIN_TOKENS, bm25=True
-    )
-    q = spark.createDataFrame(
-        [(1, _t("w1", 0, 4))], "q_id long, q_text string"
-    )
-    rows = hybrid_search_curated(store, q, k=5).collect()
-    assert rows and all(r.n_lists == 1 for r in rows)
 
 
 # Long-haul integration tier (r12): excluded from the DEFAULT pytest run
