@@ -1,8 +1,8 @@
 """Incremental (new-vs-corpus) deduplication and ANN indexing over
-persisted index tables — eight families: exact-dedup hashes, MinHash
+persisted index tables — seven families: exact-dedup hashes, MinHash
 bands, IVF cell assignments, SemDeDup pairs, ExactSubstr span hashes,
-n-gram LM counts (perplexity scoring at ingest), boilerplate line-stats
-(line cleaning at ingest), and PQ codes (compressed ANN serving).
+boilerplate line-stats (line cleaning at ingest), and PQ codes
+(compressed ANN serving).
 
 A 100 TB training pipeline cannot re-dedup the whole corpus for every
 ingest batch — the full-corpus LSH pipeline (gate/llm.py
@@ -1152,8 +1152,11 @@ def extend_semantic_index(
     store: TableStore, new_emb: DataFrame, new_pairs: DataFrame
 ) -> None:
     """Absorb a processed increment: insert its assignments (computed
-    under the stored codebook), upsert its pairs."""
-    new_pairs = new_pairs.localCheckpoint(eager=True)
+    under the stored codebook), upsert its pairs.
+
+    ``new_pairs`` must already be pinned (``localCheckpoint`` or
+    collected): ``semantic_increment``'s result lazily scans
+    ``ivf_assignments``, which this call rewrites."""
     inc = assign_increment(store, new_emb)
     with store.commit_bracket("sd-index-extend"):
         store.merge_insert_missing("ivf_assignments", inc, ["vec_id"])
@@ -1313,196 +1316,8 @@ def extend_span_index(
 
 
 # ---------------------------------------------------------------------------
-# n-gram LM count index (the 6th family: perplexity scoring at ingest)
-# ---------------------------------------------------------------------------
-
-#: LM index tables: the three count tables keyed by the 60-bit n-gram
-#: hash, the one-row totals, and the absorbed-batch ledger that makes
-#: the (inherently non-idempotent) additive count merge exactly-once.
-LM_TABLES = ("lm_uni", "lm_bi", "lm_tri", "lm_tot", "lm_batches")
-
-
-def lm_index_buckets(n: int = 64) -> dict[str, tuple[str, int]]:
-    """Bucket the count tables by the n-gram hash so an increment's
-    probe (``perplexity_increment``) scans only the bucket dirs its
-    n-gram keys hash into."""
-    return {"lm_uni": ("h", n), "lm_bi": ("h", n), "lm_tri": ("h", n)}
-
-
-def build_lm_index(store: TableStore, docs: DataFrame) -> None:
-    """Persist a Stupid-Backoff trigram LM (operators/lm.train_ngram_lm)
-    trained on an initial trusted corpus of (doc_id, text)."""
-    from jobcan_data_integrator_spark.operators.lm import train_ngram_lm
-
-    lm = train_ngram_lm(docs)
-    with store.commit_bracket("lm-index-build"):
-        store.overwrite("lm_uni", lm.uni)
-        store.overwrite("lm_bi", lm.bi)
-        store.overwrite("lm_tri", lm.tri)
-        store.overwrite("lm_tot", lm.totals)
-        store.overwrite(
-            "lm_batches",
-            docs.sparkSession.range(1).select(
-                F.lit("lm-index-build").alias("batch_id")
-            ),
-        )
-
-
-def lm_from_store(store: TableStore):
-    """The persisted LM as an operators/lm.NgramLM over full-table reads
-    (use ``perplexity_increment`` for the bucket-pruned probe)."""
-    from jobcan_data_integrator_spark.operators.lm import NgramLM
-
-    return NgramLM(
-        tri=store.read("lm_tri"),
-        bi=store.read("lm_bi"),
-        uni=store.read("lm_uni"),
-        totals=store.read("lm_tot"),
-    )
-
-
-def perplexity_increment(
-    store: TableStore,
-    new_docs: DataFrame,
-    cuts: tuple[float, float] = (-1.0, -1.5),
-) -> DataFrame:
-    """Score an increment against the PERSISTED LM — the CCNet filter
-    applied at ingest time, without touching the training corpus.
-
-    On a store bucketed with ``lm_index_buckets`` each count table is
-    read bucket-pruned to the increment's own n-gram keys
-    (TableStore.read_for_keys), so probe cost is linear in the INCREMENT
-    times its key fan-out, never in the stored vocabulary.  The pruned
-    reads are supersets of the matching count rows, and the scoring
-    joins do the exact filtering — so the result is identical to scoring
-    against the full tables (pinned in tests)."""
-    from jobcan_data_integrator_spark.operators.lm import (
-        NgramLM,
-        _keyed_rows,
-        perplexity,
-    )
-
-    keyed = _keyed_rows(new_docs).localCheckpoint(eager=False)
-    lm = NgramLM(
-        tri=store.read_for_keys(
-            "lm_tri", keyed.select(F.col("t_h").alias("h")), "h"
-        ),
-        bi=store.read_for_keys(
-            "lm_bi",
-            keyed.select(
-                F.explode(F.array("b12_h", "b23_h")).alias("h")
-            ),
-            "h",
-        ),
-        uni=store.read_for_keys(
-            "lm_uni",
-            keyed.select(F.explode(F.array("u2_h", "u3_h")).alias("h")),
-            "h",
-        ),
-        totals=store.read("lm_tot"),
-    )
-    return perplexity(new_docs, lm, cuts=cuts)
-
-
-def extend_lm_index(
-    store: TableStore, new_docs: DataFrame, batch_id: str
-) -> None:
-    """Absorb a trusted increment into the persisted LM: counts merge by
-    key-SUM (n-gram counts are corpus-additive — pinned in test_lm), the
-    totals row adds the increment's tokens and its genuinely-new vocab.
-
-    An additive merge is NOT an idempotent write, so this family cannot
-    ride the plain-mode manifest contract (the commit manifest's
-    "re-running the batch converges" assumes replays overwrite, not
-    re-add).  Two guards make it exactly-once anyway:
-
-    - the store MUST be in snapshot-isolation mode (raises otherwise):
-      a crash before the commit publishes leaves nothing visible, so
-      the replay recomputes from the untouched pre-batch tables;
-    - ``lm_batches`` records every absorbed ``batch_id`` inside the same
-      commit, so a batch REDELIVERED after a successful publish (e.g. a
-      streaming retry whose checkpoint lagged) is detected and skipped.
-
-    The merge itself touches the corpus tables via ONE bucket-pruned
-    read per level (the increment's keys), sums the affected rows with
-    the increment's counts, and upserts those keys only — linear in the
-    increment at any stored-vocabulary size."""
-    from jobcan_data_integrator_spark.operators.lm import train_ngram_lm
-
-    if not store.snapshot_isolation:
-        raise ValueError(
-            "extend_lm_index needs a snapshot-isolation TableStore: "
-            "additive count merges only replay safely when the whole "
-            "batch publishes atomically"
-        )
-    if (
-        store.exists("lm_batches")
-        and store.read("lm_batches")
-        .filter(F.col("batch_id") == batch_id)
-        .limit(1)
-        .count()
-        > 0
-    ):
-        return  # already absorbed — redelivery, not a new increment
-    inc = train_ngram_lm(new_docs)
-    # totals inputs FIRST: after lm_uni's upsert below, a same-batch
-    # read resolves the pending merged version (a batch reads its own
-    # writes) and the anti-join would see zero new vocabulary.
-    new_vocab = (
-        inc.uni.select("h")
-        .join(
-            store.read_for_keys("lm_uni", inc.uni.select("h")).select("h"),
-            "h",
-            "left_anti",
-        )
-        .count()
-    )
-    inc_tokens = inc.totals.first()["n_tokens"]
-    old = store.read("lm_tot").first()
-    with store.commit_bracket(batch_id):
-
-        def _level(table: str, counts: DataFrame) -> None:
-            counts = counts.localCheckpoint(eager=True)
-            stored = store.read_for_keys(table, counts.select("h")).join(
-                F.broadcast(counts.select("h").distinct()), "h", "leftsemi"
-            )
-            merged = (
-                stored.unionByName(counts)
-                .groupBy("h")
-                .agg(F.sum("c").cast("bigint").alias("c"))
-                .localCheckpoint(eager=True)
-            )
-            store.merge_upsert(table, merged, ["h"])
-
-        # the three count levels touch disjoint tables — each level's whole
-        # probe+merge rides the scheduler as one op
-        for table, counts in (
-            ("lm_uni", inc.uni),
-            ("lm_bi", inc.bi),
-            ("lm_tri", inc.tri),
-        ):
-            store.submit_op(
-                lambda t=table, c=counts: _level(t, c),
-                reads=(table,),
-                writes=(table,),
-            )
-        store.overwrite(
-            "lm_tot",
-            new_docs.sparkSession.range(1).select(
-                F.lit(old["n_tokens"] + inc_tokens).cast("bigint").alias("n_tokens"),
-                F.lit(old["n_vocab"] + new_vocab).cast("bigint").alias("n_vocab"),
-            ),
-        )
-        store.merge_insert_missing(
-            "lm_batches",
-            new_docs.sparkSession.range(1).select(F.lit(batch_id).alias("batch_id")),
-            ["batch_id"],
-        )
-
-
-# ---------------------------------------------------------------------------
 # Boilerplate line-stats index (incremental line-level cleaning — the
-# 7th family): persist per-line-hash document frequencies so each
+# 6th family): persist per-line-hash document frequencies so each
 # ingest batch cleans ITSELF against the accumulated corpus stats and
 # then adds its own counts, without ever rescanning stored text.
 # ---------------------------------------------------------------------------
@@ -1589,9 +1404,9 @@ def extend_line_index(
     min_line_chars: int | None = None,
 ) -> None:
     """Absorb an increment's line counts: key-SUM merge of the affected
-    hashes only (document frequencies are corpus-additive).  Same
-    exactly-once contract as extend_lm_index — additive merges require
-    a snapshot-isolation store (a crash publishes nothing) and
+    hashes only (document frequencies are corpus-additive).  Additive
+    merges are not idempotent, so the merge is made exactly-once: it
+    requires a snapshot-isolation store (a crash publishes nothing) and
     ``bl_batches`` makes a redelivered batch a no-op."""
     from jobcan_data_integrator_spark.operators import lines as L
 
@@ -1633,7 +1448,7 @@ def extend_line_index(
 
 
 # ---------------------------------------------------------------------------
-# PQ code index (compressed ANN serving — the 8th family): persist the
+# PQ code index (compressed ANN serving — the 7th family): persist the
 # trained product-quantization codebook and every vector's codes so ADC
 # search runs against ~8-byte rows, and each ingest batch encodes
 # itself against the FROZEN codebook (the standard PQ stance: the

@@ -15,7 +15,7 @@ order:
 
     PII scrub -> exact dedup (vs ex_docs) -> ExactSubstr span removal
     (vs sp_occs) -> MinHash near-dup + cluster labels (vs mh_* /
-    cc_labels) -> curated-corpus merge -> optional chunk + pack
+    cc_labels) -> curated-corpus merge
 
 curate_corpus's one-shot-only stages (normalization, line cleaning,
 PII-hit cap, classifier and perplexity gates) live there alone.
@@ -39,11 +39,6 @@ deletes, the lakehouse pattern — so ``read_curated`` (curated docs
 anti-join tombstones) stays equivalent to the one-shot result without
 rewriting historical partitions.  The same tables make every store
 retractable (``retract_documents``).
-
-Per-batch packing is batch-scoped: shard boundaries never span batches;
-``repack_corpus`` is the one-call global reshard (chunk + pack
-``read_curated`` in deterministic shuffled order, swapped in under one
-snapshot commit).
 
 Atomicity: every family write lands inside ONE ``store.commit_bracket``
 — on a snapshot-isolation store the whole batch (every family, the
@@ -69,12 +64,10 @@ from pyspark.sql import functions as F
 from jobcan_data_integrator_spark.storage import TableStore
 
 #: orchestrator-owned tables: the absorbed-batch ledger, the curated
-#: corpus, its tombstones, and the optional chunk/shard outputs
+#: corpus and its tombstones
 LEDGER = "ig_batches"
 CURATED = "cur_docs"
 TOMBSTONES = "cur_drops"
-CHUNKS = "cur_chunks"
-SHARDS = "cur_shards"
 #: each exact-dedup survivor's PRE-span (post-PII) text — the input
 #: retroactive span flags, retractions and mate promotions re-dedup.
 CURATED_PRE = "cur_pre"
@@ -291,38 +284,6 @@ def doc_history(store: TableStore, ids: DataFrame) -> DataFrame:
             )
         )
     return out
-
-
-def bm25_search_curated(
-    store: TableStore,
-    queries: DataFrame,
-    *,
-    k1: float = 1.2,
-    b: float = 0.75,
-    k: int = 10,
-    max_df_ratio: float | None = None,
-) -> DataFrame:
-    """Top-k BM25 over the LIVE curated corpus, served from the
-    maintained inverted-index family (``ingest_increment(bm25=True)``;
-    operators/retrieval.py).  Liveness is the ``read_curated`` mask:
-    tombstoned (demoted / floored / retracted) docs are excluded before
-    any statistic is derived, so the result ≡ one-shot BM25 over
-    ``read_curated(store)`` — pinned across ingest / out-of-order
-    repair / retract / compact sequences in tests/test_retrieval.py."""
-    from jobcan_data_integrator_spark.operators import retrieval as rt
-
-    exclude = None
-    if store.exists(TOMBSTONES):
-        exclude = store.read(TOMBSTONES).select("doc_id")
-    return rt.bm25_query_indexed(
-        store,
-        queries,
-        k1=k1,
-        b=b,
-        k=k,
-        max_df_ratio=max_df_ratio,
-        exclude=exclude,
-    )
 
 
 def probe_duplicates(
@@ -596,60 +557,6 @@ def probe_contamination(
     )
 
 
-def repack_corpus(
-    store: TableStore,
-    budget: int,
-    *,
-    chunk_tokens: int = 32,
-    chunk_overlap: int = 8,
-    shuffle_salt: str = "repack",
-) -> DataFrame:
-    """Globally reshard the curated corpus: chunk ``read_curated`` and
-    pack into GLOBALLY shuffled shards, replacing the batch-scoped
-    ``cur_chunks``/``cur_shards`` under one commit.
-
-    Per-batch packing is batch-scoped by design (shard boundaries never
-    span batches, ingest.py module docstring) — fine for continuous
-    training consumption, but a fresh training run wants shards whose
-    deterministic shuffled order mixes the WHOLE corpus so no shard
-    concentrates one arrival batch.  One call does exactly what running
-    ``chunk_documents`` + ``pack_shards`` one-shot over the curated
-    corpus would (pinned by test), and the overwrite publishes
-    atomically: on a snapshot store the old shard layout stays readable
-    until the pointer swap; a crash publishes nothing.
-
-    Vary ``shuffle_salt`` per epoch to re-draw the global order without
-    re-chunking logic changes.  Returns the packed frame.
-    """
-    from jobcan_data_integrator_spark.operators.packing import (
-        chunk_documents,
-        pack_shards,
-    )
-
-    docs = read_curated(store).select("doc_id", "text")
-    chunks = (
-        chunk_documents(
-            docs, max_tokens=chunk_tokens, overlap=chunk_overlap
-        )
-        .withColumn(
-            "chunk_id",
-            (F.col("doc_id") * 1_048_576 + F.col("chunk_idx")).cast("bigint"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    batch_tag = f"repack-{shuffle_salt}"
-    packed = pack_shards(
-        chunks.select("chunk_id", "n_tokens"),
-        budget=budget,
-        id_col="chunk_id",
-        shuffle_salt=shuffle_salt,
-    ).withColumn("batch_id", F.lit(batch_tag)).localCheckpoint(eager=True)
-    with store.commit_bracket(batch_tag):
-        store.overwrite(CHUNKS, chunks.withColumn("batch_id", F.lit(batch_tag)))
-        store.overwrite(SHARDS, packed)
-    return packed
-
-
 def _pair_endpoints(pairs: DataFrame, threshold: float) -> DataFrame:
     """(doc_id) — both endpoints of every ≥-threshold pair (retractions
     below the cluster threshold never had a cluster edge to undo)."""
@@ -681,12 +588,15 @@ def _tombstone(
     write(TOMBSTONES, rows, ["doc_id"])
 
 
-#: (table, feature) for each removed feature whose tables no current
-#: code maintains, repairs or retracts
+#: (table, feature) for each removed lifecycle feature: tables that
+#: ingest, retraction and compaction no longer maintain, repair or
+#: retract
 _REMOVED_LAYOUTS = (
     ("sh_signatures", "the persisted SimHash family"),
     ("doc_vecs", "the embedding families' doc-to-vector cascade"),
     ("emb_retractions", "the embedding families' vector retraction"),
+    ("bm_doc_len", "the BM25 family's lifecycle maintenance"),
+    ("cur_chunks", "per-batch packing"),
 )
 
 
@@ -1061,22 +971,7 @@ def _rebuild_docs(
     ok_rows = ok.join(
         store.read(CURATED_PRE).select("doc_id", "batch_id"), "doc_id"
     )
-    # BM25 family mirrors cur_docs: capture the rows this upsert will
-    # replace (their text names exactly the posting rows to prune —
-    # checkpointed BEFORE the upsert so the read pins the old version)
-    from jobcan_data_integrator_spark.operators import retrieval as rt
-
-    old_bm = None
-    if store.exists(rt.BM25_DOC_LEN):
-        old_bm = (
-            store.read_for_keys(CURATED, ok, "doc_id")
-            .join(ok.select("doc_id"), "doc_id", "leftsemi")
-            .select("doc_id", "text")
-            .localCheckpoint(eager=True)
-        )
     store.merge_upsert(CURATED, ok_rows, ["doc_id"])
-    if old_bm is not None:
-        rt.replace_bm25_docs(store, old_bm, ok)
     stages.append(("span_repaired", ok))
 
     if minhash and store.exists("mh_bands"):
@@ -1105,12 +1000,8 @@ def ingest_increment(
     n_hashes: int = 8,
     band_size: int = 2,
     cluster_threshold: float = 0.5,
-    pack_budget: int | None = None,
-    chunk_tokens: int = 32,
-    chunk_overlap: int = 8,
     allow_out_of_order: bool = True,
     auto_compact_bytes: int | None = 8 << 20,
-    bm25: bool = False,
 ) -> IngestResult:
     """Curate one arriving (doc_id, text) batch against — and into —
     the persisted index families.  The stages are ``curate_corpus``'s
@@ -1123,8 +1014,6 @@ def ingest_increment(
       ``near_dup_pairs`` callback specialized to the MinHash-LSH family
       (the one with a maintained pair index), clustered at
       ``cluster_threshold`` with min-id keepers via ``cc_labels``.
-    - ``pack_budget``: chunk + pack the batch's kept docs into
-      batch-scoped shards (``cur_chunks``/``cur_shards``).
 
     First batch against an empty store BUILDS each family; later
     batches increment.  Batches may arrive in any doc-id order, their
@@ -1172,17 +1061,8 @@ def ingest_increment(
     job when under threshold) — the auto-trigger that keeps the
     broadcast masks bounded under sustained repair/retraction traffic.
     None disables.
-
-    ``bm25``: maintain the BM25 inverted-index family
-    (operators/retrieval.py) over the batch's kept docs; needs a
-    snapshot-isolation store (raises on a plain one).  Opt-in on the
-    FIRST batch only — once ``bm_doc_len`` exists every later ingest,
-    repair, retraction, and compaction maintains it automatically
-    (exists-driven, like the other families); serve with
-    ``bm25_search_curated``.
     """
     from jobcan_data_integrator_spark.operators import incremental as inc
-    from jobcan_data_integrator_spark.operators import retrieval as rt
     from jobcan_data_integrator_spark.operators.dedup import (
         remove_flagged_spans,
     )
@@ -1192,21 +1072,6 @@ def ingest_increment(
     from jobcan_data_integrator_spark.operators.pii import scrub_pii
 
     spark = new_docs.sparkSession
-    # exists-driven after first sight, like every other family
-    bm25 = bm25 or store.exists(rt.BM25_DOC_LEN)
-    if bm25 and not store.snapshot_isolation:
-        # the family's repair path captures the docs' OLD text from
-        # cur_docs and prunes those (term, doc_id) rows after the
-        # curated upsert lands; on a plain store a crash between the two
-        # per-table swaps destroys the capture source, so the replay
-        # could no longer name the stale postings.  Snapshot mode
-        # publishes both (or neither) atomically.
-        raise ValueError(
-            "the BM25 family needs a snapshot-isolation store: its "
-            "old-text capture-then-prune maintenance is only crash-"
-            "replay-safe under an atomic multi-table publish"
-        )
-
     if not allow_out_of_order:
         raise ValueError(
             "the monotone-only ingest mode is gone: every batch takes the "
@@ -1467,54 +1332,10 @@ def ingest_increment(
                     store, batch_id, touched=touched
                 )
 
-        # 5. curated-corpus merge + optional batch-scoped chunk/pack —
-        # independent single-table merges issued HERE, so on a snapshot
-        # store they overlap each other (inline, hence still ledger-last,
-        # on plain stores)
+        # 5. curated-corpus merge
         store.merge_insert_missing(
             CURATED, kept.withColumn("batch_id", F.lit(batch_id)), ["doc_id"]
         )
-        if bm25:
-            # mirrors the curated insert-missing exactly (the extend's
-            # own anti-join skips ids already in the family, so repairs
-            # that landed earlier in this batch are not double-inserted);
-            # its probe and checkpoint run in the background with its writes
-            store.submit_op(
-                lambda: rt.extend_bm25_index(store, kept),
-                reads=tuple(rt.BM25_TABLES),
-                writes=tuple(rt.BM25_TABLES),
-            )
-        if pack_budget is not None:
-            from jobcan_data_integrator_spark.operators.packing import (
-                chunk_documents,
-                pack_shards,
-            )
-
-            chunks = (
-                chunk_documents(
-                    kept, max_tokens=chunk_tokens, overlap=chunk_overlap
-                )
-                .withColumn(
-                    "chunk_id",
-                    (
-                        F.col("doc_id") * 1_048_576 + F.col("chunk_idx")
-                    ).cast("bigint"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            packed = pack_shards(
-                chunks.select("chunk_id", "n_tokens"),
-                budget=pack_budget,
-                id_col="chunk_id",
-                shuffle_salt=batch_id,
-            ).withColumn("batch_id", F.lit(batch_id))
-            store.merge_insert_missing(
-                CHUNKS,
-                chunks.withColumn("batch_id", F.lit(batch_id)),
-                ["chunk_id"],
-            )
-            store.merge_insert_missing(SHARDS, packed, ["chunk_id"])
-            stages.append(("chunks", chunks))
 
         # 6. the ledger, written LAST.  On a plain store every write
         # above ran inline in program order, so the ledger still lands
@@ -1595,9 +1416,9 @@ def retract_documents(
       exact/span probe, and ``ingest_increment`` drops them from any
       future batch — a redelivered copy can never re-enter, win a
       keeper election, or re-seed span occurrences.  Their ``cur_docs``
-      / ``cur_pre`` / chunk / shard rows are PHYSICALLY deleted in this
-      commit (the text is gone, not merely masked); index-side masks
-      are folded by ``compact_store``.
+      / ``cur_pre`` rows are PHYSICALLY deleted in this commit (the
+      text is gone, not merely masked); index-side masks are folded
+      by ``compact_store``.
 
     Requires a snapshot-isolation store; every ingest batch keeps the
     repair tables this reads (``cur_pre``, tombstone causes, merge-on-
@@ -1614,18 +1435,12 @@ def retract_documents(
     absent from the authority disappear from every derived table; this
     is that contract for the LLM-curation tier.
 
-    Packing note: retracted docs' chunk/shard rows are deleted, which
-    leaves the batch-scoped shard layout sparse (cum_before gaps);
-    ``repack_corpus`` re-densifies the whole corpus in one call.
-
     Scope: this call covers the DOC-keyed families (curated corpus,
-    exact hash map, span tables, MinHash family, cluster labels, BM25,
-    chunks/shards).  Every retraction appends a ``retraction_log``
-    receipt row (ids count, families touched, snapshot version) in the
-    same commit.
+    exact hash map, span tables, MinHash family, cluster labels).
+    Every retraction appends a ``retraction_log`` receipt row (ids
+    count, families touched, snapshot version) in the same commit.
     """
     from jobcan_data_integrator_spark.operators import incremental as inc
-    from jobcan_data_integrator_spark.operators import retrieval as rt
     from jobcan_data_integrator_spark.operators.incremental import (
         _hash_groups,
         _span_flags,
@@ -1668,17 +1483,12 @@ def retract_documents(
     # retraction may touch
     families = [RETRACTION_IDS, TOMBSTONES, CURATED, CURATED_PRE]
     families += [inc.DOC_RETRACTIONS, "ex_docs", "ex_groups"]
-    bm25 = store.exists(rt.BM25_DOC_LEN)
-    if bm25:
-        families += list(rt.BM25_TABLES)
     if span is not None:
         families += list(inc.SPAN_TABLES)
         families += [inc.FLAG_DROPS, inc.SPAN_MASK_HASHES]
     if minhash:
         families += list(inc.INDEX_TABLES) + list(inc.OOO_DROP_TABLES)
         families += ["cc_labels"]
-    if store.exists(CHUNKS):
-        families += [CHUNKS, SHARDS]
 
     stages: list[tuple[str, DataFrame]] = []
     promoted: DataFrame | None = None
@@ -1885,39 +1695,11 @@ def retract_documents(
                 else rebuild.unionByName(repaired.select("doc_id"))
             )
 
-        # 4. the retracted rows themselves: curated text, pre-span
-        # text, chunks and shards are PHYSICALLY deleted (takedown),
-        # not masked — all unmanaged tables, all inside this commit
-        if store.exists(CHUNKS):
-            r_chunks = (
-                store.read_for_keys(CHUNKS, r_ids, "doc_id")
-                .join(F.broadcast(r_ids), "doc_id", "leftsemi")
-                .select("chunk_id")
-                .localCheckpoint(eager=True)
-            )
-            store.prune_keys(CHUNKS, r_ids, ["doc_id"])
-            if store.exists(SHARDS):
-                store.prune_keys(SHARDS, r_chunks, ["chunk_id"])
-        if bm25:
-            # takedown reaches the BM25 family too: the curated rows
-            # about to be deleted carry the text whose tokens name the
-            # posting rows — capture before the prune, delete after
-            old_bm = (
-                store.read_for_keys(CURATED, r_ids, "doc_id")
-                .join(F.broadcast(r_ids), "doc_id", "leftsemi")
-                .select("doc_id", "text")
-                .localCheckpoint(eager=True)
-            )
+        # 4. the retracted rows themselves: curated text and pre-span
+        # text are PHYSICALLY deleted (takedown), not masked — both
+        # unmanaged tables, both inside this commit
         store.prune_keys(CURATED, r_ids, ["doc_id"])
         store.prune_keys(CURATED_PRE, r_ids, ["doc_id"])
-        if bm25:
-            # the token capture's checkpoint runs in the background with
-            # the family's prunes
-            store.submit_op(
-                lambda: rt.remove_bm25_docs(store, old_bm),
-                reads=tuple(rt.BM25_TABLES),
-                writes=tuple(rt.BM25_TABLES),
-            )
 
         # 5. MinHash retirement + component relabel: mates demoted only
         # through a retracted doc resurrect; one whose curated row never
@@ -2146,7 +1928,6 @@ def _compact_folds(store: TableStore, _unfolded) -> None:
     ``sp_flag_drops`` when it runs and declares it, so the reset of that
     mask waits for it, and the commit publishes once."""
     from jobcan_data_integrator_spark.operators import incremental as inc
-    from jobcan_data_integrator_spark.operators import retrieval as rt
 
     mask = _unfolded(inc.DOC_RETRACTIONS, "doc_id")
 
@@ -2219,29 +2000,12 @@ def _compact_folds(store: TableStore, _unfolded) -> None:
             .localCheckpoint(eager=True)
         )
         if perm.head(1):
-            # the perm docs' tombstones disappear below, so their
-            # (query-masked) BM25 rows must physically leave too — old
-            # text captured before the curated prune
-            old_bm = None
-            if store.exists(rt.BM25_DOC_LEN):
-                old_bm = (
-                    store.read_for_keys(CURATED, perm, "doc_id")
-                    .join(F.broadcast(perm), "doc_id", "leftsemi")
-                    .select("doc_id", "text")
-                    .localCheckpoint(eager=True)
-                )
             store.prune_keys(CURATED, perm, ["doc_id"])
             store.prune_keys(CURATED_PRE, perm, ["doc_id"])
             store.overwrite(
                 TOMBSTONES,
                 tomb.filter(~F.col("cause").isin("exact", "retracted")),
             )
-            if old_bm is not None:
-                store.submit_op(
-                    lambda: rt.remove_bm25_docs(store, old_bm),
-                    reads=tuple(rt.BM25_TABLES),
-                    writes=tuple(rt.BM25_TABLES),
-                )
     # sp_flag_drops is the ONE transient retraction mask (its effect —
     # flag rows deleted — is fully captured by the fold; a later batch
     # re-duplicating the span re-asserts the flag as a fresh insert).

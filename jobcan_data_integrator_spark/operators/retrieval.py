@@ -281,76 +281,47 @@ def bm25_topk(scored: DataFrame, k: int = 10) -> DataFrame:
 # Store-backed incremental BM25 family
 # ---------------------------------------------------------------------------
 #
-# The inverted index as a MAINTAINED family over the curated corpus
-# (operators/ingest.py wires it into ingest_increment / retract_documents
-# / compact_store the same way the MinHash/exact/span families are):
+# The inverted index as a PERSISTED family that grows by extension and
+# answers queries from the store:
 #
 # - ``bm_postings (term, doc_id, tf)`` — bucketed by term, so a query's
 #   posting-list read is bucket-PRUNED (TableStore.read_for_keys scans
 #   only the dirs the query terms hash into).
-# - ``bm_doc_len (doc_id, dl)`` — bucketed by doc_id; also the source of
-#   (n_docs, avgdl) at query time, one narrow 2-column aggregate that a
-#   serving deployment snapshots per query BATCH, not per query.
+# - ``bm_doc_len (doc_id, dl)`` — bucketed by doc_id, so an extend's
+#   insert-missing probe reads only its batch's buckets; also the source
+#   of (n_docs, avgdl) at query time, one narrow 2-column aggregate that
+#   a serving deployment snapshots per query BATCH, not per query.
 #
-# INVARIANT (the maintenance contract): the family always equals
-# ``build_inverted_index(cur_docs)`` — postings/lengths mirror the
-# curated table's rows EXACTLY, including demoted (tombstone-masked)
-# docs.  Liveness is applied at QUERY time by excluding tombstoned ids,
-# exactly like ingest.read_curated — so bm25 search over the family is
-# provably ≡ one-shot BM25 over read_curated(store) after ANY sequence
-# of ingests, out-of-order repairs, retractions, and compactions
-# (pinned in tests/test_retrieval.py).
-#
-# Mutation primitives mirror the three curated-table writes:
-# - extend  (merge_insert_missing(cur_docs, …))  → extend_bm25_index
-# - upsert  (merge_upsert(cur_docs, …), repairs) → replace_bm25_docs
-# - prune   (prune_keys(cur_docs, …), takedown)  → remove_bm25_docs
-# Removal needs no corpus scan and no mask: the OLD text is in hand at
-# every call site (it is the cur_docs row being replaced/deleted), and
-# its tokens ARE the postings' bucket source — the prune is
-# partition-scoped by construction, the same zero-scan trick the span
-# family uses for vanished hashes.  All three are idempotent
-# (merge-insert-missing + keyed prunes), so a crash replay converges.
+# INVARIANT: after any sequence of ``extend_bm25_index`` calls the
+# family equals ``build_inverted_index`` over the union of the extended
+# docs (first text per doc id wins), and ``bm25_query_indexed`` equals
+# one-shot ``bm25_topk(bm25_scores(…))`` over that index (pinned in
+# tests/test_retrieval_store.py).  The extend is insert-missing, so a
+# crash replay converges.
 
 BM25_POSTINGS = "bm_postings"
 BM25_DOC_LEN = "bm_doc_len"
-BM25_TABLES = (BM25_POSTINGS, BM25_DOC_LEN)
 
 
 def bm25_index_buckets(n: int = 64) -> dict[str, tuple[str, int]]:
     """Bucket layout for a probe-pruned BM25 family (pass through
     ``incremental.index_layout``): postings keyed by term — a query
-    reads only its terms' buckets; lengths keyed by doc_id — repairs
-    and takedowns prune only their docs' buckets."""
+    reads only its terms' buckets; lengths keyed by doc_id — an extend
+    probes only its docs' buckets."""
     return {BM25_POSTINGS: ("term", n), BM25_DOC_LEN: ("doc_id", n)}
 
 
-def _family_rows(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(postings, doc_len) rows for the given (doc_id, text) docs."""
-    toks = tokenize(docs.select("doc_id", "text")).select("doc_id", "term")
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    return postings, dl
-
-
-def _insert_docs(store: "TableStore", docs: DataFrame) -> None:
-    """Insert the docs' postings and lengths — the family's one writer.
-    Refuses a plain store: the repair path's capture-then-prune is
-    crash-replay-safe only under an atomic multi-table publish."""
+def extend_bm25_index(store: "TableStore", docs: DataFrame) -> None:
+    """Absorb a batch of (doc_id, text) docs — insert-missing
+    semantics: ids already in the family keep their rows.  First call
+    on an empty store builds the family.  Refuses a plain store: the
+    two tables must publish together, or a query between their writes
+    would count postings whose doc lengths are not yet visible."""
     if not store.snapshot_isolation:
         raise ValueError(
             "the BM25 family needs a snapshot-isolation store "
             f"(store {store.root} is plain)"
         )
-    postings, dl = _family_rows(docs)
-    store.merge_insert_missing(BM25_POSTINGS, postings, ["term", "doc_id"])
-    store.merge_insert_missing(BM25_DOC_LEN, dl, ["doc_id"])
-
-
-def extend_bm25_index(store: "TableStore", docs: DataFrame) -> None:
-    """Absorb a batch's NEW curated docs — insert-missing semantics
-    (mirrors the curated merge): ids already in the family keep their
-    rows.  First call on an empty store builds the family."""
     docs = docs.select("doc_id", "text")
     if store.exists(BM25_DOC_LEN):
         existing = store.read_for_keys(BM25_DOC_LEN, docs, "doc_id").select(
@@ -360,38 +331,9 @@ def extend_bm25_index(store: "TableStore", docs: DataFrame) -> None:
     docs = docs.localCheckpoint(eager=True)
     if not docs.head(1):
         return
-    _insert_docs(store, docs)
-
-
-def remove_bm25_docs(store: "TableStore", old_docs: DataFrame | None) -> None:
-    """Physically delete docs from the family.  ``old_docs`` must carry
-    the docs' CURRENT stored text — its tokens name exactly the
-    (term, doc_id) posting rows to prune, so the delete touches only
-    the buckets those terms hash into (zero corpus scan)."""
-    if old_docs is None or not store.exists(BM25_DOC_LEN):
-        return
-    old_keys = (
-        tokenize(old_docs.select("doc_id", "text"))
-        .select("term", "doc_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if old_keys.head(1):
-        store.prune_keys(BM25_POSTINGS, old_keys, ["term", "doc_id"])
-    store.prune_keys(BM25_DOC_LEN, old_docs.select("doc_id"), ["doc_id"])
-
-
-def replace_bm25_docs(
-    store: "TableStore", old_docs: DataFrame | None, new_docs: DataFrame
-) -> None:
-    """Repair path (mirrors the curated merge_upsert): prune the old
-    rows — old text in hand, scoped like ``remove_bm25_docs`` — then
-    insert the regrown text's rows.  Docs with no prior row (mate
-    promotions, resurrections) just insert."""
-    if not store.exists(BM25_DOC_LEN):
-        return
-    remove_bm25_docs(store, old_docs)
-    _insert_docs(store, new_docs.select("doc_id", "text"))
+    idx = build_inverted_index(docs)
+    store.merge_insert_missing(BM25_POSTINGS, idx.postings, ["term", "doc_id"])
+    store.merge_insert_missing(BM25_DOC_LEN, idx.doc_stats, ["doc_id"])
 
 
 def bm25_query_indexed(
@@ -402,28 +344,19 @@ def bm25_query_indexed(
     b: float = 0.75,
     k: int = 10,
     max_df_ratio: float | None = None,
-    exclude: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k BM25 over the PERSISTED family: (q_id, doc_id, rank,
     score_micro) for (q_id, q_text) queries.
 
-    The posting read is bucket-pruned to the query's terms; ``exclude``
-    (a doc_id frame — ingest.bm25_search_curated passes the tombstone
-    set) masks non-live docs BEFORE df/avgdl are derived, so every
-    statistic matches a one-shot index built over the live corpus.
-    df comes from the fetched posting lists themselves (the fetch for
-    term t contains exactly t's corpus rows); (n_docs, avgdl) is one
-    aggregate over the narrow doc-length table, amortized per query
-    batch."""
+    The posting read is bucket-pruned to the query's terms.  df comes
+    from the fetched posting lists themselves (the fetch for term t
+    contains exactly t's corpus rows); (n_docs, avgdl) is one aggregate
+    over the narrow doc-length table, amortized per query batch."""
     qt = query_terms(queries).localCheckpoint(eager=True)
     postings = store.read_for_keys(BM25_POSTINGS, qt, "term").join(
         F.broadcast(qt.select("term").distinct()), "term", "leftsemi"
     )
     dl = store.read(BM25_DOC_LEN)
-    if exclude is not None:
-        ex = F.broadcast(exclude.select("doc_id"))
-        postings = postings.join(ex, "doc_id", "left_anti")
-        dl = dl.join(ex, "doc_id", "left_anti")
     index = InvertedIndex(
         postings=postings,
         doc_stats=dl,

@@ -337,7 +337,7 @@ class JobcanPipeline:
             return
         if state.phase < Phase.FORM_OUTLINE:
             state.enter_phase(Phase.FORM_OUTLINE)
-        # raw pages are archived in CHUNKS (one bronze append + one keyed
+        # raw pages are archived in chunks (one bronze append + one keyed
         # merge per ~50 forms) instead of one Spark job per form.  A form
         # is only marked DONE once its chunk's archive write has landed:
         # inside a chunk window the per-form checkpoint still persists

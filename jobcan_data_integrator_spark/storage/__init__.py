@@ -1600,7 +1600,7 @@ class TableStore:
         Brackets nest: an inner bracket joins the outer one (the
         manifest keeps the outer ``batch_id``), so composed operators
         that each bracket their own writes — ``extend_index``,
-        ``extend_lm_index``, ... inside ``ingest_increment`` — publish
+        ``extend_span_index``, ... inside ``ingest_increment`` — publish
         exactly once, and an exception leaving an inner bracket aborts
         the whole batch."""
         self.begin_commit(batch_id)

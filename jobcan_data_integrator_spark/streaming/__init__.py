@@ -579,7 +579,7 @@ def ingest_documents_stream(
     may deliver ids in any order: the orchestrator repairs a late id's
     effects on absorbed docs, as it does for every batch.
     ``ingest_kwargs`` pass through to ``ingest_increment`` (span,
-    minhash, pack_budget, ...).
+    min_tokens, minhash, ...).
     """
     from jobcan_data_integrator_spark.operators.ingest import (
         ingest_increment,
@@ -605,8 +605,8 @@ def retract_documents_stream(
     """Streaming face of the takedown path: each micro-batch of
     (doc_id) rows runs ``operators/ingest.retract_documents`` — the
     one-call deletion across the curated corpus and every doc-keyed
-    family, with the doc→vec cascade, receipt log, and per-id receipt,
-    one snapshot commit per micro-batch — under the retraction id
+    family, with the receipt log and per-id receipt, one snapshot
+    commit per micro-batch — under the retraction id
     ``stream-retract-<epoch_id>``.  The operational shape a production
     corpus needs: takedown requests arrive as a FEED (DSAR queues,
     copyright claims), not as one offline job.

@@ -458,79 +458,6 @@ def test_ooo_resurrection_after_demoter_retires(spark, tmp_path):
     )
 
 
-def test_repack_corpus_equals_one_shot_pack(spark, tmp_path):
-    """repack_corpus: the batch-scoped shard layout is replaced by the
-    one-shot global pack of the curated corpus — shards mix arrival
-    batches via the deterministic shuffled order, identical to running
-    chunk_documents + pack_shards over read_curated directly, and the
-    swap lands under one snapshot commit."""
-    from jobcan_data_integrator_spark.operators.ingest import (
-        CHUNKS,
-        SHARDS,
-        repack_corpus,
-    )
-    from jobcan_data_integrator_spark.operators.packing import (
-        chunk_documents,
-        pack_shards,
-    )
-
-    store = TableStore(
-        spark, tmp_path, write_partitions=2, snapshot_isolation=True
-    )
-    for i, rows in enumerate((BATCH1, BATCH2, BATCH3), 1):
-        ingest_increment(
-            store, _mk(spark, rows), f"b{i}",
-            span=SPAN, min_tokens=MIN_TOKENS, n_hashes=NH, band_size=BS,
-            cluster_threshold=THRESH, pack_budget=16, chunk_tokens=8,
-            chunk_overlap=2,
-        )
-    # before the repack the layout is batch-scoped: shard numbering
-    # restarts per batch (shard identity is (batch_id, shard_id)), so
-    # shard_id 0 exists once per arrival batch
-    n_batches_owning_0 = (
-        store.read(SHARDS)
-        .filter(F.col("shard_id") == 0)
-        .select("batch_id")
-        .distinct()
-        .count()
-    )
-    assert n_batches_owning_0 == 3
-
-    packed = repack_corpus(
-        store, budget=16, chunk_tokens=8, chunk_overlap=2, shuffle_salt="e0"
-    )
-    docs = read_curated(store).select("doc_id", "text")
-    want_chunks = chunk_documents(docs, max_tokens=8, overlap=2).withColumn(
-        "chunk_id",
-        (F.col("doc_id") * 1_048_576 + F.col("chunk_idx")).cast("bigint"),
-    )
-    want = pack_shards(
-        want_chunks.select("chunk_id", "n_tokens"),
-        budget=16, id_col="chunk_id", shuffle_salt="e0",
-    )
-    cols = ("chunk_id", "n_tokens", "cum_before", "shard_id")
-    assert _rows(packed, *cols) == _rows(want, *cols)
-    assert _rows(store.read(SHARDS), *cols) == _rows(want, *cols)
-    assert _rows(store.read(CHUNKS), "chunk_id") == _rows(
-        want_chunks, "chunk_id"
-    )
-    # the repacked layout now mixes batches within shards (global order)
-    tagged = store.read(CHUNKS).select("chunk_id").join(
-        store.read(SHARDS).select("chunk_id", "shard_id"), "chunk_id"
-    ).withColumn("src", F.expr("chunk_id div 1048576"))
-    n_multi = (
-        tagged.withColumn(
-            "b", F.when(F.col("src") >= 30, 3).when(F.col("src") >= 20, 2)
-            .otherwise(1)
-        )
-        .groupBy("shard_id")
-        .agg(F.countDistinct("b").alias("nb"))
-        .filter(F.col("nb") > 1)
-        .count()
-    )
-    assert n_multi >= 1
-
-
 def test_compact_minhash_drops_preserves_reads(spark, tmp_path):
     """compact_minhash_drops folds the merge-on-read retraction masks
     into the base tables: read_pairs and a dedup probe are identical

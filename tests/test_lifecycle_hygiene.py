@@ -12,8 +12,9 @@
 - ingest has one mode: every store it writes is retractable, and a
   store in a removed layout — the monotone-only mode's (``cur_docs``
   without ``cur_pre``), the persisted SimHash family's
-  (``sh_signatures``) or the embedding families' (``doc_vecs``,
-  ``emb_retractions``) — is refused.
+  (``sh_signatures``), the embedding families' (``doc_vecs``,
+  ``emb_retractions``), the BM25 family's (``bm_doc_len``) or per-batch
+  packing's (``cur_chunks``) — is refused.
 """
 
 from __future__ import annotations
@@ -170,8 +171,22 @@ def test_in_order_store_is_retractable(spark, tmp_path):
             "embedding families' vector retraction",
             "auto_refresh_codebooks",
         ),
+        (
+            "bm_doc_len",
+            "doc_id long, dl long",
+            (21, 12),
+            "BM25 family's lifecycle maintenance",
+            "bm25",
+        ),
+        (
+            "cur_chunks",
+            "chunk_id long, doc_id long, n_tokens long, batch_id string",
+            (21 * 1_048_576, 21, 8, "b1"),
+            "per-batch packing",
+            "pack_budget",
+        ),
     ],
-    ids=["sh_signatures", "doc_vecs", "emb_retractions"],
+    ids=["sh_signatures", "doc_vecs", "emb_retractions", "bm_doc_len", "cur_chunks"],
 )
 def test_removed_layout_is_refused(
     spark, tmp_path, table, schema, row, feature, removed_kw

@@ -119,11 +119,7 @@ _PAIR_KNOBS = ("n_hashes", "band_size", "cluster_threshold")
 TEST_ONLY_OPTIONS = {
     "ingest_increment": (
         *_PAIR_KNOBS,
-        "chunk_tokens",
-        "chunk_overlap",
-        "pack_budget",
         "auto_compact_bytes",
-        "bm25",
     ),
     "probe_duplicates": _PAIR_KNOBS,
     "retract_documents": _PAIR_KNOBS,
@@ -225,23 +221,13 @@ TEST_ONLY_FUNCTIONS = {
     "operators.dedup": ("connected_components_twophase", "keep_best_per_cluster"),
     "operators.entities": ("retrieve_users",),
     "operators.incremental": (
-        "build_lm_index",
         "extend_ivf_index",
-        "extend_lm_index",
         "ivfpq_search_indexed",
         "line_index_buckets",
-        "lm_from_store",
-        "lm_index_buckets",
-        "perplexity_increment",
         "pq_index_buckets",
         "pq_search_indexed",
     ),
-    "operators.ingest": (
-        "bm25_search_curated",
-        "diff_curated",
-        "doc_history",
-        "repack_corpus",
-    ),
+    "operators.ingest": ("diff_curated", "doc_history"),
     "operators.multimodal": ("extract_av_metadata", "sample_audio_segments"),
     "operators.packing": ("temperature_weights", "write_shards"),
     "operators.pq": ("ann_topk_ivfpq", "pq_search"),
