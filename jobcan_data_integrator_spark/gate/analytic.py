@@ -630,7 +630,7 @@ def n_repeat_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Window / sessionization / streaming-shaped (SURVEY §2.6, §2.9)
+# Window / sessionization (SURVEY §2.6, §2.9)
 # ---------------------------------------------------------------------------
 
 
@@ -680,8 +680,8 @@ def w_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
     FROM events GROUP BY date_trunc('hour', ts), event_type
     """,
-    doc="§2.9 / Structured Streaming shape: tumbling 1-hour windowed "
-    "aggregation (batch-checked; streaming mode shares the same plan).",
+    doc="§2.9: tumbling 1-hour windowed aggregation — the event-time "
+    "window the reference's late-data catch-up maps onto, run as a batch.",
 )
 def w_tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")

@@ -1,8 +1,8 @@
 """Incremental (new-vs-corpus) deduplication and ANN indexing over
-persisted index tables — seven families: exact-dedup hashes, MinHash
-bands, IVF cell assignments, SemDeDup pairs, ExactSubstr span hashes,
-boilerplate line-stats (line cleaning at ingest), and PQ codes
-(compressed ANN serving).
+persisted index tables — three incremental families (exact-dedup
+hashes, MinHash bands with cluster labels, ExactSubstr span hashes) and
+two built ANN families (IVF cell assignments and PQ codes, retrained
+together by ``refresh_embedding_codebooks``).
 
 A 100 TB training pipeline cannot re-dedup the whole corpus for every
 ingest batch — the full-corpus LSH pipeline (gate/llm.py
@@ -289,8 +289,8 @@ def dedup_increment(
     action).  Results are identical to the unbucketed path.
 
     REPLAY-SAFE: a crash between ``extend_index`` and the caller's own
-    checkpoint (e.g. a streaming micro-batch commit) re-delivers a batch
-    the index already absorbed.  The increment is therefore made
+    checkpoint (e.g. ``ingest_increment``'s batch ledger commit)
+    re-delivers a batch the index already absorbed.  The increment is therefore made
     AUTHORITATIVE for its own docs — corpus-side shingle/size rows for
     increment doc ids are anti-joined away — so the unioned frames never
     hold a doc twice (double-counted shingles would produce jaccard
@@ -301,7 +301,7 @@ def dedup_increment(
 
     Intermediates are ``localCheckpoint``ed rather than ``cache``d: the
     checkpoint RDDs are released by GC when the result frame dies,
-    where forgotten cache entries would accumulate across micro-batches
+    where forgotten cache entries would accumulate across batches
     in a long-lived session.
     """
     new_hashed = new_hashed_shingles.localCheckpoint(eager=True)
@@ -911,13 +911,6 @@ def _cluster_label_delta(
 # ---------------------------------------------------------------------------
 
 
-#: exact-dedup index tables: the per-doc hash map is PRIMARY (keyed by
-#: doc_id, so replays are idempotent); the group table is derived from
-#: it for affected hashes only.  An additive groups-only design would
-#: double-count dup_count when a crashed batch replays.
-EXACT_TABLES = ("ex_docs", "ex_groups")
-
-
 def _doc_hashes(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id", F.md5(F.col("text").cast("binary")).alias("text_md5")
@@ -981,11 +974,8 @@ def extend_exact_index(
 
 
 # ---------------------------------------------------------------------------
-# IVF cell-assignment index (incremental ANN indexing)
+# IVF cell-assignment index (ANN indexing)
 # ---------------------------------------------------------------------------
-
-#: IVF index tables: trained codebook + per-vector cell assignments.
-IVF_TABLES = ("ivf_codebook", "ivf_assignments")
 
 
 def build_ivf_index(
@@ -993,8 +983,8 @@ def build_ivf_index(
 ) -> None:
     """Train the k-means codebook on the initial corpus and persist it
     with the corpus's cell assignments.  The codebook is FROZEN at build
-    time — increments are assigned under it (the standard IVF stance:
-    retrain offline when drift accumulates, never per batch)."""
+    time (the standard IVF stance: retrain offline with
+    ``refresh_embedding_codebooks``, never per batch)."""
     from jobcan_data_integrator_spark.operators.similarity import (
         assign_cells,
         quantized_expr,
@@ -1005,11 +995,9 @@ def build_ivf_index(
     # NOT the trainer's returned assignment: Lloyd's last half-step
     # assigns under the PRE-update codebook (that is what the new
     # centroids are computed from).  The index serves the FINAL codebook,
-    # so assignments are recomputed under it — the same per-row map an
-    # increment gets, which is exactly what makes stored ∪ increment
-    # equal a one-pass assignment of everything.  The embedding rides
-    # along so the semantic family's within-cell pairs and the codebook
-    # refresh read vectors directly from the assignment table.
+    # so assignments are recomputed under it — the same per-row map the
+    # codebook refresh applies.  The embedding rides along so the
+    # refresh reads vectors directly from the assignment table.
     assign = assign_cells(
         emb.select(
             "vec_id", "embedding", quantized_expr("embedding").alias("q")
@@ -1023,148 +1011,8 @@ def build_ivf_index(
         store.overwrite("ivf_assignments", assign)
 
 
-def assign_increment(store: TableStore, new_emb: DataFrame) -> DataFrame:
-    """(vec_id, embedding, cell_id) for new vectors under the persisted
-    codebook — a pure broadcast-codebook map (zero shuffle, the
-    assign_cells shape), so indexing an increment costs one narrow pass
-    over the increment."""
-    from jobcan_data_integrator_spark.operators.similarity import (
-        assign_cells,
-        quantized_expr,
-    )
-
-    vq = new_emb.select(
-        "vec_id", "embedding", quantized_expr("embedding").alias("q")
-    )
-    return assign_cells(vq, store.read("ivf_codebook"), keep=("embedding",))
-
-
-def extend_ivf_index(store: TableStore, new_assignments: DataFrame) -> None:
-    """Absorb an assigned increment into the assignment table."""
-    with store.commit_bracket("ivf-index-extend"):
-        store.merge_insert_missing("ivf_assignments", new_assignments, ["vec_id"])
-
-
 # ---------------------------------------------------------------------------
-# Semantic-dedup pair index (SemDeDup over the IVF assignments, the 4th
-# incremental family — closes the loop: IVF cells -> within-cell cosine
-# pairs -> cluster-label maintenance via extend_clusters)
-# ---------------------------------------------------------------------------
-
-#: semantic index tables: the IVF tables carry the geometry; sd_pairs
-#: accumulates the within-cell near-dup pairs.
-SEMANTIC_TABLES = ("ivf_codebook", "ivf_assignments", "sd_pairs")
-
-
-def _cell_pairs(a: DataFrame, b: DataFrame | None, threshold: float) -> DataFrame:
-    """(vec_a, vec_b, cosine_sim) for vectors sharing a cell.  One frame:
-    within-set (vec_a < vec_b).  Two frames: cross pairs normalized to
-    (least, greatest) — the split composition matches the full corpus's
-    pair set exactly because cell assignment is per-row deterministic."""
-    from jobcan_data_integrator_spark.operators.similarity import (
-        cosine_from_parts,
-        norm_sq_expr,
-    )
-
-    # squared norms computed below the join (once per input row, not
-    # once per candidate pair); cosine_from_parts is bit-identical to
-    # cosine_expr, so persisted sd_pairs values are unchanged
-    sided_a = a.withColumn("_nsq", norm_sq_expr("embedding"))
-    fa = sided_a.alias("a")
-    cos = cosine_from_parts(
-        "a.embedding", "b.embedding", "a._nsq", "b._nsq"
-    ).alias("cosine_sim")
-    if b is None:
-        fb = sided_a.alias("b")
-        cond = (F.col("a.cell_id") == F.col("b.cell_id")) & (
-            F.col("a.vec_id") < F.col("b.vec_id")
-        )
-        sel = [
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            cos,
-        ]
-    else:
-        fb = b.withColumn("_nsq", norm_sq_expr("embedding")).alias("b")
-        cond = (F.col("a.cell_id") == F.col("b.cell_id")) & (
-            F.col("a.vec_id") != F.col("b.vec_id")
-        )
-        sel = [
-            F.least(F.col("a.vec_id"), F.col("b.vec_id")).alias("vec_a"),
-            F.greatest(F.col("a.vec_id"), F.col("b.vec_id")).alias("vec_b"),
-            cos,
-        ]
-    return (
-        fa.join(fb, cond)
-        .select(*sel)
-        .filter(F.col("cosine_sim") >= threshold)
-        .distinct()
-    )
-
-
-def build_semantic_index(
-    store: TableStore,
-    emb: DataFrame,
-    n_cells: int = 16,
-    iters: int = 2,
-    threshold: float = 0.95,
-) -> None:
-    """SemDeDup as a PERSISTED index: train the frozen codebook, assign
-    the corpus, and store the corpus-internal within-cell near-dup pairs
-    — `semantic_increment` then processes each ingest batch against it
-    instead of re-running `semantic_dedup` corpus-wide."""
-    build_ivf_index(store, emb, n_cells=n_cells, iters=iters)
-    assign = store.read("ivf_assignments")
-    with store.commit_bracket("sd-index-build"):
-        store.overwrite("sd_pairs", _cell_pairs(assign, None, threshold))
-
-
-def semantic_increment(
-    store: TableStore, new_emb: DataFrame, threshold: float = 0.95
-) -> DataFrame:
-    """Within-cell near-dup pairs INVOLVING the increment (new-vs-corpus
-    ∪ new-vs-new) under the stored frozen codebook — union with
-    ``sd_pairs`` to reproduce the full corpus's pair set.
-
-    The corpus side is one cell_id equi-join against the persisted
-    assignment table — partition-pruned to the increment's cells when
-    the store declares ``partitioned={"ivf_assignments": ["cell_id"]}``
-    — so per-batch cost is bounded by the increment's cells' populations,
-    not the corpus.  REPLAY-SAFE like its siblings (corpus copies of
-    increment ids are anti-joined away).  Feed the result to
-    ``extend_semantic_index`` and then ``extend_clusters`` to maintain
-    keep/drop labels without a corpus re-cluster.
-    """
-    inc = assign_increment(store, new_emb).localCheckpoint(eager=True)
-    corpus = store.read("ivf_assignments")
-    if "ivf_assignments" in store.partitioned:
-        cells = [r[0] for r in inc.select("cell_id").distinct().collect()]
-        corpus = corpus.filter(F.col("cell_id").isin(cells))
-    corpus = corpus.join(
-        F.broadcast(inc.select("vec_id")), "vec_id", "left_anti"
-    )
-    return _cell_pairs(inc, corpus, threshold).unionByName(
-        _cell_pairs(inc, None, threshold)
-    ).distinct()
-
-
-def extend_semantic_index(
-    store: TableStore, new_emb: DataFrame, new_pairs: DataFrame
-) -> None:
-    """Absorb a processed increment: insert its assignments (computed
-    under the stored codebook), upsert its pairs.
-
-    ``new_pairs`` must already be pinned (``localCheckpoint`` or
-    collected): ``semantic_increment``'s result lazily scans
-    ``ivf_assignments``, which this call rewrites."""
-    inc = assign_increment(store, new_emb)
-    with store.commit_bracket("sd-index-extend"):
-        store.merge_insert_missing("ivf_assignments", inc, ["vec_id"])
-        store.merge_upsert("sd_pairs", new_pairs, ["vec_a", "vec_b"])
-
-
-# ---------------------------------------------------------------------------
-# Span-hash index (incremental ExactSubstr dedup — the 5th family)
+# Span-hash index (incremental ExactSubstr dedup)
 # ---------------------------------------------------------------------------
 
 #: span-dedup index tables: the occurrence table is the canonical
@@ -1316,153 +1164,12 @@ def extend_span_index(
 
 
 # ---------------------------------------------------------------------------
-# Boilerplate line-stats index (incremental line-level cleaning — the
-# 6th family): persist per-line-hash document frequencies so each
-# ingest batch cleans ITSELF against the accumulated corpus stats and
-# then adds its own counts, without ever rescanning stored text.
+# PQ code index (compressed ANN serving): persist the trained
+# product-quantization codebook and every vector's codes so ADC search
+# runs against ~8-byte rows.  The codebook is FROZEN (re-training would
+# silently invalidate every stored code), so it is only retrained
+# together with the codes, by ``refresh_embedding_codebooks``.
 # ---------------------------------------------------------------------------
-
-LINE_TABLES = ("bl_stats", "bl_batches")
-
-
-def line_index_buckets(n: int = 64) -> dict[str, tuple[str, int]]:
-    """Bucket the stats by line hash so an increment's probe scans only
-    the bucket dirs its own lines hash into."""
-    return {"bl_stats": ("line_hash", n)}
-
-
-def build_line_index(
-    store: TableStore,
-    docs: DataFrame,
-    min_line_chars: int | None = None,
-    batch_id: str = "bl-index-build",
-) -> None:
-    """Persist (line_hash, df) for an initial corpus of (doc_id, text)
-    — one map-side-combined aggregation (operators/lines.py).
-
-    ``batch_id`` is recorded in ``bl_batches`` so a caller replaying the
-    SAME initial batch (e.g. the first micro-batch of a stream) can
-    detect the build already absorbed it."""
-    from jobcan_data_integrator_spark.operators import lines as L
-
-    mc = L.DEFAULT_MIN_LINE_CHARS if min_line_chars is None else min_line_chars
-    with store.commit_bracket(batch_id):
-        store.overwrite(
-            "bl_stats", L.boilerplate_line_stats(docs, min_line_chars=mc)
-        )
-        store.overwrite(
-            "bl_batches",
-            docs.sparkSession.range(1).select(F.lit(batch_id).alias("batch_id")),
-        )
-
-
-def clean_increment(
-    store: TableStore,
-    new_docs: DataFrame,
-    max_doc_freq: int | None = None,
-    min_line_chars: int | None = None,
-    include_increment: bool = True,
-) -> DataFrame:
-    """Remove boilerplate lines from an increment using the PERSISTED
-    corpus stats (+ the increment's own contribution when
-    ``include_increment``): identical output to running
-    remove_boilerplate_lines over (stored corpus ∪ increment) restricted
-    to the increment's docs — pinned in tests/test_incremental_lines.py.
-
-    Only hashes PRESENT in the increment can remove any of its lines,
-    so the stored side contributes through one bucket-pruned
-    ``read_for_keys`` on the increment's line hashes — probe cost is
-    linear in the increment at any stored-corpus size, and the corpus
-    text itself is never touched (the stats table is the whole
-    interface)."""
-    from jobcan_data_integrator_spark.operators import lines as L
-
-    mdf = L.DEFAULT_MAX_DOC_FREQ if max_doc_freq is None else max_doc_freq
-    mc = L.DEFAULT_MIN_LINE_CHARS if min_line_chars is None else min_line_chars
-    inc = L.boilerplate_line_stats(new_docs, min_line_chars=mc).localCheckpoint(
-        eager=True
-    )
-    stored = store.read_for_keys(
-        "bl_stats", inc.select("line_hash"), "line_hash"
-    ).join(F.broadcast(inc.select("line_hash").distinct()), "line_hash", "leftsemi")
-    both = stored.unionByName(inc) if include_increment else stored
-    merged = both.groupBy("line_hash").agg(
-        F.sum("df").cast("bigint").alias("df")
-    )
-    return L.remove_boilerplate_lines(
-        new_docs,
-        max_doc_freq=mdf,
-        min_line_chars=mc,
-        stats=merged,
-    )
-
-
-def extend_line_index(
-    store: TableStore,
-    new_docs: DataFrame,
-    batch_id: str,
-    min_line_chars: int | None = None,
-) -> None:
-    """Absorb an increment's line counts: key-SUM merge of the affected
-    hashes only (document frequencies are corpus-additive).  Additive
-    merges are not idempotent, so the merge is made exactly-once: it
-    requires a snapshot-isolation store (a crash publishes nothing) and
-    ``bl_batches`` makes a redelivered batch a no-op."""
-    from jobcan_data_integrator_spark.operators import lines as L
-
-    if not store.snapshot_isolation:
-        raise ValueError(
-            "extend_line_index needs a snapshot-isolation TableStore: "
-            "additive count merges only replay safely when the whole "
-            "batch publishes atomically"
-        )
-    if (
-        store.exists("bl_batches")
-        and store.read("bl_batches")
-        .filter(F.col("batch_id") == batch_id)
-        .limit(1)
-        .count()
-        > 0
-    ):
-        return  # already absorbed — redelivery, not a new increment
-    mc = L.DEFAULT_MIN_LINE_CHARS if min_line_chars is None else min_line_chars
-    inc = L.boilerplate_line_stats(new_docs, min_line_chars=mc).localCheckpoint(
-        eager=True
-    )
-    stored = store.read_for_keys(
-        "bl_stats", inc.select("line_hash"), "line_hash"
-    ).join(F.broadcast(inc.select("line_hash").distinct()), "line_hash", "leftsemi")
-    merged = (
-        stored.unionByName(inc)
-        .groupBy("line_hash")
-        .agg(F.sum("df").cast("bigint").alias("df"))
-        .localCheckpoint(eager=True)
-    )
-    with store.commit_bracket(batch_id):
-        store.merge_upsert("bl_stats", merged, ["line_hash"])
-        store.merge_insert_missing(
-            "bl_batches",
-            new_docs.sparkSession.range(1).select(F.lit(batch_id).alias("batch_id")),
-            ["batch_id"],
-        )
-
-
-# ---------------------------------------------------------------------------
-# PQ code index (compressed ANN serving — the 7th family): persist the
-# trained product-quantization codebook and every vector's codes so ADC
-# search runs against ~8-byte rows, and each ingest batch encodes
-# itself against the FROZEN codebook (the standard PQ stance: the
-# codebook trains once on a representative sample; re-training would
-# silently invalidate every stored code).
-# ---------------------------------------------------------------------------
-
-PQ_TABLES = ("pq_codebooks", "pq_codes")
-
-
-def pq_index_buckets(n: int = 64) -> dict[str, tuple[str, int]]:
-    """Bucket the codes by vec_id (point lookups / joins prune); the
-    codebook is m*k rows — below any useful bucketing."""
-    return {"pq_codes": ("vec_id", n)}
 
 
 def build_pq_index(
@@ -1478,25 +1185,6 @@ def build_pq_index(
         store.overwrite("pq_codes", pq_encode(emb, cb, m=m))
 
 
-def encode_pq_increment(store: TableStore, new_emb: DataFrame) -> DataFrame:
-    """(vec_id, codes) for an increment against the STORED frozen
-    codebook — a pure map over the increment (the corpus is never
-    touched; the codebook is the whole interface)."""
-    from jobcan_data_integrator_spark.operators.pq import pq_encode
-
-    cb = store.read("pq_codebooks")
-    m = cb.select(F.max("sub")).first()[0] + 1
-    return pq_encode(new_emb, cb, m=m)
-
-
-def extend_pq_index(store: TableStore, new_codes: DataFrame) -> None:
-    """Absorb an increment's codes — keyed by vec_id, so replays insert
-    nothing (plain idempotent-merge contract, no batch ledger needed)."""
-    new_codes = new_codes.localCheckpoint(eager=True)
-    with store.commit_bracket("pq-index-extend"):
-        store.merge_insert_missing("pq_codes", new_codes, ["vec_id"])
-
-
 def refresh_embedding_codebooks(
     store: TableStore,
     *,
@@ -1510,10 +1198,9 @@ def refresh_embedding_codebooks(
     and the PQ sub-codebooks — on the store's CURRENT live vectors and
     rebuild their per-vector tables under the new codebooks, atomically.
 
-    The standard IVF/PQ stance freezes codebooks at build time and
-    assigns increments under them (``assign_increment`` /
-    ``encode_pq_increment``); as the corpus drifts away from the
-    training distribution, cell balance and ADC quality decay.  This is
+    The standard IVF/PQ stance freezes codebooks at build time; as the
+    corpus drifts away from the training distribution, cell balance and
+    ADC quality decay.  This is
     the amortized offline maintenance call that closes that loop — the
     codebook sibling of ``compact_store``: run it on a drift signal or
     a cron, NOT per batch.  Cost is corpus-sized BY DESIGN (one
@@ -1521,8 +1208,8 @@ def refresh_embedding_codebooks(
     every serving path picks up the new codebooks atomically at the
     single snapshot publish.
 
-    Equivalence contract (tests/test_codebook_refresh.py): after any
-    sequence of builds and extends, the refreshed
+    Equivalence contract (tests/test_codebook_refresh.py): after a
+    build at any geometry, the refreshed
     ``ivf_codebook``/``ivf_assignments``/``pq_codebooks``/``pq_codes``
     equal a from-scratch ``build_ivf_index``/``build_pq_index`` over
     the stored vectors — exactly, because the integer k-means is
@@ -1590,39 +1277,3 @@ def refresh_embedding_codebooks(
             summary["pq_m"], summary["pq_k"] = m, k
     return summary
 
-
-def pq_search_indexed(
-    store: TableStore, queries: DataFrame, k: int = 5
-) -> DataFrame:
-    """ADC top-k served entirely from the persisted index — codes +
-    codebook, never the embeddings (operators/pq.pq_search)."""
-    from jobcan_data_integrator_spark.operators.pq import pq_search
-
-    return pq_search(
-        store.read("pq_codes"),
-        store.read("pq_codebooks"),
-        queries,
-        k=k,
-    )
-
-
-def ivfpq_search_indexed(
-    store: TableStore, queries: DataFrame, k: int = 5, n_probe: int = 2
-) -> DataFrame:
-    """IVFPQ served from TWO persisted families: the IVF coarse
-    quantizer's codebook + cell assignments (``ivf_codebook`` /
-    ``ivf_assignments``) prune candidates to the probed cells, and the PQ
-    family's codes + codebook ADC-score them — embeddings are read for
-    the QUERIES only.  On a store bucketed by vec_id the codes fetch
-    for candidates is additionally bucket-pruned."""
-    from jobcan_data_integrator_spark.operators.pq import ann_topk_ivfpq
-
-    return ann_topk_ivfpq(
-        store.read("pq_codes"),
-        store.read("ivf_assignments").select("vec_id", "cell_id"),
-        store.read("pq_codebooks"),
-        store.read("ivf_codebook"),
-        queries,
-        k=k,
-        n_probe=n_probe,
-    )

@@ -1046,8 +1046,7 @@ def ingest_increment(
       pair mass merge clusters exactly (keeper demotions tombstoned as
       usual); a repair that would WEAKEN a formerly-clustering pair
       retracts the pair row (``read_pairs``) but leaves the
-      conservative merged labels — the same as-of-ingest stance as the
-      boilerplate line stats.
+      conservative merged labels (an as-of-ingest stance).
 
     Removed layouts raise (``_require_repair_tables``): the
     monotone-only mode's and each ``_REMOVED_LAYOUTS`` table.  So does

@@ -576,11 +576,7 @@ def _cell_pairs(assign: DataFrame, threshold: float) -> DataFrame:
     """(vec_a, vec_b, cosine_sim): within-cell cosine pairs at or above
     ``threshold`` over an assignment frame carrying (vec_id, cell_id,
     embedding) — the cell-scoped self-join both SemDeDup entry points
-    share.  Quadratic only WITHIN a cell; ``n_cells`` bounds cell size.
-    (operators/incremental.py carries its own ``_cell_pairs`` variant
-    that additionally scores increment-vs-corpus CROSS pairs and dedups
-    replay-duplicated rows — this one stays shuffle-minimal for the
-    one-shot path.)"""
+    share.  Quadratic only WITHIN a cell; ``n_cells`` bounds cell size."""
     sided = assign.withColumn("_nsq", norm_sq_expr("embedding"))
     a = sided.alias("a")
     b = sided.alias("b")

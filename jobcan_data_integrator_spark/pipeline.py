@@ -133,21 +133,6 @@ REQUEST_WRITES: dict[str, tuple[str, list[str]]] = {
 }
 
 
-def write_table(
-    store: TableStore, table: str, df, strategy: dict[str, tuple[str, list[str]]]
-) -> None:
-    """Write one table with its ``strategy`` idiom (the ``"*"`` entry for
-    a table the strategy does not name) — the one write dispatch of the
-    pipeline and the streaming merge."""
-    kind, keys = strategy.get(table) or strategy["*"]
-    if kind == "upsert":
-        store.merge_upsert(table, df, keys)
-    elif kind == "insert_missing":
-        store.merge_insert_missing(table, df, keys)
-    else:
-        store.sync_children(table, df, keys)
-
-
 def utc_now_str() -> str:
     """Watermark stamp in the reference's format (gateway.py:418)."""
     return datetime.now(timezone.utc).strftime("%Y/%m/%d %H:%M:%S")
@@ -229,7 +214,7 @@ class JobcanPipeline:
         """Bronze layer, both reference shapes:
 
         - S5 (file archive): append raw pages as JSON lines — the
-          streaming-tail + bulk-replay source.  A 100 TB backfill replays
+          bulk-replay source.  A 100 TB backfill replays
           this directory through the same shred path with zero API calls
           (reference design note, SURVEY.md §4.1).
         - S6 (keyed DB archive): merge per-record rows into the
@@ -246,7 +231,15 @@ class JobcanPipeline:
         archive_responses(self.spark, self.store, api, pages)
 
     def _write(self, table: str, df, strategy: dict[str, tuple[str, list[str]]]) -> None:
-        write_table(self.store, table, df, strategy)
+        """Write one table with its ``strategy`` idiom (the ``"*"`` entry
+        for a table the strategy does not name)."""
+        kind, keys = strategy.get(table) or strategy["*"]
+        if kind == "upsert":
+            self.store.merge_upsert(table, df, keys)
+        elif kind == "insert_missing":
+            self.store.merge_insert_missing(table, df, keys)
+        else:
+            self.store.sync_children(table, df, keys)
 
     def _write_tables(
         self, tables: dict[str, Any], strategy: dict[str, tuple[str, list[str]]]

@@ -4,7 +4,7 @@
 ``api_client.py:336-383`` for the per-api keying).
 
 This complements the append-only JSON-lines archive (S5,
-``pipeline._archive`` — the streaming-tail + bulk-replay source): the
+``pipeline._archive`` — the bulk-replay source): the
 keyed table is the DEDUPED archive, so re-fetching the same page
 replaces the stored row instead of appending a duplicate, and a replay
 reads exactly one copy of every response.

@@ -71,8 +71,8 @@ RANGE_COL = "_prange"
 
 #: absolute table paths with an ``overwrite`` swap in flight in THIS
 #: process — _recover must neither restore nor clean such a table while
-#: another thread (e.g. a streaming foreachBatch merge sharing the store
-#: root with the batch pipeline) is mid-swap, or it can delete the
+#: another thread (e.g. an ``ingest_increment`` on a second handle sharing
+#: the store root with a pipeline run) is mid-swap, or it can delete the
 #: in-flight tmp write / rename the superseded .old back mid-rename.
 _INFLIGHT_LOCK = threading.Lock()
 _INFLIGHT: set[str] = set()
@@ -89,8 +89,8 @@ _STALE_TMP_SECONDS = 3600.0
 #: currently between ``begin_commit`` and ``end_commit``.  A WeakSet, so
 #: a crashed/abandoned instance drops out when collected and a
 #: same-process replay through a fresh handle re-enters freely — while
-#: TWO LIVE instances composing on one root (streaming merge + batch
-#: pipeline) refcount the lease instead of the second's end_commit
+#: TWO LIVE instances composing on one root (two threads' batch jobs,
+#: e.g. a pipeline run and an ingest) refcount the lease instead of the second's end_commit
 #: unlinking it under the first (ADVICE r7).
 _LEASE_LOCK = threading.Lock()
 _LEASE_HOLDERS: dict[str, "weakref.WeakSet"] = {}
@@ -472,9 +472,9 @@ class TableStore:
 
         Concurrency: a table with a swap in flight in this process is
         skipped entirely (see _INFLIGHT), and tmp dirs created by OTHER
-        processes are only reclaimed after _STALE_TMP_SECONDS — so a
-        streaming merge and a batch pipeline sharing one store root
-        cannot delete each other's in-flight writes.
+        processes are only reclaimed after _STALE_TMP_SECONDS — so two
+        batch jobs sharing one store root cannot delete each other's
+        in-flight writes.
         """
         target = self.path(table)
         with _INFLIGHT_LOCK:
@@ -1282,8 +1282,8 @@ class TableStore:
         Protocol: atomic O_EXCL create of ``_writer.lease`` holding
         (pid, timestamp, epoch).  The lease is PROCESS-scoped: the same
         process re-enters freely — a crashed batch's same-process
-        replay, and the supported in-process composition of a streaming
-        merge with a batch pipeline on one store root (see ``_recover``),
+        replay, and the supported in-process composition of two batch
+        jobs on one store root (see ``_recover``),
         both keep working (re-entry adopts the standing epoch).  On a
         foreign holder: a dead pid (same host) or a lease older than
         ``LEASE_TTL_SECONDS`` (the cross-host backstop — pids are
@@ -2021,7 +2021,7 @@ class TableStore:
 
         The dynamic mode is a per-write option, never the session-wide
         ``spark.sql.sources.partitionOverwriteMode``: concurrent writers
-        (a phase's overlapping table merges, a streaming merge sharing
+        (a phase's overlapping table merges, a second batch job sharing
         the root) would race on the session conf, and a write that saw
         it restored to ``static`` mid-flight drops every partition it
         does not carry.

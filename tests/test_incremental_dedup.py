@@ -143,11 +143,9 @@ def test_crash_mid_build_is_detected(spark, sf_dir, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_ivf_increment_assignment_matches_full(spark, sf_dir, tmp_path):
+def test_ivf_build_assigns_under_stored_codebook(spark, sf_dir, tmp_path):
     from jobcan_data_integrator_spark.operators.incremental import (
-        assign_increment,
         build_ivf_index,
-        extend_ivf_index,
     )
     from jobcan_data_integrator_spark.operators.similarity import (
         assign_cells,
@@ -156,17 +154,13 @@ def test_ivf_increment_assignment_matches_full(spark, sf_dir, tmp_path):
     from jobcan_data_integrator_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").cache()
-    corpus = emb.filter(F.col("vec_id") % 2 == 0)
-    new = emb.filter(F.col("vec_id") % 2 == 1)
 
     store = TableStore(spark, tmp_path, write_partitions=2)
-    build_ivf_index(store, corpus)
-    inc = assign_increment(store, new)
-    extend_ivf_index(store, inc)
+    build_ivf_index(store, emb)
 
-    # invariant: assignment is per-row deterministic under a FROZEN
-    # codebook, so (stored corpus ∪ increment) == assigning ALL vectors
-    # under the stored codebook in one pass
+    # invariant: the stored assignments are made under the FINAL stored
+    # codebook (not the trainer's last half-step, which assigns under
+    # the pre-update centroids)
     cent = store.read("ivf_codebook")
     full = assign_cells(
         emb.select("vec_id", quantized_expr("embedding").alias("q")), cent
@@ -177,7 +171,7 @@ def test_ivf_increment_assignment_matches_full(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Embedding LSH-bucket index
+# Exact-dedup hash index
 # ---------------------------------------------------------------------------
 
 
@@ -283,7 +277,7 @@ def test_cluster_extend_bridges_two_existing_clusters(spark, tmp_path):
 
 
 def test_minhash_replay_of_absorbed_batch_converges(spark, sf_dir, tmp_path):
-    """A streaming crash between extend_index and the stream checkpoint
+    """A crash between extend_index and the caller's batch ledger commit
     re-delivers the batch.  The re-run must produce EXACTLY the first
     run's pairs (corpus-side rows for increment docs are anti-joined
     away), not doubled-shingle garbage with jaccard outside [0, 1]."""
@@ -303,90 +297,6 @@ def test_minhash_replay_of_absorbed_batch_converges(spark, sf_dir, tmp_path):
     extend_index(store, inc_sh, replay)
     full = _pairs_set(dd_lsh_verified_pairs(spark, sf_dir))
     assert _pairs_set(store.read("mh_pairs")) == full
-
-
-def test_semantic_split_equals_full_and_clusters_maintain(spark, sf_dir, tmp_path):
-    from jobcan_data_integrator_spark.operators.dedup import (
-        connected_components,
-    )
-    from jobcan_data_integrator_spark.operators.incremental import (
-        _cell_pairs,
-        build_cluster_index,
-        build_semantic_index,
-        extend_clusters,
-        extend_semantic_index,
-        semantic_increment,
-    )
-    from jobcan_data_integrator_spark.operators.similarity import (
-        assign_cells,
-        quantized_expr,
-    )
-    from jobcan_data_integrator_spark.session import load_table
-
-    thr = 0.2  # synthetic embeddings are near-orthogonal
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").cache()
-    corpus = emb.filter(F.col("vec_id") % 3 != 0)
-    inc_emb = emb.filter(F.col("vec_id") % 3 == 0)
-
-    store = TableStore(
-        spark, tmp_path, write_partitions=2,
-        partitioned={"ivf_assignments": ["cell_id"]},
-    )
-    build_semantic_index(store, corpus, n_cells=8, threshold=thr)
-    # materialize: the result is reused AFTER extend_semantic_index
-    # rewrites the assignment table it lazily scans (the documented
-    # extend-contract: callers checkpoint or collect first)
-    inc = semantic_increment(store, inc_emb, threshold=thr).localCheckpoint(
-        eager=True
-    )
-
-    # oracle: one-pass assignment of EVERYTHING under the stored frozen
-    # codebook, then within-cell pairs — must equal index ∪ increment
-    cent = store.read("ivf_codebook")
-    full_assign = assign_cells(
-        emb.select("vec_id", "embedding", quantized_expr("embedding").alias("q")),
-        cent,
-        keep=("embedding",),
-    )
-    full = {
-        (r.vec_a, r.vec_b, r.cosine_sim)
-        for r in _cell_pairs(full_assign, None, thr).collect()
-    }
-    assert full  # the threshold must actually produce pairs
-    got = {(r.vec_a, r.vec_b, r.cosine_sim) for r in inc.collect()} | {
-        (r.vec_a, r.vec_b, r.cosine_sim)
-        for r in store.read("sd_pairs").collect()
-    }
-    assert got == full
-
-    # absorb, then maintain cluster labels incrementally: corpus labels +
-    # increment pairs == re-clustering the full pair graph
-    corpus_pairs = store.read("sd_pairs").select(
-        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-    )
-    build_cluster_index(store, corpus_pairs)
-    extend_semantic_index(store, inc_emb, inc)
-    extend_clusters(
-        store, inc.select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
-    )
-    want_labels = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(
-            spark.createDataFrame(
-                [(a, b) for a, b, _ in full], "src long, dst long"
-            )
-        ).collect()
-    }
-    got_labels = {
-        (r.doc_id, r.cluster_id) for r in store.read("cc_labels").collect()
-    }
-    assert got_labels == want_labels
-
-    # replay of the absorbed batch converges (pairs identical, labels stable)
-    replay = semantic_increment(store, inc_emb, threshold=thr)
-    assert {(r.vec_a, r.vec_b, r.cosine_sim) for r in replay.collect()} == {
-        (r.vec_a, r.vec_b, r.cosine_sim) for r in inc.collect()
-    }
 
 
 def test_cluster_extend_bucketed_delta_equals_overwrite(spark, tmp_path):

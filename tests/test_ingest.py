@@ -303,61 +303,6 @@ def test_remove_flagged_spans_matches_batch_operator(spark):
     assert got == want
 
 
-def test_streaming_ingest_equals_one_shot(spark, tmp_path):
-    """ingest_documents_stream: the orchestrator per micro-batch. Two
-    file-batch drains (monotone ids) leave read_curated == the one-shot
-    curation of the union — the streaming face of the ≡ contract."""
-    import json as _json
-
-    from jobcan_data_integrator_spark import streaming as S
-
-    store = TableStore(
-        spark, tmp_path / "store", write_partitions=2, snapshot_isolation=True
-    )
-    src = tmp_path / "docs"
-    src.mkdir()
-
-    def _drain():
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .json(str(src))
-        )
-        q = S.ingest_documents_stream(
-            stream,
-            store,
-            str(tmp_path / "ckpt"),
-            span=SPAN,
-            min_tokens=MIN_TOKENS,
-            n_hashes=NH,
-            band_size=BS,
-            cluster_threshold=THRESH,
-        ).start()
-        q.awaitTermination()
-
-    (src / "b1.json").write_text(
-        "\n".join(_json.dumps({"doc_id": d, "text": t}) for d, t in BATCH1)
-    )
-    _drain()
-    (src / "b2.json").write_text(
-        "\n".join(
-            _json.dumps({"doc_id": d, "text": t}) for d, t in BATCH2 + BATCH3
-        )
-    )
-    _drain()
-
-    want = _rows(
-        curate_corpus(
-            _mk(spark, ALL),
-            span=SPAN,
-            min_tokens=MIN_TOKENS,
-            near_dup_pairs=_near_dup_cb,
-        ).kept,
-        "doc_id",
-        "text",
-    )
-    assert _rows(read_curated(store), "doc_id", "text") == want
-
-
 # -- late batches (ids below the absorbed high-water mark) -----------------
 
 
@@ -583,145 +528,56 @@ def test_ooo_random_corpora_and_orders_equal_one_shot(spark, tmp_path, seed):
     )
 
 
-def test_streaming_ooo_crash_restart_converges(spark, tmp_path, monkeypatch):
-    """Mid-stream crash + restart on the out-of-order streaming face:
-    the killed epoch published NOTHING (snapshot store), the restarted
-    query REDELIVERS it (offsets never committed), the orchestrator's
-    ledger keeps the replay single-apply, and the final state equals
-    the one-shot curation — no double-applied repairs, no lost late
-    batch."""
-    import json as _json
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from jobcan_data_integrator_spark import streaming as S
+def test_ooo_crash_mid_batch_then_replay_converges(spark, tmp_path, monkeypatch):
+    """A crash inside a LATE (lower-id) batch's repairs: the killed batch
+    publishes NOTHING (snapshot store), re-running it applies it once
+    (the ledger keeps the replay single-apply), and the final state
+    equals the one-shot curation — no double-applied repairs, no lost
+    late batch."""
     from jobcan_data_integrator_spark.operators import incremental as inc
 
-    store = TableStore(
-        spark, tmp_path / "store", write_partitions=2, snapshot_isolation=True
-    )
-    src = tmp_path / "docs"
-    src.mkdir()
-
-    def _drain():
-        stream = (
-            spark.readStream.schema("doc_id long, text string").json(str(src))
-        )
-        q = S.ingest_documents_stream(
-            stream,
+    def ingest(rows, batch_id):
+        return ingest_increment(
             store,
-            str(tmp_path / "ckpt"),
+            _mk(spark, rows),
+            batch_id,
             span=SPAN,
             min_tokens=MIN_TOKENS,
             n_hashes=NH,
             band_size=BS,
             cluster_threshold=THRESH,
-        ).start()
-        q.awaitTermination()
-
-    (src / "late.json").write_text(
-        "\n".join(
-            _json.dumps({"doc_id": d, "text": t}) for d, t in BATCH2 + BATCH3
         )
+
+    store = TableStore(
+        spark, tmp_path / "store", write_partitions=2, snapshot_isolation=True
     )
-    _drain()
+    ingest(BATCH2 + BATCH3, "late")
     after_first = _rows(read_curated(store), "doc_id", "text")
 
-    # the low-id originals arrive; the epoch CRASHES mid-ingest (inside
+    # the low-id originals arrive; the batch CRASHES mid-ingest (inside
     # the minhash extend, after several family writes)
     real = inc.extend_index
 
     def boom(*a, **k):
-        raise RuntimeError("injected stream crash")
+        raise RuntimeError("injected crash")
 
     monkeypatch.setattr(inc, "extend_index", boom)
-    (src / "early.json").write_text(
-        "\n".join(_json.dumps({"doc_id": d, "text": t}) for d, t in BATCH1)
-    )
-    with pytest.raises(StreamingQueryException, match="injected stream crash"):
-        _drain()
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ingest(BATCH1, "early")
     # nothing published; the interrupted batch is detectable
     assert _rows(read_curated(store), "doc_id", "text") == after_first
-    assert store.pending_commit() is not None
+    assert store.pending_commit()["batch_id"] == "early"
 
-    # restart: the same checkpoint redelivers the failed epoch once
+    # restart: the failed batch is delivered again and applied once
     monkeypatch.setattr(inc, "extend_index", real)
-    _drain()
-    want = _rows(
-        curate_corpus(
-            _mk(spark, ALL),
-            span=SPAN,
-            min_tokens=MIN_TOKENS,
-            near_dup_pairs=_near_dup_cb,
-        ).kept,
-        "doc_id",
-        "text",
-    )
-    assert _rows(read_curated(store), "doc_id", "text") == want
-    # each epoch absorbed exactly once — the ledger, not luck
+    assert not ingest(BATCH1, "early").replayed
+    _assert_equals_one_shot(spark, store)
+    # each batch absorbed exactly once — the ledger, not luck
     ledger = [r["batch_id"] for r in store.read("ig_batches").collect()]
-    assert sorted(ledger) == sorted(set(ledger))
-    # and a third drain with nothing new is a clean no-op
-    _drain()
-    assert _rows(read_curated(store), "doc_id", "text") == want
-
-
-def test_streaming_ingest_out_of_order_drains(spark, tmp_path):
-    """The streaming face takes late ids: the SECOND
-    drain delivers ids interleaved below the first drain's — the repair
-    path runs inside foreachBatch and the result still equals the
-    one-shot curation."""
-    import json as _json
-
-    from jobcan_data_integrator_spark import streaming as S
-
-    store = TableStore(
-        spark, tmp_path / "store", write_partitions=2, snapshot_isolation=True
-    )
-    src = tmp_path / "docs"
-    src.mkdir()
-
-    def _drain():
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .json(str(src))
-        )
-        q = S.ingest_documents_stream(
-            stream,
-            store,
-            str(tmp_path / "ckpt"),
-            span=SPAN,
-            min_tokens=MIN_TOKENS,
-            n_hashes=NH,
-            band_size=BS,
-            cluster_threshold=THRESH,
-        ).start()
-        q.awaitTermination()
-
-    # high ids first (exact dup 21, span-dup 31 ride along) ...
-    (src / "late.json").write_text(
-        "\n".join(
-            _json.dumps({"doc_id": d, "text": t}) for d, t in BATCH2 + BATCH3
-        )
-    )
-    _drain()
-    # ... then the low-id originals arrive and demote/repair them
-    (src / "early.json").write_text(
-        "\n".join(_json.dumps({"doc_id": d, "text": t}) for d, t in BATCH1)
-    )
-    _drain()
-
-    want = _rows(
-        curate_corpus(
-            _mk(spark, ALL),
-            span=SPAN,
-            min_tokens=MIN_TOKENS,
-            near_dup_pairs=_near_dup_cb,
-        ).kept,
-        "doc_id",
-        "text",
-    )
-    assert _rows(read_curated(store), "doc_id", "text") == want
+    assert sorted(ledger) == ["early", "late"]
+    # and a redelivery of the absorbed batch is a clean no-op
+    assert ingest(BATCH1, "early").replayed
+    _assert_equals_one_shot(spark, store)
 
 
 # Long-haul integration tier (r12): excluded from the DEFAULT pytest run

@@ -19,11 +19,15 @@ reached, by name, from those surfaces, a gate, a documented entry
 module's public API or a module-level statement.  The functions only
 tests reach today are listed in ``TEST_ONLY_FUNCTIONS``, which may only
 shrink too.
+
+And for constants: every package-level UPPER_CASE name must be read
+somewhere in the package or those surfaces, not only assigned.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -31,7 +35,6 @@ PKG = "jobcan_data_integrator_spark"
 
 #: README-documented modes whose only in-repo callers are their tests
 DOCUMENTED_ENTRY_MODULES = (
-    "streaming",
     "operators.reconstruct",
     "config",
     "sources.corpus",
@@ -47,6 +50,13 @@ def _module_name(path: Path) -> str:
 
 def _package_modules() -> dict[str, Path]:
     return {_module_name(p): p for p in (REPO / PKG).rglob("*.py")}
+
+
+def _scripts() -> list[Path]:
+    """The runnable surfaces outside the package: the gate suite, the
+    sf1 budgets and the benchmark workloads."""
+    roots = [REPO / "bench.py", REPO / "__spark_entry__.py", REPO / "scale_smoke.py"]
+    return roots + sorted((REPO / "perfbench").glob("*.py"))
 
 
 def _local_modules() -> dict[str, Path]:
@@ -83,9 +93,7 @@ def _imports(path: Path, name: str, modules: dict[str, Path]) -> set[str]:
 
 def _reached() -> set[str]:
     modules = _local_modules()
-    roots = [REPO / "bench.py", REPO / "__spark_entry__.py", REPO / "scale_smoke.py"]
-    roots += sorted((REPO / "perfbench").glob("*.py"))
-    todo = [p.stem for p in roots]
+    todo = [p.stem for p in _scripts()]
     seen: set[str] = set()
     while todo:
         mod = todo.pop()
@@ -220,13 +228,6 @@ TEST_ONLY_FUNCTIONS = {
     ),
     "operators.dedup": ("connected_components_twophase", "keep_best_per_cluster"),
     "operators.entities": ("retrieve_users",),
-    "operators.incremental": (
-        "extend_ivf_index",
-        "ivfpq_search_indexed",
-        "line_index_buckets",
-        "pq_index_buckets",
-        "pq_search_indexed",
-    ),
     "operators.ingest": ("diff_curated", "doc_history"),
     "operators.multimodal": ("extract_av_metadata", "sample_audio_segments"),
     "operators.packing": ("temperature_weights", "write_shards"),
@@ -298,9 +299,7 @@ def _reached_functions() -> tuple[set[str], dict[str, set[str]]]:
                         bodies.setdefault(node.name, []).append(m)
             else:
                 roots.append(node)
-    scripts = [REPO / "bench.py", REPO / "__spark_entry__.py", REPO / "scale_smoke.py"]
-    scripts += sorted((REPO / "perfbench").glob("*.py"))
-    roots += [ast.parse(p.read_text(), str(p)) for p in scripts]
+    roots += [ast.parse(p.read_text(), str(p)) for p in _scripts()]
     todo = _refs(roots)
     while todo:
         name = todo.pop()
@@ -330,4 +329,46 @@ def test_every_public_function_is_reached():
     assert not listed - unreached, (
         "TEST_ONLY_FUNCTIONS entries that are gone or now reached: "
         f"{sorted(listed - unreached)} — remove them from the list"
+    )
+
+
+_CONSTANT = re.compile(r"[A-Z][A-Z0-9_]*")
+
+
+def test_every_package_constant_is_read():
+    """A module-level UPPER_CASE assignment that no package module or
+    surface script ever reads (a ``Name`` load or an attribute access
+    anywhere, the defining module included) is dead: delete it."""
+    defined: dict[str, set[str]] = {}
+    trees = []
+    for mod, path in _package_modules().items():
+        tree = ast.parse(path.read_text(), str(path))
+        trees.append(tree)
+        for node in tree.body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            for n in (n for t in targets for n in ast.walk(t)):
+                if (
+                    isinstance(n, ast.Name)
+                    and isinstance(n.ctx, ast.Store)
+                    and _CONSTANT.fullmatch(n.id)
+                ):
+                    defined.setdefault(n.id, set()).add(mod)
+    trees += [ast.parse(p.read_text(), str(p)) for p in _scripts()]
+    read: set[str] = set()
+    for tree in trees:
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+                read.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                read.add(n.attr)
+    unread = sorted(
+        (mod, name) for name in defined.keys() - read for mod in defined[name]
+    )
+    assert not unread, (
+        f"package constants nothing reads: {unread} — delete them"
     )

@@ -216,118 +216,25 @@ def test_ivfpq_pruned_probe_recall(spark, emb):
 
 
 def test_pq_index_family(spark, emb, tmp_path):
-    """10th index family: build on half the corpus, encode+absorb the
-    other half against the FROZEN codebook; the served search equals
-    direct pq_search over (frozen-codebook) codes of the full corpus,
-    and replayed extends insert nothing."""
+    """The persisted PQ family: the stored codes are exactly the corpus
+    encoded under the stored codebook, so ADC search over the stored
+    tables serves the trained index."""
     from jobcan_data_integrator_spark.operators.incremental import (
         build_pq_index,
-        encode_pq_increment,
-        extend_pq_index,
-        pq_index_buckets,
-        pq_search_indexed,
     )
     from jobcan_data_integrator_spark.storage import TableStore
 
-    store = TableStore(
-        spark,
-        tmp_path,
-        write_partitions=2,
-        bucketed=pq_index_buckets(4),
-        snapshot_isolation=True,
-    )
-    half_a = emb.filter(F.col("vec_id") % 2 == 0)
-    half_b = emb.filter(F.col("vec_id") % 2 == 1)
-    build_pq_index(store, half_a, m=M, k=K, iters=ITERS)
-    inc = encode_pq_increment(store, half_b)
-    extend_pq_index(store, inc)
-    # frozen-codebook contract: stored codes == encode(full corpus)
+    store = TableStore(spark, tmp_path, write_partitions=2)
+    build_pq_index(store, emb, m=M, k=K, iters=ITERS)
     cb = store.read("pq_codebooks")
     want = {
         r.vec_id: list(r.codes) for r in pq_encode(emb, cb, m=M).collect()
     }
     got = {r.vec_id: list(r.codes) for r in store.read("pq_codes").collect()}
-    assert got == want
-    # replayed extend inserts nothing
-    extend_pq_index(store, inc)
-    assert store.read("pq_codes").count() == N
-    # served search == direct search over the same codes
+    assert got == want and len(got) == N
     queries = emb.filter(F.col("vec_id") < 3)
-    served = sorted(
-        tuple(r) for r in pq_search_indexed(store, queries, k=5).collect()
-    )
-    direct = sorted(
-        tuple(r)
-        for r in pq_search(store.read("pq_codes"), cb, queries, k=5).collect()
-    )
-    assert served == direct and len(served) == 15
-
-
-def test_index_pq_stream_and_ivfpq_served(spark, emb, tmp_path):
-    """Streaming PQ encode at ingest: first batch trains the frozen
-    codebook, later batches encode themselves; the drained index equals
-    a one-shot encode of everything, and the TWO-family IVFPQ serving
-    path (stored IVF cells + stored PQ codes) matches the in-memory
-    composition."""
-    from jobcan_data_integrator_spark import streaming as S
-    from jobcan_data_integrator_spark.operators.incremental import (
-        build_ivf_index,
-        ivfpq_search_indexed,
-        pq_index_buckets,
-    )
-    from jobcan_data_integrator_spark.operators.pq import ann_topk_ivfpq
-    from jobcan_data_integrator_spark.storage import TableStore
-
-    src = tmp_path / "emb_stream"
-    emb.filter(F.col("vec_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    emb.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    store = TableStore(
-        spark,
-        tmp_path / "index",
-        write_partitions=2,
-        bucketed=pq_index_buckets(4),
-        snapshot_isolation=True,
-    )
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = S.index_pq_stream(
-        stream, store, str(tmp_path / "ckpt_pq"), m=M, k=K, iters=ITERS
-    ).start()
-    q.awaitTermination()
-    assert store.read("pq_codes").count() == N
-    # drained index == one-shot encode under the trained codebook
-    cb = store.read("pq_codebooks")
-    want = {r.vec_id: list(r.codes) for r in pq_encode(emb, cb, m=M).collect()}
-    got = {r.vec_id: list(r.codes) for r in store.read("pq_codes").collect()}
-    assert got == want
-
-    # two-family serving: add the IVF family and compare with in-memory
-    build_ivf_index(store, emb, n_cells=4, iters=2)
-    queries = emb.filter(F.col("vec_id") < 3)
-    served = sorted(
-        tuple(r)
-        for r in ivfpq_search_indexed(store, queries, k=5, n_probe=4).collect()
-    )
-    direct = sorted(
-        tuple(r)
-        for r in ann_topk_ivfpq(
-            store.read("pq_codes"),
-            store.read("ivf_assignments").select("vec_id", "cell_id"),
-            cb,
-            store.read("ivf_codebook"),
-            queries,
-            k=5,
-            n_probe=4,
-        ).collect()
-    )
-    assert served == direct and len(served) == 15
+    served = pq_search(store.read("pq_codes"), cb, queries, k=5).collect()
+    assert len(served) == 15
 
 
 def test_ivfpq_recall_at_5_pruned_probe(spark, emb, tmp_path):
@@ -349,8 +256,8 @@ def test_ivfpq_recall_at_5_pruned_probe(spark, emb, tmp_path):
     from jobcan_data_integrator_spark.operators.incremental import (
         build_ivf_index,
         build_pq_index,
-        ivfpq_search_indexed,
     )
+    from jobcan_data_integrator_spark.operators.pq import ann_topk_ivfpq
     from jobcan_data_integrator_spark.operators.similarity import (
         ann_recall_at_k,
     )
@@ -360,9 +267,15 @@ def test_ivfpq_recall_at_5_pruned_probe(spark, emb, tmp_path):
     build_ivf_index(store, emb, n_cells=4, iters=2)
     build_pq_index(store, emb, m=4, k=8, iters=2)
     queries = emb.filter(F.col("vec_id") < 5)
-    ann = ivfpq_search_indexed(store, queries, k=5, n_probe=2).select(
-        F.col("query_id").alias("q_id"), "vec_id"
-    )
+    ann = ann_topk_ivfpq(
+        store.read("pq_codes"),
+        store.read("ivf_assignments").select("vec_id", "cell_id"),
+        store.read("pq_codebooks"),
+        store.read("ivf_codebook"),
+        queries,
+        k=5,
+        n_probe=2,
+    ).select(F.col("query_id").alias("q_id"), "vec_id")
     truth = _brute_topk(emb, queries.select("vec_id", "embedding"), k=5)
     rec = ann_recall_at_k(ann, truth, k=5).collect()
     assert len(rec) == 5

@@ -186,7 +186,7 @@ def test_recover_from_crashed_swap(spark, store):
 
 def test_recover_preserves_other_writers_fresh_tmp(spark, store):
     """A FRESH tmp dir with a foreign token may be another live writer's
-    in-flight swap (streaming merge + batch pipeline sharing a root) —
+    in-flight swap (two batch jobs sharing a root) —
     _recover must not delete it; the store's OWN leftover tmp is
     reclaimed immediately regardless of age."""
     store.merge_upsert("t", spark.createDataFrame([(1, "a")], "id int, v string"), ["id"])

@@ -8,7 +8,7 @@ per database); the parquet/snapshot backends documented the
 single-writer stance but round 6 left it unenforced — these tests pin
 the enforcement: live-foreign-process refusal (a REAL second process
 holds the lease), same-process re-entrance (crash replay and the
-supported in-process streaming+batch composition), dead-pid takeover
+supported in-process composition of two batch jobs), dead-pid takeover
 (a real exited process), TTL takeover (the cross-host backstop), and
 release on both success and failure paths.
 """
@@ -65,7 +65,7 @@ def test_same_process_reenters_after_crash_and_composes(spark, tmp_path):
     """Same-process re-entrance: a writer that crashed between begin and
     end (manifest left in place) replays through a FRESH handle in the
     same process — and two handles sharing one root in one process (the
-    supported streaming+batch composition) never fence each other."""
+    supported in-process composition) never fence each other."""
     a = TableStore(spark, tmp_path, snapshot_isolation=True)
     a.begin_commit("batch-a")
     assert a.pending_commit()["batch_id"] == "batch-a"
@@ -169,7 +169,7 @@ def test_zombie_writer_cannot_publish_after_takeover(spark, tmp_path):
 
 def test_in_process_composition_refcounts_the_lease(spark, tmp_path):
     """ADVICE r7 (low): two live TableStore instances composing on one
-    root (streaming merge + batch pipeline) — the second's end_commit
+    root (two threads' batch jobs) — the second's end_commit
     must NOT unlink the lease while the first is still mid-commit."""
     a = TableStore(spark, tmp_path, snapshot_isolation=True)
     b = TableStore(spark, tmp_path, snapshot_isolation=True)
