@@ -290,11 +290,12 @@ def dedup_increment(
 
     REPLAY-SAFE: a crash between ``extend_index`` and the caller's own
     checkpoint (e.g. ``ingest_increment``'s batch ledger commit)
-    re-delivers a batch the index already absorbed.  The increment is therefore made
-    AUTHORITATIVE for its own docs — corpus-side shingle/size rows for
-    increment doc ids are anti-joined away — so the unioned frames never
-    hold a doc twice (double-counted shingles would produce jaccard
-    values outside [0, 1] and corrupt ``mh_pairs`` on the upsert).
+    re-delivers a batch the index already absorbed.  The increment is
+    therefore made AUTHORITATIVE for its own docs — corpus-side
+    shingle/size rows for increment doc ids are anti-joined away — so
+    the unioned frames never hold a doc twice (double-counted shingles
+    would produce jaccard values outside [0, 1] and corrupt
+    ``mh_pairs`` on the upsert).
     Candidate generation needs no such guard: a replayed doc's corpus
     copy cannot self-pair (``doc_id`` inequality) and duplicate pairs
     collapse in the candidates' ``distinct``.
@@ -1200,10 +1201,9 @@ def refresh_embedding_codebooks(
 
     The standard IVF/PQ stance freezes codebooks at build time; as the
     corpus drifts away from the training distribution, cell balance and
-    ADC quality decay.  This is
-    the amortized offline maintenance call that closes that loop — the
-    codebook sibling of ``compact_store``: run it on a drift signal or
-    a cron, NOT per batch.  Cost is corpus-sized BY DESIGN (one
+    ADC quality decay.  This is the amortized offline maintenance call
+    that closes that loop — the codebook sibling of ``compact_store``:
+    run it on a drift signal or a cron, NOT per batch.  Cost is corpus-sized BY DESIGN (one
     training pass + one assignment/encode pass over the live vectors);
     every serving path picks up the new codebooks atomically at the
     single snapshot publish.

@@ -90,8 +90,8 @@ _STALE_TMP_SECONDS = 3600.0
 #: a crashed/abandoned instance drops out when collected and a
 #: same-process replay through a fresh handle re-enters freely — while
 #: TWO LIVE instances composing on one root (two threads' batch jobs,
-#: e.g. a pipeline run and an ingest) refcount the lease instead of the second's end_commit
-#: unlinking it under the first (ADVICE r7).
+#: e.g. a pipeline run and an ingest) refcount the lease instead of the
+#: second's end_commit unlinking it under the first (ADVICE r7).
 _LEASE_LOCK = threading.Lock()
 _LEASE_HOLDERS: dict[str, "weakref.WeakSet"] = {}
 
